@@ -140,15 +140,15 @@ object Geo {
           classOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF].getName, name),
         builder)
     }
-    // native codegen expressions (st_*_native) — same surface the
-    // GraftExtensions injection provides, for sessions built without it
+    // Catalyst expressions registered by name (array_dot), as the
+    // GraftExtensions injection does, for sessions built without it
     graft.plans.GeoExpressions.registrations.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
     // Optimizer rules + spatial-join strategy for sessions built WITHOUT
     // `withExtensions(new GraftExtensions)`: Spark's experimental hooks
     // retrofit the same tiers. Safe when extensions are present too — both
-    // rules are idempotent (fused chains are skipped on a second pass; the
+    // rules are idempotent (a fused chain builds nothing on a second pass; the
     // bbox rule fires only while the filter doesn't reference the covering
     // column) and a duplicate strategy just never gets asked second.
     val exp = spark.experimental

@@ -659,20 +659,21 @@ object GeoQueries {
           st_area(st_difference_all(col("g"), 0.25)).as("da_prec"))
     }),
 
-    /** Native Catalyst expression tier (st_*_native, SURVEY §4.3): same
-      * EWKB/JTS kernels as the UDF surface, inlined via doGenCode. The row
-      * asserts both closed-form values and native==UDF equality. */
+    /** The Column API's kernel expressions (one-call `STGeoFused`, no
+      * ScalaUDF encoder round trip) against the SQL surface's ScalaUDFs:
+      * closed-form values, and Column == SQL equality per row. */
     "geo_native" -> ((s, dir) => {
+      graft.Geo.registerAll(s) // the SQL-path columns need the registry
       base(s, dir)
         .select(k, rect.as("a"), st_translate(rect, w / 2, lit(0.0)).as("c"),
           st_translate(rect, lit(0.0) - w - lit(1.0), lit(0.0)).as("d"))
         .select(k,
-          expr("st_area_native(a)").as("area_n"),
-          expr("st_length_native(a)").as("len_n"),
-          expr("st_intersects_native(a, c)").as("ix_t"),
-          expr("st_intersects_native(a, d)").as("ix_f"),
-          (expr("st_area_native(a)") === st_area(col("a"))).as("area_eq"),
-          (expr("st_length_native(a)") === st_length(col("a"))).as("len_eq"))
+          st_area(col("a")).as("area_n"),
+          st_length(col("a")).as("len_n"),
+          st_intersects(col("a"), col("c")).as("ix_t"),
+          st_intersects(col("a"), col("d")).as("ix_f"),
+          (st_area(col("a")) === expr("st_area(a)")).as("area_eq"),
+          (st_length(col("a")) === expr("st_length(a)")).as("len_eq"))
         .orderBy(k)
     }),
 

@@ -47,9 +47,13 @@ object GeoKernels {
     *                 geometry argument's SRID when the result has none)
     * @param fn       kernel over parsed args: [[Geometry]] at `geomArgs`
     *                 positions, plain Scala scalars elsewhere
+    * @param bytesFn  the same unary, non-geometry-result kernel over the
+    *                 unparsed EWKB, exact on curved bytes without
+    *                 [[graft.serde.EWKB.read]]'s linearization (the fused
+    *                 tier uses it when the argument is a plain input)
     */
   final case class K(name: String, arity: Int, geomArgs: Set[Int], out: Out,
-      fn: Array[Any] => Any) {
+      fn: Array[Any] => Any, bytesFn: Option[Array[Byte] => Any] = None) {
     def dataType: DataType = out match {
       case OGeom => BinaryType
       case ODouble => DoubleType

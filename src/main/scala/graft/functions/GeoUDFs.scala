@@ -707,7 +707,7 @@ object GeoUDFs {
     GeoKernels.add(K("st_area", 1, Set(0), ODouble, a => {
       val g = aG(a(0)); val cb = curvedSrc(g)
       if (cb != null) CurvedGeom.area(CurvedGeom.parse(cb)._2) else g.getArea
-    }))
+    }, Some(CurvedGeom.areaOfBytes)))
     udf((b: Array[Byte]) =>
       if (b == null) None else Some(graft.serde.CurvedGeom.areaOfBytes(b)))
       .withName("st_area")
@@ -716,7 +716,7 @@ object GeoUDFs {
     GeoKernels.add(K("st_length", 1, Set(0), ODouble, a => {
       val g = aG(a(0)); val cb = curvedSrc(g)
       if (cb != null) CurvedGeom.length(CurvedGeom.parse(cb)._2) else g.getLength
-    }))
+    }, Some(CurvedGeom.lengthOfBytes)))
     udf((b: Array[Byte]) =>
       if (b == null) None else Some(graft.serde.CurvedGeom.lengthOfBytes(b)))
       .withName("st_length")

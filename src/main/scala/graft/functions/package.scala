@@ -10,16 +10,26 @@ package object functions {
 
   import GeoUDFs._
 
-  // Native Catalyst expression tier (SURVEY §4.3): st_area / st_length /
-  // st_intersects are hot enough that the ScalaUDF encoder round trip costs
-  // ~2-3× the JTS kernel itself (benched: geo_scan_measure 3.17s UDF vs
-  // 1.05s native at sf0.1). The Column API routes them through the
-  // codegen'd expressions; the SQL-name registry keeps the UDFs as the
-  // semantic reference, and `st_*_native` SQL names expose this tier.
-  private def toExpr(c: Column) =
-    org.apache.spark.sql.graft.ColumnBridge.expression(c)
-  private def ofExpr(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(e)
+  // The SQL names keep the ScalaUDFs (also the test reference); the hot
+  // ops below skip their encoder round trip (~2-3× the JTS kernel) with a
+  // one-call `STGeoFused` over the same kernel table ([[GeoKernels]]),
+  // which [[graft.plans.GeoFusionRule]] still fuses into longer chains.
+  import org.apache.spark.sql.graft.ColumnBridge
+
+  /** `name`'s kernel as a one-call `STGeoFused`. `args` are in kernel
+    * order, geometry arguments first; the scalar ones are cast to double,
+    * and `defaults` fill the kernel's remaining arguments. */
+  private def kernel(name: String, args: Column*)(defaults: Any*): Column = {
+    import graft.plans.{GProg, STGeoFused}
+    val k = GeoKernels.table(name)
+    val children = args.zipWithIndex.map { case (c, i) =>
+      ColumnBridge.expression(if (k.geomArgs(i)) c
+        else c.cast(org.apache.spark.sql.types.DoubleType))
+    } ++ defaults.map(org.apache.spark.sql.catalyst.expressions.Literal(_))
+    val prog = GProg.Call(name, children.indices.map(i =>
+      if (k.geomArgs(i)) GProg.Load(i) else GProg.Scalar(i)))
+    ColumnBridge.column(STGeoFused(prog, k.dataType, children))
+  }
 
   // ------------------------------------------------------------ constructors
   def st_geomfromtext(wkt: Column): Column = geomFromWkt(wkt)
@@ -100,10 +110,9 @@ package object functions {
   def st_bounds(g: Column): Column = bounds(g)
 
   // ------------------------------------------------------------- measurement
-  def st_area(g: Column): Column = ofExpr(graft.plans.STAreaNative(toExpr(g)))
-  def st_length(g: Column): Column = ofExpr(graft.plans.STLengthNative(toExpr(g)))
-  def st_distance(a: Column, b: Column): Column =
-    ofExpr(graft.plans.STDistanceNative(toExpr(a), toExpr(b)))
+  def st_area(g: Column): Column = kernel("st_area", g)()
+  def st_length(g: Column): Column = kernel("st_length", g)()
+  def st_distance(a: Column, b: Column): Column = kernel("st_distance", a, b)()
   def st_hausdorff_distance(a: Column, b: Column): Column = hausdorffDistance(a, b)
   def st_hausdorff_distance(a: Column, b: Column, densify: Column): Column =
     hausdorffDistanceDensify(a, b, densify)
@@ -127,25 +136,21 @@ package object functions {
   def st_is_valid_reason(g: Column): Column = isValidReason(g)
 
   // ------------------------------------------------------- binary predicates
-  def st_intersects(a: Column, b: Column): Column =
-    ofExpr(graft.plans.STIntersectsNative(toExpr(a), toExpr(b)))
+  def st_intersects(a: Column, b: Column): Column = kernel("st_intersects", a, b)()
   def st_crosses(a: Column, b: Column): Column = crosses(a, b)
-  def st_contains(a: Column, b: Column): Column =
-    ofExpr(graft.plans.STContainsNative(toExpr(a), toExpr(b)))
+  def st_contains(a: Column, b: Column): Column = kernel("st_contains", a, b)()
   def st_contains_properly(a: Column, b: Column): Column = containsProperly(a, b)
   def st_covered_by(a: Column, b: Column): Column = coveredBy(a, b)
   def st_covers(a: Column, b: Column): Column = covers(a, b)
   def st_disjoint(a: Column, b: Column): Column = disjoint(a, b)
   def st_overlaps(a: Column, b: Column): Column = overlaps(a, b)
   def st_touches(a: Column, b: Column): Column = touches(a, b)
-  def st_within(a: Column, b: Column): Column =
-    ofExpr(graft.plans.STWithinNative(toExpr(a), toExpr(b)))
+  def st_within(a: Column, b: Column): Column = kernel("st_within", a, b)()
   def st_equals(a: Column, b: Column): Column = equalsTopo(a, b)
   def st_equals_identical(a: Column, b: Column): Column = equalsIdentical(a, b)
   def st_equals_exact(a: Column, b: Column, tolerance: Column): Column =
     equalsExact(a, b, tolerance)
-  def st_dwithin(a: Column, b: Column, d: Column): Column =
-    ofExpr(graft.plans.STDWithinNative(toExpr(a), toExpr(b), toExpr(d)))
+  def st_dwithin(a: Column, b: Column, d: Column): Column = kernel("st_dwithin", a, b, d)()
   def st_relate(a: Column, b: Column): Column = relate(a, b)
   def st_relate_pattern(a: Column, b: Column, pattern: Column): Column =
     relatePattern(a, b, pattern)
@@ -170,8 +175,10 @@ package object functions {
 
   // ------------------------------------------------------------ constructive
   def st_boundary(g: Column): Column = boundary(g)
+  /** The reference's kwargs defaults (args.rs:102-124): quad_segs 8,
+    * round cap and join, mitre limit 5.0, two-sided. */
   def st_buffer(g: Column, distance: Column): Column =
-    ofExpr(graft.plans.STBufferNative(toExpr(g), toExpr(distance)))
+    kernel("st_buffer", g, distance)(8, "round", "round", 5.0, false)
   def st_buffer(g: Column, distance: Column, quadSegs: Column, capStyle: Column,
       joinStyle: Column, mitreLimit: Column, singleSided: Column): Column =
     buffer(g, distance, quadSegs, capStyle, joinStyle, mitreLimit, singleSided)
@@ -179,7 +186,7 @@ package object functions {
     offsetCurve(g, distance, lit(8), lit("round"), lit(5.0))
   def st_offset_curve(g: Column, distance: Column, quadSegs: Column, joinStyle: Column,
       mitreLimit: Column): Column = offsetCurve(g, distance, quadSegs, joinStyle, mitreLimit)
-  def st_centroid(g: Column): Column = ofExpr(graft.plans.STCentroidNative(toExpr(g)))
+  def st_centroid(g: Column): Column = kernel("st_centroid", g)()
   def st_center(g: Column): Column = center(g)
   def st_clip_by_rect(g: Column, xmin: Column, ymin: Column, xmax: Column, ymax: Column): Column =
     clipByRect(g, xmin, ymin, xmax, ymax)
@@ -189,7 +196,7 @@ package object functions {
   def st_concave_hull(g: Column, ratio: Column): Column = concaveHull(g, ratio, lit(false))
   def st_concave_hull(g: Column): Column = concaveHull(g, lit(0.0), lit(false))
   def st_segmentize(g: Column, maxSegmentLength: Column): Column = segmentize(g, maxSegmentLength)
-  def st_envelope(g: Column): Column = ofExpr(graft.plans.STEnvelopeNative(toExpr(g)))
+  def st_envelope(g: Column): Column = kernel("st_envelope", g)()
   def st_extract_unique_points(g: Column): Column = extractUniquePoints(g)
   def st_build_area(g: Column): Column = buildArea(g)
   def st_make_valid(g: Column): Column = makeValid(g)

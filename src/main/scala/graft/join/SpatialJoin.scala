@@ -552,11 +552,10 @@ object SpatialJoin {
     *        (ProbeUnbCensus r17 — the loop is fixed-job-overhead-bound
     *        there) and kept for the at-scale pass elimination. Callers
     *        must pass a census computed over the SAME bufCells at
-    *        `min(GridCensusMin, maxCellRows)/maxCellRows`, or None —
-    *        and should PERSIST bufCells themselves (the current caller
-    *        does): a census-supplied side is not snapped here (r19),
-    *        so an unpersisted one would re-run its explode if a
-    *        one-sided heavy cell triggers the exactCounts recount. */
+    *        `min(GridCensusMin, maxCellRows)/maxCellRows`, or None. An
+    *        unpersisted bufCells is snapped like the other sides, so an
+    *        exactCounts recount never re-runs its explode; a persisted
+    *        one (the current caller's) keeps its own cache. */
   private def saltedCogroup[U: org.apache.spark.sql.Encoder](
       bufCells: Dataset[(Long, Long, Array[Byte])],
       strCells: Dataset[(Long, Long, Array[Byte])],
@@ -579,15 +578,12 @@ object SpatialJoin {
     // amortized, GC-timed; PipelineSpec pins the no-accumulation bound
     // for the dedup doors, ProbeJoinAB the win here). A side that is
     // already persisted (the escalation loop's registerProbe) keeps its
-    // own cache. Probe toggle: -Dgraft.join.cellSnap.probeOff=true.
-    val snapOff = java.lang.Boolean.getBoolean("graft.join.cellSnap.probeOff")
+    // own cache.
     def snapSide(ds: Dataset[(Long, Long, Array[Byte])]) =
-      if (snapOff || ds.storageLevel != org.apache.spark.storage.StorageLevel.NONE) ds
+      if (ds.storageLevel != org.apache.spark.storage.StorageLevel.NONE) ds
       else ds.localCheckpoint(eager = false)
     val pairSplitEarly = pairsPerTask > 0 && pairsPerTask < Long.MaxValue
-    val lCells =
-      if (maxCellRows > 0 && (!pairSplitEarly || bufCensus.isEmpty)) snapSide(bufCells)
-      else bufCells
+    val lCells = if (maxCellRows > 0) snapSide(bufCells) else bufCells
     val rCells =
       if (maxCellRows > 0 && pairSplitEarly) snapSide(strCells)
       else strCells
@@ -1608,14 +1604,13 @@ object SpatialJoin {
     * back-fills the second job into the first job's idle slots. The
     * forked side runs under `blocking` (a Spark job can hold its thread
     * for minutes — the global pool must compensate rather than starve
-    * co-resident users). A failure of the caller-thread side waits for
-    * the forked job UP TO A BOUND (120 s) before rethrowing: the forked
-    * side normally fails or finishes promptly once its sibling died,
-    * but a hung straggler must not mask the original exception forever —
-    * past the bound the exception carries a suppressed note and the
-    * forked job is left to the session's own lifecycle (callers that
-    * unpersist caches in a finally may then see it recompute them). */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
+    * co-resident users). A failure of the caller-thread side cancels the
+    * forked side's jobs (a per-call job tag) and waits for it to unwind
+    * UP TO A BOUND (120 s) before rethrowing, so callers that unpersist
+    * caches in a finally do not see an orphaned job recompute them. A
+    * forked side still running past the bound leaves a suppressed note
+    * on the rethrown exception. */
+  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
     import scala.concurrent.{blocking, Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -1628,6 +1623,9 @@ object SpatialJoin {
     val PropKeys = Seq("spark.jobGroup.id", "spark.job.description",
       "spark.job.interruptOnCancel", "spark.scheduler.pool")
     val props = PropKeys.map(k => k -> sc.getLocalProperty(k))
+    // a per-call tag cancels just the forked side's jobs (the job group
+    // is the caller's, shared with its other jobs)
+    val tag = s"graft-inParallel-${java.util.UUID.randomUUID()}"
     val fut = Future(blocking {
       // restore the worker thread's own values afterwards — global-pool
       // threads are shared with unrelated code in the embedding app, and
@@ -1635,24 +1633,32 @@ object SpatialJoin {
       // caller's cancelJobGroup (review r19)
       val prior = PropKeys.map(k => k -> sc.getLocalProperty(k))
       props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.addJobTag(tag)
       try fb
-      finally prior.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      finally {
+        sc.removeJobTag(tag)
+        prior.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      }
     })
     val a =
       try fa
       catch {
         case t: Throwable =>
-          // BOUNDED companion wait (ADVICE r18): the forked job usually
-          // fails or finishes promptly once its sibling died, but a hung
-          // straggler must not mask the original exception forever —
-          // after the bound the failure propagates and the forked job is
-          // left to the session's own lifecycle.
-          try Await.ready(fut, Duration(120, "s"))
-          catch {
-            case _: InterruptedException => Thread.currentThread().interrupt()
-            case _: java.util.concurrent.TimeoutException => t.addSuppressed(
+          // cancel, then a BOUNDED wait so a hung straggler cannot mask
+          // the original exception; the cancel repeats each second, as the
+          // forked side may not have submitted its job yet
+          val deadline = System.nanoTime() + Duration(120, "s").toNanos
+          try {
+            while (!fut.isCompleted && System.nanoTime() < deadline) {
+              sc.cancelJobsWithTag(tag, "inParallel: the caller side failed")
+              try Await.ready(fut, Duration(1, "s"))
+              catch { case _: java.util.concurrent.TimeoutException => }
+            }
+            if (!fut.isCompleted) t.addSuppressed(
               new RuntimeException("inParallel: forked side still running " +
                 "120 s after the caller side failed — abandoning the wait"))
+          } catch {
+            case _: InterruptedException => Thread.currentThread().interrupt()
           }
           throw t
       }

@@ -3,102 +3,16 @@ package graft.plans
 import graft.serde.EWKB
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType}
 
-/** Native Catalyst expressions for the hottest scalar ops — the
-  * "promote to `Expression` with `doGenCode`" tier from SURVEY §4.3.
-  * Unlike the ScalaUDF surface, these inline a static JVM call directly
-  * into whole-stage-generated code: no encoder round trip, no Option
-  * boxing, null handling compiled into the consuming operator.
-  *
-  * Registered by [[GraftExtensions]] under `st_area_native` /
-  * `st_length_native` / `st_intersects_native`, usable from SQL and
-  * `expr(...)`. The UDF registry remains the semantic reference; these are
-  * drop-in equivalents for hot paths (same EWKB-in, same JTS kernels,
-  * same null-in-null-out).
+/** Kernels of the bucketed spatial-join refinement expressions below
+  * ([[STBucketedMatch]], [[STNearestMatch]], [[STNearestMatchBound]],
+  * [[STOwnsCell]]): static JVM methods that whole-stage codegen calls
+  * directly, with the cell size and predicate code as literals. (The
+  * scalar `st_*` kernels live in [[graft.functions.GeoKernels.table]].)
   */
 object GeoNative {
-  import org.locationtech.jts.operation.relateng.{RelateNG, RelatePredicate}
-  // Curved input gets the exact arc closed forms (CurvedGeom tier 2),
-  // identical to the UDF registry's st_area/st_length branch.
-  def area(b: Array[Byte]): Double = graft.serde.CurvedGeom.areaOfBytes(b)
-  def length(b: Array[Byte]): Double = graft.serde.CurvedGeom.lengthOfBytes(b)
-  def intersects(a: Array[Byte], b: Array[Byte]): Boolean = {
-    val ga = EWKB.read(a)
-    val gb = EWKB.read(b)
-    if (ga.isEmpty || gb.isEmpty) false
-    else RelateNG.relate(ga, gb, RelatePredicate.intersects())
-  }
-  def contains(a: Array[Byte], b: Array[Byte]): Boolean = {
-    val ga = EWKB.read(a)
-    val gb = EWKB.read(b)
-    if (ga.isEmpty || gb.isEmpty) false
-    else RelateNG.relate(ga, gb, RelatePredicate.contains())
-  }
-  def within(a: Array[Byte], b: Array[Byte]): Boolean = {
-    val ga = EWKB.read(a)
-    val gb = EWKB.read(b)
-    if (ga.isEmpty || gb.isEmpty) false
-    else RelateNG.relate(ga, gb, RelatePredicate.within())
-  }
-  /** Strict `<` like the reference (functions.rs:984-990), not PostGIS `<=`
-    * — same convention as the UDF tier. */
-  def dwithin(a: Array[Byte], b: Array[Byte], d: Double): Boolean = {
-    val ga = EWKB.read(a)
-    val gb = EWKB.read(b)
-    !ga.isEmpty && !gb.isEmpty && ga.isWithinDistance(gb, math.nextDown(d))
-  }
-  /** NaN if either side is empty (functions.rs:819-829) — identical to
-    * the UDF tier's st_distance convention. */
-  def distance(a: Array[Byte], b: Array[Byte]): Double = {
-    val ga = EWKB.read(a)
-    val gb = EWKB.read(b)
-    if (ga.isEmpty || gb.isEmpty) Double.NaN else ga.distance(gb)
-  }
-  def centroid(b: Array[Byte]): Array[Byte] = {
-    val g = EWKB.read(b)
-    val out = g.getCentroid
-    if (out.getSRID == 0 && g.getSRID != 0) out.setSRID(g.getSRID)
-    EWKB.write(out)
-  }
-  def envelope(b: Array[Byte]): Array[Byte] = {
-    // curved source (incl. curve-bearing collections): exact arc bbox so
-    // the native tier matches st_bounds and the UDF/fusion kernels
-    if (graft.serde.CurvedGeom.isCurvedSource(b))
-      EWKB.write(graft.serde.CurvedGeom.envelopeGeom(b))
-    else {
-      val g = EWKB.read(b)
-      val out = g.getEnvelope
-      if (out.getSRID == 0 && g.getSRID != 0) out.setSRID(g.getSRID)
-      EWKB.write(out)
-    }
-  }
-  /** Default-parameter buffer (quad_segs 8, round cap/join, mitre 5.0,
-    * two-sided — the reference's kwargs defaults, args.rs:102-124). SRID
-    * carries over like the uG lift. */
-  def buffer(b: Array[Byte], dist: Double): Array[Byte] = {
-    val g = EWKB.read(b)
-    val out = org.locationtech.jts.operation.buffer.BufferOp.bufferOp(g, dist)
-    if (out.getSRID == 0 && g.getSRID != 0) out.setSRID(g.getSRID)
-    EWKB.write(out)
-  }
-
-  /** st_to_srid as a native kernel — the same parse → [[graft.functions
-    * .CrsImpl.toSrid]] → serialize path as the UDF tier (curved-source
-    * markers pass through verbatim, like the UDF's writeResult), minus
-    * the ScalaUDF encoder boxing. Promotion decided by ProbeCrsScan's
-    * A/B (PERF.md r16). */
-  def toSrid(b: Array[Byte], target: Int): Array[Byte] = {
-    val g = EWKB.read(b)
-    val r = graft.functions.CrsImpl.toSrid(g, target)
-    r.getUserData match {
-      case src: Array[Byte] => src
-      case _ => EWKB.write(r)
-    }
-  }
-
-  // ------------------------------------------- bucketed-join refinement
 
   /** The sjoin predicate set as dense int codes so the bucketed-join
     * refinement compiles to a tableswitch instead of per-row string
@@ -238,174 +152,6 @@ private[plans] object NativeTypeCheck {
       case Some(c) => TypeCheckResult.TypeCheckFailure(
         s"$fn expects BINARY, got ${c.dataType}")
     }
-}
-
-case class STAreaNative(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes() = NativeTypeCheck.binary("st_area_native", child)
-  override protected def nullSafeEval(input: Any): Any =
-    GeoNative.area(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GeoNative.area($c)")
-  override protected def withNewChildInternal(newChild: Expression): STAreaNative =
-    copy(child = newChild)
-}
-
-case class STLengthNative(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes() = NativeTypeCheck.binary("st_length_native", child)
-  override protected def nullSafeEval(input: Any): Any =
-    GeoNative.length(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GeoNative.length($c)")
-  override protected def withNewChildInternal(newChild: Expression): STLengthNative =
-    copy(child = newChild)
-}
-
-case class STDistanceNative(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes() =
-    NativeTypeCheck.binary("st_distance_native", left, right)
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeoNative.distance(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoNative.distance($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): STDistanceNative = copy(left = newLeft, right = newRight)
-}
-
-case class STCentroidNative(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = NativeTypeCheck.binary("st_centroid_native", child)
-  override protected def nullSafeEval(input: Any): Any =
-    GeoNative.centroid(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GeoNative.centroid($c)")
-  override protected def withNewChildInternal(newChild: Expression): STCentroidNative =
-    copy(child = newChild)
-}
-
-case class STEnvelopeNative(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes() = NativeTypeCheck.binary("st_envelope_native", child)
-  override protected def nullSafeEval(input: Any): Any =
-    GeoNative.envelope(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GeoNative.envelope($c)")
-  override protected def withNewChildInternal(newChild: Expression): STEnvelopeNative =
-    copy(child = newChild)
-}
-
-case class STIntersectsNative(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes() =
-    NativeTypeCheck.binary("st_intersects_native", left, right)
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeoNative.intersects(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoNative.intersects($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): STIntersectsNative = copy(left = newLeft, right = newRight)
-}
-
-case class STContainsNative(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes() =
-    NativeTypeCheck.binary("st_contains_native", left, right)
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeoNative.contains(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoNative.contains($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): STContainsNative = copy(left = newLeft, right = newRight)
-}
-
-case class STWithinNative(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes() =
-    NativeTypeCheck.binary("st_within_native", left, right)
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeoNative.within(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.GeoNative.within($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): STWithinNative = copy(left = newLeft, right = newRight)
-}
-
-case class STDWithinNative(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def dataType: DataType = BooleanType
-  // implicit input casts: a SQL fractional literal is DecimalType by
-  // default, and Spark's Decimal is NOT a java.lang.Number — without the
-  // declared DoubleType the eval cast CCE'd and codegen emitted an
-  // illegal (double)(Decimal)
-  override def inputTypes = // Seq[DataType] <: Seq[AbstractDataType (private[sql])]
-    Seq(BinaryType, BinaryType, org.apache.spark.sql.types.DoubleType)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val bin = NativeTypeCheck.binary("st_dwithin_native", first, second)
-    if (!bin.isSuccess) bin
-    else if (third.dataType != org.apache.spark.sql.types.DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"st_dwithin_native expects a numeric distance, got ${third.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-  override protected def nullSafeEval(a: Any, b: Any, d: Any): Any =
-    GeoNative.dwithin(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]],
-      d.asInstanceOf[Number].doubleValue())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, d) => s"graft.plans.GeoNative.dwithin($a, $b, (double)($d))")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): STDWithinNative = copy(first = f, second = s, third = t)
-}
-
-/** [[GeoNative.toSrid]] as an expression: (geom EWKB, target srid) →
-  * reprojected EWKB. */
-case class STToSridNative(left: Expression, right: Expression) extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def dataType: DataType = BinaryType
-  override def inputTypes =
-    Seq(BinaryType, org.apache.spark.sql.types.IntegerType)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val bin = NativeTypeCheck.binary("st_to_srid_native", left)
-    if (!bin.isSuccess) bin
-    else if (right.dataType != org.apache.spark.sql.types.IntegerType)
-      TypeCheckResult.TypeCheckFailure(
-        s"st_to_srid_native expects an integer srid, got ${right.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-  override protected def nullSafeEval(a: Any, s: Any): Any =
-    GeoNative.toSrid(a.asInstanceOf[Array[Byte]], s.asInstanceOf[Number].intValue())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, s) => s"graft.plans.GeoNative.toSrid($a, (int)($s))")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): STToSridNative = copy(left = newLeft, right = newRight)
-}
-
-case class STBufferNative(left: Expression, right: Expression) extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def dataType: DataType = BinaryType
-  // see STDWithinNative: declared DoubleType makes Catalyst cast Decimal
-  // literals instead of CCE-ing in eval / mis-compiling in codegen
-  override def inputTypes = // Seq[DataType] <: Seq[AbstractDataType (private[sql])]
-    Seq(BinaryType, org.apache.spark.sql.types.DoubleType)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val bin = NativeTypeCheck.binary("st_buffer_native", left)
-    if (!bin.isSuccess) bin
-    else if (right.dataType != org.apache.spark.sql.types.DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"st_buffer_native expects a numeric distance, got ${right.dataType}")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-  override protected def nullSafeEval(a: Any, d: Any): Any =
-    GeoNative.buffer(a.asInstanceOf[Array[Byte]], d.asInstanceOf[Number].doubleValue())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, d) => s"graft.plans.GeoNative.buffer($a, (double)($d))")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): STBufferNative = copy(left = newLeft, right = newRight)
 }
 
 /** Native refinement for the bucketed spatial-join tiers: the former
@@ -598,39 +344,6 @@ object GeoExpressions {
   /** (identifier, info, builder) triples for SparkSessionExtensions. */
   def registrations: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("st_area_native"),
-      new ExpressionInfo(classOf[STAreaNative].getName, "st_area_native"),
-      withArity("st_area_native", 1)(args => STAreaNative(args.head))),
-    (FunctionIdentifier("st_length_native"),
-      new ExpressionInfo(classOf[STLengthNative].getName, "st_length_native"),
-      withArity("st_length_native", 1)(args => STLengthNative(args.head))),
-    (FunctionIdentifier("st_intersects_native"),
-      new ExpressionInfo(classOf[STIntersectsNative].getName, "st_intersects_native"),
-      withArity("st_intersects_native", 2)(args => STIntersectsNative(args(0), args(1)))),
-    (FunctionIdentifier("st_contains_native"),
-      new ExpressionInfo(classOf[STContainsNative].getName, "st_contains_native"),
-      withArity("st_contains_native", 2)(args => STContainsNative(args(0), args(1)))),
-    (FunctionIdentifier("st_within_native"),
-      new ExpressionInfo(classOf[STWithinNative].getName, "st_within_native"),
-      withArity("st_within_native", 2)(args => STWithinNative(args(0), args(1)))),
-    (FunctionIdentifier("st_dwithin_native"),
-      new ExpressionInfo(classOf[STDWithinNative].getName, "st_dwithin_native"),
-      withArity("st_dwithin_native", 3)(args => STDWithinNative(args(0), args(1), args(2)))),
-    (FunctionIdentifier("st_buffer_native"),
-      new ExpressionInfo(classOf[STBufferNative].getName, "st_buffer_native"),
-      withArity("st_buffer_native", 2)(args => STBufferNative(args(0), args(1)))),
-    (FunctionIdentifier("st_to_srid_native"),
-      new ExpressionInfo(classOf[STToSridNative].getName, "st_to_srid_native"),
-      withArity("st_to_srid_native", 2)(args => STToSridNative(args(0), args(1)))),
-    (FunctionIdentifier("st_distance_native"),
-      new ExpressionInfo(classOf[STDistanceNative].getName, "st_distance_native"),
-      withArity("st_distance_native", 2)(args => STDistanceNative(args(0), args(1)))),
-    (FunctionIdentifier("st_centroid_native"),
-      new ExpressionInfo(classOf[STCentroidNative].getName, "st_centroid_native"),
-      withArity("st_centroid_native", 1)(args => STCentroidNative(args.head))),
-    (FunctionIdentifier("st_envelope_native"),
-      new ExpressionInfo(classOf[STEnvelopeNative].getName, "st_envelope_native"),
-      withArity("st_envelope_native", 1)(args => STEnvelopeNative(args.head))),
     (FunctionIdentifier("array_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "array_dot"),
       withArity("array_dot", 2)(args => DotProduct(args(0), args(1)))))

@@ -41,10 +41,13 @@ import org.locationtech.jts.geom.Geometry
   * eager unfused plan is skipped — the same liberty Catalyst's own
   * conditional short-circuits take.
   *
-  * Scope guard: the rule rewrites Project lists ONLY. Filter conditions and
-  * join conditions keep their ScalaUDF / native-expression shape so
-  * [[BboxFilterRule]] and [[SpatialJoinStrategy]] still recognize spatial
-  * predicates. Disable per session with `spark.graft.fuse=false`.
+  * The Column API's hot ops build a one-call program, which the rule
+  * re-fuses like a ScalaUDF call ([[GeoCall]] matches both shapes).
+  *
+  * Scope guard: spatial-predicate roots of Filter conjuncts, and join
+  * conditions, keep their single-call shape so [[BboxFilterRule]] and
+  * [[SpatialJoinStrategy]] still recognize spatial predicates. Disable per
+  * session with `spark.graft.fuse=false`.
   */
 sealed trait GProg extends Serializable
 object GProg {
@@ -86,6 +89,27 @@ case class STGeoFused(program: GProg, dataType: DataType, children: Seq[Expressi
 
   override def nullable: Boolean = true
   override def foldable: Boolean = false
+
+  /** The root kernel's name for a call program (error messages and
+    * generated column names read `st_area(g)`), else `st_geo_fused`. */
+  override def prettyName: String = program match {
+    case GProg.Call(name, _) => name
+    case _ => "st_geo_fused"
+  }
+
+  /** Every geometry input (a [[GProg.Load]] child) must be EWKB bytes: a
+    * double column passed as a geometry fails analysis naming the
+    * function, not with a ClassCastException at run time. */
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    def loads(p: GProg): Seq[Int] = p match {
+      case GProg.Load(i) => Seq(i)
+      case GProg.Scalar(_) => Nil
+      case GProg.Call(_, as) => as.flatMap(loads)
+      case GProg.Guard(_, _, inner) => loads(inner)
+      case GProg.Parse(inner) => loads(inner)
+    }
+    NativeTypeCheck.binary(prettyName, loads(program).distinct.map(children): _*)
+  }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): STGeoFused = copy(children = newChildren)
@@ -175,6 +199,25 @@ case class STGeoFused(program: GProg, dataType: DataType, children: Seq[Expressi
       if (!${ev.isNull}) {
         ${ev.value} = $extract;
       }""")
+  }
+}
+
+/** One geometry-kernel call in either expression shape: a named geometry
+  * ScalaUDF (the SQL surface) or a one-call [[STGeoFused]] (the Column
+  * API). Yields (kernel name, arguments in kernel order) — the single
+  * pattern [[BboxFilterRule]], [[SpatialJoinStrategy]] and
+  * [[GeoFusionRule]] match spatial predicates and fusable calls on. */
+object GeoCall {
+  def unapply(e: Expression): Option[(String, Seq[Expression])] = e match {
+    case u: ScalaUDF if u.udfName.exists(GeoKernels.table.contains) =>
+      Some((u.udfName.get, u.children))
+    case f: STGeoFused => f.program match {
+      case GProg.Call(name, args) =>
+        val idx = args.collect { case GProg.Load(i) => i; case GProg.Scalar(i) => i }
+        if (idx.length == args.length) Some((name, idx.map(f.children))) else None
+      case _ => None
+    }
+    case _ => None
   }
 }
 
@@ -361,6 +404,15 @@ object GeoFusion {
               if (isTrue == thenNull) null else ic(args, parsed)
             }), false)
         }
+      case GProg.Call(name, Seq(GProg.Load(i)))
+          if GeoKernels.table(name).bytesFn.isDefined && constVals(i).isEmpty =>
+        // the kernel's bytes-level entry: no parse, so curved input skips
+        // the linearization (and the parse cache) it does not need
+        val f = GeoKernels.table(name).bytesFn.get
+        (((args, _) => {
+          val v = args(i)
+          if (v == null) null else f(v.asInstanceOf[Array[Byte]])
+        }), false)
       case GProg.Call(name, cargs) =>
         val k = GeoKernels.table(name)
         val compiled = cargs.map(comp)
@@ -427,22 +479,16 @@ object GeoFusionRule extends Rule[LogicalPlan] with PredicateHelper {
     "st_contains_properly", "st_dwithin")
 
   private def isSpatialPredRoot(e: Expression): Boolean = e match {
-    case u: ScalaUDF => u.udfName.exists(SpatialPredNames.contains)
-    case _: STIntersectsNative | _: STContainsNative | _: STWithinNative |
-         _: STDWithinNative => true
+    case GeoCall(name, _) => SpatialPredNames.contains(name)
     case _ => false
   }
 
   /** A node the fusion builder can absorb into a chain. Must cover every
     * case `build()` handles — an absorbable node missing here escapes
     * [[sharedSubtrees]]'s repeat counting and gets RE-RUN once per fused
-    * chain instead of once per row (the r9 sweep caught STBufferNative). */
+    * chain instead of once per row. */
   private def isFusableNode(e: Expression): Boolean = e match {
-    case u: ScalaUDF => u.udfName.exists(GeoKernels.table.contains)
-    case _: STAreaNative | _: STLengthNative | _: STIntersectsNative |
-         _: STContainsNative | _: STWithinNative | _: STDWithinNative |
-         _: STBufferNative | _: STDistanceNative | _: STCentroidNative |
-         _: STEnvelopeNative | _: STGeoFused => true
+    case GeoCall(_, _) | _: STGeoFused => true
     case _ => false
   }
 
@@ -498,10 +544,10 @@ object GeoFusionRule extends Rule[LogicalPlan] with PredicateHelper {
   private def fuseNamed(ne: NamedExpression, shared: Expression => Boolean): NamedExpression =
     fuseExpr(ne, shared).asInstanceOf[NamedExpression]
 
+  // a fused root is visited too: a one-call root re-fuses into a longer
+  // chain, a multi-call one builds nothing and stays as it is
   private def fuseExpr(e0: Expression, shared: Expression => Boolean): Expression =
-    e0.transformDown {
-      case e if !e.isInstanceOf[STGeoFused] => tryFuse(e, shared).getOrElse(e)
-    }
+    e0.transformDown { case e => tryFuse(e, shared).getOrElse(e) }
 
   /** Attempt to fuse the tree rooted at `e`. Returns Some only when the
     * rewrite spans enough kernels to pay. */
@@ -555,12 +601,11 @@ object GeoFusionRule extends Rule[LogicalPlan] with PredicateHelper {
     }
 
     def build(x: Expression): Option[GProg] = x match {
-      case u: ScalaUDF if u.udfDeterministic =>
-        u.udfName.flatMap(GeoKernels.table.get) match {
-          case Some(k) if u.children.length == k.arity && u.dataType == k.dataType =>
-            Some(call(k.name, k, u.children))
-          case _ => None
-        }
+      case u: ScalaUDF if !u.udfDeterministic => None
+      case GeoCall(name, args) =>
+        val k = GeoKernels.table(name)
+        if (args.length == k.arity && x.dataType == k.dataType) Some(call(name, k, args))
+        else None
       // Spark's null-guard around primitive-arg UDF calls on nullable
       // inputs: `if (isnull(a) OR ...) null else udf(knownnotnull(a), ...)`
       // — fuse through it so guarded constructors join the chain
@@ -568,26 +613,6 @@ object GeoFusionRule extends Rule[LogicalPlan] with PredicateHelper {
         build(inner).map(ip => GProg.Guard(addChild(pred), true, ip))
       case If(pred, inner, Literal(v, _)) if v == null =>
         build(inner).map(ip => GProg.Guard(addChild(pred), false, ip))
-      case STAreaNative(c) => Some(call("st_area", GeoKernels.table("st_area"), Seq(c)))
-      case STLengthNative(c) => Some(call("st_length", GeoKernels.table("st_length"), Seq(c)))
-      case STIntersectsNative(l, r) =>
-        Some(call("st_intersects", GeoKernels.table("st_intersects"), Seq(l, r)))
-      case STContainsNative(l, r) =>
-        Some(call("st_contains", GeoKernels.table("st_contains"), Seq(l, r)))
-      case STWithinNative(l, r) =>
-        Some(call("st_within", GeoKernels.table("st_within"), Seq(l, r)))
-      case STDWithinNative(a, b, d) =>
-        Some(call("st_dwithin", GeoKernels.table("st_dwithin"), Seq(a, b, d)))
-      case STDistanceNative(l, r) =>
-        Some(call("st_distance", GeoKernels.table("st_distance"), Seq(l, r)))
-      case STCentroidNative(c) =>
-        Some(call("st_centroid", GeoKernels.table("st_centroid"), Seq(c)))
-      case STEnvelopeNative(c) =>
-        Some(call("st_envelope", GeoKernels.table("st_envelope"), Seq(c)))
-      case STBufferNative(g, d) =>
-        // rebuild the 7-arg kernel call with the expression's fixed defaults
-        Some(call("st_buffer", GeoKernels.table("st_buffer"), Seq(g, d,
-          Literal(8), Literal("round"), Literal("round"), Literal(5.0), Literal(false))))
       case _ => None
     }
 

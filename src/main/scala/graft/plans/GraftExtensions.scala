@@ -98,14 +98,10 @@ object BboxFilterRule extends Rule[LogicalPlan] with PredicateHelper {
       // still satisfies the filter, so deriving a bbox conjunct from it
       // would wrongly drop rows.
       splitConjunctivePredicates(cond) foreach { p =>
-        // spatial conjunct operands: the ScalaUDF surface or the native
-        // Catalyst expression tier (the Column API emits STIntersectsNative)
+        // spatial conjunct operands, from the SQL surface's ScalaUDF or
+        // the Column API's kernel expression
         val operands: Seq[Expression] = p match {
-          case u: ScalaUDF if u.udfName.exists(EnvelopePreds.contains) &&
-              u.children.length == 2 => u.children
-          case n: STIntersectsNative => Seq(n.left, n.right)
-          case n: STContainsNative => Seq(n.left, n.right)
-          case n: STWithinNative => Seq(n.left, n.right)
+          case GeoCall(name, args) if EnvelopePreds.contains(name) && args.length == 2 => args
           case _ => Seq.empty
         }
         if (operands.length == 2) {

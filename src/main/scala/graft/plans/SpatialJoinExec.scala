@@ -50,15 +50,10 @@ object SpatialJoinStrategy extends SparkStrategy {
   /** sjoin predicate key for SpatialJoin.applyPred(build, probe). */
   private def predKey(name: String): String = name.stripPrefix("st_")
 
-  /** (predicate name, operand a, operand b) from either predicate tier:
-    * the ScalaUDF surface or the native Catalyst expression the Column API
-    * emits for st_intersects. */
+  /** (predicate name, operand a, operand b) from the SQL surface's
+    * ScalaUDF or the Column API's kernel expression. */
   private[plans] def spatialCond(e: Expression): Option[(String, Expression, Expression)] = e match {
-    case u: ScalaUDF if u.udfName.exists(Converse.contains) && u.children.length == 2 =>
-      Some((u.udfName.get, u.children(0), u.children(1)))
-    case n: STIntersectsNative => Some(("st_intersects", n.left, n.right))
-    case n: STContainsNative => Some(("st_contains", n.left, n.right))
-    case n: STWithinNative => Some(("st_within", n.left, n.right))
+    case GeoCall(name, Seq(a, b)) if Converse.contains(name) => Some((name, a, b))
     case _ => None
   }
 

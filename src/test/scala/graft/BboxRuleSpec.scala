@@ -74,32 +74,29 @@ class BboxRuleSpec extends AnyFunSuite {
     assert(joined.select("p").as[Int].collect().toSet === Set(10, 11, 12))
   }
 
-  test("native codegen expressions agree with the UDF surface") {
-    import spark.implicits._
+  test("Column kernel expressions agree with the UDF surface") {
     graft.Geo.registerAll(spark)
-    val df = (1 to 100).toDF("k")
+    val df = spark.range(1, 101).select(col("id").cast("int").as("k"))
       .select(col("k"), st_rectangle(col("k") * 4.0, lit(0.0),
         col("k") * 4.0 + 3.0, lit(2.0)).as("g"))
-    df.createOrReplaceTempView("native_check")
-    val rows = spark.sql(
-      """SELECT k, st_area(g) AS a_udf, st_area_native(g) AS a_nat,
-        |  st_length(g) AS l_udf, st_length_native(g) AS l_nat,
-        |  st_intersects(g, st_point(CAST(k*4+1 AS DOUBLE), 1.0d)) AS i_udf,
-        |  st_intersects_native(g, st_point(CAST(k*4+1 AS DOUBLE), 1.0d)) AS i_nat
-        |FROM native_check""".stripMargin).collect()
+    val probe = st_point((col("k") * 4 + 1).cast("double"), lit(1.0))
+    val rows = df.select(col("k"),
+      expr("st_area(g)").as("a_udf"), st_area(col("g")).as("a_nat"),
+      expr("st_length(g)").as("l_udf"), st_length(col("g")).as("l_nat"),
+      expr("st_intersects(g, st_point(CAST(k*4+1 AS DOUBLE), 1.0d))").as("i_udf"),
+      st_intersects(col("g"), probe).as("i_nat")).collect()
     rows.foreach { r =>
       assert(r.getDouble(1) === r.getDouble(2), s"area k=${r.getInt(0)}")
       assert(r.getDouble(3) === r.getDouble(4), s"length k=${r.getInt(0)}")
       assert(r.getBoolean(5) === r.getBoolean(6), s"intersects k=${r.getInt(0)}")
     }
     // nulls propagate
-    val n = spark.sql("SELECT st_area_native(CAST(NULL AS BINARY)) AS a").collect()(0)
+    val n = spark.range(1).select(st_area(lit(null).cast("binary")).as("a")).collect()(0)
     assert(n.isNullAt(0))
-    // the expression appears inline in generated code paths (no ScalaUDF node)
-    val plan = spark.sql("SELECT st_area_native(g) FROM native_check")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("stareanative") || plan.contains("STAreaNative") ||
-      !plan.contains("UDF"), s"unexpected plan:\n$plan")
+    // the Column form is the kernel expression, not a ScalaUDF node (the
+    // repartition keeps the st_rectangle constructor from fusing into it)
+    val plan = df.repartition(2).select(st_area(col("g"))).queryExecution.executedPlan.toString
+    assert(plan.contains("st_geo_fused(1 ops"), s"unexpected plan:\n$plan")
   }
 
   test("predicates under NOT / OR gain no bbox conjunct and keep all their rows") {

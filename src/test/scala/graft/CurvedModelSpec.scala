@@ -122,12 +122,13 @@ class CurvedModelSpec extends AnyFunSuite {
     assert(math.abs(lenU.asInstanceOf[Double] - math.Pi * 5) < 1e-12)
     val areaU = one(st_area(st_geomfromtext(lit("CURVEPOLYGON (CIRCULARSTRING (0 0, 10 0, 0 0))"))))
     assert(math.abs(areaU.asInstanceOf[Double] - math.Pi * 25) < 1e-10)
-    // native expression tier sees the same closed form
-    graft.Geo.registerAll(spark)
-    val nat = spark.sql(
-      "SELECT st_length_native(st_geomfromtext('CIRCULARSTRING (0 0, 5 5, 10 0)')) AS l, " +
-      "st_area_native(st_geomfromtext('CURVEPOLYGON (CIRCULARSTRING (0 0, 10 0, 0 0))')) AS a")
-      .collect()(0)
+    // the one-call kernel expression over stored curved bytes (no parse
+    // to fuse with) sees the same closed form
+    val stored = Seq((
+      CurvedGeom.write(CurvedGeom.parseWkt("CIRCULARSTRING (0 0, 5 5, 10 0)"), 0),
+      CurvedGeom.write(CurvedGeom.parseWkt("CURVEPOLYGON (CIRCULARSTRING (0 0, 10 0, 0 0))"), 0)))
+      .toDF("l", "a")
+    val nat = stored.select(st_length(col("l")), st_area(col("a"))).collect()(0)
     assert(math.abs(nat.getDouble(0) - math.Pi * 5) < 1e-12)
     assert(math.abs(nat.getDouble(1) - math.Pi * 25) < 1e-10)
   }
@@ -418,13 +419,16 @@ class CurvedModelSpec extends AnyFunSuite {
     val wktArc = "CIRCULARSTRING (3 -4, 4 3, -3 4)"
     val env = one(st_aswkt(st_envelope(st_geomfromtext(lit(wktArc))))).asInstanceOf[String]
     assert(env == "POLYGON ((-3 -4, 5 -4, 5 5, -3 5, -3 -4))", env)
-    // native tier bytes-level entry agrees
-    val envN = EWKB.read(graft.plans.GeoNative.envelope(
-      CurvedGeom.write(CurvedGeom.parseWkt(wktArc), 0)))
+    // the one-call kernel expression over stored curved bytes agrees; SRID
+    // carries through, and a curve-bearing collection takes the branch
+    val stored = Seq((
+      CurvedGeom.write(CurvedGeom.parseWkt(wktArc), 0),
+      CurvedGeom.write(CMulti(7, Vector(CurvedGeom.parseWkt(wktArc)), false, false), 4326)))
+      .toDF("arc", "multi")
+    val envs = stored.select(st_envelope(col("arc")), st_envelope(col("multi"))).collect()(0)
+    val envN = EWKB.read(envs.getAs[Array[Byte]](0))
     assert(envN.getEnvelopeInternal.getMaxX == 5.0 && envN.getEnvelopeInternal.getMaxY == 5.0)
-    // SRID carries through, and a curve-bearing collection takes the branch
-    val e2 = EWKB.read(graft.plans.GeoNative.envelope(CurvedGeom.write(
-      CMulti(7, Vector(CurvedGeom.parseWkt(wktArc)), false, false), 4326)))
+    val e2 = EWKB.read(envs.getAs[Array[Byte]](1))
     assert(e2.getSRID == 4326 && e2.getEnvelopeInternal.getMaxX == 5.0)
     // degenerate curved inputs mirror JTS getEnvelope shapes
     assert(one(st_geometrytype(st_envelope(st_geomfromtext(

@@ -11,8 +11,9 @@ import graft.functions._
   * ReusedExchange/AQEShuffleRead nodes the headers cite are actually in
   * the committed file (VERDICT r18 #2 — the r18 pipe_minhash dump was an
   * initial plan and could not contain them). "Before" variants rebuild
-  * the pre-r19 shape inline from the same library building blocks, or
-  * via the probe toggles (`graft.join.cellSnap.probeOff`). */
+  * the pre-r19 shape inline from the same library building blocks. The
+  * grid join's pre-r19 dump came from a probe toggle that is gone; its
+  * file stays in plans/r19. */
 object PlanDumpR19 {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
@@ -43,10 +44,6 @@ object PlanDumpR19 {
       java.nio.file.Files.write(new java.io.File(outDir, name + ".txt").toPath,
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"[plandump] wrote $name")
-    }
-    def withProp[T](k: String)(f: => T): T = {
-      sys.props(k) = "true"
-      try f finally sys.props.remove(k)
     }
 
     def docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -129,17 +126,11 @@ object PlanDumpR19 {
       orders0.select(k.as("lk"), rect.as("geometry")),
       orders0.select(k.as("rk"), pt.as("geometry")),
       cellSize = 64.0, predicate = "contains").agg(count(lit(1)).as("n"))
-    dumpExecuted("geo_sjoin_grid_before",
-      "pre-r19 (cellSnap.probeOff): both census aggregates and the " +
-        "cogroup each re-evaluate the cells explode (SerializeFromObject/" +
-        "MapPartitions over the indexed checkpoint) — the EWKB parse + " +
-        "cell math per row runs twice per side",
-      withProp("graft.join.cellSnap.probeOff")(gridJoin))
     dumpExecuted("geo_sjoin_grid_after",
       "r19: the censused cells sides are lazily localCheckpoint'd — the " +
         "cogroup reads Scan ExistingRDD leaves (the materialized cells) " +
-        "instead of re-running the explode. Alternated A/B (ProbeCellSnapAB " +
-        "quiet window): 0.72x. The salted-cogroup shuffle above them is " +
+        "instead of re-running the explode. Alternated A/B (quiet " +
+        "window): 0.72x. The salted-cogroup shuffle above them is " +
         "unchanged.", gridJoin)
     def quadJoin = graft.join.SpatialJoin.sjoinQuadtree(
       orders0.select(k.as("lk"), rect.as("geometry")),

@@ -1275,4 +1275,50 @@ class SpatialJoinSpec extends AnyFunSuite {
     val got = joined.select($"lid", $"rid").as[(Long, Long)].collect().toSet
     assert(got === Set((1L, 10L), (2L, 20L)))
   }
+
+  test("inParallel cancels the forked job when the caller side throws") {
+    import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
+    val sc = spark.sparkContext
+    val Desc = "inParallel-forked-long-job"
+    val started = new CountDownLatch(1)
+    val forkedJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val ended = new LinkedBlockingQueue[JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Desc)) {
+          forkedJob.set(e.jobId); started.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == forkedJob.get) ended.put(e.jobResult)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException] {
+        SpatialJoin.inParallel(
+          {
+            assert(started.await(60, TimeUnit.SECONDS), "forked job never started")
+            throw new IllegalStateException("caller side failed")
+          },
+          {
+            sc.setJobDescription(Desc)
+            // tasks that only stop when killed (or after 100 s)
+            sc.parallelize(1 to 2, 2).map { i =>
+              val tc = org.apache.spark.TaskContext.get()
+              val until = System.nanoTime() + 100L * 1000 * 1000 * 1000
+              while (!tc.isInterrupted() && System.nanoTime() < until) Thread.sleep(20)
+              i
+            }.count()
+          })
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(e.getMessage === "caller side failed")
+      assert(secs < 60, s"inParallel took $secs s to rethrow")
+      val result = ended.poll(30, TimeUnit.SECONDS)
+      assert(result != null, "forked job never ended")
+      assert(result != JobSucceeded, "forked job ran to completion")
+    } finally sc.removeSparkListener(listener)
+  }
 }
