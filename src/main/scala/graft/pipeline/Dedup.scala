@@ -1,8 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -613,12 +619,25 @@ object Dedup {
           "most pairs at that similarity never share a bucket, so " +
           "near-dups will be declared novel; rewrite the store with " +
           "more, narrower bands (autoBands) for this operating point")
-    val hits = candidates
-      .filter(col("jaccard_est") >= threshold)
-      .select(col("batch_id")).distinct()
-    val vsCorpus = batch.join(hits, batch(idCol) === hits("batch_id"),
+    novelRows(batch, idCol, candidates.filter(col("jaccard_est") >= threshold),
+      dedupWithinBatch)(dedupWithin)
+  }
+
+  /** The shared finish of the four `*NovelAgainstStore` doors: batch rows
+    * with no corpus hit (`hits` carries the matching `batch_id`s), then,
+    * with `dedupWithinBatch`, the tier's within-batch dedup. That pass
+    * reads its input several times (its sign pass, its verify snapshot,
+    * the survivors' joins), and every read of the lazy anti-join would
+    * re-run the whole store-candidates plan (pairs join, signature
+    * fetch, estimate, distinct). The corpus-filtered batch is therefore
+    * snapshotted before the within-batch pass: the store join runs once
+    * per call. Without the within-batch pass the result stays lazy. */
+  private def novelRows(batch: DataFrame, idCol: String, hits: DataFrame,
+      dedupWithinBatch: Boolean)(dedupWithin: DataFrame => DataFrame): DataFrame = {
+    val hitIds = hits.select(col("batch_id")).distinct()
+    val vsCorpus = batch.join(hitIds, batch(idCol) === hitIds("batch_id"),
       "left_anti")
-    if (!dedupWithinBatch) vsCorpus else dedupWithin(vsCorpus)
+    if (dedupWithinBatch) dedupWithin(snapFrame(vsCorpus)) else vsCorpus
   }
 
   /** Shared candidate pass of the two-table signature stores: the batch
@@ -751,7 +770,11 @@ object Dedup {
     * skipped-bucket warning — see [[capBucketsJoint]]) before the lazy
     * result frame returns, so don't construct it speculatively; the
     * same applies to every `*CandidatesAgainstStore` /
-    * `*NovelAgainstStore` door. */
+    * `*NovelAgainstStore` door. The four novel doors do more at call
+    * time: with `dedupWithinBatch` they also snapshot the
+    * corpus-filtered batch (so the store join runs once per call) and
+    * resolve the within-batch near-dup components
+    * ([[connectedComponents]]) before the result frame returns. */
   def minhashCandidatesAgainstStore(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1423,13 +1446,10 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3, maxBucketSize: Int = 100000,
       dedupWithinBatch: Boolean = true): DataFrame = {
-    val hits = simhashCandidatesAgainstStore(spark, batch, table, idCol,
-        textCol, maxHamming, maxBucketSize)
-      .select(col("batch_id")).distinct()
-    val vsCorpus = batch.join(hits, batch(idCol) === hits("batch_id"),
-      "left_anti")
-    if (!dedupWithinBatch) vsCorpus
-    else dedupNearSimhash(vsCorpus, idCol, textCol, maxHamming, maxBucketSize)
+    novelRows(batch, idCol, simhashCandidatesAgainstStore(spark, batch, table,
+      idCol, textCol, maxHamming, maxBucketSize), dedupWithinBatch) {
+      dedupNearSimhash(_, idCol, textCol, maxHamming, maxBucketSize)
+    }
   }
 
   // ------------------------------------------------- embedding near-dup
@@ -1784,15 +1804,11 @@ object Dedup {
           "most near-dups at that similarity will be declared novel; " +
           "rewrite the store with autoPlanes sizing (writeEmbeddingStore " +
           "bits=0/tables=0 with autoThreshold at this operating point)")
-    val hits = embeddingCandidatesAgainstStore(spark, batch, table, idCol,
-        vecCol, maxBucketSize)
-      .filter(col("cosine") >= threshold)
-      .select(col("batch_id")).distinct()
-    val vsCorpus = batch.join(hits, batch(idCol) === hits("batch_id"),
-      "left_anti")
-    if (!dedupWithinBatch) vsCorpus
-    else dedupNearEmbedding(vsCorpus, idCol, vecCol, threshold, bits,
-      tables, maxBucketSize)
+    novelRows(batch, idCol, embeddingCandidatesAgainstStore(spark, batch, table,
+        idCol, vecCol, maxBucketSize).filter(col("cosine") >= threshold),
+      dedupWithinBatch) {
+      dedupNearEmbedding(_, idCol, vecCol, threshold, bits, tables, maxBucketSize)
+    }
   }
 
   // -------------------------------------------------- decontamination
@@ -2062,42 +2078,138 @@ object Dedup {
 
   // ------------------------------------------- near-dup pair clustering
 
+  /** Driver-tier bound of [[connectedComponents]]: a graph of at most
+    * 2^18 canonical edges and 32 MB of estimated row bytes is collected
+    * and resolved by a union-find on the driver. Each edge then costs
+    * its collected Row plus up to two one-column key rows and node
+    * slots — a few hundred bytes — so the tier holds on the order of
+    * 100 MB of driver heap while it runs, and its output (one row per
+    * node) reaches the consumers' tasks as a local relation, split
+    * across their partitions. Larger graphs stay on the executors (the
+    * star rounds). */
+  private val CcDriverMaxEdges = 1L << 18
+  private val CcDriverMaxBytes = 32L << 20
+
   /** Connected components over an undirected edge list — the step that
     * turns pairwise near-dup hits into dedup GROUPS (a ~ b, b ~ c ⇒ one
     * cluster, one survivor).
     *
-    * Algorithm: alternating large-star / small-star (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) — each round
-    * is two shuffle-bounded groupBy/join passes over the edge set, and the
-    * edge set converges to per-component stars rooted at the component
-    * minimum in O(log n) rounds even for path graphs (plain min-label
-    * propagation needs O(diameter)). No driver-side state: ids never leave
-    * the cluster except for the two scalar convergence aggregates per
-    * round. Lineage is truncated every round: with a RELIABLE checkpoint
-    * dir configured (`sc.setCheckpointDir`, e.g. an HDFS/S3 path) the
-    * round result is written there — an executor loss mid-loop recovers
-    * from the checkpoint; without one it falls back to `localCheckpoint`
-    * (executor-block storage — fine on local[*] / small jobs, but a lost
-    * executor kills the lineage irrecoverably, so set a checkpoint dir for
-    * long cluster runs).
+    * The edge set is canonicalized first (u < v, distinct, self-loops
+    * dropped) and its lineage truncated ([[canonicalEdges]]). Then two
+    * tiers:
+    *  - DRIVER, for graphs within 2^18 edges and 32 MB (the near-dup
+    *    graph of a batch is usually a handful of edges): the edges are
+    *    collected and a union-find resolves them in one driver pass, so
+    *    the call costs the canonicalizing job and one collect instead of
+    *    several jobs per star round. The result is a local frame.
+    *  - STAR ROUNDS above the bound ([[starRoundComponents]]). `maxIter`
+    *    bounds these rounds only; running out of it throws.
     *
-    * Ids may be any orderable Spark type (integral, string, ...). Returns
-    * `(id, component)` for every id appearing in `pairs`, where
-    * `component` is the smallest id reachable.
+    * Ids may be any orderable Spark type (integral, string, binary, ...).
+    * Returns `(id, component)` for every id appearing in `pairs`, where
+    * `component` is the smallest id reachable under Spark's ordering of
+    * the id type; both tiers give the same frame, columns, types and
+    * nullability included.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): DataFrame = {
+    val edges = canonicalEdges(pairs, aCol, bCol)
+    // the union-find keys nodes by their binary row form, so a collated
+    // string id (equal values, different bytes) stays on the star rounds
+    val driverRows =
+      if (!UnsafeRowUtils.isBinaryStable(edges.schema("u").dataType)) None
+      else graft.join.SpatialJoin.collectBounded(edges, CcDriverMaxEdges,
+        CcDriverMaxBytes)
+    driverRows match {
+      case Some(rows) => driverComponents(edges, rows)
+      case None => starRoundComponents(edges, maxIter)
+    }
+  }
+
+  /** The canonical (u, v) edge set of `pairs`: u < v, distinct,
+    * self-loops (and null ends) dropped, lineage truncated — with a
+    * RELIABLE checkpoint dir configured (`sc.setCheckpointDir`, e.g. an
+    * HDFS/S3 path) the frame is written there, otherwise it falls back to
+    * `localCheckpoint` (executor-block storage — fine on local[*] / small
+    * jobs, but a lost executor kills the lineage irrecoverably, so set a
+    * checkpoint dir for long cluster runs). */
+  private[graft] def canonicalEdges(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame = {
     val u = col("u"); val v = col("v")
-    // reliable checkpoint when the session has a dir configured (eager —
-    // same semantics as localCheckpoint(true)), executor-local otherwise
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    var edges = truncate(pairs
+    truncateLineage(pairs
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .filter(u =!= v)
       .select(least(u, v).as("u"), greatest(u, v).as("v"))
       .distinct())
+  }
+
+  /** Reliable checkpoint when the session has a dir configured (eager —
+    * same semantics as localCheckpoint(true)), executor-local otherwise. */
+  private def truncateLineage(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.localCheckpoint(true)
+
+  /** Driver tier of [[connectedComponents]]: union-find over the
+    * collected canonical `edges`. Nodes are keyed by their one-column
+    * `UnsafeRow`, so every id type — binary included — is keyed by value;
+    * each class's root, and so its component, is its minimum under
+    * Spark's own ordering of the id type (the one `min` uses), so labels
+    * equal the star rounds'. */
+  private def driverComponents(edges: DataFrame, rows: Array[Row]): DataFrame = {
+    val uField = edges.schema("u")
+    val idType = uField.dataType
+    val toKey = ExpressionEncoder(RowEncoder.encoderFor(
+      StructType(Seq(StructField("id", idType))))).createSerializer()
+    val index = scala.collection.mutable.HashMap.empty[InternalRow, Int]
+    val keys = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def node(id: Any): Int = {
+      val key = toKey(Row(id)).copy()
+      index.getOrElseUpdate(key, {
+        keys += key; ids += id; parent += parent.length; parent.length - 1
+      })
+    }
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    // the smaller key becomes the root, so every root is its class minimum
+    val ord = InterpretedOrdering.forSchema(Seq(idType))
+    rows.foreach { r =>
+      val (a, b) = (find(node(r.get(0))), find(node(r.get(1))))
+      if (a != b) {
+        if (ord.compare(keys(a), keys(b)) < 0) parent(b) = a else parent(a) = b
+      }
+    }
+    val out = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    // the star rounds' schema: `id` from the union of both edge ends,
+    // `component` from a min aggregate (always nullable)
+    val schema = StructType(Seq(
+      StructField("id", idType, uField.nullable || edges.schema("v").nullable),
+      StructField("component", idType, nullable = true)))
+    edges.sparkSession.createDataFrame(out.asJava, schema)
+  }
+
+  /** Star-round tier of [[connectedComponents]] over canonical `edges`
+    * ([[canonicalEdges]]): alternating large-star / small-star (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
+    * each round is two shuffle-bounded groupBy/join passes over the edge
+    * set, and the edge set converges to per-component stars rooted at
+    * the component minimum in O(log n) rounds even for path graphs
+    * (plain min-label propagation needs O(diameter)). No driver-side
+    * state: ids never leave the cluster except for the two scalar
+    * convergence aggregates per round. Lineage is truncated every round
+    * the same way as the input edges. Throws `IllegalStateException`
+    * when `maxIter` rounds end without convergence: the labels of an
+    * unconverged round are wrong, not approximate. */
+  private[graft] def starRoundComponents(edges0: DataFrame,
+      maxIter: Int): DataFrame = {
+    val u = col("u"); val v = col("v")
+    var edges = edges0
 
     // set signature = (count, xor of row hashes): order-insensitive, safe
     // under ANSI mode (no sum overflow), sound because the set is distinct
@@ -2107,6 +2219,7 @@ object Dedup {
     }
 
     var sig = signature(edges)
+    val edgeCount = sig._1
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -2123,7 +2236,7 @@ object Dedup {
         .select(greatest(u, v).as("u"), least(u, v).as("v"))
         .distinct()
       val smin = dirSmall.groupBy(u).agg(min(v).as("m"))
-      val small = truncate(dirSmall.join(smin, "u")
+      val small = truncateLineage(dirSmall.join(smin, "u")
         .select(v.as("u"), col("m").as("v"))
         .unionAll(smin.select(u, col("m").as("v")))
         .filter(u =!= v)
@@ -2135,6 +2248,10 @@ object Dedup {
       edges = small
       it += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponents: the star rounds did not converge within " +
+        s"maxIter = $maxIter rounds over $edgeCount edges — the labels " +
+        "would be wrong; raise maxIter")
     // at the fixpoint edges form stars (member, root); roots label themselves
     edges.select(v.as("id"), u.as("component"))
       .unionAll(edges.select(u.as("id"), u.as("component")))

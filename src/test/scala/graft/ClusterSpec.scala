@@ -1,19 +1,45 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Dedup
 
-/** [[Dedup.connectedComponents]] (large-star/small-star) and the near-dup
-  * clustering built on it. */
+/** [[Dedup.connectedComponents]] and the near-dup clustering built on it.
+  * Every graph here is small, so `connectedComponents` takes its driver
+  * (union-find) tier; each one also runs through the star rounds
+  * ([[Dedup.starRoundComponents]]) directly, and the two tiers must give
+  * the same frame. */
 class ClusterSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** `(id -> component)` of `pairs` (binary ids as byte Seqs), asserting that the driver tier and
+    * the star rounds agree on every label and on the output schema. */
+  private def bothTiers(pairs: DataFrame): Map[Any, Any] = {
+    val driver = Dedup.connectedComponents(pairs, "a", "b")
+    val star = Dedup.starRoundComponents(
+      Dedup.canonicalEdges(pairs, "a", "b"), maxIter = 25)
+    assert(driver.queryExecution.logical.isInstanceOf[LocalRelation],
+      "a small graph must take the driver tier")
+    assert(driver.schema === star.schema, "tiers disagree on the schema")
+    // binary ids compare by content
+    def value(x: Any): Any = x match {
+      case b: Array[Byte] => b.toSeq
+      case other => other
+    }
+    def labels(df: DataFrame): Map[Any, Any] =
+      df.collect().map(r => value(r.get(0)) -> value(r.get(1))).toMap
+    val got = labels(driver)
+    assert(got === labels(star), "driver tier and star rounds disagree")
+    got
+  }
+
   private def components(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    bothTiers(edges.toDF("a", "b")).map { case (k, v) =>
+      k.asInstanceOf[Long] -> v.asInstanceOf[Long] }
 
   test("path graph collapses to its minimum (transitive closure)") {
     // 0-1-2-...-9 one long chain: plain pair-dedup would keep 0 and drop
@@ -56,12 +82,43 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("string ids cluster too (no numeric cast)") {
-    val got = Dedup.connectedComponents(
-        Seq(("doc-b", "doc-a"), ("doc-b", "doc-c"), ("x", "y")).toDF("a", "b"),
-        "a", "b")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val got = bothTiers(
+      Seq(("doc-b", "doc-a"), ("doc-b", "doc-c"), ("x", "y")).toDF("a", "b"))
     assert(got == Map("doc-a" -> "doc-a", "doc-b" -> "doc-a", "doc-c" -> "doc-a",
       "x" -> "x", "y" -> "x"))
+  }
+
+  test("binary ids are keyed by value and ordered as Spark orders them") {
+    // fresh arrays per edge: equal ids must meet by content, not identity;
+    // 0x80 sorts AFTER 0x01 under Spark's unsigned byte order
+    def id(bs: Int*): Array[Byte] = bs.map(_.toByte).toArray
+    val pairs = Seq((id(0x80), id(0x01, 0x02)), (id(0x01, 0x02), id(0x7f)),
+      (id(0x05), id(0x06))).toDF("a", "b")
+    val got = bothTiers(pairs)
+    val hi = id(0x01, 0x02).toSeq
+    assert(got == Map(id(0x80).toSeq -> hi, hi -> hi, id(0x7f).toSeq -> hi,
+      id(0x05).toSeq -> id(0x05).toSeq, id(0x06).toSeq -> id(0x05).toSeq))
+  }
+
+  test("empty and self-loop-only edge sets give no rows in both tiers") {
+    assert(components(Seq.empty) === Map.empty)
+    assert(components(Seq((1L, 1L), (7L, 7L), (7L, 7L))) === Map.empty)
+  }
+
+  test("the star rounds fail loudly when maxIter runs out") {
+    // the 10-node path needs more than one round: one round used to
+    // return the wrong labels 0,0,0,1,2,... silently
+    val edges = Dedup.canonicalEdges(
+      (0L until 9L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b")
+    val e = intercept[IllegalStateException] {
+      Dedup.starRoundComponents(edges, maxIter = 1)
+    }
+    assert(e.getMessage.contains("maxIter = 1") && e.getMessage.contains("9 edges"),
+      e.getMessage)
+    // maxIter bounds the star rounds only: the driver tier ignores it
+    val driver = Dedup.connectedComponents(
+      (0L until 9L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b", maxIter = 1)
+    assert(driver.as[(Long, Long)].collect().toMap == (0L to 9L).map(_ -> 0L).toMap)
   }
 
   test("reliable checkpointing is used when a checkpoint dir is configured") {
@@ -70,7 +127,9 @@ class ClusterSpec extends AnyFunSuite {
     try {
       sc.setCheckpointDir(dir)
       // same answer as the localCheckpoint path...
-      val got = components((0L until 9L).map(i => (i, i + 1)))
+      val got = Dedup.starRoundComponents(Dedup.canonicalEdges(
+          (0L until 9L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b"), maxIter = 25)
+        .as[(Long, Long)].collect().toMap
       assert(got == (0L to 9L).map(_ -> 0L).toMap)
       // ...and the rounds actually hit the reliable store
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))

@@ -83,6 +83,8 @@ class EmbeddingStoreSpec extends AnyFunSuite {
         dedupWithinBatch = false)
       assert(noSelf.select($"vec_id").as[Long].collect().sorted.toSeq ===
         Seq(10001L, 10002L, 10003L, 10004L))
+      // the snapshot before the within-batch pass keeps every batch column, in order
+      assert(Seq(novel1, noSelf).forall(_.columns.toSeq == batch1.columns.toSeq))
       // append (the null-vector row is filtered by the writer)
       Dedup.writeEmbeddingStore(novel1, table, mode = "append")
       val batch2 = Seq(

@@ -79,6 +79,8 @@ class MinhashStoreSpec extends AnyFunSuite {
         threshold = 0.5, dedupWithinBatch = false)
       assert(noSelf.select($"doc_id").as[Long].collect().sorted.toSeq ===
         Seq(10001L, 10002L, 10003L))
+      // the snapshot before the within-batch pass keeps every batch column, in order
+      assert(Seq(novel1, noSelf).forall(_.columns.toSeq == batch1.columns.toSeq))
       Dedup.writeMinhashStore(novel1, table, mode = "append")
       // batch 2 duplicates a batch-1 novel AND a corpus doc
       val batch2 = Seq(
@@ -90,6 +92,68 @@ class MinhashStoreSpec extends AnyFunSuite {
         threshold = 0.5)
       assert(novel2.select($"doc_id").as[Long].collect().toSeq === Seq(30002L),
         "the appended batch-1 novel must now catch its batch-2 dup")
+    } finally drop(table)
+  }
+
+  /** Spark jobs that `body` runs, counted by a listener on a job group.
+    * A sentinel job outside the group runs last: the listener bus
+    * delivers in order, so once the sentinel's end arrives every job of
+    * the group has been counted. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "minhash-novel-job-count"
+    val sentinel = "minhash-novel-job-count-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelId = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (props.exists(_.getProperty("spark.job.description") == sentinel))
+          sentinelId.set(e.jobId)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelId.get) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never drained")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the novel door's job count stays pinned") {
+    // the novel/ingest fixture: a corpus dup, a novel, and an intra-batch
+    // dup pair. It ran 56 jobs while the store join re-ran for every read
+    // of the within-batch pass and the 1-edge near-dup graph took the
+    // star rounds; with the snapshot and the driver component tier it
+    // runs 27. The bound leaves 3 jobs of slack
+    val corpus = (0 until 30).map(i => (i.toLong, docText(i))).toDF("doc_id", "text")
+    val table = "graft_mh_store_jobs"
+    drop(table)
+    try {
+      Dedup.writeMinhashStore(corpus, table)
+      val alphaText = "orchard ledger piano thirteen brick quantum marble"
+      val batch = Seq(
+        (10000L, docText(3)),
+        (10001L, alphaText),
+        (10002L, "velvet compass winter granite ninety lantern oboe"),
+        (10003L, alphaText))
+        .toDF("doc_id", "text")
+      val (ids, jobs) = jobsOf {
+        Dedup.minhashNovelAgainstStore(spark, batch, table, threshold = 0.5)
+          .select($"doc_id").as[Long].collect()
+      }
+      assert(ids.sorted.toSeq === Seq(10001L, 10002L))
+      assert(jobs <= 30, s"one novel door + collect ran $jobs Spark jobs")
     } finally drop(table)
   }
 

@@ -75,6 +75,8 @@ class NgramStoreSpec extends AnyFunSuite {
         threshold = 0.5, dedupWithinBatch = false)
       assert(noSelf.select($"doc_id").as[Long].collect().sorted.toSeq ===
         Seq(10001L, 10002L, 10003L))
+      // the snapshot before the within-batch pass keeps every batch column, in order
+      assert(Seq(novel1, noSelf).forall(_.columns.toSeq == batch1.columns.toSeq))
       Dedup.writeNgramStore(novel1, table, mode = "append")
       val batch2 = Seq(
         (30000L, alphaText),
