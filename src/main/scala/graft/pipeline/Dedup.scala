@@ -48,19 +48,27 @@ object Dedup {
     * B² join bomb. Rows of a dropped bucket still pair through their other
     * bands/tables; truly pathological exact-dup groups should be
     * exact-deduped first. Costs one extra shuffle on the same bucket key
-    * the join shuffles on, with map-side combine on the count. */
+    * the join shuffles on, with map-side combine on the count.
+    *
+    * `rowBound` is an upper bound on the row count of any bucket group,
+    * when the caller knows one: the self-join doors pass the row count
+    * of the signed snapshot they already take (each signed row adds at
+    * most one row per band, chunk or table, so no group can hold more).
+    * A bound ≤ `maxBucketSize` proves the cap cannot drop anything, and
+    * the census is skipped — the output is the same frame either way. */
   private[graft] def capBuckets(df: DataFrame, bucketCols: Seq[String],
-      maxBucketSize: Int): DataFrame =
-    if (maxBucketSize <= 0) df
+      maxBucketSize: Int, rowBound: Long = Long.MaxValue): DataFrame =
+    if (maxBucketSize <= 0 || rowBound <= maxBucketSize) df
     else {
       // Aggregate sizes + broadcast-join-back, DELIBERATELY not a
       // window count (r18 measured-then-rejected): a window count would
       // ride the one bucket-cols exchange the downstream self-join
       // needs and save the census's second evaluation of `df` (a full
       // extra sign pass for the banding doors — 2.05 -> 1.49 s on the
-      // minhash door at sf0.1, ProbeMinhashReuse), BUT it moves every
-      // row of an OVER-CAP group (signature payload included) to one
-      // task's window buffer before dropping it. The cap exists for
+      // minhash door at sf0.1, PERF.md "Round 18 OPTIMIZATION: library
+      // changes"), BUT it moves every row of an OVER-CAP group
+      // (signature payload included) to one task's window buffer
+      // before dropping it. The cap exists for
       // exactly the degenerate-boilerplate bucket (B copies of one
       // document, B² candidate pairs); under the census form those B
       // rows are counted map-side and NEVER shuffled, while the window
@@ -77,15 +85,30 @@ object Dedup {
     * WARNING: a corpus index silently thinner than its corpus reads as
     * complete, and a pair whose only shared bucket was dropped is
     * missed for good. Costs the same two input passes capBuckets
-    * already pays (sizes + join). */
+    * already pays (sizes + join).
+    *
+    * Returns the written frame's BUCKET-ROW BOUND (see
+    * [[BucketRowBoundProp]]): `rowBound`, an upper bound on any group's
+    * row count known before the write (the writers' signed row count,
+    * compaction's stamped bound), when it is ≤ `maxBucketSize` — the
+    * census cannot fire and is skipped; otherwise the census runs and
+    * returns its largest KEPT group, read by the same aggregate job as
+    * the dropped count. With the cap off, `rowBound` passes through. */
   private def capBucketsWarn(df: DataFrame, bucketCols: Seq[String],
-      maxBucketSize: Int, ctx: String)(write: DataFrame => Unit): Unit =
-    if (maxBucketSize <= 0) write(df)
-    else {
+      maxBucketSize: Int, ctx: String, rowBound: Option[Long])(
+      write: DataFrame => Unit): Option[Long] =
+    if (maxBucketSize <= 0 || rowBound.exists(_ <= maxBucketSize)) {
+      write(df)
+      rowBound
+    } else {
       val sizes = df.groupBy(bucketCols.map(col): _*)
         .agg(count(lit(1)).as("__bsz")).persist()
       try {
-        val dropped = sizes.filter(col("__bsz") > maxBucketSize).count()
+        val census = sizes.agg(
+          count(when(col("__bsz") > maxBucketSize, lit(1))),
+          coalesce(max(when(col("__bsz") <= maxBucketSize, col("__bsz"))),
+            lit(0L))).head()
+        val dropped = census.getLong(0)
         if (dropped > 0)
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"$ctx: $dropped bucket group(s) exceed maxBucketSize " +
@@ -95,6 +118,7 @@ object Dedup {
               "collapse boilerplate with exact dedup before indexing")
         write(df.join(sizes.filter(col("__bsz") <= maxBucketSize),
           bucketCols).drop("__bsz"))
+        Some(census.getLong(1))
       } finally sizes.unpersist()
     }
 
@@ -114,11 +138,19 @@ object Dedup {
     * batch is capped at write time, but a bucket can grow past the cap
     * ACROSS appends, and silently skipping it at join time would read
     * as "no duplicates there"; the fix is the store's compaction door
-    * ([[compactMinhashStore]] and siblings). */
+    * ([[compactMinhashStore]] and siblings).
+    *
+    * SKIP RULE: `rowBound` is the store's stamped bucket-row bound
+    * ([[BucketRowBoundProp]]) plus the batch's signed row count. No store
+    * group exceeds its stamp and no batch group exceeds the batch's row
+    * count, so a sum ≤ `maxBucketSize` proves no joint group can be
+    * dropped: the inputs return unchanged, with no census job, no count
+    * and no semi-joins. A store without the stamp (`None`) takes the
+    * census path. */
   private def capBucketsJoint(batch: DataFrame, store: DataFrame,
       bucketCols: Seq[String], maxBucketSize: Int,
-      ctx: String): (DataFrame, DataFrame) =
-    if (maxBucketSize <= 0) (batch, store)
+      ctx: String, rowBound: Option[Long]): (DataFrame, DataFrame) =
+    if (maxBucketSize <= 0 || rowBound.exists(_ <= maxBucketSize)) (batch, store)
     else {
       val bs = batch.groupBy(bucketCols.map(col): _*).agg(count(lit(1)).as("__bn"))
       val cs = store.groupBy(bucketCols.map(col): _*).agg(count(lit(1)).as("__cn"))
@@ -154,10 +186,11 @@ object Dedup {
     * chunk, so any frame past ~cap × domain rows drops essentially
     * every group and returns zero pairs). Eager: the bucket census runs
     * at call time (one aggregate pass, snapped — the join reuses the
-    * tiny censused list, not the pass). */
+    * tiny censused list, not the pass), unless `rowBound` (as in
+    * [[capBuckets]]) is ≤ `maxBucketSize` and proves nothing can drop. */
   private def capBucketsWarned(df: DataFrame, bucketCols: Seq[String],
-      maxBucketSize: Int, ctx: String): DataFrame =
-    if (maxBucketSize <= 0) df
+      maxBucketSize: Int, ctx: String, rowBound: Long): DataFrame =
+    if (maxBucketSize <= 0 || rowBound <= maxBucketSize) df
     else {
       val sizes = snapFrame(
         df.groupBy(bucketCols.map(col): _*).agg(count(lit(1)).as("__bsz")))
@@ -187,40 +220,108 @@ object Dedup {
       spark.sessionState.catalog.getTableMetadata(id).properties.get(prop)
     } catch { case _: org.apache.spark.sql.AnalysisException => None }
 
+  /** Table property on each near-dup store's slim bucket table: an
+    * upper bound on the row count of any of its bucket groups —
+    * (band, bucket), (chunk, bucket) or (t, sig). The store doors
+    * ([[capBucketsJoint]]) and compaction ([[recapBucketTable]]) skip
+    * their bucket-cap census when this bound (plus the batch's rows)
+    * is ≤ the cap. The writers maintain it: unset together with the
+    * params stamp before a write onto an existing store, and set after
+    * every table of the write has landed — overwrite stamps the batch's
+    * bound, append adds the batch's bound to the stamped one (a store
+    * without the bound stays without it until its next compaction),
+    * ignore/error modes that write nothing leave it alone. A batch's
+    * bound is its signed row count when that is ≤ the cap (each signed
+    * row adds at most one row per group), otherwise the largest group
+    * the write-time census kept. Contract, as for the spatial
+    * `stampCellSummary`: graft's own writes keep the bound; rows that
+    * other writers add to the table are not detected. */
+  val BucketRowBoundProp = "graft.dedup.maxBucketRows"
+
+  /** The stamped [[BucketRowBoundProp]] of `table`; None when absent or
+    * unreadable (the census path). */
+  private def readRowBound(spark: org.apache.spark.sql.SparkSession,
+      table: String): Option[Long] =
+    parseRowBound(readStoreStamp(spark, table, BucketRowBoundProp))
+
+  private def parseRowBound(v: Option[String]): Option[Long] =
+    v.flatMap(_.toLongOption).filter(_ >= 0)
+
+  /** A store write as [[checkStoreWrite]] resolved it: the normalized
+    * mode, whether the table existed, and — for an append onto an
+    * existing store — its stamped bucket-row bound before the write. */
+  private final case class StoreWrite(mode: String, existedBefore: Boolean,
+      priorBound: Option[Long]) {
+    /** overwrite and append write; ignore/error only create a new table */
+    def writes: Boolean = mode == "overwrite" || mode == "append" || !existedBefore
+    /** the write replaces or extends a table that is already there */
+    def changesExisting: Boolean =
+      existedBefore && (mode == "overwrite" || mode == "append")
+  }
+
   /** The store writers' shared PROLOGUE ([[stampStore]]'s opening
     * bracket): normalize the mode, resolve prior existence, and refuse
     * a non-overwrite write whose parameters don't match the stamp —
     * mixed parameters hash different buckets (or grams of a different
     * n) and silently miss pairs. One copy for all four tiers (review
-    * r17 — the fourth paste had already drifted its message). */
+    * r17 — the fourth paste had already drifted its message). An
+    * append also reads the prior [[BucketRowBoundProp]] here, from the
+    * same metadata. */
   private def checkStoreWrite(spark: org.apache.spark.sql.SparkSession,
       table: String, mode: String, prop: String, payload: String,
-      writer: String): (String, Boolean) = {
+      writer: String): StoreWrite = {
     val modeNorm = mode.toLowerCase(java.util.Locale.ROOT)
     val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val existedBefore = spark.sessionState.catalog.tableExists(tableId)
-    if (modeNorm != "overwrite" && existedBefore) {
-      val prev = spark.sessionState.catalog.getTableMetadata(tableId)
-        .properties.get(prop)
-      require(prev.contains(payload),
-        s"$writer: mode=$mode with params $payload onto a store " +
-          s"stamped ${prev.getOrElse("(no stamp)")} — mixed parameters " +
-          "(or an old store layout) silently miss pairs; reuse the " +
-          "stamped parameters, or rewrite with mode=overwrite")
-    }
-    (modeNorm, existedBefore)
+    val priorBound =
+      if (modeNorm == "overwrite" || !existedBefore) None
+      else {
+        val props = spark.sessionState.catalog.getTableMetadata(tableId).properties
+        val prev = props.get(prop)
+        require(prev.contains(payload),
+          s"$writer: mode=$mode with params $payload onto a store " +
+            s"stamped ${prev.getOrElse("(no stamp)")} — mixed parameters " +
+            "(or an old store layout) silently miss pairs; reuse the " +
+            "stamped parameters, or rewrite with mode=overwrite")
+        parseRowBound(props.get(BucketRowBoundProp))
+      }
+    StoreWrite(modeNorm, existedBefore, priorBound)
   }
 
+  /** UNSET the params stamp and the bucket-row bound before a write
+    * onto an existing store: the saves are not atomic, and a crash
+    * between them must leave a store that ERRORS loudly at the doors
+    * (no stamp → "rewrite") rather than one that silently joins old
+    * band rows to new signatures, or skips a cap census on a stale
+    * bound. [[stampStore]] re-sets both after every write lands. ONLY
+    * on modes that write onto the table — ignore/error modes write
+    * nothing there, and unsetting would permanently brick a valid
+    * index with a no-op call (review r16). */
+  private def unsetStoreStamps(spark: org.apache.spark.sql.SparkSession,
+      table: String, w: StoreWrite, prop: String): Unit =
+    if (w.changesExisting)
+      try spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
+        s"UNSET TBLPROPERTIES IF EXISTS ('$prop', '$BucketRowBoundProp')")
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
+
   /** Stamp a store's parameter property when the write mode actually
-    * wrote — the shared finish of both index writers. */
+    * wrote — the shared finish of the index writers — together with its
+    * [[BucketRowBoundProp]]: `batchBound` for a fresh or overwritten
+    * table, the prior bound + `batchBound` on an append (absent when
+    * either is). */
   private def stampStore(spark: org.apache.spark.sql.SparkSession,
-      table: String, modeNorm: String, existedBefore: Boolean,
-      prop: String, payload: String): Unit = {
-    val wrote = modeNorm == "overwrite" || modeNorm == "append" || !existedBefore
-    if (wrote)
+      table: String, w: StoreWrite, prop: String, payload: String,
+      batchBound: Option[Long]): Unit =
+    if (w.writes) {
+      val bound =
+        if (w.mode == "append" && w.existedBefore)
+          for (p <- w.priorBound; b <- batchBound) yield p + b
+        else batchBound
+      val props = s"'$prop'='$payload'" +:
+        bound.map(b => s"'$BucketRowBoundProp'='$b'").toSeq
       spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
-        s"SET TBLPROPERTIES ('$prop'='$payload')")
-  }
+        s"SET TBLPROPERTIES (${props.mkString(", ")})")
+    }
 
   // ----------------------------------------------------------- shingles
 
@@ -234,36 +335,30 @@ object Dedup {
         .otherwise(array(norm)))
   }
 
-  /** Character k-shingles hashed to Int64 (xxhash64), distinct, codegen'd.
-    * At 100 TB the string shingle array of a 100 KB document is ~0.5 MB per
-    * row; the hashed form is 8 bytes per shingle and loses nothing for
-    * signature/Jaccard purposes (collisions are ~2⁻⁶⁴).
-    *
-    * IMPORTANT: `norm` must be a *materialized column* (an attribute), not
-    * an expression — the transform lambda evaluates its body per element,
-    * so an inlined `normalized(text)` would run its regex once per shingle
-    * (measured: ~20× slowdown). Callers project the normalized text first. */
-  private[graft] def shingleHashesNorm(norm: Column, k: Int): Column =
-    array_distinct(
-      // null text → null shingles → null signature (row drops out of
-      // banding): xxhash64(null) silently returns the SEED, which would
-      // band every null-text row together as mutual near-dups — and
-      // diverge from the native MinHashSig tier, which null-propagates
-      when(norm.isNull, lit(null).cast("array<bigint>"))
-        .when(length(norm) >= k,
-          transform(sequence(lit(1), length(norm) - (k - 1)), i => xxhash64(norm.substr(i, lit(k)))))
-        .otherwise(array(xxhash64(norm))))
+  /** Character k-shingles hashed to Int64 (xxhash64), distinct, as one
+    * codegen'd pass over the UTF-8 bytes ([[graft.plans.ShingleSet]]).
+    * At 100 TB the string shingle array of a 100 KB document is ~0.5 MB
+    * per row; the hashed form is 8 bytes per shingle and loses nothing
+    * for signature/Jaccard purposes (collisions are ~2⁻⁶⁴). Values and
+    * order equal `array_distinct` over the per-window
+    * `xxhash64(substr(norm, i, k))` array (a string shorter than k
+    * hashes whole); null text gives a null set, not the xxhash64 seed —
+    * a seed-valued set would band every null-text row together as
+    * mutual near-dups. The kernel reads `norm` once per row, so it may
+    * be an expression as well as a projected column. */
+  private[graft] def shingleHashesNorm(norm: Column, k: Int): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.plans.ShingleSet(ColumnBridge.expression(norm), k))
+  }
 
-  /** Convenience single-expression form; prefer projecting
-    * `TextAnalysis.normalized` into a column and using the candidates
-    * pipeline for anything beyond small data (see [[shingleHashesNorm]]). */
+  /** [[shingleHashesNorm]] of `TextAnalysis.normalized(text)`. */
   def shingleHashes(text: Column, k: Int): Column =
     shingleHashesNorm(TextAnalysis.normalized(text), k)
 
   /** Word n-grams of the normalized text. NOTE: single-expression
-    * convenience — the lambda re-tokenizes per element (see
-    * [[shingleHashesNorm]]'s warning); at scale use [[nearDupNgram]],
-    * which materializes the token array first. */
+    * convenience — the lambda re-tokenizes per element (an inlined
+    * tokenizer runs once per gram position); at scale use
+    * [[nearDupNgram]], which materializes the token array first. */
   def wordNgrams(text: Column, n: Int): Column =
     wordNgramsOfTokens(TextAnalysis.tokens(TextAnalysis.normalized(text)), n)
 
@@ -374,7 +469,8 @@ object Dedup {
     * filter on the DERIVED signature pushes below the projection,
     * substituting the whole normalize+sign expression into the
     * predicate, and every consumer of the banded subplan re-evaluates
-    * it per row (ProbeMinhashAB r17: the r16 sig-filter shape read
+    * it per row (PERF.md "pipe_minhash regression: convicted and
+    * fixed": the r16 sig-filter shape read
     * 1.83 s vs 1.15 s for this one — the whole pipe_minhash
     * "regression" was that filter). */
   private def minhashSigned(df: DataFrame, idCol: String, textCol: String,
@@ -395,7 +491,8 @@ object Dedup {
     * scan-pushed), and the store writer filters `sig IS NOT NULL` on
     * its read-back path where sig is a stored attribute. A filter here
     * on the derived sig column would re-evaluate the whole sign
-    * expression per consumer (ProbeMinhashAB r17, −37%). */
+    * expression per consumer (PERF.md "pipe_minhash regression:
+    * convicted and fixed", −37%). */
   private def bandExplode(withSig: DataFrame, numHashes: Int,
       bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
@@ -426,6 +523,33 @@ object Dedup {
   private def snapFrame(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
+  /** [[snapFrame]] together with the snapshot's row count — the bound
+    * the cap sites skip their census on. The count is an `Observation`
+    * on the snapshot's own job, so it costs no extra job. */
+  private def snapCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val snap = snapFrame(df.observe(obs, count(lit(1)).as("n")))
+    (snap, observedRows(obs, snap.count()))
+  }
+
+  /** The count an `Observation` reports for a job that has finished.
+    * Spark delivers observed metrics through the listener bus after the
+    * job ends, normally within milliseconds; the wait is bounded, and
+    * past it `recount` runs one count job instead, so a lost delivery
+    * costs time but never hangs the door or skews its bound. */
+  private def observedRows(obs: org.apache.spark.sql.Observation,
+      recount: => Long): Long =
+    try scala.concurrent.Await.result(obs.future, ObservedMetricsWait).getLong(0)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"observed row count not delivered within $ObservedMetricsWait; " +
+            "counting with a separate job")
+        recount
+    }
+
+  private val ObservedMetricsWait = scala.concurrent.duration.Duration(10, "s")
+
   /** Fraction of signature positions agreeing — the MinHash jaccard
     * estimate. ONE implementation for the self-join and store doors
     * (MinhashStoreSpec pins them bit-for-bit; a drifted copy would
@@ -445,8 +569,8 @@ object Dedup {
     * cost) ran once PER SIDE: 2x the sign CPU and a second full input
     * scan per candidates call at corpus scale. Aliased sides share one
     * canonical subtree, so the shuffle is computed once and read twice
-    * (ProbeMinhashReuse: ReusedExchange in the final plan, results
-    * bit-identical). */
+    * (PERF.md "Round 18 OPTIMIZATION: library changes": ReusedExchange
+    * in the final plan, results bit-identical). */
   private def selfJoinPairs(df: DataFrame, keys: Seq[String],
       payload: Seq[String]): DataFrame = {
     val cond = keys.map(kc => col(s"__sj_a.$kc") === col(s"__sj_b.$kc"))
@@ -471,11 +595,14 @@ object Dedup {
     // re-derive bands from it with cheap slice hashes. Over-cap rows
     // still never shuffle — the census stays a map-side-combined
     // aggregate, so capBuckets' bounded-worst-case argument holds
-    // unchanged. Cap off → single consumer → no snap (stay lazy).
+    // unchanged. Cap off → single consumer → no snap (stay lazy). The
+    // snap's row count bounds every (band, bucket) group, so at most
+    // maxBucketSize signed rows the census is skipped.
     val signed = minhashSigned(df, idCol, textCol, numHashes, shingleK)
-    val src = if (maxBucketSize > 0) snapFrame(signed) else signed
+    val (src, rows) =
+      if (maxBucketSize > 0) snapCounted(signed) else (signed, Long.MaxValue)
     val banded = bandExplode(src, numHashes, bands)
-    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize)
+    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize, rows)
     // self-join within (band, bucket); a<b kills mirror+self pairs.
     // Dedup the id pairs BEFORE scoring: a pair colliding in many bands
     // would otherwise pay the signature comparison once per band.
@@ -507,9 +634,8 @@ object Dedup {
     // (id_a and id_b), and the rename-below-exchange join shape defeats
     // ReuseExchange (the selfJoinPairs lesson) — without the snap the
     // normalize+shingle pass ran twice more per call
-    val sh = snapFrame(df
-      .select(col(idCol).as("id"), TextAnalysis.normalized(col(textCol)).as("__norm"))
-      .select(col("id"), shingleHashesNorm(col("__norm"), shingleK).as("sh")))
+    val sh = snapFrame(df.select(col(idCol).as("id"),
+      shingleHashesNorm(TextAnalysis.normalized(col(textCol)), shingleK).as("sh")))
     cands
       .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
       .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
@@ -531,12 +657,44 @@ object Dedup {
     * [[writeMinhashStore]] / [[writeNgramStore]] bands table. */
   val MinhashSigTableSuffix = "__sigs"
 
+  /** The first write of a two-table store: the per-id payload rows
+    * (`(id, sig)` or `(id, vec)`) into `sibling`, bucketed by id. On
+    * APPEND the slim rows must cover only the NEW batch, so the one
+    * signing pass is snapshotted and feeds both writes (the snapshot is
+    * returned); on overwrite the just-written sibling IS exactly the
+    * corpus — slim rows derive from reading it back, no snapshot held
+    * (None). Either way the written row count — the batch's bucket-row
+    * bound — is observed on the job that runs anyway; ignore/error
+    * modes may write nothing, so they leave the bound to the census. */
+  private def writeSibling(rows: DataFrame, w: StoreWrite, sibling: String,
+      buckets: Int): (Option[DataFrame], Option[Long]) = {
+    def save(df: DataFrame): Unit =
+      df.repartition(buckets, col("id"))
+        .write.mode(w.mode).bucketBy(buckets, "id").sortBy("id")
+        .format("parquet").saveAsTable(sibling)
+    w.mode match {
+      case "append" =>
+        val (snap, n) = snapCounted(rows)
+        save(snap)
+        (Some(snap), Some(n))
+      case "overwrite" =>
+        val obs = org.apache.spark.sql.Observation()
+        save(rows.observe(obs, count(lit(1)).as("n")))
+        (None, Some(observedRows(obs, rows.sparkSession.table(sibling).count())))
+      case _ =>
+        save(rows)
+        (None, None)
+    }
+  }
+
   /** Shared writer of the two-table SIGNATURE stores (the MinHash
     * shingle tier and the word-n-gram tier — same layout, different
     * `sign` pass): slim (id, band, bucket) rows bucketed by the join
-    * key + (id, sig) rows bucketed by id, param stamp unset across the
-    * non-atomic two-table window (a crash leaves a store the doors
-    * refuse loudly), per-batch hot buckets capped with a WARNING.
+    * key + (id, sig) rows bucketed by id, param stamp and
+    * [[BucketRowBoundProp]] unset across the non-atomic two-table window
+    * (a crash leaves a store the doors refuse loudly), per-batch hot
+    * buckets capped with a WARNING — the cap census only when the
+    * batch's signed row count exceeds `maxBucketSize`.
     * `sign` must produce (id, sig) and null-propagate on null text
     * ([[bandExplode]] then drops the null signatures — the hash(null)
     * phantom-bucket lesson, review r16). */
@@ -545,33 +703,13 @@ object Dedup {
       numHashes: Int, bands: Int, buckets: Int, mode: String,
       maxBucketSize: Int, writer: String): Unit = {
     val spark = df.sparkSession
-    val (modeNorm, existedBefore) =
-      checkStoreWrite(spark, table, mode, prop, payload, writer)
+    val w = checkStoreWrite(spark, table, mode, prop, payload, writer)
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    // UNSET the stamp for the duration of the two-table write: the two
-    // saves are not atomic, and a crash between them must leave a store
-    // that ERRORS loudly at the candidates door (no stamp → "rewrite")
-    // rather than one that silently joins old band rows to new
-    // signatures. Re-set only after BOTH writes land. ONLY on modes
-    // that actually write — ignore/error modes write nothing, and
-    // unsetting there would permanently brick a valid index with a
-    // no-op call (review r16).
-    if (existedBefore && (modeNorm == "overwrite" || modeNorm == "append"))
-      try spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
-        s"UNSET TBLPROPERTIES IF EXISTS ('$prop')")
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
+    // stamps unset for the non-atomic two-table window, re-set only
+    // after BOTH writes land (see unsetStoreStamps)
+    unsetStoreStamps(spark, table, w, prop)
     val sigTable = table + MinhashSigTableSuffix
-    val withSig = sign(df)
-    // on APPEND the band rows must cover only the NEW batch, so the one
-    // signature pass is snapshotted and feeds both writes; on overwrite
-    // the just-written sigs table IS exactly the corpus — band rows
-    // derive from reading it back (520-byte rows), no snapshot held
-    val sigSource =
-      if (modeNorm == "append") Some(snapFrame(withSig)) else None
-    sigSource.getOrElse(withSig)
-      .repartition(buckets, col("id"))
-      .write.mode(mode).bucketBy(buckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(sigTable)
+    val (sigSource, rows) = writeSibling(sign(df), w, sigTable, buckets)
     // the read-back path filters null sigs as a stored-ATTRIBUTE
     // predicate (parquet-pushed, free): current signers never write
     // them, but a pre-r17 store's sigs table may carry null-text rows
@@ -580,8 +718,8 @@ object Dedup {
         spark.table(sigTable).filter(col("sig").isNotNull)),
       numHashes, bands)
       .select(col("id"), col("band"), col("bucket"))
-    capBucketsWarn(banded, Seq("band", "bucket"), maxBucketSize,
-      s"$writer($table)") { slim =>
+    val bound = capBucketsWarn(banded, Seq("band", "bucket"), maxBucketSize,
+      s"$writer($table)", rows) { slim =>
       slim
         .repartition(buckets, col("band"), col("bucket"))
         .write.mode(mode)
@@ -589,7 +727,7 @@ object Dedup {
         .format("parquet")
         .saveAsTable(table)
     }
-    stampStore(spark, table, modeNorm, existedBefore, prop, payload)
+    stampStore(spark, table, w, prop, payload, bound)
   }
 
   /** Drop BOTH tables of a two-table signature store ([[dropMinhashStore]]
@@ -642,7 +780,8 @@ object Dedup {
 
   /** Shared candidate pass of the two-table signature stores: the batch
     * is signed ONCE (snapshotted — the band explosion, the joint-cap
-    * census, and the estimate join all read it), slim band rows
+    * census, and the estimate join all read it; the snapshot's row
+    * count feeds the joint cap's skip rule), slim band rows
     * equi-join on (band, bucket) with no corpus-side shuffle, pairs
     * dedup across bands, and only THEN are signatures fetched — once
     * per pair, the corpus side from its bucketed-by-id table. */
@@ -656,13 +795,14 @@ object Dedup {
     val sigs = spark.table(table + MinhashSigTableSuffix)
     require(Seq("id", "sig").forall(sigs.columns.contains),
       s"$table$MinhashSigTableSuffix does not have the (id, sig) layout")
-    val bSig = snapFrame(sign(batch))
+    val (bSig, batchRows) = snapCounted(sign(batch))
     // JOINT capping (batch + store counts per bucket): per-side caps
     // would admit cap×cap pair bombs AND diverge from the self-join
     // door's union semantics at the boundary
     val (b0, c0) = capBucketsJoint(
       bandExplode(bSig, numHashes, bands).select(col("id"), col("band"), col("bucket")),
-      store, Seq("band", "bucket"), maxBucketSize, ctx)
+      store, Seq("band", "bucket"), maxBucketSize, ctx,
+      readRowBound(spark, table).map(_ + batchRows))
     val pairs = b0.select(col("band"), col("bucket"), col("id").as("batch_id"))
       .join(c0.select(col("band"), col("bucket"), col("id").as("corpus_id")),
         Seq("band", "bucket"))
@@ -716,7 +856,13 @@ object Dedup {
     * warning) and repaired by [[compactMinhashStore]] — a corpus whose
     * boilerplate grows a bucket without bound also wants an exact-dedup
     * pass, same as the self-join door. Drop with [[dropMinhashStore]]
-    * (both tables). */
+    * (both tables).
+    *
+    * Every write keeps the store's [[BucketRowBoundProp]] — the batch's
+    * signed row count when that is ≤ `maxBucketSize`, so the write runs
+    * no bucket census; the largest kept group otherwise; summed with the
+    * stamped bound on append — and the candidates/novel doors skip
+    * their joint-cap census while bound + batch rows stays ≤ the cap. */
   def writeMinhashStore(df: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       numHashes: Int = 64, bands: Int = 8, shingleK: Int = 5,
@@ -766,11 +912,14 @@ object Dedup {
     * Batch and corpus ids are separate namespaces — a batch row equal
     * to a corpus row IS reported.
     *
-    * NB this call runs a small EAGER Spark job (the joint-cap census +
-    * skipped-bucket warning — see [[capBucketsJoint]]) before the lazy
-    * result frame returns, so don't construct it speculatively; the
-    * same applies to every `*CandidatesAgainstStore` /
-    * `*NovelAgainstStore` door. The four novel doors do more at call
+    * NB this call runs EAGER Spark jobs before the lazy result frame
+    * returns, so don't construct it speculatively: the batch signing
+    * snapshot always, and the joint-cap census + skipped-bucket warning
+    * ([[capBucketsJoint]]) only when the store's stamped
+    * [[BucketRowBoundProp]] plus the batch's signed rows exceeds
+    * `maxBucketSize` (or the store has no bound). The same applies to
+    * every `*CandidatesAgainstStore` / `*NovelAgainstStore` door. The
+    * four novel doors do more at call
     * time: with `dedupWithinBatch` they also snapshot the
     * corpus-filtered batch (so the store join runs once per call) and
     * resolve the within-batch near-dup components
@@ -826,7 +975,8 @@ object Dedup {
   }
 
   /** Word n-gram hashes (Int64), the token-level analog of
-    * [[shingleHashesNorm]]; `toks` must be a materialized column.
+    * [[shingleHashesNorm]]; `toks` must be a materialized column (the
+    * transform lambda reads it once per gram position).
     * Null tokens (null text) null-propagate: `concat_ws` over a null
     * array yields "" — without the guard every null-text row would get
     * the identical single-gram {hash("")} set and pair with every other
@@ -878,8 +1028,9 @@ object Dedup {
     // the cap census, the capped join side, AND each of the two
     // verify-side joins below — four full text passes per call. The
     // snap holds the gram-hash array + signature per doc (no text);
-    // every consumer reads it.
-    val withNg = snapFrame(ngramSets(df, idCol, textCol, n)
+    // every consumer reads it. Its row count bounds every bucket group
+    // (the cap census is skipped at ≤ maxBucketSize rows).
+    val (withNg, rows) = snapCounted(ngramSets(df, idCol, textCol, n)
       .select(col("id"), col("ng"),
         minhashSignatureHashed(numHashes)(col("ng")).as("sig")))
     // null text was filtered at the source in ngramSets, so the shared
@@ -887,7 +1038,7 @@ object Dedup {
     // phantom-bucket note
     val banded = bandExplode(withNg.select(col("id"), col("sig")),
       numHashes, b).select(col("id"), col("band"), col("bucket"))
-    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize)
+    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize, rows)
     val pairs = selfJoinPairs(capped, Seq("band", "bucket"), Nil)
       .dropDuplicates("id_a", "id_b")
     val ngs = withNg.select(col("id"), col("ng"))
@@ -926,7 +1077,8 @@ object Dedup {
     * non-atomic two-table window, per-batch hot buckets capped with a
     * WARNING; growth ACROSS appends is guarded at join time and repaired
     * by [[compactNgramStore]]. `mode = "append"` ingests accepted
-    * batches; drop with [[dropNgramStore]]. */
+    * batches; drop with [[dropNgramStore]]. The [[BucketRowBoundProp]]
+    * is kept as for [[writeMinhashStore]]. */
   def writeNgramStore(df: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       n: Int = 3, numHashes: Int = 64, bands: Int = 8,
@@ -1040,7 +1192,15 @@ object Dedup {
     * never join — exactly as if write-time capping had dropped it.
     * (A fresh overwrite of the accumulated corpus would keep sigs for
     * its OWN capped-out docs — rows the join can never reference either
-    * way; the vacuum is the tighter of the two.) */
+    * way; the vacuum is the tighter of the two.)
+    *
+    * Bucket-row bound ([[BucketRowBoundProp]]): a stamped bound ≤
+    * `maxBucketSize` proves no group is over the cap (the distinct
+    * rewrite can only shrink groups), so the census is skipped and the
+    * bound carried over; otherwise — over the cap, or a store written
+    * before the bound existed — the census runs and its largest kept
+    * group becomes the new, exact bound. The renamed tmp table carries
+    * no properties, so the bound is always restamped with the params. */
   private def recapBucketTable(spark: org.apache.spark.sql.SparkSession,
       table: String, bucketCols: Seq[String], maxBucketSize: Int,
       prop: String, ctx: String,
@@ -1060,8 +1220,8 @@ object Dedup {
     val buckets = bucketCount(table)
     val tmp = table + "__compact"
     graft.join.SpatialJoin.dropBucketedTable(spark, tmp)
-    capBucketsWarn(spark.table(table).distinct(), bucketCols,
-      maxBucketSize, ctx) { capped =>
+    val bound = capBucketsWarn(spark.table(table).distinct(), bucketCols,
+      maxBucketSize, ctx, readRowBound(spark, table)) { capped =>
       capped
         .repartition(buckets, bucketCols.map(col): _*)
         .write.mode("overwrite")
@@ -1100,8 +1260,10 @@ object Dedup {
           s"RENAME TO ${graft.join.SpatialJoin.quoteTable(sib)}")
       }
     }
+    // cap > 0 (required above), so the census path always yields a bound
     spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
-      s"SET TBLPROPERTIES ('$prop'='$payload')")
+      s"SET TBLPROPERTIES ('$prop'='$payload', " +
+      s"'$BucketRowBoundProp'='${bound.get}')")
   }
 
   /** Bucket-occupancy statistics of a persistent index's slim bucket
@@ -1244,9 +1406,11 @@ object Dedup {
 
   /** (id, sim, chunk, bucket) chunking of a frame — the ONE producer all
     * three SimHash doors ride (self-join, store writer, store prober),
-    * so the store layout and batch probing can never desynchronize. */
+    * so the store layout and batch probing can never desynchronize —
+    * with the signed row count, which bounds every (chunk, bucket)
+    * group (the cap sites' skip rule). */
   private def simhashChunked(df: DataFrame, idCol: String,
-      textCol: String, chunks: Int = 4): DataFrame = {
+      textCol: String, chunks: Int = 4): (DataFrame, Long) = {
     val width = 64 / chunks
     val mask = (1L << width) - 1
     // Snapshot the 16-byte (id, sim) rows before chunk explosion (r19,
@@ -1258,10 +1422,14 @@ object Dedup {
     // eager at call time (they already were for widened radii and the
     // store writes; nearDupSimhash's default radius gives up its
     // laziness for half the sign CPU).
-    snapFrame(df.select(col(idCol).as("id"), simhash64(col(textCol)).as("sim")))
-      .select(col("id"), col("sim"),
+    // Null text (the only null signature) is filtered at the source, as
+    // in minhashSigned: its null buckets never join, and the cap census
+    // used to be what dropped them before a store write
+    val (signed, rows) = snapCounted(df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), simhash64(col(textCol)).as("sim")))
+    (signed.select(col("id"), col("sim"),
         explode(sequence(lit(0), lit(chunks - 1))).as("chunk"))
-      .withColumn("bucket", expr(s"(sim >> (chunk * $width)) & $mask"))
+      .withColumn("bucket", expr(s"(sim >> (chunk * $width)) & $mask")), rows)
   }
 
   /** SimHash near-dup: bucket by signature chunks (a pair within
@@ -1284,14 +1452,14 @@ object Dedup {
   def nearDupSimhash(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
     val chunks = simhashChunkCount("nearDupSimhash", maxHamming)
-    val chunked = simhashChunked(df, idCol, textCol, chunks)
+    val (chunked, rows) = simhashChunked(df, idCol, textCol, chunks)
     // widened radii (narrow bucket domains) warn on drops — an eager
     // census pass; every radius signs eagerly now (the simhashChunked
-    // snapshot, r19)
+    // snapshot, r19); at ≤ maxBucketSize rows neither census runs
     val withChunk =
       if (chunks > 4) capBucketsWarned(chunked, Seq("chunk", "bucket"),
-        maxBucketSize, s"nearDupSimhash(maxHamming=$maxHamming)")
-      else capBuckets(chunked, Seq("chunk", "bucket"), maxBucketSize)
+        maxBucketSize, s"nearDupSimhash(maxHamming=$maxHamming)", rows)
+      else capBuckets(chunked, Seq("chunk", "bucket"), maxBucketSize, rows)
     selfJoinPairs(withChunk, Seq("chunk", "bucket"), Seq("sim"))
       .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
       .filter(col("hamming") <= maxHamming)
@@ -1356,7 +1524,12 @@ object Dedup {
     * bucket DOMAIN (256 or 16 values per chunk), so large corpora
     * saturate the hot-bucket cap — drops are WARNED at write time here
     * and at join time by the joint-cap guard. Appends must match the
-    * stamped layout (mixed chunkings hash different buckets). */
+    * stamped layout (mixed chunkings hash different buckets).
+    *
+    * The param stamp and the [[BucketRowBoundProp]] are unset during the
+    * write and re-set after it; the bound is kept as for
+    * [[writeMinhashStore]]. Null-text rows are not written (their
+    * signature is null and can never join). */
   def writeSimhashStore(df: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       buckets: Int = 64, mode: String = "overwrite",
@@ -1364,11 +1537,12 @@ object Dedup {
     val spark = df.sparkSession
     val chunks = simhashChunkCount(s"writeSimhashStore($table)", maxHamming)
     val payload = s"v1:$chunks"
-    val (modeNorm, existedBefore) = checkStoreWrite(spark, table, mode,
-      SimhashStoreProp, payload, "writeSimhashStore")
-    capBucketsWarn(simhashChunked(df, idCol, textCol, chunks),
-      Seq("chunk", "bucket"), maxBucketSize,
-      s"writeSimhashStore($table)") { chunked =>
+    val w = checkStoreWrite(spark, table, mode, SimhashStoreProp, payload,
+      "writeSimhashStore")
+    unsetStoreStamps(spark, table, w, SimhashStoreProp)
+    val (chunkedAll, rows) = simhashChunked(df, idCol, textCol, chunks)
+    val bound = capBucketsWarn(chunkedAll, Seq("chunk", "bucket"), maxBucketSize,
+      s"writeSimhashStore($table)", Some(rows)) { chunked =>
       chunked
         .repartition(buckets, col("chunk"), col("bucket"))
         .write.mode(mode)
@@ -1376,7 +1550,7 @@ object Dedup {
         .format("parquet")
         .saveAsTable(table)
     }
-    stampStore(spark, table, modeNorm, existedBefore, SimhashStoreProp, payload)
+    stampStore(spark, table, w, SimhashStoreProp, payload, bound)
   }
 
   /** The stamped chunk count of a [[writeSimhashStore]] table (4, 8, or
@@ -1403,8 +1577,9 @@ object Dedup {
     * store, 7 for an 8-chunk one, 15 for 16) — recall is exact up to
     * that radius; a store written for a wider radius serves any
     * narrower probe. Over-cap bucket groups are SKIPPED with a warning
-    * (the joint-cap guard), the one recall exception. Runs the small
-    * eager joint-cap census job at call time — see
+    * (the joint-cap guard), the one recall exception. Runs eager jobs
+    * at call time (the signing snapshot; the joint-cap census only
+    * past the stamped bucket-row bound) — see
     * [[minhashCandidatesAgainstStore]]'s note. */
   def simhashCandidatesAgainstStore(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, table: String,
@@ -1422,10 +1597,10 @@ object Dedup {
     require(Seq("id", "sim", "chunk", "bucket").forall(store.columns.contains),
       s"$table does not have writeSimhashStore's (id, sim, chunk, bucket) layout")
     // joint capping — see minhashCandidatesAgainstStore
-    val (b0, c0) = capBucketsJoint(
-      simhashChunked(batch, idCol, textCol, chunks),
-      store, Seq("chunk", "bucket"), maxBucketSize,
-      s"simhashCandidatesAgainstStore($table)")
+    val (chunked, batchRows) = simhashChunked(batch, idCol, textCol, chunks)
+    val (b0, c0) = capBucketsJoint(chunked, store, Seq("chunk", "bucket"),
+      maxBucketSize, s"simhashCandidatesAgainstStore($table)",
+      readRowBound(spark, table).map(_ + batchRows))
     val b = b0.select(col("chunk"), col("bucket"),
       col("id").as("batch_id"), col("sim").as("sim_b"))
     val c = c0.select(col("chunk"), col("bucket"),
@@ -1487,12 +1662,12 @@ object Dedup {
     // anyway as the verify payload, sigs add tables longs per row.
     val sigCols = (0 until tablesR).map(t =>
       struct(lit(t).as("t"), Similarity.signSignatureSeeded(bitsR, t)(col("vec")).as("sig")))
-    val signed = snapFrame(
+    val (signed, rows) = snapCounted(
       withVec.select(col("id"), col("vec"), array(sigCols: _*).as("__sigs")))
     val bucketed = capBuckets(
       signed.select(col("id"), col("vec"), explode(col("__sigs")).as("ts"))
         .select(col("id"), col("vec"), col("ts.t").as("t"), col("ts.sig").as("sig")),
-      Seq("t", "sig"), maxBucketSize)
+      Seq("t", "sig"), maxBucketSize, rows)
     selfJoinPairs(bucketed, Seq("t", "sig"), Seq("vec"))
       .dropDuplicates("id_a", "id_b")
       .withColumn("cosine", Similarity.cosine(col("vec_a"), col("vec_b")))
@@ -1674,8 +1849,9 @@ object Dedup {
     * when a requested threshold's recall under the STAMPED parameters
     * falls below ~90%.
     *
-    * `mode = "append"` ingests accepted batches; the stamp is unset for
-    * the non-atomic two-table write window, like the minhash index. */
+    * `mode = "append"` ingests accepted batches; the stamp and the
+    * [[BucketRowBoundProp]] are unset for the non-atomic two-table write
+    * window, like the minhash index, and the bound is kept as there. */
   def writeEmbeddingStore(df: DataFrame, table: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bits: Int = 0, tables: Int = 0, buckets: Int = 64,
@@ -1685,24 +1861,16 @@ object Dedup {
       autoThreshold, targetRecall, bits, tables)
     val spark = df.sparkSession
     val payload = s"v1:$bitsR:$tablesR"
-    val (modeNorm, existedBefore) = checkStoreWrite(spark, table, mode,
-      EmbeddingStoreProp, payload, "writeEmbeddingStore")
-    if (existedBefore && (modeNorm == "overwrite" || modeNorm == "append"))
-      try spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
-        s"UNSET TBLPROPERTIES IF EXISTS ('$EmbeddingStoreProp')")
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
+    val w = checkStoreWrite(spark, table, mode, EmbeddingStoreProp, payload,
+      "writeEmbeddingStore")
+    unsetStoreStamps(spark, table, w, EmbeddingStoreProp)
     val vecTable = table + EmbeddingVecTableSuffix
-    val withVec = embeddingVecs(df, idCol, vecCol)
-    val vecSource =
-      if (modeNorm == "append") Some(snapFrame(withVec)) else None
-    vecSource.getOrElse(withVec)
-      .repartition(buckets, col("id"))
-      .write.mode(mode).bucketBy(buckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(vecTable)
+    val (vecSource, rows) = writeSibling(embeddingVecs(df, idCol, vecCol), w,
+      vecTable, buckets)
     val bucketRows = embeddingBucketRows(
       vecSource.getOrElse(spark.table(vecTable)), bitsR, tablesR)
-    capBucketsWarn(bucketRows, Seq("t", "sig"), maxBucketSize,
-      s"writeEmbeddingStore($table)") { slim =>
+    val bound = capBucketsWarn(bucketRows, Seq("t", "sig"), maxBucketSize,
+      s"writeEmbeddingStore($table)", rows) { slim =>
       slim
         .repartition(buckets, col("t"), col("sig"))
         .write.mode(mode)
@@ -1710,7 +1878,7 @@ object Dedup {
         .format("parquet")
         .saveAsTable(table)
     }
-    stampStore(spark, table, modeNorm, existedBefore, EmbeddingStoreProp, payload)
+    stampStore(spark, table, w, EmbeddingStoreProp, payload, bound)
   }
 
   /** Drop BOTH tables of a [[writeEmbeddingStore]] index. */
@@ -1745,8 +1913,9 @@ object Dedup {
     * every emitted pair carries the true cosine, so filtering at a
     * threshold gives exactly what [[nearDupEmbedding]] finds on the
     * union AT THE STAMPED (bits, tables); see the writer's parity
-    * note). Returns (batch_id, corpus_id, cosine). Runs the small
-    * eager joint-cap census job at call time — see
+    * note). Returns (batch_id, corpus_id, cosine). Runs eager jobs at
+    * call time (the batch vector snapshot; the joint-cap census only
+    * past the stamped bucket-row bound) — see
     * [[minhashCandidatesAgainstStore]]'s note. */
   def embeddingCandidatesAgainstStore(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, table: String,
@@ -1759,11 +1928,12 @@ object Dedup {
     val vecs = spark.table(table + EmbeddingVecTableSuffix)
     require(Seq("id", "vec").forall(vecs.columns.contains),
       s"$table$EmbeddingVecTableSuffix does not have the (id, vec) layout")
-    val bVec = snapFrame(embeddingVecs(batch, idCol, vecCol))
+    val (bVec, batchRows) = snapCounted(embeddingVecs(batch, idCol, vecCol))
     val (b0, c0) = capBucketsJoint(
       embeddingBucketRows(bVec, bits, tables),
       store, Seq("t", "sig"), maxBucketSize,
-      s"embeddingCandidatesAgainstStore($table)")
+      s"embeddingCandidatesAgainstStore($table)",
+      readRowBound(spark, table).map(_ + batchRows))
     val pairs = b0.select(col("t"), col("sig"), col("id").as("batch_id"))
       .join(c0.select(col("t"), col("sig"), col("id").as("corpus_id")),
         Seq("t", "sig"))
@@ -1882,8 +2052,8 @@ object Dedup {
       mode: String = "overwrite"): Unit = {
     val spark = bench.sparkSession
     val payload = s"v1:$n"
-    val (modeNorm, existedBefore) = checkStoreWrite(spark, table, mode,
-      DecontamStoreProp, payload, "writeDecontamStore")
+    val w = checkStoreWrite(spark, table, mode, DecontamStoreProp, payload,
+      "writeDecontamStore")
     val grams = ngramSets(bench.select(lit(0L).as("__id"), col(textCol)),
         "__id", textCol, n)
       .select(explode(col("ng")).as("gram")).distinct()
@@ -1895,7 +2065,7 @@ object Dedup {
       .repartition(buckets)
       .write.mode(mode)
       .format("parquet").saveAsTable(table)
-    stampStore(spark, table, modeNorm, existedBefore, DecontamStoreProp, payload)
+    stampStore(spark, table, w, DecontamStoreProp, payload, batchBound = None)
   }
 
   /** The stamped n of a [[writeDecontamStore]] table; errors loudly

@@ -80,7 +80,8 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 }
 
-/** Static kernel behind [[MinHashSig]]. */
+/** Static kernels behind [[MinHashSig]] and [[ShingleSet]]: both walk
+  * the same character k-shingle windows ([[windowHashes]]). */
 object MinHashKernel {
   import org.apache.spark.sql.catalyst.expressions.XXH64
   import org.apache.spark.sql.catalyst.util.ArrayData
@@ -95,16 +96,16 @@ object MinHashKernel {
     x
   }
 
-  /** MinHash signature of the character `k`-shingle set of `s`, one fused
-    * pass: for every shingle window, xxhash64 its UTF-8 bytes (seed 42 —
-    * identical values to Spark's `xxhash64(substr(...))`), then fold into
-    * the running per-seed minima. No shingle array, no distinct pass (min
-    * is idempotent over duplicates), no boxing. Shorter-than-k strings
-    * hash whole, matching the expression formulation's `otherwise` arm. */
-  def sig(s: UTF8String, k: Int, numHashes: Int): ArrayData = {
+  /** xxhash64 (seed 42) of the UTF-8 bytes of every character
+    * `k`-shingle window of `s`, in window order — identical values to
+    * Spark's `xxhash64(substr(s, i, k))` for i = 1 .. length − k + 1.
+    * Windows are per CHARACTER (code point), like `substr`; a string
+    * shorter than k is one window over the whole string (the expression
+    * formulation's `otherwise` arm), so "" yields xxhash64(""). */
+  def windowHashes(s: UTF8String, k: Int): Array[Long] = {
     val bytes = s.getBytes
     val n = bytes.length
-    // codepoint start offsets (shingles are per CHARACTER, like substr)
+    // codepoint start offsets
     var cp = 0
     var i = 0
     while (i < n) {
@@ -119,15 +120,29 @@ object MinHashKernel {
       i += 1
     }
     starts(cp) = n
-    val out = Array.fill(numHashes)(Long.MaxValue)
     val nWin = if (cp >= k) cp - k + 1 else 1
     val winLen = if (cp >= k) k else cp
+    val out = new Array[Long](nWin)
     var w = 0
     while (w < nWin) {
       val from = starts(w)
-      val len = starts(w + winLen) - from
-      val h = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
-      val base = fmix64(h * 0x9e3779b97f4a7c15L + 1)
+      out(w) = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + from,
+        starts(w + winLen) - from, 42L)
+      w += 1
+    }
+    out
+  }
+
+  /** MinHash signature of the character `k`-shingle set of `s`: every
+    * window hash folds into the running per-seed minima. No shingle
+    * array, no distinct pass (min is idempotent over duplicates), no
+    * boxing. */
+  def sig(s: UTF8String, k: Int, numHashes: Int): ArrayData = {
+    val hs = windowHashes(s, k)
+    val out = Array.fill(numHashes)(Long.MaxValue)
+    var w = 0
+    while (w < hs.length) {
+      val base = fmix64(hs(w) * 0x9e3779b97f4a7c15L + 1)
       var p = 0
       while (p < numHashes) {
         val v = fmix64(base ^ (p * 0xc2b2ae3d27d4eb4fL))
@@ -138,12 +153,38 @@ object MinHashKernel {
     }
     ArrayData.toArrayData(out)
   }
+
+  /** The distinct window hashes of `s` in first-occurrence order — the
+    * values and order of `array_distinct` over the per-window
+    * `xxhash64(substr(...))` array. Dedup runs through an
+    * open-addressing long set sized to twice the window count. */
+  def shingleSet(s: UTF8String, k: Int): ArrayData = {
+    val hs = windowHashes(s, k)
+    var cap = 2
+    while (cap < 2 * hs.length) cap <<= 1
+    val slots = new Array[Long](cap)
+    val used = new Array[Boolean](cap)
+    val mask = cap - 1
+    val out = new Array[Long](hs.length)
+    var m = 0
+    var w = 0
+    while (w < hs.length) {
+      val h = hs(w)
+      var slot = (fmix64(h) & mask).toInt
+      while (used(slot) && slots(slot) != h) slot = (slot + 1) & mask
+      if (!used(slot)) {
+        used(slot) = true; slots(slot) = h
+        out(m) = h; m += 1
+      }
+      w += 1
+    }
+    ArrayData.toArrayData(if (m == out.length) out else java.util.Arrays.copyOf(out, m))
+  }
 }
 
 /** MinHash signature over the normalized text, as ONE codegen'd
   * expression: the `shingle-hash array → distinct → per-seed min` chain
-  * ([[graft.pipeline.Dedup.shingleHashes]] +
-  * `minhashSignatureHashed`) collapses into a single pass over the
+  * (`xxhash64` per shingle window + `minhashSignatureHashed`) collapses into a single pass over the
   * string's UTF-8 bytes with a 64-long running-minimum buffer — no
   * intermediate array, no UDF encoder boxing. Values are IDENTICAL to the
   * UDF formulation (same xxhash64-seed-42 shingle hash, same splitmix64
@@ -168,5 +209,37 @@ case class MinHashSig(child: Expression, shingleK: Int, numHashes: Int)
       c => s"graft.plans.MinHashKernel.sig($c, $shingleK, $numHashes)")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
+    copy(child = newChild)
+}
+
+/** Distinct character `k`-shingle hashes of the normalized text, as ONE
+  * codegen'd expression ([[MinHashKernel.shingleSet]]): the values and
+  * order of `array_distinct(transform(sequence(1, length − k + 1),
+  * i => xxhash64(substr(norm, i, k))))` (a string shorter than k hashes
+  * whole), from one pass over the UTF-8 bytes — no per-window lambda,
+  * no substring objects. The type stays the expression form's
+  * `array<bigint>` with nullable elements, so the streaming state
+  * encoders that carry this column see an unchanged schema. Null text →
+  * null. */
+case class ShingleSet(child: Expression, shingleK: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  import org.apache.spark.sql.types.{LongType, StringType}
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"shingle_set expects STRING, got ${child.dataType}")
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashKernel.shingleSet(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      shingleK)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.MinHashKernel.shingleSet($c, $shingleK)")
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleSet =
     copy(child = newChild)
 }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import graft.pipeline.Dedup
 
 /** The persistent MinHash corpus index
@@ -11,10 +13,13 @@ import graft.pipeline.Dedup
   * estimate), the novel/ingest cycle must catch a dup of a
   * previously-appended batch, and the param stamp must refuse mixed
   * parameters and non-store tables. */
-class MinhashStoreSpec extends AnyFunSuite {
+class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  // interrupts a hung door, so a stuck call fails its test instead of the run
+  implicit val signaler: Signaler = ThreadSignaler
 
   private def drop(table: String): Unit =
     Dedup.dropMinhashStore(spark, table)
@@ -95,23 +100,26 @@ class MinhashStoreSpec extends AnyFunSuite {
     } finally drop(table)
   }
 
-  /** Spark jobs that `body` runs, counted by a listener on a job group.
-    * A sentinel job outside the group runs last: the listener bus
+  /** Spark jobs that `body` runs, seen by a listener on a job group: one
+    * call-site string (the stage details, a stack trace) per job. A
+    * sentinel job outside the group runs last: the listener bus
     * delivers in order, so once the sentinel's end arrives every job of
-    * the group has been counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
+    * the group has been seen. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
       SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val group = "minhash-novel-job-count"
     val sentinel = "minhash-novel-job-count-sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinelId = new java.util.concurrent.atomic.AtomicInteger(-1)
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.stageInfos.map(_.details).mkString("\n"))
         if (props.exists(_.getProperty("spark.job.description") == sentinel))
           sentinelId.set(e.jobId)
       }
@@ -126,7 +134,7 @@ class MinhashStoreSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus never drained")
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -135,7 +143,8 @@ class MinhashStoreSpec extends AnyFunSuite {
     // dup pair. It ran 56 jobs while the store join re-ran for every read
     // of the within-batch pass and the 1-edge near-dup graph took the
     // star rounds; with the snapshot and the driver component tier it
-    // runs 27. The bound leaves 3 jobs of slack
+    // ran 27, and with the bucket-cap censuses skipped on the row bound
+    // it runs 20. The bound leaves 3 jobs of slack
     val corpus = (0 until 30).map(i => (i.toLong, docText(i))).toDF("doc_id", "text")
     val table = "graft_mh_store_jobs"
     drop(table)
@@ -153,7 +162,77 @@ class MinhashStoreSpec extends AnyFunSuite {
           .select($"doc_id").as[Long].collect()
       }
       assert(ids.sorted.toSeq === Seq(10001L, 10002L))
-      assert(jobs <= 30, s"one novel door + collect ran $jobs Spark jobs")
+      assert(jobs.size <= 23, s"one novel door + collect ran ${jobs.size} Spark jobs")
+    } finally drop(table)
+  }
+
+  test("the append writer's job count stays pinned") {
+    // a 4-doc append under the cap: the signing snapshot (its row count
+    // observed on the same job), the sigs write and the band write — no
+    // bucket census: 5 jobs. The bound leaves 3 jobs of slack
+    val corpus = (0 until 30).map(i => (i.toLong, docText(i))).toDF("doc_id", "text")
+    val table = "graft_mh_store_append_jobs"
+    drop(table)
+    try {
+      Dedup.writeMinhashStore(corpus, table)
+      val batch = (100 until 104).map(i => (i.toLong, docText(i))).toDF("doc_id", "text")
+      val (_, jobs) = jobsOf(Dedup.writeMinhashStore(batch, table, mode = "append"))
+      assert(jobs.size <= 8, s"one append ran ${jobs.size} Spark jobs")
+      assert(spark.table(table + Dedup.MinhashSigTableSuffix).count() === 34L)
+    } finally drop(table)
+  }
+
+  test("the store door's cap census runs only past the bucket-row bound") {
+    val corpus = (0 until 30).map(i => (i.toLong, docText(i))).toDF("doc_id", "text")
+    val table = "graft_mh_store_census"
+    drop(table)
+    try {
+      Dedup.writeMinhashStore(corpus, table)
+      val batch = ((0 until 5).map(i => (10000L + i, docText(i))) ++
+        Seq((10005L, "velvet compass winter granite ninety lantern oboe")))
+        .toDF("doc_id", "text")
+      def censusJobs(jobs: Seq[String]) = jobs.count(_.contains("capBucketsJoint"))
+      def probe() = Dedup.minhashCandidatesAgainstStore(spark, batch, table)
+        .as[(Long, Long, Double)].collect().toSet
+      // stamped 30 + 6 batch rows ≤ the 100000 cap: no census job at all
+      val (viaBound, skipJobs) = jobsOf(probe())
+      assert(censusJobs(skipJobs) === 0, skipJobs.mkString("\n---\n"))
+      // without the bound the door censuses, with the same candidates
+      spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES " +
+        s"('${Dedup.BucketRowBoundProp}')")
+      val (viaCensus, censusRun) = jobsOf(probe())
+      assert(censusJobs(censusRun) >= 1, "the census path ran no census job")
+      assert(viaCensus === viaBound)
+      assert(viaBound.count(_._3 == 1.0) === 5, "fixture sanity: planted dups")
+    } finally drop(table)
+  }
+
+  test("empty and all-null-text batches: same results, no hang on the observed counts") {
+    val corpus = (0 until 10).map(i => (i.toLong, docText(i))).toDF("doc_id", "text")
+    val table = "graft_mh_store_edge"
+    drop(table)
+    try {
+      Dedup.writeMinhashStore(corpus, table)
+      val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+      val nulls = Seq((700L, null.asInstanceOf[String]),
+        (701L, null.asInstanceOf[String])).toDF("doc_id", "text")
+      // null text never pairs, so every all-null row comes back novel
+      Seq((empty, Seq.empty[Long]), (nulls, Seq(700L, 701L))).foreach {
+        case (b, novel) =>
+          failAfter(Span(60, Seconds)) {
+            assert(Dedup.minhashCandidatesAgainstStore(spark, b, table).isEmpty)
+            assert(Dedup.minhashNovelAgainstStore(spark, b, table)
+              .select($"doc_id").as[Long].collect().sorted.toSeq === novel)
+            assert(Dedup.nearDupMinhash(b, "doc_id", "text", 0.5).isEmpty)
+            Dedup.writeMinhashStore(b, table, mode = "append")
+          }
+          // nothing signed, nothing added: the bound stays at the corpus's 10
+          assert(spark.table(table).count() === 80L)
+          assert(spark.table(table + Dedup.MinhashSigTableSuffix).count() === 10L)
+          assert(spark.sessionState.catalog.getTableMetadata(
+              spark.sessionState.sqlParser.parseTableIdentifier(table))
+            .properties.get(Dedup.BucketRowBoundProp) === Some("10"))
+      }
     } finally drop(table)
   }
 
@@ -177,6 +256,13 @@ class MinhashStoreSpec extends AnyFunSuite {
         maxBucketSize = cap)
       // the boilerplate buckets now hold 6 > cap rows; the joint-cap
       // guard must SKIP them (warned) — a boiler probe finds nothing...
+      // each write's census kept groups of at most the cap, so the
+      // stamped bound (the two batches' largest kept groups summed) now
+      // exceeds the cap: the door takes the census path
+      val grown = spark.sessionState.catalog.getTableMetadata(
+          spark.sessionState.sqlParser.parseTableIdentifier(table))
+        .properties(Dedup.BucketRowBoundProp).toLong
+      assert(grown > cap && grown <= 2L * cap, s"stamped bound $grown")
       val boilerProbe = Seq((30000L, boiler)).toDF("doc_id", "text")
       assert(Dedup.minhashCandidatesAgainstStore(spark, boilerProbe, table,
         maxBucketSize = cap).filter($"corpus_id" < 6L).isEmpty,

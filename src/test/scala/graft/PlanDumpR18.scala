@@ -167,7 +167,7 @@ object PlanDumpR18 {
     dump("pipe_minhash_after",
       "r18: alias self-join -> ReusedExchange (look for 'ReusedExchange' " +
         "below) — the shingle+sign pass is computed once and the shuffle " +
-        "read twice; results bit-identical (ProbeMinhashReuse)", {
+        "read twice; results bit-identical (PERF.md, round 18)", {
         graft.pipeline.Dedup.minhashCandidates(docsAll, "doc_id", "text")
           .agg(count(lit(1)).as("n"))
       })
