@@ -222,8 +222,9 @@ object Bench {
     // corpus per call" vs "sign only the batch".
     "pipe_minhash_store" -> ((s, dir) => {
       MhStoreSetup.get(s, dir)
-      // batch side spread (r18, ProbeStoreAB 0.94x): the batch sign pass
-      // was a single-task stage against the already-parallel store side
+      // batch side spread (r18, 0.94x — OPTIMIZATION_r18.md §"Per-operator
+      // log"): the batch sign pass was a single-task stage against the
+      // already-parallel store side
       val batch = spread(t(s, dir, "documents")
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
       graft.pipeline.Dedup.minhashCandidatesAgainstStore(s, batch,
@@ -281,9 +282,10 @@ object Bench {
     // stay a like workload with constant density at every SF.
     "geo_sjoin_nearest_bucketed" -> ((s, dir) => {
       BktSetup.get(s, dir)
-      // probe side spread (r18, ProbeStoreAB alternated A/B 0.94x); the
-      // unbounded twin re-evaluates the probe for bound discovery and
-      // measured 1.10x WITH the spread, so it keeps the bare scan
+      // probe side spread (r18, alternated A/B 0.94x — OPTIMIZATION_r18.md
+      // §"Per-operator log"); the unbounded twin re-evaluates the probe
+      // for bound discovery and measured 1.10x WITH the spread, so it
+      // keeps the bare scan
       val probe = spread(orders(s, dir)).select(k.as("lk"),
         st_point(nnLx + w, nnLy + h).as("geometry"))
       graft.join.SpatialJoin.sjoinNearestBucketed(s, probe,

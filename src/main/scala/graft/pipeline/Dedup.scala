@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import scala.jdk.CollectionConverters._
+import graft.join.SpatialJoin.{dropBucketedTable, quoteTable}
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -137,8 +138,8 @@ object Dedup {
     * frame — one small row per jointly-present bucket): each written
     * batch is capped at write time, but a bucket can grow past the cap
     * ACROSS appends, and silently skipping it at join time would read
-    * as "no duplicates there"; the fix is the store's compaction door
-    * ([[compactMinhashStore]] and siblings).
+    * as "no duplicates there"; the fix is the tier's compaction door
+    * ([[compactMinhashStore]] and siblings), which the warning names.
     *
     * SKIP RULE: `rowBound` is the store's stamped bucket-row bound
     * ([[BucketRowBoundProp]]) plus the batch's signed row count. No store
@@ -148,10 +149,11 @@ object Dedup {
     * and no semi-joins. A store without the stamp (`None`) takes the
     * census path. */
   private def capBucketsJoint(batch: DataFrame, store: DataFrame,
-      bucketCols: Seq[String], maxBucketSize: Int,
+      scheme: BucketScheme, maxBucketSize: Int,
       ctx: String, rowBound: Option[Long]): (DataFrame, DataFrame) =
     if (maxBucketSize <= 0 || rowBound.exists(_ <= maxBucketSize)) (batch, store)
     else {
+      val bucketCols = scheme.bucketCols
       val bs = batch.groupBy(bucketCols.map(col): _*).agg(count(lit(1)).as("__bn"))
       val cs = store.groupBy(bucketCols.map(col): _*).agg(count(lit(1)).as("__cn"))
       // inner join: a bucket absent from either side produces no pairs
@@ -170,9 +172,7 @@ object Dedup {
             s"$maxBucketSize jointly across batch+store and were SKIPPED " +
             "for this join — pairs meeting only there are missed. A " +
             "store bucket that grew past the cap across appends wants " +
-            "the compaction door (compactMinhashStore / " +
-            "compactSimhashStore / compactEmbeddingStore / " +
-            "compactNgramStore), or an exact-dedup pass over the corpus")
+            s"${scheme.compactDoor}, or an exact-dedup pass over the corpus")
       val ok = joint.filter(col("__tot") <= maxBucketSize)
         .select(bucketCols.map(col): _*)
       (batch.join(ok, bucketCols, "left_semi"),
@@ -213,7 +213,7 @@ object Dedup {
     * unparseable name, temp view). A transient metastore fault
     * PROPAGATES — it must not masquerade as "not a store" and send the
     * caller off to rewrite a perfectly valid index. */
-  private def readStoreStamp(spark: org.apache.spark.sql.SparkSession,
+  private def readStoreStamp(spark: SparkSession,
       table: String, prop: String): Option[String] =
     try {
       val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
@@ -240,8 +240,7 @@ object Dedup {
 
   /** The stamped [[BucketRowBoundProp]] of `table`; None when absent or
     * unreadable (the census path). */
-  private def readRowBound(spark: org.apache.spark.sql.SparkSession,
-      table: String): Option[Long] =
+  private def readRowBound(spark: SparkSession, table: String): Option[Long] =
     parseRowBound(readStoreStamp(spark, table, BucketRowBoundProp))
 
   private def parseRowBound(v: Option[String]): Option[Long] =
@@ -267,7 +266,7 @@ object Dedup {
     * r17 — the fourth paste had already drifted its message). An
     * append also reads the prior [[BucketRowBoundProp]] here, from the
     * same metadata. */
-  private def checkStoreWrite(spark: org.apache.spark.sql.SparkSession,
+  private def checkStoreWrite(spark: SparkSession,
       table: String, mode: String, prop: String, payload: String,
       writer: String): StoreWrite = {
     val modeNorm = mode.toLowerCase(java.util.Locale.ROOT)
@@ -297,10 +296,10 @@ object Dedup {
     * on modes that write onto the table — ignore/error modes write
     * nothing there, and unsetting would permanently brick a valid
     * index with a no-op call (review r16). */
-  private def unsetStoreStamps(spark: org.apache.spark.sql.SparkSession,
+  private def unsetStoreStamps(spark: SparkSession,
       table: String, w: StoreWrite, prop: String): Unit =
     if (w.changesExisting)
-      try spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
+      try spark.sql(s"ALTER TABLE ${quoteTable(table)} " +
         s"UNSET TBLPROPERTIES IF EXISTS ('$prop', '$BucketRowBoundProp')")
       catch { case _: org.apache.spark.sql.AnalysisException => () }
 
@@ -309,7 +308,7 @@ object Dedup {
     * [[BucketRowBoundProp]]: `batchBound` for a fresh or overwritten
     * table, the prior bound + `batchBound` on an append (absent when
     * either is). */
-  private def stampStore(spark: org.apache.spark.sql.SparkSession,
+  private def stampStore(spark: SparkSession,
       table: String, w: StoreWrite, prop: String, payload: String,
       batchBound: Option[Long]): Unit =
     if (w.writes) {
@@ -319,7 +318,7 @@ object Dedup {
         else batchBound
       val props = s"'$prop'='$payload'" +:
         bound.map(b => s"'$BucketRowBoundProp'='$b'").toSeq
-      spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
+      spark.sql(s"ALTER TABLE ${quoteTable(table)} " +
         s"SET TBLPROPERTIES (${props.mkString(", ")})")
     }
 
@@ -627,9 +626,19 @@ object Dedup {
 
   def nearDupMinhash(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 64, bands: Int = 0,
-      shingleK: Int = 5): DataFrame = {
+      shingleK: Int = 5): DataFrame =
+    minhashVerified(df, idCol, textCol, threshold, numHashes, bands,
+      shingleK, maxBucketSize = 100000)
+
+  /** [[nearDupMinhash]] at an explicit hot-bucket cap — also the
+    * within-batch pass of [[minhashNovelAgainstStore]], which runs at
+    * its caller's `maxBucketSize` like the other three novel doors. */
+  private[graft] def minhashVerified(df: DataFrame, idCol: String,
+      textCol: String, threshold: Double, numHashes: Int, bands: Int,
+      shingleK: Int, maxBucketSize: Int): DataFrame = {
     val b = if (bands > 0) bands else autoBands(numHashes, threshold)
-    val cands = minhashCandidates(df, idCol, textCol, numHashes, b, shingleK)
+    val cands = minhashCandidates(df, idCol, textCol, numHashes, b, shingleK,
+      maxBucketSize)
     // snapped (r19): the exact-verify joins read `sh` once per pair SIDE
     // (id_a and id_b), and the rename-below-exchange join shape defeats
     // ReuseExchange (the selfJoinPairs lesson) — without the snap the
@@ -644,18 +653,82 @@ object Dedup {
       .select("id_a", "id_b", "jaccard_est", "jaccard")
   }
 
-  // ------------------------------------------------ minhash corpus store
+  // ------------------------------------------- near-dup store pipeline
 
-  /** Table property stamped by [[writeMinhashStore]]:
-    * `v1:<numHashes>:<bands>:<shingleK>`. Batch joins read it back and
-    * band the batch with the SAME parameters — mixed parameters hash
-    * different buckets and silently miss every pair, so a missing or
-    * mismatched stamp errors loudly. */
-  val MinhashStoreProp = "graft.dedup.minhashParams"
+  /** One persistent near-dup store tier as data, built from a store's
+    * parsed params stamp (or, for a write, from the caller's
+    * parameters). Every store door of the four tiers — minhash, n-gram,
+    * simhash, embedding — runs one path over it: [[writeStore]],
+    * [[storeCandidates]], [[storeNovel]], [[recapBucketTable]],
+    * [[storeBucketStats]], [[dropStore]]. The tiers differ in three
+    * things only:
+    *  - how a row is SIGNED into bucket keys: `sign` maps the input to
+    *    (id, payload), dropping null input at the source column, and
+    *    `slimRows` derives the (id, bucketCols…) rows — the band explode
+    *    ([[bandExplode]]), the chunk explode ([[simhashChunks]]) or the
+    *    sign-LSH tables ([[embeddingBucketRows]]);
+    *  - the PAYLOAD the exact score reads: `sig`, `sim` or `vec`;
+    *  - the SCORE, `scoreOf` named `score`: `jaccard_est`, `hamming` (a
+    *    distance, `isDistance`) or `cosine`.
+    *
+    * Payload rule: a payload that is large next to its bucket key (a
+    * signature, a vector) lives in a second table, `<table>` + `sibling`,
+    * as (id, payload) rows bucketed by id, fetched once per DEDUPED pair
+    * so the bucket join reads slim (id, keys…) rows only. A payload as
+    * small as its key (the 8-byte `sim`) rides on the slim rows: one
+    * table (`sibling = None`), carried through the bucket join.
+    *
+    * `recallWarning` is the novel door's warning for a threshold the
+    * stamped scheme under-recalls; `withinBatchPairs(df, idCol, srcCol,
+    * threshold, maxBucketSize)` the verified self-join pairs its
+    * within-batch pass dedups. */
+  private[graft] final case class BucketScheme(tier: String, prop: String,
+      version: String, params: Seq[Int], bucketCols: Seq[String],
+      payload: String, sibling: Option[String], score: String,
+      isDistance: Boolean,
+      sign: (DataFrame, String, String) => DataFrame,
+      slimRows: DataFrame => DataFrame,
+      scoreOf: (Column, Column) => Column,
+      recallWarning: Double => Option[String],
+      withinBatchPairs: (DataFrame, String, String, Double, Int) => DataFrame) {
+    def stamp: String = (version +: params).mkString(":")
+    def writer: String = s"write${tier.capitalize}Store"
+    def compactDoor: String = s"compact${tier.capitalize}Store"
+    def carried: Seq[String] = if (sibling.isEmpty) Seq(payload) else Nil
+    /** the slim table's columns, in stored order */
+    def slimCols: Seq[String] = ("id" +: carried) ++ bucketCols
+    /** a pair scored at `threshold` or closer */
+    def hit(threshold: Double): Column =
+      if (isDistance) col(score) <= threshold else col(score) >= threshold
+  }
 
-  /** Suffix of the per-doc signature table living next to a
-    * [[writeMinhashStore]] / [[writeNgramStore]] bands table. */
-  val MinhashSigTableSuffix = "__sigs"
+  /** `make` over the integer params of `table`'s `prop` stamp
+    * `version:p1:…:pN` — the one stamp parser of the store family. A
+    * missing, mid-write, foreign or older-version stamp, or params
+    * `make` is not defined at, error loudly, naming `tier`'s writer. */
+  private def stampParams[A](spark: SparkSession, table: String, tier: String,
+      prop: String, version: String)(make: PartialFunction[Seq[Int], A]): A = {
+    val writer = s"write${tier.capitalize}Store"
+    val stamp = readStoreStamp(spark, table, prop)
+    def refuse(why: String) = throw new IllegalArgumentException(
+      s"$table is not a current $writer table ($why) — rewrite it with " +
+        s"$writer(mode=overwrite)")
+    stamp.map(_.split(':').toSeq) match {
+      case Some(`version` +: ps) =>
+        Some(ps.flatMap(_.toIntOption)).filter(_.size == ps.size)
+          .flatMap(make.lift)
+          .getOrElse(refuse(s"unreadable $prop stamp '${stamp.get}'"))
+      case _ => refuse(s"no readable $version $prop stamp — missing, " +
+        "mid-write, foreign, or an old layout")
+    }
+  }
+
+  private def saveBucketed(df: DataFrame, table: String, mode: String,
+      buckets: Int, cols: Seq[String]): Unit =
+    df.repartition(buckets, cols.map(col): _*)
+      .write.mode(mode)
+      .bucketBy(buckets, cols.head, cols.tail: _*).sortBy(cols.head, cols.tail: _*)
+      .format("parquet").saveAsTable(table)
 
   /** The first write of a two-table store: the per-id payload rows
     * (`(id, sig)` or `(id, vec)`) into `sibling`, bucketed by id. On
@@ -669,9 +742,7 @@ object Dedup {
   private def writeSibling(rows: DataFrame, w: StoreWrite, sibling: String,
       buckets: Int): (Option[DataFrame], Option[Long]) = {
     def save(df: DataFrame): Unit =
-      df.repartition(buckets, col("id"))
-        .write.mode(w.mode).bucketBy(buckets, "id").sortBy("id")
-        .format("parquet").saveAsTable(sibling)
+      saveBucketed(df, sibling, w.mode, buckets, Seq("id"))
     w.mode match {
       case "append" =>
         val (snap, n) = snapCounted(rows)
@@ -687,144 +758,177 @@ object Dedup {
     }
   }
 
-  /** Shared writer of the two-table SIGNATURE stores (the MinHash
-    * shingle tier and the word-n-gram tier — same layout, different
-    * `sign` pass): slim (id, band, bucket) rows bucketed by the join
-    * key + (id, sig) rows bucketed by id, param stamp and
-    * [[BucketRowBoundProp]] unset across the non-atomic two-table window
-    * (a crash leaves a store the doors refuse loudly), per-batch hot
-    * buckets capped with a WARNING — the cap census only when the
-    * batch's signed row count exceeds `maxBucketSize`.
-    * `sign` must produce (id, sig) and null-propagate on null text
-    * ([[bandExplode]] then drops the null signatures — the hash(null)
-    * phantom-bucket lesson, review r16). */
-  private def writeSignatureStore(df: DataFrame, table: String,
-      sign: DataFrame => DataFrame, prop: String, payload: String,
-      numHashes: Int, bands: Int, buckets: Int, mode: String,
-      maxBucketSize: Int, writer: String): Unit = {
+  /** The one store writer, as [[writeMinhashStore]] documents it: stamp
+    * check, stamps unset, the sibling first ([[writeSibling]]), the slim
+    * rows capped per batch ([[capBucketsWarn]]), stamps set once every
+    * table has landed. A one-table tier snapshots its signed batch for
+    * the bound. */
+  private def writeStore(s: BucketScheme, df: DataFrame, table: String,
+      idCol: String, srcCol: String, buckets: Int, mode: String,
+      maxBucketSize: Int): Unit = {
     val spark = df.sparkSession
-    val w = checkStoreWrite(spark, table, mode, prop, payload, writer)
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    // stamps unset for the non-atomic two-table window, re-set only
-    // after BOTH writes land (see unsetStoreStamps)
-    unsetStoreStamps(spark, table, w, prop)
-    val sigTable = table + MinhashSigTableSuffix
-    val (sigSource, rows) = writeSibling(sign(df), w, sigTable, buckets)
-    // the read-back path filters null sigs as a stored-ATTRIBUTE
-    // predicate (parquet-pushed, free): current signers never write
-    // them, but a pre-r17 store's sigs table may carry null-text rows
-    val banded = bandExplode(
-      sigSource.getOrElse(
-        spark.table(sigTable).filter(col("sig").isNotNull)),
-      numHashes, bands)
-      .select(col("id"), col("band"), col("bucket"))
-    val bound = capBucketsWarn(banded, Seq("band", "bucket"), maxBucketSize,
-      s"$writer($table)", rows) { slim =>
-      slim
-        .repartition(buckets, col("band"), col("bucket"))
-        .write.mode(mode)
-        .bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
-        .format("parquet")
-        .saveAsTable(table)
+    val w = checkStoreWrite(spark, table, mode, s.prop, s.stamp, s.writer)
+    // stamps unset for the non-atomic write window, re-set only after
+    // EVERY table lands (see unsetStoreStamps)
+    unsetStoreStamps(spark, table, w, s.prop)
+    val signed = s.sign(df, idCol, srcCol)
+    val (slim, rows) = s.sibling match {
+      case Some(suffix) =>
+        val (source, rows) = writeSibling(signed, w, table + suffix, buckets)
+        // the read-back path filters null payloads as a stored-ATTRIBUTE
+        // predicate (parquet-pushed, free): current signers never write
+        // them, but a pre-r17 store's sigs table may carry null-text rows
+        (s.slimRows(source.getOrElse(
+          spark.table(table + suffix).filter(col(s.payload).isNotNull))), rows)
+      case None =>
+        val (snap, rows) = snapCounted(signed)
+        (s.slimRows(snap), Some(rows))
     }
-    stampStore(spark, table, w, prop, payload, bound)
+    val bound = capBucketsWarn(slim, s.bucketCols, maxBucketSize,
+      s"${s.writer}($table)", rows) {
+      saveBucketed(_, table, mode, buckets, s.bucketCols)
+    }
+    stampStore(spark, table, w, s.prop, s.stamp, bound)
   }
 
-  /** Drop BOTH tables of a two-table signature store ([[dropMinhashStore]]
-    * / [[dropNgramStore]] delegate here). */
-  private def dropSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    graft.join.SpatialJoin.dropBucketedTable(spark, table)
-    graft.join.SpatialJoin.dropBucketedTable(spark, table + MinhashSigTableSuffix)
-  }
+  private def dropStore(spark: SparkSession, table: String, sibling: String): Unit =
+    Seq(table, table + sibling).foreach(dropBucketedTable(spark, _))
 
-  /** The shared novel/ingest filter of the signature-store tiers
-    * ([[minhashNovelAgainstStore]] / [[ngramNovelAgainstStore]] — same
-    * collision-point warning, same corpus-then-within-batch flow; a
-    * drifted copy would silently fix one door and not the other):
-    * `candidates` is the tier's store-candidates frame, `dedupWithin`
-    * its exact-verify within-batch dedup. */
-  private def novelAgainstSignatureStore(batch: DataFrame, idCol: String,
-      threshold: Double, numHashes: Int, bands: Int, ctx: String,
-      candidates: DataFrame, dedupWithinBatch: Boolean,
-      dedupWithin: DataFrame => DataFrame): DataFrame = {
-    val collisionPoint = math.pow(1.0 / bands, 1.0 * bands / numHashes)
-    if (threshold < collisionPoint * 0.8)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$ctx: threshold $threshold sits " +
-          f"well below the stamped banding's collision point " +
-          f"($collisionPoint%.2f at $numHashes hashes / $bands bands) — " +
-          "most pairs at that similarity never share a bucket, so " +
-          "near-dups will be declared novel; rewrite the store with " +
-          "more, narrower bands (autoBands) for this operating point")
-    novelRows(batch, idCol, candidates.filter(col("jaccard_est") >= threshold),
-      dedupWithinBatch)(dedupWithin)
-  }
-
-  /** The shared finish of the four `*NovelAgainstStore` doors: batch rows
-    * with no corpus hit (`hits` carries the matching `batch_id`s), then,
-    * with `dedupWithinBatch`, the tier's within-batch dedup. That pass
-    * reads its input several times (its sign pass, its verify snapshot,
-    * the survivors' joins), and every read of the lazy anti-join would
-    * re-run the whole store-candidates plan (pairs join, signature
-    * fetch, estimate, distinct). The corpus-filtered batch is therefore
-    * snapshotted before the within-batch pass: the store join runs once
-    * per call. Without the within-batch pass the result stays lazy. */
-  private def novelRows(batch: DataFrame, idCol: String, hits: DataFrame,
-      dedupWithinBatch: Boolean)(dedupWithin: DataFrame => DataFrame): DataFrame = {
-    val hitIds = hits.select(col("batch_id")).distinct()
-    val vsCorpus = batch.join(hitIds, batch(idCol) === hitIds("batch_id"),
-      "left_anti")
-    if (dedupWithinBatch) dedupWithin(snapFrame(vsCorpus)) else vsCorpus
-  }
-
-  /** Shared candidate pass of the two-table signature stores: the batch
-    * is signed ONCE (snapshotted — the band explosion, the joint-cap
-    * census, and the estimate join all read it; the snapshot's row
-    * count feeds the joint cap's skip rule), slim band rows
-    * equi-join on (band, bucket) with no corpus-side shuffle, pairs
-    * dedup across bands, and only THEN are signatures fetched — once
-    * per pair, the corpus side from its bucketed-by-id table. */
-  private def signatureStoreCandidates(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, table: String, sign: DataFrame => DataFrame,
-      numHashes: Int, bands: Int, maxBucketSize: Int,
-      writer: String, ctx: String): DataFrame = {
+  /** The one store candidates pass, as [[minhashCandidatesAgainstStore]]
+    * documents it; a one-table tier carries its payload through the
+    * bucket join instead of fetching it. Returns
+    * (batch_id, corpus_id, <score>). */
+  private def storeCandidates(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      maxBucketSize: Int): DataFrame = {
     val store = spark.table(table)
-    require(Seq("id", "band", "bucket").forall(store.columns.contains),
-      s"$table does not have $writer's slim (id, band, bucket) layout")
-    val sigs = spark.table(table + MinhashSigTableSuffix)
-    require(Seq("id", "sig").forall(sigs.columns.contains),
-      s"$table$MinhashSigTableSuffix does not have the (id, sig) layout")
-    val (bSig, batchRows) = snapCounted(sign(batch))
+    require(s.slimCols.forall(store.columns.contains),
+      s"$table does not have ${s.writer}'s slim " +
+        s"(${s.slimCols.mkString(", ")}) layout")
+    val sibling = s.sibling.map { suffix =>
+      val t = spark.table(table + suffix)
+      require(Seq("id", s.payload).forall(t.columns.contains),
+        s"$table$suffix does not have the (id, ${s.payload}) layout")
+      t
+    }
+    val (signed, batchRows) = snapCounted(s.sign(batch, idCol, srcCol))
     // JOINT capping (batch + store counts per bucket): per-side caps
     // would admit cap×cap pair bombs AND diverge from the self-join
     // door's union semantics at the boundary
-    val (b0, c0) = capBucketsJoint(
-      bandExplode(bSig, numHashes, bands).select(col("id"), col("band"), col("bucket")),
-      store, Seq("band", "bucket"), maxBucketSize, ctx,
+    val (b0, c0) = capBucketsJoint(s.slimRows(signed), store, s,
+      maxBucketSize, s"${s.tier}CandidatesAgainstStore($table)",
       readRowBound(spark, table).map(_ + batchRows))
-    val pairs = b0.select(col("band"), col("bucket"), col("id").as("batch_id"))
-      .join(c0.select(col("band"), col("bucket"), col("id").as("corpus_id")),
-        Seq("band", "bucket"))
-      .select(col("batch_id"), col("corpus_id"))
+    val p = s.payload
+    def side(df: DataFrame, id: String, sfx: String): DataFrame =
+      df.select(s.bucketCols.map(col) ++
+        (col("id").as(id) +: s.carried.map(c => col(c).as(c + sfx))): _*)
+    val pairs = side(b0, "batch_id", "_b")
+      .join(side(c0, "corpus_id", "_c"), s.bucketCols)
+      .select((Seq("batch_id", "corpus_id") ++
+        s.carried.flatMap(c => Seq(c + "_b", c + "_c"))).map(col): _*)
       .dropDuplicates("batch_id", "corpus_id")
     // dropDuplicates on id: insurance against a double-appended batch
-    // duplicating sig rows (each dup would re-emit every pair touching
-    // the doc); the sigs table is bucketed by id, so the aggregate
+    // duplicating sibling rows (each dup would re-emit every pair
+    // touching the doc); the sibling is bucketed by id, so the aggregate
     // needs no exchange. The isNotNull filter (parquet-pushed attribute
     // predicate) must come FIRST: a pre-r17 store can carry a null-text
     // sig row next to a real one for the same id, and an arbitrary
     // per-id pick that keeps the null would null the estimate and
     // silently drop every pair touching the doc
-    pairs
-      .join(sigs.filter(col("sig").isNotNull)
-        .select(col("id").as("corpus_id"), col("sig").as("sig_c"))
-        .dropDuplicates("corpus_id"), Seq("corpus_id"))
-      .join(bSig.select(col("id").as("batch_id"), col("sig").as("sig_b")),
-        Seq("batch_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        jaccardEstExpr(col("sig_b"), col("sig_c"), numHashes).as("jaccard_est"))
+    val fetched = sibling.fold(pairs) { sib =>
+      pairs
+        .join(sib.filter(col(p).isNotNull)
+          .select(col("id").as("corpus_id"), col(p).as(p + "_c"))
+          .dropDuplicates("corpus_id"), Seq("corpus_id"))
+        .join(signed.select(col("id").as("batch_id"), col(p).as(p + "_b")),
+          Seq("batch_id"))
+    }
+    fetched.select(col("batch_id"), col("corpus_id"),
+      s.scoreOf(col(p + "_b"), col(p + "_c")).as(s.score))
   }
+
+  /** The one store novel pass, the finish of the four
+    * `*NovelAgainstStore` doors: the recall warning, batch rows with no
+    * corpus hit, then, with `dedupWithinBatch`, the within-batch dedup
+    * at the stamped parameters and the caller's `maxBucketSize`. That
+    * pass reads its input several times (its sign pass, its verify
+    * snapshot, the survivors' joins), and every read of the lazy
+    * anti-join would re-run the whole store-candidates plan, so the
+    * corpus-filtered batch is snapshotted first: the store join runs
+    * once per call. Without the within-batch pass the result stays
+    * lazy. */
+  private def storeNovel(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      threshold: Double, maxBucketSize: Int,
+      dedupWithinBatch: Boolean): DataFrame = {
+    s.recallWarning(threshold).foreach(m => org.slf4j.LoggerFactory
+      .getLogger(getClass).warn(s"${s.tier}NovelAgainstStore($table): $m"))
+    val hitIds = storeCandidates(s, spark, batch, table, idCol, srcCol,
+      maxBucketSize).filter(s.hit(threshold)).select(col("batch_id")).distinct()
+    val vsCorpus = batch.join(hitIds, batch(idCol) === hitIds("batch_id"),
+      "left_anti")
+    if (!dedupWithinBatch) vsCorpus
+    else {
+      val snap = snapFrame(vsCorpus)
+      keepMinIdSurvivors(snap, idCol,
+        s.withinBatchPairs(snap, idCol, srcCol, threshold, maxBucketSize))
+    }
+  }
+
+  /** The scheme of the two MinHash-banded tiers (character shingles,
+    * word n-grams): (band, bucket) keys, the `__sigs` sibling, the
+    * signature-agreement estimate, and the warning for a threshold well
+    * under the stamped banding's collision point. */
+  private def bandedScheme(tier: String, prop: String, version: String,
+      params: Seq[Int], numHashes: Int, bands: Int,
+      sign: (DataFrame, String, String) => DataFrame,
+      withinBatchPairs: (DataFrame, String, String, Double, Int) => DataFrame
+  ): BucketScheme = {
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val collisionPoint = math.pow(1.0 / bands, 1.0 * bands / numHashes)
+    BucketScheme(tier, prop, version, params, Seq("band", "bucket"), "sig",
+      Some(MinhashSigTableSuffix), "jaccard_est", isDistance = false, sign,
+      bandExplode(_, numHashes, bands).select(col("id"), col("band"), col("bucket")),
+      jaccardEstExpr(_, _, numHashes),
+      threshold => Option.when(threshold < collisionPoint * 0.8)(
+        s"threshold $threshold sits " +
+          f"well below the stamped banding's collision point " +
+          f"($collisionPoint%.2f at $numHashes hashes / $bands bands) — " +
+          "most pairs at that similarity never share a bucket, so " +
+          "near-dups will be declared novel; rewrite the store with " +
+          "more, narrower bands (autoBands) for this operating point"),
+      withinBatchPairs)
+  }
+
+  // ------------------------------------------------ minhash corpus store
+
+  /** Table property stamped by [[writeMinhashStore]]:
+    * `v2:<numHashes>:<bands>:<shingleK>`. Batch joins read it back and
+    * band the batch with the SAME parameters — mixed parameters hash
+    * different buckets and silently miss every pair, so a missing or
+    * mismatched stamp errors loudly. */
+  val MinhashStoreProp = "graft.dedup.minhashParams"
+
+  /** Suffix of the per-doc signature table living next to a
+    * [[writeMinhashStore]] / [[writeNgramStore]] bands table. */
+  val MinhashSigTableSuffix = "__sigs"
+
+  /** The minhash tier's [[BucketScheme]]. v2 = the slim two-table
+    * layout; a v1 (fat single-table) stamp from the earlier cut must
+    * FAIL the param check rather than let a half-migrated store
+    * validate. */
+  private def minhashScheme(numHashes: Int, bands: Int,
+      shingleK: Int): BucketScheme =
+    bandedScheme("minhash", MinhashStoreProp, "v2",
+      Seq(numHashes, bands, shingleK), numHashes, bands,
+      minhashSigned(_, _, _, numHashes, shingleK),
+      (df, idCol, textCol, threshold, cap) => minhashVerified(df, idCol,
+        textCol, threshold, numHashes, bands = 0, shingleK, cap))
+
+  private def minhashScheme(spark: SparkSession, table: String): BucketScheme =
+    stampParams(spark, table, "minhash", MinhashStoreProp, "v2") {
+      case Seq(numHashes, bands, shingleK) =>
+        minhashScheme(numHashes, bands, shingleK) }
 
   /** Persist a corpus's MinHash LSH index — the incremental-ingest
     * answer at 100 TB: corpus signatures are computed ONCE here (the
@@ -868,38 +972,13 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 8, shingleK: Int = 5,
       buckets: Int = 64, mode: String = "overwrite",
       maxBucketSize: Int = 100000): Unit =
-    // v2 = the slim two-table layout; a v1 (fat single-table) stamp from
-    // the earlier cut must FAIL the param check rather than let a
-    // half-migrated store validate
-    writeSignatureStore(df, table,
-      minhashSigned(_, idCol, textCol, numHashes, shingleK),
-      MinhashStoreProp, s"v2:$numHashes:$bands:$shingleK",
-      numHashes, bands, buckets, mode, maxBucketSize, "writeMinhashStore")
+    writeStore(minhashScheme(numHashes, bands, shingleK), df, table, idCol,
+      textCol, buckets, mode, maxBucketSize)
 
   /** Drop BOTH tables of a [[writeMinhashStore]] index (band rows and
     * per-doc signatures) and their warehouse locations. */
-  def dropMinhashStore(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = dropSignatureStore(spark, table)
-
-  /** The stamped (numHashes, bands, shingleK) of a [[writeMinhashStore]]
-    * table; errors loudly when absent or unreadable. */
-  private def minhashStoreParams(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Int, Int, Int) = {
-    val stamp = readStoreStamp(spark, table, MinhashStoreProp)
-    stamp.map(_.split(':')) match {
-      case Some(Array("v2", nh, b, k)) =>
-        try (nh.toInt, b.toInt, k.toInt)
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"minhash store $table: unreadable $MinhashStoreProp stamp " +
-              s"'${stamp.get}' — rewrite with writeMinhashStore")
-        }
-      case _ => throw new IllegalArgumentException(
-        s"$table is not a current writeMinhashStore table (no readable " +
-          s"v2 $MinhashStoreProp stamp — missing, mid-write, or an old " +
-          "layout) — rewrite it with writeMinhashStore(mode=overwrite)")
-    }
-  }
+  def dropMinhashStore(spark: SparkSession,
+      table: String): Unit = dropStore(spark, table, MinhashSigTableSuffix)
 
   /** Candidate near-dup pairs of a NEW batch against a
     * [[writeMinhashStore]] corpus: the batch is signed ONCE with the
@@ -924,16 +1003,12 @@ object Dedup {
     * corpus-filtered batch (so the store join runs once per call) and
     * resolve the within-batch near-dup components
     * ([[connectedComponents]]) before the result frame returns. */
-  def minhashCandidatesAgainstStore(spark: org.apache.spark.sql.SparkSession,
+  def minhashCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
-      maxBucketSize: Int = 100000): DataFrame = {
-    val (numHashes, bands, shingleK) = minhashStoreParams(spark, table)
-    signatureStoreCandidates(spark, batch, table,
-      minhashSigned(_, idCol, textCol, numHashes, shingleK),
-      numHashes, bands, maxBucketSize, "writeMinhashStore",
-      s"minhashCandidatesAgainstStore($table)")
-  }
+      maxBucketSize: Int = 100000): DataFrame =
+    storeCandidates(minhashScheme(spark, table), spark, batch, table, idCol,
+      textCol, maxBucketSize)
 
   /** Batch rows with NO near-dup at `threshold` — the ingest filter:
     * keep the novel rows, then `writeMinhashStore(novel, table,
@@ -941,8 +1016,9 @@ object Dedup {
     * dedups against them too. Checks BOTH directions a duplicate can
     * arrive from: against the corpus (estimated jaccard from the stored
     * signatures) and, with `dedupWithinBatch` (default), among the
-    * surviving batch rows themselves via [[dedupNearMinhash]] (exact
-    * shingle jaccard, min-id survivor per cluster) — without it, two
+    * surviving batch rows themselves as [[dedupNearMinhash]] does (exact
+    * shingle jaccard, min-id survivor per cluster, at this call's
+    * `maxBucketSize`) — without it, two
     * identical new documents in one batch would BOTH be declared novel
     * and both appended, planting permanent duplicates in the index.
     *
@@ -959,36 +1035,25 @@ object Dedup {
     * corpus text, which the index deliberately does not carry — callers
     * needing exact jaccard join the surviving pairs back to their own
     * corpus table. */
-  def minhashNovelAgainstStore(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, table: String,
+  def minhashNovelAgainstStore(spark: SparkSession, batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, maxBucketSize: Int = 100000,
-      dedupWithinBatch: Boolean = true): DataFrame = {
-    val (numHashes, bands, shingleK) = minhashStoreParams(spark, table)
-    novelAgainstSignatureStore(batch, idCol, threshold, numHashes, bands,
-      s"minhashNovelAgainstStore($table)",
-      minhashCandidatesAgainstStore(spark, batch, table, idCol, textCol,
-        maxBucketSize),
-      dedupWithinBatch,
-      vsCorpus => dedupNearMinhash(vsCorpus, idCol, textCol, threshold,
-        numHashes = numHashes, bands = 0, shingleK = shingleK))
-  }
+      dedupWithinBatch: Boolean = true): DataFrame =
+    storeNovel(minhashScheme(spark, table), spark, batch, table, idCol,
+      textCol, threshold, maxBucketSize, dedupWithinBatch)
 
-  /** Word n-gram hashes (Int64), the token-level analog of
-    * [[shingleHashesNorm]]; `toks` must be a materialized column (the
-    * transform lambda reads it once per gram position).
+  /** Word n-gram hashes (Int64), distinct — the token-level analog of
+    * [[shingleHashesNorm]], the set form of [[gramHashesOfTokens]];
+    * `toks` must be a materialized column (the transform lambda reads it
+    * once per gram position).
     * Null tokens (null text) null-propagate: `concat_ws` over a null
     * array yields "" — without the guard every null-text row would get
     * the identical single-gram {hash("")} set and pair with every other
     * null-text row at exact jaccard 1.0 (the hash(null) phantom-bucket
     * lesson, applied to the n-gram tier). */
   private[graft] def ngramHashesOf(toks: Column, n: Int): Column =
-    array_distinct(
-      when(toks.isNull, lit(null).cast("array<bigint>"))
-        .when(size(toks) >= n,
-          transform(sequence(lit(0), size(toks) - n),
-            i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(n))))))
-        .otherwise(array(xxhash64(concat_ws(" ", toks)))))
+    array_distinct(when(toks.isNull, lit(null).cast("array<bigint>"))
+      .otherwise(gramHashesOfTokens(toks, n)))
 
   /** (id, ng) n-gram hash sets of a frame — one normalize→tokenize pass
     * (tokens materialized first, so the tokenizer runs once per
@@ -1066,13 +1131,25 @@ object Dedup {
     * `v1:<n>:<numHashes>:<bands>`. */
   val NgramStoreProp = "graft.dedup.ngramParams"
 
+  /** The n-gram tier's [[BucketScheme]]: [[minhashScheme]]'s layout over
+    * the n-gram signer. */
+  private def ngramScheme(n: Int, numHashes: Int, bands: Int): BucketScheme =
+    bandedScheme("ngram", NgramStoreProp, "v1", Seq(n, numHashes, bands),
+      numHashes, bands, ngramSigned(_, _, _, n, numHashes),
+      (df, idCol, textCol, threshold, cap) => nearDupNgram(df, idCol, textCol,
+        threshold, n, numHashes, bands = 0, maxBucketSize = cap))
+
+  private def ngramScheme(spark: SparkSession, table: String): BucketScheme =
+    stampParams(spark, table, "ngram", NgramStoreProp, "v1") {
+      case Seq(n, numHashes, bands) => ngramScheme(n, numHashes, bands) }
+
   /** Persist a corpus's word-n-gram MinHash index — the token-level tier
     * of the persistent near-dup family, completing the symmetry with
     * [[writeMinhashStore]] (character shingles), [[writeSimhashStore]]
     * (Hamming) and [[writeEmbeddingStore]] (cosine): before it,
     * [[nearDupNgram]] required the full corpus per call. Identical
-    * two-table layout and stamp discipline (shared
-    * writeSignatureStore core): slim (id, band, bucket) rows bucketed by
+    * two-table layout and stamp discipline (the shared store
+    * pipeline): slim (id, band, bucket) rows bucketed by
     * the join key, (id, sig) rows bucketed by id, stamp unset across the
     * non-atomic two-table window, per-batch hot buckets capped with a
     * WARNING; growth ACROSS appends is guarded at join time and repaired
@@ -1084,50 +1161,24 @@ object Dedup {
       n: Int = 3, numHashes: Int = 64, bands: Int = 8,
       buckets: Int = 64, mode: String = "overwrite",
       maxBucketSize: Int = 100000): Unit =
-    writeSignatureStore(df, table,
-      ngramSigned(_, idCol, textCol, n, numHashes),
-      NgramStoreProp, s"v1:$n:$numHashes:$bands",
-      numHashes, bands, buckets, mode, maxBucketSize, "writeNgramStore")
+    writeStore(ngramScheme(n, numHashes, bands), df, table, idCol, textCol,
+      buckets, mode, maxBucketSize)
 
   /** Drop BOTH tables of a [[writeNgramStore]] index. */
-  def dropNgramStore(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = dropSignatureStore(spark, table)
-
-  /** The stamped (n, numHashes, bands) of a [[writeNgramStore]] table;
-    * errors loudly when absent, mid-write, or unreadable. */
-  private def ngramStoreParams(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Int, Int, Int) = {
-    val stamp = readStoreStamp(spark, table, NgramStoreProp)
-    stamp.map(_.split(':')) match {
-      case Some(Array("v1", n, nh, b)) =>
-        try (n.toInt, nh.toInt, b.toInt)
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"ngram store $table: unreadable $NgramStoreProp stamp " +
-              s"'${stamp.get}' — rewrite with writeNgramStore")
-        }
-      case _ => throw new IllegalArgumentException(
-        s"$table is not a writeNgramStore table (no readable " +
-          s"$NgramStoreProp stamp — missing, mid-write, or foreign) — " +
-          "rewrite it with writeNgramStore(mode=overwrite)")
-    }
-  }
+  def dropNgramStore(spark: SparkSession,
+      table: String): Unit = dropStore(spark, table, MinhashSigTableSuffix)
 
   /** Candidate near-dup pairs of a NEW batch against a
     * [[writeNgramStore]] corpus — [[minhashCandidatesAgainstStore]]'s
     * token-level twin (same shared core, n-gram signer, same eager
     * joint-cap census at call time). Returns
     * (batch_id, corpus_id, jaccard_est). */
-  def ngramCandidatesAgainstStore(spark: org.apache.spark.sql.SparkSession,
+  def ngramCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
-      maxBucketSize: Int = 100000): DataFrame = {
-    val (n, numHashes, bands) = ngramStoreParams(spark, table)
-    signatureStoreCandidates(spark, batch, table,
-      ngramSigned(_, idCol, textCol, n, numHashes),
-      numHashes, bands, maxBucketSize, "writeNgramStore",
-      s"ngramCandidatesAgainstStore($table)")
-  }
+      maxBucketSize: Int = 100000): DataFrame =
+    storeCandidates(ngramScheme(spark, table), spark, batch, table, idCol,
+      textCol, maxBucketSize)
 
   /** Batch rows with NO n-gram near-dup at `threshold` — the token-level
     * ingest filter; append survivors with `writeNgramStore(novel, table,
@@ -1136,22 +1187,14 @@ object Dedup {
     * ([[dedupNearNgram]]) verifies with EXACT n-gram jaccard, while the
     * corpus check is signature-estimated (the index deliberately carries
     * no text). */
-  def ngramNovelAgainstStore(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, table: String,
+  def ngramNovelAgainstStore(spark: SparkSession, batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, maxBucketSize: Int = 100000,
-      dedupWithinBatch: Boolean = true): DataFrame = {
-    val (n, numHashes, bands) = ngramStoreParams(spark, table)
-    novelAgainstSignatureStore(batch, idCol, threshold, numHashes, bands,
-      s"ngramNovelAgainstStore($table)",
-      ngramCandidatesAgainstStore(spark, batch, table, idCol, textCol,
-        maxBucketSize),
-      dedupWithinBatch,
-      vsCorpus => dedupNearNgram(vsCorpus, idCol, textCol, threshold, n,
-        numHashes = numHashes, bands = 0, maxBucketSize = maxBucketSize))
-  }
+      dedupWithinBatch: Boolean = true): DataFrame =
+    storeNovel(ngramScheme(spark, table), spark, batch, table, idCol,
+      textCol, threshold, maxBucketSize, dedupWithinBatch)
 
-  // ------------------------------------------------- store compaction
+  // ------------------------------------- store compaction and stats
 
   /** Re-apply the hot-bucket cap to a persistent index's slim bucket
     * table — the maintenance door for buckets grown past `maxBucketSize`
@@ -1173,9 +1216,9 @@ object Dedup {
     * overwrite would hold. The census therefore counts distinct rows —
     * the same population write-time capping sees.
     *
-    * Sibling VACUUM (`sibling` = (suffix, payload column), the
-    * two-table tiers): after the slim swap lands — stamp still unset,
-    * so a crash mid-vacuum leaves a loudly-refused store — the sibling
+    * Sibling VACUUM (the two-table tiers): after the slim swap lands —
+    * stamp still unset, so a crash mid-vacuum leaves a loudly-refused
+    * store — the sibling
     * sig/vec table is rewritten to exactly ONE NON-NULL row per id
     * surviving in the slim table (null-payload filter + left-semi +
     * dropDuplicates(id), same tmp-table + rename discipline). Without
@@ -1201,15 +1244,10 @@ object Dedup {
     * before the bound existed — the census runs and its largest kept
     * group becomes the new, exact bound. The renamed tmp table carries
     * no properties, so the bound is always restamped with the params. */
-  private def recapBucketTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, bucketCols: Seq[String], maxBucketSize: Int,
-      prop: String, ctx: String,
-      sibling: Option[(String, String)] = None): Unit = {
+  private def recapBucketTable(s: BucketScheme, spark: SparkSession,
+      table: String, maxBucketSize: Int): Unit = {
+    val ctx = s"${s.compactDoor}($table)"
     require(maxBucketSize > 0, s"$ctx: maxBucketSize must be positive")
-    val payload = readStoreStamp(spark, table, prop).getOrElse(
-      throw new IllegalArgumentException(
-        s"$ctx: $table has no readable $prop stamp (missing, mid-write, " +
-          "or foreign) — not a compactable store; rewrite it first"))
     def bucketCount(t: String): Int = {
       val meta = spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier(t))
@@ -1219,50 +1257,42 @@ object Dedup {
     }
     val buckets = bucketCount(table)
     val tmp = table + "__compact"
-    graft.join.SpatialJoin.dropBucketedTable(spark, tmp)
-    val bound = capBucketsWarn(spark.table(table).distinct(), bucketCols,
-      maxBucketSize, ctx, readRowBound(spark, table)) { capped =>
-      capped
-        .repartition(buckets, bucketCols.map(col): _*)
-        .write.mode("overwrite")
-        .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-        .sortBy(bucketCols.head, bucketCols.tail: _*)
-        .format("parquet")
-        .saveAsTable(tmp)
+    dropBucketedTable(spark, tmp)
+    val bound = capBucketsWarn(spark.table(table).distinct(), s.bucketCols,
+      maxBucketSize, ctx, readRowBound(spark, table)) {
+      saveBucketed(_, tmp, "overwrite", buckets, s.bucketCols)
     }
     // swap: unset the stamp FIRST so a crash anywhere in the drop+rename
     // window (and the sibling vacuum after it) leaves a loudly-refused
     // store, not a silently stale one
-    spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
-      s"UNSET TBLPROPERTIES IF EXISTS ('$prop')")
-    graft.join.SpatialJoin.dropBucketedTable(spark, table)
-    spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(tmp)} " +
-      s"RENAME TO ${graft.join.SpatialJoin.quoteTable(table)}")
-    sibling.foreach { case (suffix, payloadCol) =>
+    spark.sql(s"ALTER TABLE ${quoteTable(table)} " +
+      s"UNSET TBLPROPERTIES IF EXISTS ('${s.prop}')")
+    dropBucketedTable(spark, table)
+    spark.sql(s"ALTER TABLE ${quoteTable(tmp)} " +
+      s"RENAME TO ${quoteTable(table)}")
+    s.sibling.foreach { suffix =>
       val sib = table + suffix
       if (spark.sessionState.catalog.tableExists(
           spark.sessionState.sqlParser.parseTableIdentifier(sib))) {
         val sibBuckets = bucketCount(sib)
         val sibTmp = sib + "__compact"
-        graft.join.SpatialJoin.dropBucketedTable(spark, sibTmp)
+        dropBucketedTable(spark, sibTmp)
         // surviving slim ids are the tiny side; the sibling streams from
         // its own id-bucketed files (no exchange on the big side)
         val surviving = spark.table(table).select(col("id")).distinct()
-        spark.table(sib)
-          .filter(col(payloadCol).isNotNull)
+        saveBucketed(spark.table(sib)
+          .filter(col(s.payload).isNotNull)
           .dropDuplicates("id")
-          .join(surviving, Seq("id"), "left_semi")
-          .repartition(sibBuckets, col("id"))
-          .write.mode("overwrite").bucketBy(sibBuckets, "id").sortBy("id")
-          .format("parquet").saveAsTable(sibTmp)
-        graft.join.SpatialJoin.dropBucketedTable(spark, sib)
-        spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(sibTmp)} " +
-          s"RENAME TO ${graft.join.SpatialJoin.quoteTable(sib)}")
+          .join(surviving, Seq("id"), "left_semi"),
+          sibTmp, "overwrite", sibBuckets, Seq("id"))
+        dropBucketedTable(spark, sib)
+        spark.sql(s"ALTER TABLE ${quoteTable(sibTmp)} " +
+          s"RENAME TO ${quoteTable(sib)}")
       }
     }
     // cap > 0 (required above), so the census path always yields a bound
-    spark.sql(s"ALTER TABLE ${graft.join.SpatialJoin.quoteTable(table)} " +
-      s"SET TBLPROPERTIES ('$prop'='$payload', " +
+    spark.sql(s"ALTER TABLE ${quoteTable(table)} " +
+      s"SET TBLPROPERTIES ('${s.prop}'='${s.stamp}', " +
       s"'$BucketRowBoundProp'='${bound.get}')")
   }
 
@@ -1272,10 +1302,10 @@ object Dedup {
     * (n_rows, n_buckets, max_bucket, n_over_cap) with `n_over_cap`
     * counting bucket groups past `cap`. The aggregation rides the
     * store's own bucketing — no exchange. */
-  private def storeBucketStats(spark: org.apache.spark.sql.SparkSession,
-      table: String, bucketCols: Seq[String], cap: Int): DataFrame =
+  private def storeBucketStats(s: BucketScheme, spark: SparkSession,
+      table: String, cap: Int): DataFrame =
     spark.table(table)
-      .groupBy(bucketCols.map(col): _*)
+      .groupBy(s.bucketCols.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       // coalesce: sum/max over an EMPTY bucket set (empty corpus, or a
       // write that dropped every group) are null, and the documented
@@ -1291,32 +1321,24 @@ object Dedup {
   /** [[storeBucketStats]] for a [[writeMinhashStore]] index (stamp
     * verified): `n_over_cap > 0` means [[capBucketsJoint]] will skip
     * those buckets at join time — run [[compactMinhashStore]]. */
-  def minhashStoreStats(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxBucketSize: Int = 100000): DataFrame = {
-    minhashStoreParams(spark, table)
-    storeBucketStats(spark, table, Seq("band", "bucket"), maxBucketSize)
-  }
+  def minhashStoreStats(spark: SparkSession,
+      table: String, maxBucketSize: Int = 100000): DataFrame =
+    storeBucketStats(minhashScheme(spark, table), spark, table, maxBucketSize)
 
   /** [[storeBucketStats]] for a [[writeNgramStore]] index. */
-  def ngramStoreStats(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxBucketSize: Int = 100000): DataFrame = {
-    ngramStoreParams(spark, table)
-    storeBucketStats(spark, table, Seq("band", "bucket"), maxBucketSize)
-  }
+  def ngramStoreStats(spark: SparkSession,
+      table: String, maxBucketSize: Int = 100000): DataFrame =
+    storeBucketStats(ngramScheme(spark, table), spark, table, maxBucketSize)
 
   /** [[storeBucketStats]] for a [[writeSimhashStore]] index. */
-  def simhashStoreStats(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxBucketSize: Int = 100000): DataFrame = {
-    simhashStoreChunks(spark, table)
-    storeBucketStats(spark, table, Seq("chunk", "bucket"), maxBucketSize)
-  }
+  def simhashStoreStats(spark: SparkSession,
+      table: String, maxBucketSize: Int = 100000): DataFrame =
+    storeBucketStats(simhashScheme(spark, table), spark, table, maxBucketSize)
 
   /** [[storeBucketStats]] for a [[writeEmbeddingStore]] index. */
-  def embeddingStoreStats(spark: org.apache.spark.sql.SparkSession,
-      table: String, maxBucketSize: Int = 100000): DataFrame = {
-    embeddingStoreParams(spark, table)
-    storeBucketStats(spark, table, Seq("t", "sig"), maxBucketSize)
-  }
+  def embeddingStoreStats(spark: SparkSession,
+      table: String, maxBucketSize: Int = 100000): DataFrame =
+    storeBucketStats(embeddingScheme(spark, table), spark, table, maxBucketSize)
 
   /** Compact a [[writeMinhashStore]] index: re-apply the hot-bucket cap
     * across everything appended so far (same WARN discipline as write
@@ -1329,36 +1351,30 @@ object Dedup {
     * hold — minus buckets that individual batch writes already dropped,
     * which a fresh overwrite also drops, and minus sig rows no slim row
     * references, which can never join. */
-  def compactMinhashStore(spark: org.apache.spark.sql.SparkSession,
+  def compactMinhashStore(spark: SparkSession,
       table: String, maxBucketSize: Int = 100000): Unit =
-    recapBucketTable(spark, table, Seq("band", "bucket"), maxBucketSize,
-      MinhashStoreProp, s"compactMinhashStore($table)",
-      sibling = Some((MinhashSigTableSuffix, "sig")))
+    recapBucketTable(minhashScheme(spark, table), spark, table, maxBucketSize)
 
   /** Compact a [[writeNgramStore]] index — see [[compactMinhashStore]]. */
-  def compactNgramStore(spark: org.apache.spark.sql.SparkSession,
+  def compactNgramStore(spark: SparkSession,
       table: String, maxBucketSize: Int = 100000): Unit =
-    recapBucketTable(spark, table, Seq("band", "bucket"), maxBucketSize,
-      NgramStoreProp, s"compactNgramStore($table)",
-      sibling = Some((MinhashSigTableSuffix, "sig")))
+    recapBucketTable(ngramScheme(spark, table), spark, table, maxBucketSize)
 
   /** Compact a [[writeSimhashStore]] index — see [[compactMinhashStore]].
     * NB dropping an over-cap (chunk, bucket) group forfeits the exact
     * ≤3-Hamming recall for pairs whose only agreeing chunk sat there —
     * the same caveat the writer's cap carries. */
-  def compactSimhashStore(spark: org.apache.spark.sql.SparkSession,
+  def compactSimhashStore(spark: SparkSession,
       table: String, maxBucketSize: Int = 100000): Unit =
-    recapBucketTable(spark, table, Seq("chunk", "bucket"), maxBucketSize,
-      SimhashStoreProp, s"compactSimhashStore($table)")
+    recapBucketTable(simhashScheme(spark, table), spark, table, maxBucketSize)
 
   /** Compact a [[writeEmbeddingStore]] index — see
     * [[compactMinhashStore]]; the vacuumed sibling here is the `__vecs`
     * table. */
-  def compactEmbeddingStore(spark: org.apache.spark.sql.SparkSession,
+  def compactEmbeddingStore(spark: SparkSession,
       table: String, maxBucketSize: Int = 100000): Unit =
-    recapBucketTable(spark, table, Seq("t", "sig"), maxBucketSize,
-      EmbeddingStoreProp, s"compactEmbeddingStore($table)",
-      sibling = Some((EmbeddingVecTableSuffix, "vec")))
+    recapBucketTable(embeddingScheme(spark, table), spark, table,
+      maxBucketSize)
 
   // ------------------------------------------------------------ SimHash
 
@@ -1404,32 +1420,25 @@ object Dedup {
     if (maxHamming <= 3) 4 else if (maxHamming <= 7) 8 else 16
   }
 
-  /** (id, sim, chunk, bucket) chunking of a frame — the ONE producer all
-    * three SimHash doors ride (self-join, store writer, store prober),
-    * so the store layout and batch probing can never desynchronize —
-    * with the signed row count, which bounds every (chunk, bucket)
-    * group (the cap sites' skip rule). */
-  private def simhashChunked(df: DataFrame, idCol: String,
-      textCol: String, chunks: Int = 4): (DataFrame, Long) = {
+  /** (id, sim) SimHash signatures of a frame. Null text (the only null
+    * signature) is filtered at the source, as in minhashSigned: its null
+    * buckets never join, and the cap census used to be what dropped
+    * them before a store write. */
+  private def simhashSigned(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), simhash64(col(textCol)).as("sim"))
+
+  /** (id, sim, chunk, bucket) chunking of an (id, sim) frame — the ONE
+    * producer all three SimHash doors ride (self-join, store writer,
+    * store prober), so the store layout and batch probing can never
+    * desynchronize. */
+  private def simhashChunks(signed: DataFrame, chunks: Int): DataFrame = {
     val width = 64 / chunks
     val mask = (1L << width) - 1
-    // Snapshot the 16-byte (id, sim) rows before chunk explosion (r19,
-    // the capBuckets-census fold): every caller evaluates the chunked
-    // frame at least twice (cap census + join side, or census + store
-    // write), and with simhash64 inlined each evaluation re-hashed the
-    // full text column. One eager pass signs; the chunk/bucket
-    // re-derivation per consumer is two integer ops. Makes the doors
-    // eager at call time (they already were for widened radii and the
-    // store writes; nearDupSimhash's default radius gives up its
-    // laziness for half the sign CPU).
-    // Null text (the only null signature) is filtered at the source, as
-    // in minhashSigned: its null buckets never join, and the cap census
-    // used to be what dropped them before a store write
-    val (signed, rows) = snapCounted(df.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), simhash64(col(textCol)).as("sim")))
-    (signed.select(col("id"), col("sim"),
+    signed.select(col("id"), col("sim"),
         explode(sequence(lit(0), lit(chunks - 1))).as("chunk"))
-      .withColumn("bucket", expr(s"(sim >> (chunk * $width)) & $mask")), rows)
+      .withColumn("bucket", expr(s"(sim >> (chunk * $width)) & $mask"))
   }
 
   /** SimHash near-dup: bucket by signature chunks (a pair within
@@ -1445,16 +1454,26 @@ object Dedup {
     * beyond ~cap × domain rows saturates EVERY group — those paths
     * count dropped groups eagerly and WARN instead of silently
     * returning zero pairs. EVERY radius now runs an eager signing job
-    * at call time (r19 — the (id, sim) snapshot in simhashChunked
+    * at call time (r19 — the (id, sim) snapshot before the chunk explode
     * halves the sign CPU; widened radii additionally run their census
     * eagerly), so don't construct these frames speculatively. The
     * default 3 keeps the classic 4×16-bit scheme. */
   def nearDupSimhash(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
     val chunks = simhashChunkCount("nearDupSimhash", maxHamming)
-    val (chunked, rows) = simhashChunked(df, idCol, textCol, chunks)
+    // Snapshot the 16-byte (id, sim) rows before chunk explosion (r19,
+    // the capBuckets-census fold): the chunked frame is evaluated at
+    // least twice (cap census + join side; the store doors do the same
+    // through the shared pipeline), and with simhash64 inlined each
+    // evaluation re-hashed the full text column. One eager pass signs;
+    // the chunk/bucket re-derivation per consumer is two integer ops.
+    // The default radius gives up its laziness for half the sign CPU.
+    // The snapshot's row count bounds every (chunk, bucket) group (the
+    // cap sites' skip rule)
+    val (signed, rows) = snapCounted(simhashSigned(df, idCol, textCol))
+    val chunked = simhashChunks(signed, chunks)
     // widened radii (narrow bucket domains) warn on drops — an eager
-    // census pass; every radius signs eagerly now (the simhashChunked
+    // census pass; every radius signs eagerly now (the (id, sim)
     // snapshot, r19); at ≤ maxBucketSize rows neither census runs
     val withChunk =
       if (chunks > 4) capBucketsWarned(chunked, Seq("chunk", "bucket"),
@@ -1533,39 +1552,37 @@ object Dedup {
   def writeSimhashStore(df: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       buckets: Int = 64, mode: String = "overwrite",
-      maxBucketSize: Int = 100000, maxHamming: Int = 3): Unit = {
-    val spark = df.sparkSession
-    val chunks = simhashChunkCount(s"writeSimhashStore($table)", maxHamming)
-    val payload = s"v1:$chunks"
-    val w = checkStoreWrite(spark, table, mode, SimhashStoreProp, payload,
-      "writeSimhashStore")
-    unsetStoreStamps(spark, table, w, SimhashStoreProp)
-    val (chunkedAll, rows) = simhashChunked(df, idCol, textCol, chunks)
-    val bound = capBucketsWarn(chunkedAll, Seq("chunk", "bucket"), maxBucketSize,
-      s"writeSimhashStore($table)", Some(rows)) { chunked =>
-      chunked
-        .repartition(buckets, col("chunk"), col("bucket"))
-        .write.mode(mode)
-        .bucketBy(buckets, "chunk", "bucket").sortBy("chunk", "bucket")
-        .format("parquet")
-        .saveAsTable(table)
-    }
-    stampStore(spark, table, w, SimhashStoreProp, payload, bound)
-  }
+      maxBucketSize: Int = 100000, maxHamming: Int = 3): Unit =
+    writeStore(simhashScheme(simhashChunkCount(s"writeSimhashStore($table)",
+      maxHamming)), df, table, idCol, textCol, buckets, mode, maxBucketSize)
 
-  /** The stamped chunk count of a [[writeSimhashStore]] table (4, 8, or
-    * 16); errors loudly when absent, mid-write, or unreadable. */
-  private def simhashStoreChunks(spark: org.apache.spark.sql.SparkSession,
-      table: String): Int = {
-    val stamp = readStoreStamp(spark, table, SimhashStoreProp)
-    stamp.map(_.split(':')) match {
-      case Some(Array("v1", c)) if Seq("4", "8", "16").contains(c) => c.toInt
-      case _ => throw new IllegalArgumentException(
-        s"$table is not a writeSimhashStore table (no readable " +
-          s"$SimhashStoreProp stamp — missing, mid-write, or foreign) — " +
-          "rewrite it with writeSimhashStore(mode=overwrite)")
+  /** The simhash tier's [[BucketScheme]] at `chunks` chunks: one table —
+    * the 8-byte `sim` rides on the slim rows — scored by the exact
+    * Hamming distance. Recall is exact to the pigeonhole radius, so no
+    * recall warning; the probe radius is checked instead. */
+  private def simhashScheme(chunks: Int): BucketScheme =
+    BucketScheme("simhash", SimhashStoreProp, "v1", Seq(chunks),
+      Seq("chunk", "bucket"), "sim", None, "hamming", isDistance = true,
+      simhashSigned, simhashChunks(_, chunks),
+      (a, b) => bit_count(a.bitwiseXOR(b)), _ => None,
+      (df, idCol, textCol, maxHamming, cap) =>
+        nearDupSimhash(df, idCol, textCol, maxHamming.toInt, cap))
+
+  /** The stamped scheme of a [[writeSimhashStore]] table (4, 8 or 16
+    * chunks), refusing a probe radius past its layout's pigeonhole. */
+  private def simhashScheme(spark: SparkSession, table: String,
+      maxHamming: Int = 0): BucketScheme =
+    stampParams(spark, table, "simhash", SimhashStoreProp, "v1") {
+      case Seq(chunks) if Seq(4, 8, 16).contains(chunks) =>
+        require(maxHamming >= 0 && maxHamming <= chunks - 1,
+          s"simhashCandidatesAgainstStore: maxHamming $maxHamming outside " +
+            s"[0, ${chunks - 1}] — the store's STAMPED $chunks-chunk layout's " +
+            s"pigeonhole guarantees recall only to Hamming distance " +
+            s"${chunks - 1}, and a wider radius would silently miss pairs; " +
+            "rewrite the store with writeSimhashStore(maxHamming=<radius>) " +
+            "for a wider operating point")
+        simhashScheme(chunks)
     }
-  }
 
   /** Near-dup pairs of a NEW batch against a [[writeSimhashStore]]
     * corpus: batch signatures (one pass over the batch), chunk
@@ -1581,51 +1598,25 @@ object Dedup {
     * at call time (the signing snapshot; the joint-cap census only
     * past the stamped bucket-row bound) — see
     * [[minhashCandidatesAgainstStore]]'s note. */
-  def simhashCandidatesAgainstStore(spark: org.apache.spark.sql.SparkSession,
+  def simhashCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
-    val chunks = simhashStoreChunks(spark, table)
-    require(maxHamming >= 0 && maxHamming <= chunks - 1,
-      s"simhashCandidatesAgainstStore: maxHamming $maxHamming outside " +
-        s"[0, ${chunks - 1}] — the store's STAMPED $chunks-chunk layout's " +
-        s"pigeonhole guarantees recall only to Hamming distance " +
-        s"${chunks - 1}, and a wider radius would silently miss pairs; " +
-        "rewrite the store with writeSimhashStore(maxHamming=<radius>) " +
-        "for a wider operating point")
-    val store = spark.table(table)
-    require(Seq("id", "sim", "chunk", "bucket").forall(store.columns.contains),
-      s"$table does not have writeSimhashStore's (id, sim, chunk, bucket) layout")
-    // joint capping — see minhashCandidatesAgainstStore
-    val (chunked, batchRows) = simhashChunked(batch, idCol, textCol, chunks)
-    val (b0, c0) = capBucketsJoint(chunked, store, Seq("chunk", "bucket"),
-      maxBucketSize, s"simhashCandidatesAgainstStore($table)",
-      readRowBound(spark, table).map(_ + batchRows))
-    val b = b0.select(col("chunk"), col("bucket"),
-      col("id").as("batch_id"), col("sim").as("sim_b"))
-    val c = c0.select(col("chunk"), col("bucket"),
-      col("id").as("corpus_id"), col("sim").as("sim_c"))
-    b.join(c, Seq("chunk", "bucket"))
-      .withColumn("hamming", bit_count(col("sim_b").bitwiseXOR(col("sim_c"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("batch_id"), col("corpus_id"), col("hamming"))
-      .dropDuplicates("batch_id", "corpus_id")
+    val s = simhashScheme(spark, table, maxHamming)
+    storeCandidates(s, spark, batch, table, idCol, textCol, maxBucketSize)
+      .filter(s.hit(maxHamming))
   }
 
   /** Batch rows with no corpus match within `maxHamming` AND (by
     * default) one survivor per within-batch near-dup component — the
     * SimHash ingest filter; append survivors with
     * `writeSimhashStore(novel, table, mode = "append")`. */
-  def simhashNovelAgainstStore(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, table: String,
+  def simhashNovelAgainstStore(spark: SparkSession, batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3, maxBucketSize: Int = 100000,
-      dedupWithinBatch: Boolean = true): DataFrame = {
-    novelRows(batch, idCol, simhashCandidatesAgainstStore(spark, batch, table,
-      idCol, textCol, maxHamming, maxBucketSize), dedupWithinBatch) {
-      dedupNearSimhash(_, idCol, textCol, maxHamming, maxBucketSize)
-    }
-  }
+      dedupWithinBatch: Boolean = true): DataFrame =
+    storeNovel(simhashScheme(spark, table, maxHamming), spark, batch, table,
+      idCol, textCol, maxHamming, maxBucketSize, dedupWithinBatch)
 
   // ------------------------------------------------- embedding near-dup
 
@@ -1654,16 +1645,15 @@ object Dedup {
       targetRecall = 0.9, bits, tables)
     val withVec = df.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("vec"))
-    // one signature column per table, exploded to (table, sig) bucket keys.
-    // The signature array is snapshotted BEFORE the explode (r19, the
-    // capBuckets-census fold): the cap census re-evaluated every table's
-    // bits×dim hyperplane dots on top of the join side's run — 2× the
-    // signing CPU per call. The snap carries (id, vec, sigs): vec rides
-    // anyway as the verify payload, sigs add tables longs per row.
-    val sigCols = (0 until tablesR).map(t =>
-      struct(lit(t).as("t"), Similarity.signSignatureSeeded(bitsR, t)(col("vec")).as("sig")))
-    val (signed, rows) = snapCounted(
-      withVec.select(col("id"), col("vec"), array(sigCols: _*).as("__sigs")))
+    // one signature per table ([[embeddingSigArray]]), exploded to
+    // (table, sig) bucket keys. The signature array is snapshotted
+    // BEFORE the explode (r19, the capBuckets-census fold): the cap
+    // census re-evaluated every table's bits×dim hyperplane dots on top
+    // of the join side's run — 2× the signing CPU per call. The snap
+    // carries (id, vec, sigs): vec rides anyway as the verify payload,
+    // sigs add tables longs per row.
+    val (signed, rows) = snapCounted(withVec.select(col("id"), col("vec"),
+      embeddingSigArray(col("vec"), bitsR, tablesR).as("__sigs")))
     val bucketed = capBuckets(
       signed.select(col("id"), col("vec"), explode(col("__sigs")).as("ts"))
         .select(col("id"), col("vec"), col("ts.t").as("t"), col("ts.sig").as("sig")),
@@ -1808,18 +1798,48 @@ object Dedup {
         col(vecCol).cast("array<double>").as("vec"))
       .filter(col("vec").isNotNull)
 
-  /** (id, t, sig) sign-LSH bucket rows of an (id, vec) frame — the ONE
-    * bucket derivation the self-join door ([[nearDupEmbedding]]'s
-    * seeded tables) and the store doors share. */
+  /** `vec`'s sign-LSH signature in each of `tables` seeded plane sets,
+    * as one array of (t, sig) structs — the ONE signature derivation the
+    * self-join door ([[nearDupEmbedding]], which snapshots the array
+    * before exploding it) and the store doors ([[embeddingBucketRows]])
+    * share, so store buckets can never drift from the in-frame ones. */
+  private def embeddingSigArray(vec: Column, bits: Int, tables: Int): Column =
+    array((0 until tables).map(t => struct(lit(t).as("t"),
+      Similarity.signSignatureSeeded(bits, t)(vec).as("sig"))): _*)
+
+  /** (id, t, sig) sign-LSH bucket rows of an (id, vec) frame — the store
+    * tier's slim rows. */
   private def embeddingBucketRows(withVec: DataFrame, bits: Int,
-      tables: Int): DataFrame = {
-    val sigCols = (0 until tables).map(t =>
-      struct(lit(t).as("t"),
-        Similarity.signSignatureSeeded(bits, t)(col("vec")).as("sig")))
+      tables: Int): DataFrame =
     withVec
-      .select(col("id"), explode(array(sigCols: _*)).as("ts"))
+      .select(col("id"), explode(embeddingSigArray(col("vec"), bits, tables)).as("ts"))
       .select(col("id"), col("ts.t").as("t"), col("ts.sig").as("sig"))
-  }
+
+  /** The embedding tier's [[BucketScheme]] at (bits, tables): (t, sig)
+    * keys, the `__vecs` sibling, the exact cosine. Its recall warning is
+    * the cosine tier's analog of the banding tiers' collision-point
+    * warning: the STAMPED planes fix the recall curve, and a threshold
+    * whose recall under them is poor mostly declares near-dups novel. */
+  private def embeddingScheme(bits: Int, tables: Int): BucketScheme =
+    BucketScheme("embedding", EmbeddingStoreProp, "v1", Seq(bits, tables),
+      Seq("t", "sig"), "vec", Some(EmbeddingVecTableSuffix), "cosine",
+      isDistance = false, embeddingVecs, embeddingBucketRows(_, bits, tables),
+      Similarity.cosine,
+      threshold => {
+        val recall = signRecall(threshold, bits, tables)
+        Option.when(recall < 0.9)(f"the stamped $bits-bit × " +
+          f"$tables-table planes catch only ${recall * 100}%.0f%% of " +
+          f"pairs at cosine $threshold (exact duplicates always) — " +
+          "most near-dups at that similarity will be declared novel; " +
+          "rewrite the store with autoPlanes sizing (writeEmbeddingStore " +
+          "bits=0/tables=0 with autoThreshold at this operating point)")
+      },
+      (df, idCol, vecCol, threshold, cap) =>
+        nearDupEmbedding(df, idCol, vecCol, threshold, bits, tables, cap))
+
+  private def embeddingScheme(spark: SparkSession, table: String): BucketScheme =
+    stampParams(spark, table, "embedding", EmbeddingStoreProp, "v1") {
+      case Seq(bits, tables) => embeddingScheme(bits, tables) }
 
   /** Persist a corpus's sign-LSH embedding index — the cosine tier of
     * the persistent near-dup family ([[writeMinhashStore]] /
@@ -1859,54 +1879,13 @@ object Dedup {
       autoThreshold: Double = 0.95, targetRecall: Double = 0.9): Unit = {
     val (bitsR, tablesR) = resolvePlanes("writeEmbeddingStore",
       autoThreshold, targetRecall, bits, tables)
-    val spark = df.sparkSession
-    val payload = s"v1:$bitsR:$tablesR"
-    val w = checkStoreWrite(spark, table, mode, EmbeddingStoreProp, payload,
-      "writeEmbeddingStore")
-    unsetStoreStamps(spark, table, w, EmbeddingStoreProp)
-    val vecTable = table + EmbeddingVecTableSuffix
-    val (vecSource, rows) = writeSibling(embeddingVecs(df, idCol, vecCol), w,
-      vecTable, buckets)
-    val bucketRows = embeddingBucketRows(
-      vecSource.getOrElse(spark.table(vecTable)), bitsR, tablesR)
-    val bound = capBucketsWarn(bucketRows, Seq("t", "sig"), maxBucketSize,
-      s"writeEmbeddingStore($table)", rows) { slim =>
-      slim
-        .repartition(buckets, col("t"), col("sig"))
-        .write.mode(mode)
-        .bucketBy(buckets, "t", "sig").sortBy("t", "sig")
-        .format("parquet")
-        .saveAsTable(table)
-    }
-    stampStore(spark, table, w, EmbeddingStoreProp, payload, bound)
+    writeStore(embeddingScheme(bitsR, tablesR), df, table, idCol, vecCol,
+      buckets, mode, maxBucketSize)
   }
 
   /** Drop BOTH tables of a [[writeEmbeddingStore]] index. */
-  def dropEmbeddingStore(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    graft.join.SpatialJoin.dropBucketedTable(spark, table)
-    graft.join.SpatialJoin.dropBucketedTable(spark, table + EmbeddingVecTableSuffix)
-  }
-
-  /** The stamped (bits, tables) of a [[writeEmbeddingStore]] index;
-    * errors loudly when absent, mid-write, or unreadable. */
-  private def embeddingStoreParams(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Int, Int) = {
-    val stamp = readStoreStamp(spark, table, EmbeddingStoreProp)
-    stamp.map(_.split(':')) match {
-      case Some(Array("v1", b, t)) =>
-        try (b.toInt, t.toInt)
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"embedding store $table: unreadable $EmbeddingStoreProp stamp " +
-              s"'${stamp.get}' — rewrite with writeEmbeddingStore")
-        }
-      case _ => throw new IllegalArgumentException(
-        s"$table is not a writeEmbeddingStore table (no readable " +
-          s"$EmbeddingStoreProp stamp — missing, mid-write, or foreign) — " +
-          "rewrite it with writeEmbeddingStore(mode=overwrite)")
-    }
-  }
+  def dropEmbeddingStore(spark: SparkSession,
+      table: String): Unit = dropStore(spark, table, EmbeddingVecTableSuffix)
 
   /** Candidate pairs of a NEW batch against a [[writeEmbeddingStore]]
     * corpus, with the EXACT cosine attached (the verify is built in —
@@ -1917,69 +1896,25 @@ object Dedup {
     * call time (the batch vector snapshot; the joint-cap census only
     * past the stamped bucket-row bound) — see
     * [[minhashCandidatesAgainstStore]]'s note. */
-  def embeddingCandidatesAgainstStore(spark: org.apache.spark.sql.SparkSession,
+  def embeddingCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxBucketSize: Int = 100000): DataFrame = {
-    val (bits, tables) = embeddingStoreParams(spark, table)
-    val store = spark.table(table)
-    require(Seq("id", "t", "sig").forall(store.columns.contains),
-      s"$table does not have writeEmbeddingStore's slim (id, t, sig) layout")
-    val vecs = spark.table(table + EmbeddingVecTableSuffix)
-    require(Seq("id", "vec").forall(vecs.columns.contains),
-      s"$table$EmbeddingVecTableSuffix does not have the (id, vec) layout")
-    val (bVec, batchRows) = snapCounted(embeddingVecs(batch, idCol, vecCol))
-    val (b0, c0) = capBucketsJoint(
-      embeddingBucketRows(bVec, bits, tables),
-      store, Seq("t", "sig"), maxBucketSize,
-      s"embeddingCandidatesAgainstStore($table)",
-      readRowBound(spark, table).map(_ + batchRows))
-    val pairs = b0.select(col("t"), col("sig"), col("id").as("batch_id"))
-      .join(c0.select(col("t"), col("sig"), col("id").as("corpus_id")),
-        Seq("t", "sig"))
-      .select(col("batch_id"), col("corpus_id"))
-      .dropDuplicates("batch_id", "corpus_id")
-    // null filter before the per-id pick — see the sigs fetch in
-    // signatureStoreCandidates for why order matters
-    pairs
-      .join(vecs.filter(col("vec").isNotNull)
-        .select(col("id").as("corpus_id"), col("vec").as("vec_c"))
-        .dropDuplicates("corpus_id"), Seq("corpus_id"))
-      .join(bVec.select(col("id").as("batch_id"), col("vec").as("vec_b")),
-        Seq("batch_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        Similarity.cosine(col("vec_b"), col("vec_c")).as("cosine"))
-  }
+      maxBucketSize: Int = 100000): DataFrame =
+    storeCandidates(embeddingScheme(spark, table), spark, batch, table, idCol,
+      vecCol, maxBucketSize)
 
   /** Batch rows with no corpus match at `threshold` cosine AND (by
     * default) one survivor per within-batch near-dup component — the
     * embedding ingest filter; append survivors with
     * `writeEmbeddingStore(novel, table, mode = "append")`. Null-vector
     * rows never match and always come back novel. */
-  def embeddingNovelAgainstStore(spark: org.apache.spark.sql.SparkSession,
+  def embeddingNovelAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = 0.95, maxBucketSize: Int = 100000,
-      dedupWithinBatch: Boolean = true): DataFrame = {
-    val (bits, tables) = embeddingStoreParams(spark, table)
-    // the cosine tier's analog of the minhash door's collision-point
-    // warning: the STAMPED planes fix the recall curve, and a threshold
-    // whose recall under them is poor mostly declares near-dups novel
-    val recall = signRecall(threshold, bits, tables)
-    if (recall < 0.9)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        f"embeddingNovelAgainstStore($table): the stamped $bits-bit × " +
-          f"$tables-table planes catch only ${recall * 100}%.0f%% of " +
-          f"pairs at cosine $threshold (exact duplicates always) — " +
-          "most near-dups at that similarity will be declared novel; " +
-          "rewrite the store with autoPlanes sizing (writeEmbeddingStore " +
-          "bits=0/tables=0 with autoThreshold at this operating point)")
-    novelRows(batch, idCol, embeddingCandidatesAgainstStore(spark, batch, table,
-        idCol, vecCol, maxBucketSize).filter(col("cosine") >= threshold),
-      dedupWithinBatch) {
-      dedupNearEmbedding(_, idCol, vecCol, threshold, bits, tables, maxBucketSize)
-    }
-  }
+      dedupWithinBatch: Boolean = true): DataFrame =
+    storeNovel(embeddingScheme(spark, table), spark, batch, table, idCol,
+      vecCol, threshold, maxBucketSize, dedupWithinBatch)
 
   // -------------------------------------------------- decontamination
 
@@ -2068,25 +2003,6 @@ object Dedup {
     stampStore(spark, table, w, DecontamStoreProp, payload, batchBound = None)
   }
 
-  /** The stamped n of a [[writeDecontamStore]] table; errors loudly
-    * when absent or unreadable. */
-  private def decontamStoreN(spark: org.apache.spark.sql.SparkSession,
-      table: String): Int = {
-    val stamp = readStoreStamp(spark, table, DecontamStoreProp)
-    stamp.map(_.split(':')) match {
-      case Some(Array("v1", n)) =>
-        try n.toInt
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"decontam store $table: unreadable $DecontamStoreProp stamp " +
-              s"'${stamp.get}' — rewrite with writeDecontamStore")
-        }
-      case _ => throw new IllegalArgumentException(
-        s"$table is not a writeDecontamStore table (no readable " +
-          s"$DecontamStoreProp stamp) — write it with writeDecontamStore")
-    }
-  }
-
   /** [[contaminated]] against a [[writeDecontamStore]] suite: train rows
     * sharing at least one word n-gram (at the STAMPED n) with the stored
     * eval grams. The store side is re-distincted (append overlap) and
@@ -2094,10 +2010,11 @@ object Dedup {
     * as the direct door — so the 100 TB train side never shuffles for
     * the join; its only shuffle is the final id-distinct. Returns the
     * distinct contaminated train ids. */
-  def contaminatedAgainstStore(spark: org.apache.spark.sql.SparkSession,
+  def contaminatedAgainstStore(spark: SparkSession,
       train: DataFrame, trainId: String, trainText: String,
       table: String): DataFrame = {
-    val n = decontamStoreN(spark, table)
+    val n = stampParams(spark, table, "decontam", DecontamStoreProp, "v1") {
+      case Seq(gramN) => gramN }
     val store = spark.table(table)
     require(store.columns.contains("gram"),
       s"$table does not have writeDecontamStore's (gram) layout")
@@ -2109,7 +2026,7 @@ object Dedup {
 
   /** [[decontaminate]] against a [[writeDecontamStore]] suite: train
     * rows sharing NO stored gram, all columns kept. */
-  def decontaminateAgainstStore(spark: org.apache.spark.sql.SparkSession,
+  def decontaminateAgainstStore(spark: SparkSession,
       train: DataFrame, trainId: String, trainText: String,
       table: String): DataFrame = {
     val bad = contaminatedAgainstStore(spark, train, trainId, trainText, table)

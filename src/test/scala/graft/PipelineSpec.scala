@@ -25,6 +25,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(groups.filter($"copies" === 2).select("kept_id").as[Long].collect().toSeq === Seq(1L))
   }
 
+  test("exact dedup partial-aggregates map-side: a partial min_by below the key exchange") {
+    // a dup group of 10⁹ copies must collapse per input partition before
+    // the shuffle, not funnel every copy to one task
+    val out = Dedup.exact(docs, Seq("text"), "doc_id")
+    val plan = out.queryExecution.executedPlan.treeString
+    val lines = plan.linesIterator.toSeq
+    val exchange = lines.indexWhere(_.contains("Exchange hashpartitioning(text"))
+    val partial = lines.indexWhere(_.contains("partial_min_by"))
+    assert(exchange >= 0 && partial > exchange,
+      s"no partial min_by below the key exchange:\n$plan")
+    assert(!plan.contains("Window"), s"exact dedup planned a window:\n$plan")
+  }
+
   test("jaccard on known sets") {
     val df = Seq((Seq("a", "b", "c"), Seq("b", "c", "d"))).toDF("a", "b")
     assert(df.select(Dedup.jaccard($"a", $"b")).as[Double].collect()(0) === 0.5)
