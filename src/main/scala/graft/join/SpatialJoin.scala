@@ -1493,16 +1493,22 @@ object SpatialJoin {
     * geometry bytes + row id, so repeated calls see the same sample). */
   private def sampleEnvs(frame: DataFrame, geomCol: String): Array[Envelope] = {
     val sel = frame.select(col(geomCol)).filter(col(geomCol).isNotNull)
-    val sampled = sel.sample(withReplacement = false, 0.2, 42)
-      .orderBy(xxhash64(col(geomCol), monotonically_increasing_id(), lit(42L)))
-      .limit(500).collect().map(_.get(0).asInstanceOf[Array[Byte]])
+    def ranked(df: DataFrame): Array[Array[Byte]] =
+      df.orderBy(xxhash64(col(geomCol), monotonically_increasing_id(), lit(42L)))
+        .limit(500).collect().map(_.get(0).asInstanceOf[Array[Byte]])
     // ≥50 sampled rows already give a reliable median/mean — re-running
     // the ranked scan over the FULL frame is only worth a second job
-    // when the 20% sample came back nearly empty (tiny frames)
-    val rows = if (sampled.length >= 50) sampled
-      else sel.orderBy(xxhash64(col(geomCol),
-        monotonically_increasing_id(), lit(42L)))
-        .limit(500).collect().map(_.get(0).asInstanceOf[Array[Byte]])
+    // when the 20% sample came back nearly empty (tiny frames). A frame
+    // whose optimized plan KNOWS it holds under 250 rows (a local
+    // relation: a probe list, an ingest batch) expects under 50 sampled
+    // rows, so it skips straight to the full scan: the rows the second
+    // scan picks, in one ranked scan instead of two (a 200-249-row frame
+    // whose sample would have reached 50 now ranks all its rows)
+    val small = sel.queryExecution.optimizedPlan.stats.rowCount.exists(_ < 250)
+    val sampled =
+      if (small) Array.empty[Array[Byte]]
+      else ranked(sel.sample(withReplacement = false, 0.2, 42))
+    val rows = if (sampled.length >= 50) sampled else ranked(sel)
     rows.iterator.map(b => EWKB.read(b).getEnvelopeInternal)
       .filterNot(_.isNull).toArray
   }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, MapType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import graft.join.SpatialJoin.{dropBucketedTable, quoteTable}
 
@@ -225,8 +226,10 @@ object Dedup {
     * (band, bucket), (chunk, bucket) or (t, sig). The store doors
     * ([[capBucketsJoint]]) and compaction ([[recapBucketTable]]) skip
     * their bucket-cap census when this bound (plus the batch's rows)
-    * is ≤ the cap. The writers maintain it: unset together with the
-    * params stamp before a write onto an existing store, and set after
+    * is ≤ the cap, and only then may the store doors take their driver
+    * tier ([[storeNovelDriver]]). The writers maintain it: unset
+    * together with the params stamp before a write onto an existing
+    * store, and set after
     * every table of the write has landed — overwrite stamps the batch's
     * bound, append adds the batch's bound to the stamped one (a store
     * without the bound stays without it until its next compaction),
@@ -380,35 +383,17 @@ object Dedup {
 
   // ------------------------------------------------------------ MinHash
 
-  /** splitmix64 finalizer — cheap, high-quality per-seed mixing. */
-  private def fmix64(x0: Long): Long = {
-    var x = x0
-    x ^= x >>> 30; x *= 0xbf58476d1ce4e5b9L
-    x ^= x >>> 27; x *= 0x94d049bb133111ebL
-    x ^= x >>> 31
-    x
-  }
-
   /** MinHash signature of a shingle set: sig(j) = min over shingles of
-    * fmix64(hash(s) ^ seed_j). One pass over the shingles per row. */
-  def minhashSignature(numHashes: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val f = udf((sh: Seq[String]) =>
+    * fmix64(hash(s) ^ seed_j). One pass over the shingles per row, through
+    * the one MinHash fold ([[graft.plans.MinHashKernel.fold]]). */
+  def minhashSignature(numHashes: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((sh: Seq[String]) =>
       if (sh == null) None
       else {
         val sig = Array.fill(numHashes)(Long.MaxValue)
-        sh.foreach { s =>
-          val base = fmix64(s.hashCode.toLong * 0x9e3779b97f4a7c15L + 1)
-          var j = 0
-          while (j < numHashes) {
-            val h = fmix64(base ^ (j * 0xc2b2ae3d27d4eb4fL))
-            if (h < sig(j)) sig(j) = h
-            j += 1
-          }
-        }
+        sh.foreach(s => graft.plans.MinHashKernel.fold(sig, s.hashCode.toLong))
         Some(sig.toSeq)
       })
-    f
-  }
 
   /** MinHash signature straight from the normalized text as one native
     * codegen'd pass ([[graft.plans.MinHashSig]]): no shingle array, no
@@ -427,37 +412,10 @@ object Dedup {
       if (sh == null) None
       else {
         val sig = Array.fill(numHashes)(Long.MaxValue)
-        sh.foreach { s =>
-          val base = fmix64(s * 0x9e3779b97f4a7c15L + 1)
-          var j = 0
-          while (j < numHashes) {
-            val h = fmix64(base ^ (j * 0xc2b2ae3d27d4eb4fL))
-            if (h < sig(j)) sig(j) = h
-            j += 1
-          }
-        }
+        sh.foreach(graft.plans.MinHashKernel.fold(sig, _))
         Some(sig.toSeq)
       })
 
-  /** Candidate near-dup pairs via MinHash LSH banding: rows whose signature
-    * agrees on all rows of at least one band land in the same bucket.
-    * Returns (id_a, id_b, jaccard_est) with id_a < id_b.
-    *
-    * numHashes = bands * rowsPerBand; the default 64/8 (8 rows per band)
-    * puts the collision-curve threshold at jaccard ≈ (1/b)^(1/r) ≈ 0.77 —
-    * the near-dup dedup operating point. Use more, narrower bands (e.g.
-    * bands=16) to catch lower-similarity pairs at higher candidate cost.
-    */
-  /** (id, sig, band, bucket) LSH banding of a frame — the ONE banding
-    * implementation the self-join candidate generator AND the corpus
-    * store ([[writeMinhashStore]] / [[minhashCandidatesAgainstStore]])
-    * ride, so the store's bucket hashing can never drift from the
-    * per-call form. normalize → shingle → sign run as separate
-    * projections: each stage's result is an attribute, so lambdas never
-    * re-evaluate upstream regexes. Signatures are CARRIED THROUGH the
-    * banding instead of being persisted and joined back: the shingling
-    * pipeline runs exactly once, with no executor cache held for the
-    * session's lifetime — only wider (numHashes-long) rows. */
   /** (id, sig) signatures of a frame — one normalize→shingle→sign pass.
     * Null-TEXT rows are filtered at the SOURCE column, where the
     * predicate pushes to the parquet scan: null text is the only way a
@@ -474,10 +432,17 @@ object Dedup {
     * "regression" was that filter). */
   private def minhashSigned(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, shingleK: Int): DataFrame =
+    minhashNormed(df, idCol, textCol)
+      .select(col("id"), minhashSigNative(col("__norm"), shingleK, numHashes).as("sig"))
+
+  /** (id, __norm) normalized text of the non-null-text rows — the first
+    * projection of [[minhashSigned]] and of the minhash within-batch
+    * pass's driver rows, which sign and shingle the same `__norm`. */
+  private def minhashNormed(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
         TextAnalysis.normalized(col(textCol)).as("__norm"))
-      .select(col("id"), minhashSigNative(col("__norm"), shingleK, numHashes).as("sig"))
 
   /** (id, sig, band, bucket) band explosion of an (id, sig) frame — the
     * ONE bucket-hashing implementation every minhash door rides.
@@ -493,17 +458,40 @@ object Dedup {
     * expression per consumer (PERF.md "pipe_minhash regression:
     * convicted and fixed", −37%). */
   private def bandExplode(withSig: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
+      bands: Int): DataFrame =
+    explodeKeys(withSig, Seq("id", "sig"), bandKeys(col("sig"), numHashes, bands),
+      Seq("band", "bucket"))
+
+  /** The (band, bucket) LSH keys of a signature, one struct per band —
+    * the ONE band hashing every minhash door and store rides: the
+    * Spark tiers explode it ([[bandExplode]]), the store doors' driver
+    * tier evaluates it as an array on the driver. `sig` should be an
+    * attribute: the lambda reads it once per band. */
+  private def bandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val r = numHashes / bands
-    withSig.select(
-      col("id"), col("sig"),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"), hash(slice(col("sig"), b * r + 1, lit(r))).as("bucket"))))
-        .as("bb"))
-      .select(col("id"), col("sig"), col("bb.band"), col("bb.bucket"))
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => struct(b.as("band"), hash(slice(sig, b * r + 1, lit(r))).as("bucket")))
   }
 
+  /** `df`'s `keep` columns, one row per element of the bucket-key array
+    * `keys`, with the key struct's `keyCols` fields as columns — the one
+    * explode behind the band, chunk and sign-LSH bucket rows. */
+  private def explodeKeys(df: DataFrame, keep: Seq[String], keys: Column,
+      keyCols: Seq[String]): DataFrame =
+    df.select(keep.map(col) :+ explode(keys).as("__k"): _*)
+      .select(keep.map(col) ++ keyCols.map(c => col("__k." + c).as(c)): _*)
+
+  /** (id, sig, band, bucket) LSH banding of a frame — the ONE banding
+    * implementation the self-join candidate generator AND the corpus
+    * store ([[writeMinhashStore]] / [[minhashCandidatesAgainstStore]])
+    * ride, so the store's bucket hashing can never drift from the
+    * per-call form. normalize → shingle → sign run as separate
+    * projections: each stage's result is an attribute, so lambdas never
+    * re-evaluate upstream regexes. Signatures are CARRIED THROUGH the
+    * banding instead of being persisted and joined back: the shingling
+    * pipeline runs exactly once, with no executor cache held for the
+    * session's lifetime — only wider (numHashes-long) rows. */
   private[graft] def minhashBanded(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int, shingleK: Int): DataFrame =
     bandExplode(minhashSigned(df, idCol, textCol, numHashes, shingleK),
@@ -580,6 +568,15 @@ object Dedup {
     df.alias("__sj_a").join(df.alias("__sj_b"), cond).select(proj: _*)
   }
 
+  /** Candidate near-dup pairs via MinHash LSH banding: rows whose signature
+    * agrees on all rows of at least one band land in the same bucket.
+    * Returns (id_a, id_b, jaccard_est) with id_a < id_b.
+    *
+    * numHashes = bands * rowsPerBand; the default 64/8 (8 rows per band)
+    * puts the collision-curve threshold at jaccard ≈ (1/b)^(1/r) ≈ 0.77 —
+    * the near-dup dedup operating point. Use more, narrower bands (e.g.
+    * bands=16) to catch lower-similarity pairs at higher candidate cost.
+    */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 8, shingleK: Int = 5,
       maxBucketSize: Int = 100000): DataFrame = {
@@ -611,8 +608,6 @@ object Dedup {
         jaccardEstExpr(col("sig_a"), col("sig_b"), numHashes).as("jaccard_est"))
   }
 
-  /** Full MinHash near-dup pipeline: LSH candidates, then exact shingle
-    * Jaccard verify ≥ threshold. */
   /** Pick the coarsest banding whose collision threshold (1/b)^(r⁻¹) sits
     * safely below the requested jaccard threshold — fewer bands = fewer
     * candidate pairs, and the exact verify step removes false positives. */
@@ -624,6 +619,8 @@ object Dedup {
     }.getOrElse(options.last)
   }
 
+  /** Full MinHash near-dup pipeline: LSH candidates, then exact shingle
+    * Jaccard verify ≥ threshold. */
   def nearDupMinhash(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 64, bands: Int = 0,
       shingleK: Int = 5): DataFrame =
@@ -664,9 +661,10 @@ object Dedup {
     * things only:
     *  - how a row is SIGNED into bucket keys: `sign` maps the input to
     *    (id, payload), dropping null input at the source column, and
-    *    `slimRows` derives the (id, bucketCols…) rows — the band explode
-    *    ([[bandExplode]]), the chunk explode ([[simhashChunks]]) or the
-    *    sign-LSH tables ([[embeddingBucketRows]]);
+    *    `keys` maps a payload to its array of bucket-key structs (fields
+    *    `bucketCols`) — the bands ([[bandKeys]]), the chunks
+    *    ([[simhashChunkKeys]]) or the sign-LSH tables
+    *    ([[embeddingSigArray]]); [[slimRows]] explodes it;
     *  - the PAYLOAD the exact score reads: `sig`, `sim` or `vec`;
     *  - the SCORE, `scoreOf` named `score`: `jaccard_est`, `hamming` (a
     *    distance, `isDistance`) or `cosine`.
@@ -679,28 +677,44 @@ object Dedup {
     * table (`sibling = None`), carried through the bucket join.
     *
     * `recallWarning` is the novel door's warning for a threshold the
-    * stamped scheme under-recalls; `withinBatchPairs(df, idCol, srcCol,
-    * threshold, maxBucketSize)` the verified self-join pairs its
-    * within-batch pass dedups. */
+    * stamped scheme under-recalls; `withinBatch(threshold)` the
+    * within-batch pass it dedups the batch with ([[PairPass]]). */
   private[graft] final case class BucketScheme(tier: String, prop: String,
       version: String, params: Seq[Int], bucketCols: Seq[String],
       payload: String, sibling: Option[String], score: String,
       isDistance: Boolean,
       sign: (DataFrame, String, String) => DataFrame,
-      slimRows: DataFrame => DataFrame,
+      keys: Column => Column,
       scoreOf: (Column, Column) => Column,
       recallWarning: Double => Option[String],
-      withinBatchPairs: (DataFrame, String, String, Double, Int) => DataFrame) {
+      withinBatch: Double => PairPass) {
     def stamp: String = (version +: params).mkString(":")
     def writer: String = s"write${tier.capitalize}Store"
     def compactDoor: String = s"compact${tier.capitalize}Store"
     def carried: Seq[String] = if (sibling.isEmpty) Seq(payload) else Nil
     /** the slim table's columns, in stored order */
     def slimCols: Seq[String] = ("id" +: carried) ++ bucketCols
+    /** the slim (id, carried…, bucketCols…) rows of a signed frame */
+    def slimRows(signed: DataFrame): DataFrame =
+      explodeKeys(signed, "id" +: carried, keys(col(payload)), bucketCols)
     /** a pair scored at `threshold` or closer */
     def hit(threshold: Double): Column =
       if (isDistance) col(score) <= threshold else col(score) >= threshold
   }
+
+  /** A self-join near-dup pass at one threshold, as data — a novel
+    * door's within-batch pass, in both tiers. `pairs(df, idCol, srcCol,
+    * maxBucketSize)` is the Spark tier: the tier's own self-join door,
+    * returning its verified (id_a, id_b, …) pairs. The driver tier
+    * ([[storeNovelDriver]]) evaluates the same door's expressions on the
+    * driver: `rows(df, idCol, srcCol)` gives (id, keys, v) — the
+    * bucket-key array the door explodes and the payload its verify
+    * reads, a null key field never matching — and `verify(v_a, v_b)` is
+    * the door's pair filter. */
+  private[graft] final case class PairPass(
+      pairs: (DataFrame, String, String, Int) => DataFrame,
+      rows: (DataFrame, String, String) => DataFrame,
+      verify: (Column, Column) => Column)
 
   /** `make` over the integer params of `table`'s `prop` stamp
     * `version:p1:…:pN` — the one stamp parser of the store family. A
@@ -794,13 +808,10 @@ object Dedup {
   private def dropStore(spark: SparkSession, table: String, sibling: String): Unit =
     Seq(table, table + sibling).foreach(dropBucketedTable(spark, _))
 
-  /** The one store candidates pass, as [[minhashCandidatesAgainstStore]]
-    * documents it; a one-table tier carries its payload through the
-    * bucket join instead of fetching it. Returns
-    * (batch_id, corpus_id, <score>). */
-  private def storeCandidates(s: BucketScheme, spark: SparkSession,
-      batch: DataFrame, table: String, idCol: String, srcCol: String,
-      maxBucketSize: Int): DataFrame = {
+  /** The slim table of `table` and, for a two-table tier, its payload
+    * sibling, with their layouts checked. */
+  private def storeTables(s: BucketScheme, spark: SparkSession,
+      table: String): (DataFrame, Option[DataFrame]) = {
     val store = spark.table(table)
     require(s.slimCols.forall(store.columns.contains),
       s"$table does not have ${s.writer}'s slim " +
@@ -811,6 +822,30 @@ object Dedup {
         s"$table$suffix does not have the (id, ${s.payload}) layout")
       t
     }
+    (store, sibling)
+  }
+
+  /** The one store candidates pass, as [[minhashCandidatesAgainstStore]]
+    * documents it, in two tiers: on the driver when the batch fits its
+    * bounds ([[storeCandidatesDriver]]), on the executors otherwise
+    * ([[storeCandidatesSpark]]). Both return the same
+    * (batch_id, corpus_id, <score>) rows. */
+  private def storeCandidates(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      maxBucketSize: Int): DataFrame =
+    storeCandidatesDriver(s, spark, batch, table, idCol, srcCol, maxBucketSize)
+      .getOrElse(storeCandidatesSpark(s, spark, batch, table, idCol, srcCol,
+        maxBucketSize))
+
+  /** The Spark tier of [[storeCandidates]]: the signed batch is
+    * snapshotted, its slim rows joint-capped with the store's
+    * ([[capBucketsJoint]]) and equi-joined to them on the bucket key;
+    * pairs dedup, and only then are payloads fetched — a one-table tier
+    * carries its payload through the bucket join instead. */
+  private[graft] def storeCandidatesSpark(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      maxBucketSize: Int): DataFrame = {
+    val (store, sibling) = storeTables(s, spark, table)
     val (signed, batchRows) = snapCounted(s.sign(batch, idCol, srcCol))
     // JOINT capping (batch + store counts per bucket): per-side caps
     // would admit cap×cap pair bombs AND diverge from the self-join
@@ -850,20 +885,32 @@ object Dedup {
   /** The one store novel pass, the finish of the four
     * `*NovelAgainstStore` doors: the recall warning, batch rows with no
     * corpus hit, then, with `dedupWithinBatch`, the within-batch dedup
-    * at the stamped parameters and the caller's `maxBucketSize`. That
-    * pass reads its input several times (its sign pass, its verify
-    * snapshot, the survivors' joins), and every read of the lazy
-    * anti-join would re-run the whole store-candidates plan, so the
-    * corpus-filtered batch is snapshotted first: the store join runs
-    * once per call. Without the within-batch pass the result stays
-    * lazy. */
+    * at the stamped parameters and the caller's `maxBucketSize` — on
+    * the driver when the batch fits its bounds ([[storeNovelDriver]]),
+    * on the executors otherwise ([[storeNovelSpark]]). Both return the
+    * same rows, with the batch's schema. */
   private def storeNovel(s: BucketScheme, spark: SparkSession,
       batch: DataFrame, table: String, idCol: String, srcCol: String,
       threshold: Double, maxBucketSize: Int,
       dedupWithinBatch: Boolean): DataFrame = {
     s.recallWarning(threshold).foreach(m => org.slf4j.LoggerFactory
       .getLogger(getClass).warn(s"${s.tier}NovelAgainstStore($table): $m"))
-    val hitIds = storeCandidates(s, spark, batch, table, idCol, srcCol,
+    storeNovelDriver(s, spark, batch, table, idCol, srcCol, threshold,
+      maxBucketSize, dedupWithinBatch).getOrElse(storeNovelSpark(s, spark,
+      batch, table, idCol, srcCol, threshold, maxBucketSize, dedupWithinBatch))
+  }
+
+  /** The Spark tier of [[storeNovel]]. The within-batch pass reads its
+    * input several times (its sign pass, its verify snapshot, the
+    * survivors' joins), and every read of the lazy anti-join would re-run
+    * the whole store-candidates plan, so the corpus-filtered batch is
+    * snapshotted first: the store join runs once per call. Without the
+    * within-batch pass the result stays lazy. */
+  private[graft] def storeNovelSpark(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      threshold: Double, maxBucketSize: Int,
+      dedupWithinBatch: Boolean): DataFrame = {
+    val hitIds = storeCandidatesSpark(s, spark, batch, table, idCol, srcCol,
       maxBucketSize).filter(s.hit(threshold)).select(col("batch_id")).distinct()
     val vsCorpus = batch.join(hitIds, batch(idCol) === hitIds("batch_id"),
       "left_anti")
@@ -871,8 +918,338 @@ object Dedup {
     else {
       val snap = snapFrame(vsCorpus)
       keepMinIdSurvivors(snap, idCol,
-        s.withinBatchPairs(snap, idCol, srcCol, threshold, maxBucketSize))
+        s.withinBatch(threshold).pairs(snap, idCol, srcCol, maxBucketSize))
     }
+  }
+
+  // ------------------------------------------ store doors: driver tier
+
+  /** Bounds of the store doors' driver tier. A batch of at most 2^16
+    * rows and 4 MB of estimated row bytes is collected once and probed
+    * on the driver; the store rows its keys fetch are held under the
+    * same two bounds, and its corpus and within-batch pairs under the
+    * row bound, scored in local frames of at most the byte bound each
+    * ([[localChunks]]), or the call takes the Spark tier. Each held row
+    * costs its `Row` plus the rows of the projections evaluated over it
+    * — a few times its estimated bytes — so the tier holds some tens of
+    * MB of driver heap while it runs. The driver evaluates the signing,
+    * key, score and verify expressions on one thread (Catalyst folds a
+    * projection over a local relation interpretively), so its time grows
+    * with the batch about twice as fast as the Spark tier's, which saves
+    * a fixed ~1 s of jobs. Timed on the minhash novel door (ingest-shaped
+    * documents, 4-core VM; PERF.md "Small near-dup batches on the
+    * driver"), the tiers cross between 8.2 and 16.3 MB of batch when the
+    * batch is a local relation and between 4.4 and 8.2 MB when it is not
+    * (the Spark tier then signs on the executors): 4 MB keeps both shapes
+    * below the crossing. */
+  private val StoreDriverMaxRows = 1L << 16
+  private val StoreDriverMaxBytes = 4L << 20
+
+  /** The column holding a batch row's position in the driver tier's
+    * local frames: positions follow the id order, and stand in for ids
+    * as the signers' `idCol`. */
+  private val RowCol = "__graft_row"
+
+  /** A batch probed against a store on the driver ([[driverProbe]]):
+    * `rows`, the batch's rows in id order; `frame`, a local frame of
+    * them with their position as [[RowCol]]; `scored`, a local frame of
+    * (__b, __c, <score>), one row per deduped candidate pair of batch
+    * position `__b` and corpus id `corpusIds(__c)`. */
+  private final case class DriverProbe(rows: IndexedSeq[Row], frame: DataFrame,
+      idAt: Int, scored: DataFrame, corpusIds: IndexedSeq[Any],
+      corpusIdField: StructField)
+
+  /** The driver tier of [[storeCandidates]]: None — take the Spark tier
+    * — when [[driverProbe]] declines the batch. The result is a local
+    * frame with the Spark tier's schema. */
+  private[graft] def storeCandidatesDriver(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      maxBucketSize: Int): Option[DataFrame] =
+    driverProbe(s, spark, batch, table, idCol, srcCol, maxBucketSize).map { pr =>
+      val out = pr.scored.collect().map(r => Row(
+        pr.rows(r.getLong(0).toInt).get(pr.idAt), pr.corpusIds(r.getInt(1)), r.get(2)))
+      spark.createDataFrame(out.toSeq.asJava, StructType(Seq(
+        batch.schema(idCol).copy(name = "batch_id"),
+        pr.corpusIdField.copy(name = "corpus_id"), pr.scored.schema(s.score))))
+    }
+
+  /** The driver tier of [[storeNovel]]: the batch rows [[driverProbe]]
+    * finds no corpus hit for, then, with `dedupWithinBatch`, the
+    * survivors of the within-batch pass run on the driver
+    * ([[driverSurvivors]]) — a local frame of the batch's rows with its
+    * schema. When that pass's candidate pairs pass the row bound, the
+    * Spark tier's within-batch pass runs instead, over a local frame of
+    * the corpus-filtered rows (so the store query is not repeated).
+    * None — take the Spark tier — when [[driverProbe]] declines. */
+  private[graft] def storeNovelDriver(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      threshold: Double, maxBucketSize: Int,
+      dedupWithinBatch: Boolean): Option[DataFrame] =
+    driverProbe(s, spark, batch, table, idCol, srcCol, maxBucketSize).map { pr =>
+      val hit = pr.scored.filter(s.hit(threshold)).select(col("__b")).collect()
+        .map(_.getLong(0).toInt).toSet
+      val vsCorpus = pr.rows.indices.filterNot(hit)
+      def rowsAt(ix: Seq[Int]) = spark.createDataFrame(ix.map(pr.rows).asJava, batch.schema)
+      if (!dedupWithinBatch) rowsAt(vsCorpus)
+      else {
+        val pass = s.withinBatch(threshold)
+        driverSurvivors(pass, pr, vsCorpus, srcCol).map(rowsAt).getOrElse {
+          val local = rowsAt(vsCorpus)
+          keepMinIdSurvivors(local, idCol, pass.pairs(local, idCol, srcCol, maxBucketSize))
+        }
+      }
+    }
+
+  /** The store pass of the driver tier, shared by both store doors:
+    *  1. the batch is collected once ([[localBatch]]);
+    *  2. the scheme's `sign` and `keys` run as projections over it, which
+    *     Catalyst folds on the driver — no job — and the key array is
+    *     kept whole, flattened here;
+    *  3. the batch's distinct keys go to the store as one local-relation
+    *     semi-join, and the matched rows, with their payloads, come back
+    *     under one bounded collect ([[corpusHits]]);
+    *  4. the deduped (batch row, corpus id) pairs are scored by the
+    *     scheme's `scoreOf`, again a folded projection.
+    * None — the Spark tier — in three stages, cheapest first:
+    *  - before any job, from the catalog, the plans' schemas and size
+    *    estimates: the store has no stamped bucket-row bound at or under
+    *    a set cap; its id or key columns cannot be matched by value here;
+    *    or the batch does not fit ([[localFits]]);
+    *  - after the collect, before the store query: the rows pass the
+    *    bounds or carry a null or repeated id ([[localBatch]]), or the
+    *    bound plus the batch's rows exceeds `maxBucketSize`, so the Spark
+    *    tier's joint cap could drop a group;
+    *  - after the store query: the fetched rows or the pairs to score
+    *    pass the row bound. */
+  private def driverProbe(s: BucketScheme, spark: SparkSession,
+      batch: DataFrame, table: String, idCol: String, srcCol: String,
+      maxBucketSize: Int): Option[DriverProbe] = {
+    val (store, sibling) = storeTables(s, spark, table)
+    val corpusIdField = store.schema("id")
+    val p = s.payload
+    // the key structs' type, from the analyzed plan alone
+    lazy val keyType = s.sign(batch, idCol, srcCol).select(s.keys(col(p))).schema
+      .head.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    // the rows the batch may add to a bucket group, past which the cap
+    // could fire; the cap off needs no bound
+    val room = if (maxBucketSize <= 0) Some(Long.MaxValue)
+      else readRowBound(spark, table).map(maxBucketSize - _).filter(_ >= 0)
+    if (room.isEmpty || !idTypeByBytes(corpusIdField.dataType) ||
+        !localFits(batch, idCol) ||
+        !s.bucketCols.forall(c => store.schema(c).dataType == keyType(c).dataType)) None
+    // signed rows are at most the batch's rows, one per row
+    else localBatch(batch, idCol).filter(_._1.length <= room.get).flatMap {
+        case (rows, frame) =>
+      val signed = s.sign(frame, RowCol, srcCol)
+        .select(col("id"), col(p), s.keys(col(p)).as("__keys"))
+      val signedRows = signed.collect()
+      val byKey = bucketMembers(signedRows, 2)
+      corpusHits(s, store, sibling, byKey.keys.toSeq, keyType).flatMap {
+        case (hitRows, hitSchema) =>
+          // corpus ids keyed by value; each id's first payload, as the
+          // Spark tier's per-id pick is arbitrary too
+          val cKey = idKey(corpusIdField.dataType)
+          val cIndex = scala.collection.mutable.HashMap.empty[InternalRow, Int]
+          val corpusIds = scala.collection.mutable.ArrayBuffer.empty[Any]
+          val corpusPayloads = scala.collection.mutable.ArrayBuffer.empty[Any]
+          val pairs = scala.collection.mutable.LinkedHashSet.empty[(Int, Int)]
+          val nKey = s.bucketCols.size
+          hitRows.foreach { r =>
+            val c = cIndex.getOrElseUpdate(cKey(r.get(0)), {
+              corpusIds += r.get(0); corpusPayloads += r.get(nKey + 1)
+              corpusIds.length - 1
+            })
+            byKey.get((1 to nKey).map(r.get)).foreach(_.foreach(b => pairs += ((b, c))))
+          }
+          val payloadOf = signedRows.iterator.map(r => r.getLong(0).toInt -> r.get(1)).toMap
+          val pairRows = pairs.toSeq.map { case (b, c) =>
+            Row(b.toLong, c, payloadOf(b), corpusPayloads(c)) }
+          Option.when(pairRows.size <= StoreDriverMaxRows) {
+            val (scored, scoredSchema) = localChunks(spark, pairRows, StructType(Seq(
+                StructField("__b", LongType, nullable = false),
+                StructField("__c", IntegerType, nullable = false),
+                signed.schema(p).copy(name = p + "_b"),
+                hitSchema(p).copy(name = p + "_c")))) {
+              _.select(col("__b"), col("__c"),
+                s.scoreOf(col(p + "_b"), col(p + "_c")).as(s.score))
+            }
+            DriverProbe(rows, frame, batch.schema.fieldIndex(idCol),
+              spark.createDataFrame(scored.toSeq.asJava, scoredSchema),
+              corpusIds.toIndexedSeq, corpusIdField)
+          }
+      }
+    }
+  }
+
+  /** Whether `batch` may be collected for the driver tier, from its
+    * schema and size estimate alone: a batch (not a stream) whose id
+    * column exists, has a type whose equality is its bytes
+    * ([[idTypeByBytes]]) and is not [[RowCol]], and whose optimized plan
+    * estimates at most [[StoreDriverMaxBytes]]. */
+  private def localFits(batch: DataFrame, idCol: String): Boolean = {
+    val schema = batch.schema
+    !batch.isStreaming && schema.fieldNames.contains(idCol) &&
+      !schema.fieldNames.contains(RowCol) &&
+      idTypeByBytes(schema(idCol).dataType) &&
+      batch.queryExecution.optimizedPlan.stats.sizeInBytes <= StoreDriverMaxBytes
+  }
+
+  /** `batch`, which [[localFits]], collected for the driver tier: its
+    * rows in id order (Spark's ordering of the id type, so a row's
+    * position orders it as its id does) and a local frame of them with
+    * the position as [[RowCol]]. A batch already local costs no job.
+    * None — the Spark tier — when the collected rows pass the bounds,
+    * or when an id is null or repeated, so positions cannot stand in for
+    * ids. */
+  private def localBatch(batch: DataFrame,
+      idCol: String): Option[(IndexedSeq[Row], DataFrame)] = {
+    val schema = batch.schema
+    graft.join.SpatialJoin.collectBounded(batch, StoreDriverMaxRows,
+        StoreDriverMaxBytes).flatMap { rows =>
+      val i = schema.fieldIndex(idCol)
+      if (rows.exists(_.isNullAt(i))) None
+      else {
+        val (order, distinct) = sortIds(schema(idCol).dataType, rows.map(_.get(i)))
+        Option.when(distinct) {
+          val sorted = order.map(rows).toIndexedSeq
+          val withPos = sorted.indices.map(j => Row.fromSeq(sorted(j).toSeq :+ j.toLong))
+          (sorted, batch.sparkSession.createDataFrame(withPos.asJava,
+            schema.add(StructField(RowCol, LongType, nullable = false))))
+        }
+      }
+    }
+  }
+
+  /** The store rows sharing a bucket key with the batch, with their
+    * payloads, under one bounded collect: the batch's distinct `keys`
+    * (structs of `keyType`) reach the store as one local-relation
+    * semi-join, and a two-table tier joins its sibling's non-null
+    * payloads on id. Rows are (id, bucketCols…, payload), returned with
+    * their schema; None past the bounds. No keys, no query. */
+  private def corpusHits(s: BucketScheme, store: DataFrame,
+      sibling: Option[DataFrame], keys: Seq[Seq[Any]],
+      keyType: StructType): Option[(Array[Row], StructType)] = {
+    val keyFrame = store.sparkSession.createDataFrame(
+      keys.map(Row.fromSeq).asJava, keyType)
+    val hits = store.join(keyFrame, s.bucketCols, "left_semi")
+      .select(("id" +: s.bucketCols).map(col) ++ s.carried.map(col): _*)
+    val fetched = sibling.fold(hits)(sib => hits.join(
+      sib.filter(col(s.payload).isNotNull).select(col("id"), col(s.payload)), "id"))
+    if (keys.isEmpty) Some((Array.empty[Row], fetched.schema))
+    // one final partition: the bounded collect then runs one job for it
+    // instead of scanning the partitions in growing rounds
+    else graft.join.SpatialJoin.collectBounded(fetched.repartition(1),
+      StoreDriverMaxRows, StoreDriverMaxBytes).map((_, fetched.schema))
+  }
+
+  /** The survivors, in id order, of the within-batch pass `pass` over
+    * the batch positions `ix`, on the driver: the pass's `rows` are a
+    * folded projection; rows sharing a bucket key pair up, as the door's
+    * self-join pairs them; the pairs are checked with the pass's
+    * `verify`, again folded; and the union-find ([[minRoots]]) keeps the
+    * smallest id of each component, as [[keepMinIdSurvivors]] does.
+    * None when the candidate pairs pass the row bound. */
+  private def driverSurvivors(pass: PairPass, pr: DriverProbe, ix: Seq[Int],
+      srcCol: String): Option[Seq[Int]] = {
+    val spark = pr.frame.sparkSession
+    val local = spark.createDataFrame(ix.map(i => Row.fromSeq(pr.rows(i).toSeq :+ i.toLong))
+      .asJava, pr.frame.schema)
+    val rows = pass.rows(local, RowCol, srcCol)
+    val passRows = rows.collect()
+    val members = bucketMembers(passRows, 1)
+    val nPairs = members.valuesIterator.map(m => m.size.toLong * (m.size - 1) / 2).sum
+    if (nPairs > StoreDriverMaxRows) None
+    else {
+      val pairs = scala.collection.mutable.LinkedHashSet.empty[(Int, Int)]
+      members.valuesIterator.foreach { m =>
+        for (x <- m.indices; y <- x + 1 until m.size)
+          pairs += ((m(x) min m(y), m(x) max m(y)))
+      }
+      val v = passRows.iterator.map(r => r.getLong(0).toInt -> r.get(2)).toMap
+      val vField = rows.schema("v")
+      val (edges, _) = localChunks(spark,
+        pairs.toSeq.map { case (a, b) => Row(a.toLong, b.toLong, v(a), v(b)) },
+        StructType(Seq(StructField("a", LongType, nullable = false),
+          StructField("b", LongType, nullable = false),
+          vField.copy(name = "v_a"), vField.copy(name = "v_b")))) {
+        _.filter(pass.verify(col("v_a"), col("v_b"))).select("a", "b")
+      }
+      val root = minRoots(pr.rows.length,
+        edges.iterator.map(r => (r.getLong(0).toInt, r.getLong(1).toInt)))
+      Some(ix.filter(i => root(i) == i))
+    }
+  }
+
+  /** Positions (the Long in column `id` of `rows`) per bucket key of the
+    * key-struct array in column `keysAt`: the pairs a bucket self-join
+    * emits, by key. A null array, struct or key field never matches, as
+    * in the equi-join. */
+  private def bucketMembers(rows: Array[Row], keysAt: Int)
+      : scala.collection.mutable.LinkedHashMap[Seq[Any], scala.collection.mutable.ArrayBuffer[Int]] = {
+    val out = scala.collection.mutable.LinkedHashMap.empty[Seq[Any],
+      scala.collection.mutable.ArrayBuffer[Int]]
+    rows.foreach { r =>
+      if (!r.isNullAt(keysAt))
+        r.getSeq[Row](keysAt).iterator.filter(k => k != null && !k.anyNull).foreach { k =>
+          out.getOrElseUpdate(k.toSeq, scala.collection.mutable.ArrayBuffer.empty[Int]) +=
+            r.getLong(0).toInt
+        }
+    }
+    out
+  }
+
+  /** `f` over `rows` of `schema`, evaluated on the driver over local
+    * frames of at most [[StoreDriverMaxBytes]] estimated bytes each, and
+    * collected with its schema. A pair frame repeats each payload once
+    * per pair, so the driver tier bounds the pairs by count and holds
+    * them as local relations chunk by chunk. */
+  private def localChunks(spark: SparkSession, rows: Seq[Row], schema: StructType)(
+      f: DataFrame => DataFrame): (Array[Row], StructType) = {
+    val chunks = scala.collection.mutable.ArrayBuffer(
+      scala.collection.mutable.ArrayBuffer.empty[Row])
+    var bytes = 0L
+    rows.foreach { r =>
+      val b = graft.join.SpatialJoin.estimateRowBytes(r)
+      if (bytes + b > StoreDriverMaxBytes && chunks.last.nonEmpty) {
+        chunks += scala.collection.mutable.ArrayBuffer.empty[Row]
+        bytes = 0L
+      }
+      chunks.last += r
+      bytes += b
+    }
+    val frames = chunks.map(c => f(spark.createDataFrame(c.asJava, schema)))
+    (frames.flatMap(_.collect()).toArray, frames.head.schema)
+  }
+
+  /** Whether values of `t` are equal exactly when their binary row forms
+    * are — binary-stable (no collated string) and free of floats, which
+    * Spark's joins compare as normalized values (0.0 = -0.0, one NaN) —
+    * so the driver tier can key and order ids by that form. */
+  private def idTypeByBytes(t: DataType): Boolean = t match {
+    case FloatType | DoubleType => false
+    case _: MapType => false
+    case st: StructType => st.fields.forall(f => idTypeByBytes(f.dataType))
+    case at: ArrayType => idTypeByBytes(at.elementType)
+    case other => UnsafeRowUtils.isBinaryStable(other)
+  }
+
+  /** The one-column binary row of an id of `idType`, as a `Row` holds it:
+    * the form the driver tiers key and order ids by. */
+  private def idKey(idType: DataType): Any => InternalRow = {
+    val toKey = ExpressionEncoder(RowEncoder.encoderFor(
+      StructType(Seq(StructField("id", idType))))).createSerializer()
+    id => toKey(Row(id)).copy()
+  }
+
+  /** Positions of `ids` sorted by Spark's ordering of `idType` (the one
+    * `min` and `<` use), and whether the ids are all distinct. */
+  private def sortIds(idType: DataType, ids: IndexedSeq[Any]): (Array[Int], Boolean) = {
+    val key = idKey(idType)
+    val keys = ids.map(key)
+    val ord = InterpretedOrdering.forSchema(Seq(idType))
+    val order = ids.indices.toArray.sortWith((a, b) => ord.compare(keys(a), keys(b)) < 0)
+    (order, order.indices.drop(1).forall(i =>
+      ord.compare(keys(order(i - 1)), keys(order(i))) != 0))
   }
 
   /** The scheme of the two MinHash-banded tiers (character shingles,
@@ -882,14 +1259,12 @@ object Dedup {
   private def bandedScheme(tier: String, prop: String, version: String,
       params: Seq[Int], numHashes: Int, bands: Int,
       sign: (DataFrame, String, String) => DataFrame,
-      withinBatchPairs: (DataFrame, String, String, Double, Int) => DataFrame
-  ): BucketScheme = {
+      withinBatch: Double => PairPass): BucketScheme = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val collisionPoint = math.pow(1.0 / bands, 1.0 * bands / numHashes)
     BucketScheme(tier, prop, version, params, Seq("band", "bucket"), "sig",
       Some(MinhashSigTableSuffix), "jaccard_est", isDistance = false, sign,
-      bandExplode(_, numHashes, bands).select(col("id"), col("band"), col("bucket")),
-      jaccardEstExpr(_, _, numHashes),
+      bandKeys(_, numHashes, bands), jaccardEstExpr(_, _, numHashes),
       threshold => Option.when(threshold < collisionPoint * 0.8)(
         s"threshold $threshold sits " +
           f"well below the stamped banding's collision point " +
@@ -897,7 +1272,7 @@ object Dedup {
           "most pairs at that similarity never share a bucket, so " +
           "near-dups will be declared novel; rewrite the store with " +
           "more, narrower bands (autoBands) for this operating point"),
-      withinBatchPairs)
+      withinBatch)
   }
 
   // ------------------------------------------------ minhash corpus store
@@ -922,10 +1297,23 @@ object Dedup {
     bandedScheme("minhash", MinhashStoreProp, "v2",
       Seq(numHashes, bands, shingleK), numHashes, bands,
       minhashSigned(_, _, _, numHashes, shingleK),
-      (df, idCol, textCol, threshold, cap) => minhashVerified(df, idCol,
-        textCol, threshold, numHashes, bands = 0, shingleK, cap))
+      threshold => {
+        // the within-batch pass bands at the threshold's own banding, not
+        // the stamped one
+        val b = autoBands(numHashes, threshold)
+        PairPass(
+          (df, idCol, textCol, cap) => minhashVerified(df, idCol, textCol,
+            threshold, numHashes, b, shingleK, cap),
+          (df, idCol, textCol) => minhashNormed(df, idCol, textCol)
+            .select(col("id"),
+              minhashSigNative(col("__norm"), shingleK, numHashes).as("sig"),
+              shingleHashesNorm(col("__norm"), shingleK).as("v"))
+            .select(col("id"), bandKeys(col("sig"), numHashes, b).as("keys"),
+              col("v")),
+          jaccard(_, _) >= threshold)
+      })
 
-  private def minhashScheme(spark: SparkSession, table: String): BucketScheme =
+  private[graft] def minhashScheme(spark: SparkSession, table: String): BucketScheme =
     stampParams(spark, table, "minhash", MinhashStoreProp, "v2") {
       case Seq(numHashes, bands, shingleK) =>
         minhashScheme(numHashes, bands, shingleK) }
@@ -966,7 +1354,8 @@ object Dedup {
     * signed row count when that is ≤ `maxBucketSize`, so the write runs
     * no bucket census; the largest kept group otherwise; summed with the
     * stamped bound on append — and the candidates/novel doors skip
-    * their joint-cap census while bound + batch rows stays ≤ the cap. */
+    * their joint-cap census (and may run on the driver) while bound +
+    * batch rows stays ≤ the cap. */
   def writeMinhashStore(df: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
       numHashes: Int = 64, bands: Int = 8, shingleK: Int = 5,
@@ -991,18 +1380,31 @@ object Dedup {
     * Batch and corpus ids are separate namespaces — a batch row equal
     * to a corpus row IS reported.
     *
-    * NB this call runs EAGER Spark jobs before the lazy result frame
-    * returns, so don't construct it speculatively: the batch signing
-    * snapshot always, and the joint-cap census + skipped-bucket warning
-    * ([[capBucketsJoint]]) only when the store's stamped
-    * [[BucketRowBoundProp]] plus the batch's signed rows exceeds
-    * `maxBucketSize` (or the store has no bound). The same applies to
-    * every `*CandidatesAgainstStore` / `*NovelAgainstStore` door. The
-    * four novel doors do more at call
-    * time: with `dedupWithinBatch` they also snapshot the
-    * corpus-filtered batch (so the store join runs once per call) and
-    * resolve the within-batch near-dup components
-    * ([[connectedComponents]]) before the result frame returns. */
+    * NB this call does its work at call time, in one of two tiers, so
+    * don't construct it speculatively. The same holds for every
+    * `*CandidatesAgainstStore` / `*NovelAgainstStore` door:
+    *  - DRIVER tier, for a batch within 2^16 rows and 4 MB whose ids are
+    *    non-null and distinct, against a store whose stamped
+    *    [[BucketRowBoundProp]] plus the batch's rows stays ≤
+    *    `maxBucketSize` (so no cap can drop a bucket): the batch is
+    *    collected once (a local batch costs no job), signed and keyed on
+    *    the driver with the same expressions, and its bucket keys reach
+    *    the store as one bounded semi-join query — the only jobs of the
+    *    call. Scores, and a novel door's within-batch pass and
+    *    components, are resolved on the driver, and the result is a
+    *    local frame ([[storeCandidatesDriver]], [[storeNovelDriver]]).
+    *  - SPARK tier otherwise ([[storeCandidatesSpark]],
+    *    [[storeNovelSpark]]): the batch signing snapshot, the joint-cap
+    *    census + skipped-bucket warning ([[capBucketsJoint]]) when the
+    *    bound does not rule it out, and for the novel doors with
+    *    `dedupWithinBatch` the corpus-filtered batch snapshot (so the
+    *    store join runs once per call) and the within-batch components
+    *    ([[connectedComponents]]) all run before the lazy result frame
+    *    returns.
+    * The store's bound, the id types and the batch's size estimate are
+    * checked before the batch is collected, so a store without the
+    * bound, or a batch estimated past 4 MB, costs the Spark tier no
+    * extra job. Both tiers return the same rows with the same schema. */
   def minhashCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1074,8 +1476,15 @@ object Dedup {
     * [[writeNgramStore]] index share. */
   private def ngramSigned(df: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int): DataFrame =
+    ngramSignedSets(df, idCol, textCol, n, numHashes).select(col("id"), col("sig"))
+
+  /** (id, ng, sig): [[ngramSets]] with each set's MinHash signature —
+    * what [[nearDupNgram]] snapshots and its driver-tier pass reads. */
+  private def ngramSignedSets(df: DataFrame, idCol: String, textCol: String,
+      n: Int, numHashes: Int): DataFrame =
     ngramSets(df, idCol, textCol, n)
-      .select(col("id"), minhashSignatureHashed(numHashes)(col("ng")).as("sig"))
+      .select(col("id"), col("ng"),
+        minhashSignatureHashed(numHashes)(col("ng")).as("sig"))
 
   /** Word n-gram Jaccard near-dup: MinHash-LSH candidates over hashed word
     * n-grams, exact n-gram-set Jaccard verify ≥ threshold. Same
@@ -1095,9 +1504,8 @@ object Dedup {
     // snap holds the gram-hash array + signature per doc (no text);
     // every consumer reads it. Its row count bounds every bucket group
     // (the cap census is skipped at ≤ maxBucketSize rows).
-    val (withNg, rows) = snapCounted(ngramSets(df, idCol, textCol, n)
-      .select(col("id"), col("ng"),
-        minhashSignatureHashed(numHashes)(col("ng")).as("sig")))
+    val (withNg, rows) = snapCounted(
+      ngramSignedSets(df, idCol, textCol, n, numHashes))
     // null text was filtered at the source in ngramSets, so the shared
     // bandExplode's no-null-signature invariant holds — see its
     // phantom-bucket note
@@ -1136,10 +1544,18 @@ object Dedup {
   private def ngramScheme(n: Int, numHashes: Int, bands: Int): BucketScheme =
     bandedScheme("ngram", NgramStoreProp, "v1", Seq(n, numHashes, bands),
       numHashes, bands, ngramSigned(_, _, _, n, numHashes),
-      (df, idCol, textCol, threshold, cap) => nearDupNgram(df, idCol, textCol,
-        threshold, n, numHashes, bands = 0, maxBucketSize = cap))
+      threshold => {
+        val b = autoBands(numHashes, threshold)
+        PairPass(
+          (df, idCol, textCol, cap) => nearDupNgram(df, idCol, textCol,
+            threshold, n, numHashes, b, cap),
+          (df, idCol, textCol) => ngramSignedSets(df, idCol, textCol, n, numHashes)
+            .select(col("id"), bandKeys(col("sig"), numHashes, b).as("keys"),
+              col("ng").as("v")),
+          jaccard(_, _) >= threshold)
+      })
 
-  private def ngramScheme(spark: SparkSession, table: String): BucketScheme =
+  private[graft] def ngramScheme(spark: SparkSession, table: String): BucketScheme =
     stampParams(spark, table, "ngram", NgramStoreProp, "v1") {
       case Seq(n, numHashes, bands) => ngramScheme(n, numHashes, bands) }
 
@@ -1170,8 +1586,8 @@ object Dedup {
 
   /** Candidate near-dup pairs of a NEW batch against a
     * [[writeNgramStore]] corpus — [[minhashCandidatesAgainstStore]]'s
-    * token-level twin (same shared core, n-gram signer, same eager
-    * joint-cap census at call time). Returns
+    * token-level twin (same shared core and call-time tiers, n-gram
+    * signer). Returns
     * (batch_id, corpus_id, jaccard_est). */
   def ngramCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
@@ -1385,7 +1801,7 @@ object Dedup {
       else {
         val acc = new Array[Int](64)
         toks.foreach { t =>
-          val h = fmix64(t.hashCode.toLong * 0x9e3779b97f4a7c15L + 1)
+          val h = graft.plans.MinHashKernel.fmix64(t.hashCode.toLong * 0x9e3779b97f4a7c15L + 1)
           var i = 0
           while (i < 64) {
             if (((h >>> i) & 1L) == 1L) acc(i) += 1 else acc(i) -= 1
@@ -1433,12 +1849,19 @@ object Dedup {
     * producer all three SimHash doors ride (self-join, store writer,
     * store prober), so the store layout and batch probing can never
     * desynchronize. */
-  private def simhashChunks(signed: DataFrame, chunks: Int): DataFrame = {
+  private def simhashChunks(signed: DataFrame, chunks: Int): DataFrame =
+    explodeKeys(signed, Seq("id", "sim"), simhashChunkKeys(col("sim"), chunks),
+      Seq("chunk", "bucket"))
+
+  /** The (chunk, bucket) keys of a SimHash signature, one struct per
+    * `64 / chunks`-bit chunk: bucket = (sim >> chunk · width) & mask —
+    * the [[bandKeys]] of the Hamming tier. */
+  private def simhashChunkKeys(sim: Column, chunks: Int): Column = {
     val width = 64 / chunks
     val mask = (1L << width) - 1
-    signed.select(col("id"), col("sim"),
-        explode(sequence(lit(0), lit(chunks - 1))).as("chunk"))
-      .withColumn("bucket", expr(s"(sim >> (chunk * $width)) & $mask"))
+    transform(sequence(lit(0), lit(chunks - 1)),
+      c => struct(c.as("chunk"),
+        call_function("shiftright", sim, c * width).bitwiseAND(lit(mask)).as("bucket")))
   }
 
   /** SimHash near-dup: bucket by signature chunks (a pair within
@@ -1480,11 +1903,15 @@ object Dedup {
         maxBucketSize, s"nearDupSimhash(maxHamming=$maxHamming)", rows)
       else capBuckets(chunked, Seq("chunk", "bucket"), maxBucketSize, rows)
     selfJoinPairs(withChunk, Seq("chunk", "bucket"), Seq("sim"))
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+      .withColumn("hamming", hammingOf(col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
       .dropDuplicates("id_a", "id_b")
   }
+
+  /** Hamming distance of two SimHash signatures — the simhash tier's
+    * verify and store score. */
+  private def hammingOf(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** One survivor per near-dup component: the row whose id is the
     * component minimum (singletons survive as their own component) —
@@ -1563,14 +1990,24 @@ object Dedup {
   private def simhashScheme(chunks: Int): BucketScheme =
     BucketScheme("simhash", SimhashStoreProp, "v1", Seq(chunks),
       Seq("chunk", "bucket"), "sim", None, "hamming", isDistance = true,
-      simhashSigned, simhashChunks(_, chunks),
-      (a, b) => bit_count(a.bitwiseXOR(b)), _ => None,
-      (df, idCol, textCol, maxHamming, cap) =>
-        nearDupSimhash(df, idCol, textCol, maxHamming.toInt, cap))
+      simhashSigned, simhashChunkKeys(_, chunks), hammingOf, _ => None,
+      maxHamming => {
+        // the within-batch pass chunks at the radius's own chunk count,
+        // not the stamped one
+        val radius = maxHamming.toInt
+        val passChunks = simhashChunkCount("nearDupSimhash", radius)
+        PairPass(
+          (df, idCol, textCol, cap) =>
+            nearDupSimhash(df, idCol, textCol, radius, cap),
+          (df, idCol, textCol) => simhashSigned(df, idCol, textCol)
+            .select(col("id"), simhashChunkKeys(col("sim"), passChunks).as("keys"),
+              col("sim").as("v")),
+          hammingOf(_, _) <= radius)
+      })
 
   /** The stamped scheme of a [[writeSimhashStore]] table (4, 8 or 16
     * chunks), refusing a probe radius past its layout's pigeonhole. */
-  private def simhashScheme(spark: SparkSession, table: String,
+  private[graft] def simhashScheme(spark: SparkSession, table: String,
       maxHamming: Int = 0): BucketScheme =
     stampParams(spark, table, "simhash", SimhashStoreProp, "v1") {
       case Seq(chunks) if Seq(4, 8, 16).contains(chunks) =>
@@ -1594,10 +2031,9 @@ object Dedup {
     * store, 7 for an 8-chunk one, 15 for 16) — recall is exact up to
     * that radius; a store written for a wider radius serves any
     * narrower probe. Over-cap bucket groups are SKIPPED with a warning
-    * (the joint-cap guard), the one recall exception. Runs eager jobs
-    * at call time (the signing snapshot; the joint-cap census only
-    * past the stamped bucket-row bound) — see
-    * [[minhashCandidatesAgainstStore]]'s note. */
+    * (the joint-cap guard), the one recall exception. Does its work at
+    * call time, on the driver for a small batch or as eager Spark jobs
+    * — see [[minhashCandidatesAgainstStore]]'s note. */
   def simhashCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -1643,8 +2079,7 @@ object Dedup {
       maxBucketSize: Int = 100000): DataFrame = {
     val (bitsR, tablesR) = resolvePlanes("nearDupEmbedding", threshold,
       targetRecall = 0.9, bits, tables)
-    val withVec = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
+    val withVec = embeddingCast(df, idCol, vecCol)
     // one signature per table ([[embeddingSigArray]]), exploded to
     // (table, sig) bucket keys. The signature array is snapshotted
     // BEFORE the explode (r19, the capBuckets-census fold): the cap
@@ -1655,8 +2090,7 @@ object Dedup {
     val (signed, rows) = snapCounted(withVec.select(col("id"), col("vec"),
       embeddingSigArray(col("vec"), bitsR, tablesR).as("__sigs")))
     val bucketed = capBuckets(
-      signed.select(col("id"), col("vec"), explode(col("__sigs")).as("ts"))
-        .select(col("id"), col("vec"), col("ts.t").as("t"), col("ts.sig").as("sig")),
+      explodeKeys(signed, Seq("id", "vec"), col("__sigs"), Seq("t", "sig")),
       Seq("t", "sig"), maxBucketSize, rows)
     selfJoinPairs(bucketed, Seq("t", "sig"), Seq("vec"))
       .dropDuplicates("id_a", "id_b")
@@ -1794,26 +2228,22 @@ object Dedup {
     * lesson). */
   private def embeddingVecs(df: DataFrame, idCol: String,
       vecCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("vec"))
-      .filter(col("vec").isNotNull)
+    embeddingCast(df, idCol, vecCol).filter(col("vec").isNotNull)
+
+  /** (id, vec) with `vec` cast to array<double>, null vectors kept — the
+    * input projection of [[nearDupEmbedding]] and [[embeddingVecs]]. */
+  private def embeddingCast(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
 
   /** `vec`'s sign-LSH signature in each of `tables` seeded plane sets,
     * as one array of (t, sig) structs — the ONE signature derivation the
     * self-join door ([[nearDupEmbedding]], which snapshots the array
-    * before exploding it) and the store doors ([[embeddingBucketRows]])
+    * before exploding it) and the store doors (the scheme's `keys`)
     * share, so store buckets can never drift from the in-frame ones. */
   private def embeddingSigArray(vec: Column, bits: Int, tables: Int): Column =
     array((0 until tables).map(t => struct(lit(t).as("t"),
       Similarity.signSignatureSeeded(bits, t)(vec).as("sig"))): _*)
-
-  /** (id, t, sig) sign-LSH bucket rows of an (id, vec) frame — the store
-    * tier's slim rows. */
-  private def embeddingBucketRows(withVec: DataFrame, bits: Int,
-      tables: Int): DataFrame =
-    withVec
-      .select(col("id"), explode(embeddingSigArray(col("vec"), bits, tables)).as("ts"))
-      .select(col("id"), col("ts.t").as("t"), col("ts.sig").as("sig"))
 
   /** The embedding tier's [[BucketScheme]] at (bits, tables): (t, sig)
     * keys, the `__vecs` sibling, the exact cosine. Its recall warning is
@@ -1823,7 +2253,7 @@ object Dedup {
   private def embeddingScheme(bits: Int, tables: Int): BucketScheme =
     BucketScheme("embedding", EmbeddingStoreProp, "v1", Seq(bits, tables),
       Seq("t", "sig"), "vec", Some(EmbeddingVecTableSuffix), "cosine",
-      isDistance = false, embeddingVecs, embeddingBucketRows(_, bits, tables),
+      isDistance = false, embeddingVecs, embeddingSigArray(_, bits, tables),
       Similarity.cosine,
       threshold => {
         val recall = signRecall(threshold, bits, tables)
@@ -1834,10 +2264,15 @@ object Dedup {
           "rewrite the store with autoPlanes sizing (writeEmbeddingStore " +
           "bits=0/tables=0 with autoThreshold at this operating point)")
       },
-      (df, idCol, vecCol, threshold, cap) =>
-        nearDupEmbedding(df, idCol, vecCol, threshold, bits, tables, cap))
+      threshold => PairPass(
+        (df, idCol, vecCol, cap) =>
+          nearDupEmbedding(df, idCol, vecCol, threshold, bits, tables, cap),
+        (df, idCol, vecCol) => embeddingCast(df, idCol, vecCol)
+          .select(col("id"), embeddingSigArray(col("vec"), bits, tables).as("keys"),
+            col("vec").as("v")),
+        Similarity.cosine(_, _) >= threshold))
 
-  private def embeddingScheme(spark: SparkSession, table: String): BucketScheme =
+  private[graft] def embeddingScheme(spark: SparkSession, table: String): BucketScheme =
     stampParams(spark, table, "embedding", EmbeddingStoreProp, "v1") {
       case Seq(bits, tables) => embeddingScheme(bits, tables) }
 
@@ -1892,10 +2327,9 @@ object Dedup {
     * every emitted pair carries the true cosine, so filtering at a
     * threshold gives exactly what [[nearDupEmbedding]] finds on the
     * union AT THE STAMPED (bits, tables); see the writer's parity
-    * note). Returns (batch_id, corpus_id, cosine). Runs eager jobs at
-    * call time (the batch vector snapshot; the joint-cap census only
-    * past the stamped bucket-row bound) — see
-    * [[minhashCandidatesAgainstStore]]'s note. */
+    * note). Returns (batch_id, corpus_id, cosine). Does its work at
+    * call time, on the driver for a small batch or as eager Spark jobs
+    * — see [[minhashCandidatesAgainstStore]]'s note. */
   def embeddingCandidatesAgainstStore(spark: SparkSession,
       batch: DataFrame, table: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -2238,25 +2672,36 @@ object Dedup {
 
   /** Driver tier of [[connectedComponents]]: union-find over the
     * collected canonical `edges`. Nodes are keyed by their one-column
-    * `UnsafeRow`, so every id type — binary included — is keyed by value;
-    * each class's root, and so its component, is its minimum under
-    * Spark's own ordering of the id type (the one `min` uses), so labels
-    * equal the star rounds'. */
+    * `UnsafeRow` ([[idKey]]), so every id type — binary included — is
+    * keyed by value, and numbered in Spark's own ordering of the id type
+    * (the one `min` uses), so each class's root ([[minRoots]]), and so
+    * its component, is its minimum: labels equal the star rounds'. */
   private def driverComponents(edges: DataFrame, rows: Array[Row]): DataFrame = {
     val uField = edges.schema("u")
     val idType = uField.dataType
-    val toKey = ExpressionEncoder(RowEncoder.encoderFor(
-      StructType(Seq(StructField("id", idType))))).createSerializer()
+    val key = idKey(idType)
     val index = scala.collection.mutable.HashMap.empty[InternalRow, Int]
-    val keys = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def node(id: Any): Int = {
-      val key = toKey(Row(id)).copy()
-      index.getOrElseUpdate(key, {
-        keys += key; ids += id; parent += parent.length; parent.length - 1
-      })
-    }
+    def node(id: Any): Int = index.getOrElseUpdate(key(id), { ids += id; ids.length - 1 })
+    val ends = rows.map(r => (node(r.get(0)), node(r.get(1))))
+    val (order, _) = sortIds(idType, ids.toIndexedSeq)
+    val rank = new Array[Int](order.length)
+    order.indices.foreach(i => rank(order(i)) = i)
+    val root = minRoots(order.length, ends.iterator.map { case (a, b) => (rank(a), rank(b)) })
+    val out = order.indices.map(i => Row(ids(order(i)), ids(order(root(i)))))
+    // the star rounds' schema: `id` from the union of both edge ends,
+    // `component` from a min aggregate (always nullable)
+    val schema = StructType(Seq(
+      StructField("id", idType, uField.nullable || edges.schema("v").nullable),
+      StructField("component", idType, nullable = true)))
+    edges.sparkSession.createDataFrame(out.asJava, schema)
+  }
+
+  /** Union-find over nodes `0 until n` numbered in id order: the root of
+    * each node, the smallest node of its class. The one union-find of the
+    * driver tiers ([[driverComponents]], [[driverSurvivors]]). */
+  private def minRoots(n: Int, edges: Iterator[(Int, Int)]): Array[Int] = {
+    val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
       var root = x
       while (parent(root) != root) root = parent(root)
@@ -2264,21 +2709,11 @@ object Dedup {
       while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
       root
     }
-    // the smaller key becomes the root, so every root is its class minimum
-    val ord = InterpretedOrdering.forSchema(Seq(idType))
-    rows.foreach { r =>
-      val (a, b) = (find(node(r.get(0))), find(node(r.get(1))))
-      if (a != b) {
-        if (ord.compare(keys(a), keys(b)) < 0) parent(b) = a else parent(a) = b
-      }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    val out = ids.indices.map(i => Row(ids(i), ids(find(i))))
-    // the star rounds' schema: `id` from the union of both edge ends,
-    // `component` from a min aggregate (always nullable)
-    val schema = StructType(Seq(
-      StructField("id", idType, uField.nullable || edges.schema("v").nullable),
-      StructField("component", idType, nullable = true)))
-    edges.sparkSession.createDataFrame(out.asJava, schema)
+    Array.tabulate(n)(find)
   }
 
   /** Star-round tier of [[connectedComponents]] over canonical `edges`

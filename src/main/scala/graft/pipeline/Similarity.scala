@@ -39,14 +39,6 @@ object Similarity {
     when(d > 0d, dot(a, b) / d)
   }
 
-  private def fmix64(x0: Long): Long = {
-    var x = x0
-    x ^= x >>> 30; x *= 0xbf58476d1ce4e5b9L
-    x ^= x >>> 27; x *= 0x94d049bb133111ebL
-    x ^= x >>> 31
-    x
-  }
-
   /** Sign-LSH signature: bit p = sign of <vec, plane_p>, planes with ±1
     * entries derived from fmix64(plane, dim) — deterministic everywhere. */
   def signSignature(bits: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
@@ -64,7 +56,7 @@ object Similarity {
     planeCache.computeIfAbsent((bits, table, dim), _ =>
       Array.tabulate(bits, dim) { (p, i) =>
         val plane = table.toLong * bits + p
-        if ((fmix64(plane * 0x9e3779b97f4a7c15L + i) & 1L) == 1L) 1.0 else -1.0
+        if ((graft.plans.MinHashKernel.fmix64(plane * 0x9e3779b97f4a7c15L + i) & 1L) == 1L) 1.0 else -1.0
       })
 
   /** [[signSignature]] with a table seed: table t uses planes

@@ -88,12 +88,29 @@ object MinHashKernel {
   import org.apache.spark.unsafe.Platform
   import org.apache.spark.unsafe.types.UTF8String
 
-  private def fmix64(x0: Long): Long = {
+  /** splitmix64 finalizer — cheap, high-quality per-seed mixing; the one
+    * copy behind every MinHash, SimHash and sign-LSH hash of the engine. */
+  def fmix64(x0: Long): Long = {
     var x = x0
     x ^= x >>> 30; x *= 0xbf58476d1ce4e5b9L
     x ^= x >>> 27; x *= 0x94d049bb133111ebL
     x ^= x >>> 31
     x
+  }
+
+  /** Fold one shingle hash `h` into the running per-seed minima `sig`:
+    * seed j sees fmix64(fmix64(h · φ + 1) ^ j · c). The one MinHash fold
+    * — [[sig]] and both signature UDFs (`Dedup.minhashSignature`,
+    * `Dedup.minhashSignatureHashed`) call it, so the shingle tier's and
+    * the n-gram tier's signatures cannot drift apart. */
+  def fold(sig: Array[Long], h: Long): Unit = {
+    val base = fmix64(h * 0x9e3779b97f4a7c15L + 1)
+    var p = 0
+    while (p < sig.length) {
+      val v = fmix64(base ^ (p * 0xc2b2ae3d27d4eb4fL))
+      if (v < sig(p)) sig(p) = v
+      p += 1
+    }
   }
 
   /** xxhash64 (seed 42) of the UTF-8 bytes of every character
@@ -141,16 +158,7 @@ object MinHashKernel {
     val hs = windowHashes(s, k)
     val out = Array.fill(numHashes)(Long.MaxValue)
     var w = 0
-    while (w < hs.length) {
-      val base = fmix64(hs(w) * 0x9e3779b97f4a7c15L + 1)
-      var p = 0
-      while (p < numHashes) {
-        val v = fmix64(base ^ (p * 0xc2b2ae3d27d4eb4fL))
-        if (v < out(p)) out(p) = v
-        p += 1
-      }
-      w += 1
-    }
+    while (w < hs.length) { fold(out, hs(w)); w += 1 }
     ArrayData.toArrayData(out)
   }
 

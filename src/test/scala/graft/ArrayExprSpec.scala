@@ -66,6 +66,40 @@ class ArrayExprSpec extends AnyFunSuite {
     }
   }
 
+  test("both MinHash signature UDFs equal the per-seed fold bit for bit on seeded random input") {
+    import spark.implicits._
+    // the fold as the signature UDFs each wrote it before they shared
+    // MinHashKernel.fold: seed j keeps min over shingles of
+    // fmix64(fmix64(h * phi + 1) ^ j * c)
+    def fmix64(x0: Long): Long = {
+      var x = x0
+      x ^= x >>> 30; x *= 0xbf58476d1ce4e5b9L
+      x ^= x >>> 27; x *= 0x94d049bb133111ebL
+      x ^= x >>> 31
+      x
+    }
+    def reference(hashes: Seq[Long], numHashes: Int): Seq[Long] =
+      (0 until numHashes).map { j =>
+        hashes.map(h => fmix64(fmix64(h * 0x9e3779b97f4a7c15L + 1) ^
+          (j * 0xc2b2ae3d27d4eb4fL))).foldLeft(Long.MaxValue)(math.min)
+      }
+    val rnd = new scala.util.Random(11)
+    val hashed = Seq.fill(100)(Seq.fill(1 + rnd.nextInt(40))(rnd.nextLong()))
+    val strings = Seq.fill(100)(Seq.fill(1 + rnd.nextInt(40))(
+      rnd.alphanumeric.take(1 + rnd.nextInt(8)).mkString))
+    for (numHashes <- Seq(1, 16, 64)) {
+      val gotHashed = hashed.toDF("sh")
+        .select(graft.pipeline.Dedup.minhashSignatureHashed(numHashes)(col("sh")))
+        .as[Seq[Long]].collect().toSeq
+      assert(gotHashed === hashed.map(reference(_, numHashes)), s"hashed, $numHashes seeds")
+      val gotStrings = strings.toDF("sh")
+        .select(graft.pipeline.Dedup.minhashSignature(numHashes)(col("sh")))
+        .as[Seq[Long]].collect().toSeq
+      assert(gotStrings === strings.map(sh => reference(sh.map(_.hashCode.toLong), numHashes)),
+        s"string shingles, $numHashes seeds")
+    }
+  }
+
   test("array_dot is registered in SQL and codegens") {
     val r = spark.sql(
       "SELECT array_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d").collect()

@@ -100,43 +100,8 @@ class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
     } finally drop(table)
   }
 
-  /** Spark jobs that `body` runs, seen by a listener on a job group: one
-    * call-site string (the stage details, a stack trace) per job. A
-    * sentinel job outside the group runs last: the listener bus
-    * delivers in order, so once the sentinel's end arrives every job of
-    * the group has been seen. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val group = "minhash-novel-job-count"
-    val sentinel = "minhash-novel-job-count-sentinel"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val sentinelId = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.stageInfos.map(_.details).mkString("\n"))
-        if (props.exists(_.getProperty("spark.job.description") == sentinel))
-          sentinelId.set(e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelId.get) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus never drained")
-      (out, jobs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[T](body: => T): (T, Seq[String]) =
+    SparkJobs.jobsOf(spark, "minhash-novel-job-count")(body)
 
   test("the novel door's job count stays pinned") {
     // the novel/ingest fixture: a corpus dup, a novel, and an intra-batch
@@ -144,7 +109,9 @@ class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
     // of the within-batch pass and the 1-edge near-dup graph took the
     // star rounds; with the snapshot and the driver component tier it
     // ran 27, and with the bucket-cap censuses skipped on the row bound
-    // it runs 20. The bound leaves 3 jobs of slack
+    // 20. With the store doors' driver tier the batch is local and only
+    // the one bounded store query runs jobs: 4. The bound leaves 4 jobs
+    // of slack
     val corpus = (0 until 30).map(i => (i.toLong, docText(i))).toDF("doc_id", "text")
     val table = "graft_mh_store_jobs"
     drop(table)
@@ -162,7 +129,17 @@ class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
           .select($"doc_id").as[Long].collect()
       }
       assert(ids.sorted.toSeq === Seq(10001L, 10002L))
-      assert(jobs.size <= 23, s"one novel door + collect ran ${jobs.size} Spark jobs")
+      assert(jobs.size <= 8, s"one novel door + collect ran ${jobs.size} Spark jobs")
+      // the Spark tier, which larger batches take, keeps its own pin: 20
+      // jobs measured, the bound of the door before the driver tier
+      val (sparkIds, sparkJobs) = jobsOf {
+        Dedup.storeNovelSpark(Dedup.minhashScheme(spark, table), spark, batch,
+          table, "doc_id", "text", 0.5, 100000, dedupWithinBatch = true)
+          .select($"doc_id").as[Long].collect()
+      }
+      assert(sparkIds.sorted.toSeq === Seq(10001L, 10002L))
+      assert(sparkJobs.size <= 23,
+        s"the Spark tier's novel pass + collect ran ${sparkJobs.size} Spark jobs")
     } finally drop(table)
   }
 
@@ -194,15 +171,33 @@ class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
       def censusJobs(jobs: Seq[String]) = jobs.count(_.contains("capBucketsJoint"))
       def probe() = Dedup.minhashCandidatesAgainstStore(spark, batch, table)
         .as[(Long, Long, Double)].collect().toSet
-      // stamped 30 + 6 batch rows ≤ the 100000 cap: no census job at all
+      def sparkTier(b: org.apache.spark.sql.DataFrame) = Dedup.storeCandidatesSpark(
+          Dedup.minhashScheme(spark, table), spark, b, table, "doc_id", "text", 100000)
+        .as[(Long, Long, Double)].collect().toSet
+      // stamped 30 + 6 batch rows ≤ the 100000 cap: no census job at all,
+      // in the door and in its Spark tier, which larger batches take
       val (viaBound, skipJobs) = jobsOf(probe())
       assert(censusJobs(skipJobs) === 0, skipJobs.mkString("\n---\n"))
+      val (sparkViaBound, sparkSkipJobs) = jobsOf(sparkTier(batch))
+      assert(censusJobs(sparkSkipJobs) === 0, sparkSkipJobs.mkString("\n---\n"))
+      assert(sparkViaBound === viaBound)
       // without the bound the door censuses, with the same candidates
       spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES " +
         s"('${Dedup.BucketRowBoundProp}')")
       val (viaCensus, censusRun) = jobsOf(probe())
       assert(censusJobs(censusRun) >= 1, "the census path ran no census job")
       assert(viaCensus === viaBound)
+      // a bound-less store turns the driver tier down before it collects
+      // the batch or queries the store: a batch that is not local runs
+      // the Spark tier's jobs and no others
+      val shuffled = batch.repartition(2)
+      val (viaDoor, doorJobs) = jobsOf(Dedup.minhashCandidatesAgainstStore(spark,
+        shuffled, table).as[(Long, Long, Double)].collect().toSet)
+      val (viaSpark, sparkJobs) = jobsOf(sparkTier(shuffled))
+      assert(viaDoor === viaBound && viaSpark === viaBound)
+      assert(doorJobs.size === sparkJobs.size, doorJobs.mkString("\n---\n"))
+      assert(!doorJobs.exists(j => j.contains("localBatch") || j.contains("corpusHits")),
+        doorJobs.mkString("\n---\n"))
       assert(viaBound.count(_._3 == 1.0) === 5, "fixture sanity: planted dups")
     } finally drop(table)
   }

@@ -58,6 +58,29 @@ class NearestBucketedUnboundedSpec extends AnyFunSuite {
     } finally SpatialJoin.dropBucketedTable(spark, table)
   }
 
+  test("a 64-row local probe ranks its sample envelopes in one scan") {
+    // a local relation knows its row count, and under 250 rows a 20%
+    // sample returns fewer than the 50 rows the sizing wants: the door
+    // goes straight to the full ranked scan instead of running both
+    val rnd = new java.util.Random(0xB16B02)
+    val probeRows = EWKBFixtures.heterogeneous(rnd, 64)
+    val buildRows = EWKBFixtures.heterogeneous(rnd, 80)
+    val table = "graft_unb_store_sample"
+    SpatialJoin.dropBucketedTable(spark, table)
+    try {
+      SpatialJoin.writeSpatialBucketed(
+        buildRows.toDF("bid", "geometry"), table, cellSize = 4.0, buckets = 4)
+      val probe = probeRows.toDF("pid", "geometry")
+      val (got, jobs) = SparkJobs.jobsOf(spark, "unbounded-sample-scan") {
+        unbounded(probe, table, cs = 4.0, k = 1)
+          .select($"pid", $"bid").as[(Long, Long)].collect()
+      }
+      assert(got.toSet === EWKBFixtures.brute(probeRows, buildRows, 1, exclusive = false))
+      // the call ran 15 jobs with both sample scans, 12 with the one
+      assert(jobs.size <= 12, s"the call ran ${jobs.size} Spark jobs")
+    } finally SpatialJoin.dropBucketedTable(spark, table)
+  }
+
   test("owner-dedup: a stamped summary over multi-cell rows equals the frame's summary") {
     // rectangles spanning several 1.0-cells: each store row is exploded
     // to MANY copies — the owner filter must count each exactly once or
