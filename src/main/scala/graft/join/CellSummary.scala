@@ -2,7 +2,7 @@ package graft.join
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.locationtech.jts.geom.Envelope
+import org.locationtech.jts.geom.{Envelope, Geometry}
 
 import graft.serde.EWKB
 
@@ -14,8 +14,8 @@ import graft.serde.EWKB
   * with that bound riding each probe.
   *
   * Two driver-resident summed-area tables over an `nx × ny` grid
-  * (≤ `grid`² cells, square cells, covering the build side's exact
-  * bounding box):
+  * (≤ `grid`² cells, square cells, covering the build side's bounding
+  * box plus one cell of headroom per side — the [[CellSummary.Frame]]):
   *
   *  - '''anchors''': each build row counted ONCE, at the cell of a point
   *    ON the geometry (its first vertex). Block sums are therefore exact
@@ -40,7 +40,9 @@ import graft.serde.EWKB
   * (≤ ~4 MB each at the default 512 grid — per-task cost is O(rows) with
   * O(grid²) merge payloads, depth-2 tree keeps the driver off the hot
   * path), the summary broadcasts once, and every per-probe bound query
-  * is O(log grid) summed-area lookups.
+  * is O(log grid) summed-area lookups. Both tables are sums over rows on
+  * a fixed grid, so rows added inside the frame merge in O(rows +
+  * grid²) on the driver ([[plus]]) and equal a pass over all rows.
   */
 final case class CellSummary(
     x0: Double, y0: Double, h: Double, nx: Int, ny: Int,
@@ -48,15 +50,42 @@ final case class CellSummary(
     anchorSat: Array[Long], coverSat: Array[Long],
     totalAnchors: Long, occupied: Array[Long]) extends Serializable {
 
-  // Exact grid edges: `x0 + nx*h` can land ULPS SHORT of the true bbox
+  // Exact grid edges: `x0 + nx*h` can land ULPS SHORT of the frame's
   // max (h = ext/grid rounds), leaving an ulp-wide strip of real build
   // data outside the nominal cell rects — the same bug class the
   // ownsCorner fix targets. Assignment CLAMPS into the edge cells, so
-  // the edge cells semantically extend to the exact bbox max: every
+  // the edge cells semantically extend to the frame max: every
   // world-rect consumer (cellRect, boundFor's block, the early-exit)
   // uses these.
   @inline private def xEdge: Double = math.max(x0 + nx * h, x1)
   @inline private def yEdge: Double = math.max(y0 + ny * h, y1)
+
+  /** The grid this summary was accumulated on. */
+  private[graft] def frame: CellSummary.Frame =
+    CellSummary.Frame(x0, y0, h, nx, ny, x1, y1)
+
+  /** This summary with `rows` added — array-equal to
+    * [[CellSummary.computeOn]] over the old rows and `rows` on this
+    * frame. Every row's envelope must lie inside the frame
+    * ([[CellSummary.Frame.holds]]). */
+  private[graft] def plus(rows: Iterator[Geometry]): CellSummary = {
+    val f = frame
+    val acc = f.accumulator()
+    rows.foreach(acc.add)
+    val anchors = acc.anchors
+    val cover = f.coverOf(acc.coverDiff)
+    var gy = 0
+    while (gy < ny) {
+      var gx = 0
+      while (gx < nx) {
+        anchors(gy * nx + gx) += blockSum(anchorSat, gx, gy, gx, gy)
+        cover(gy * nx + gx) += blockSum(coverSat, gx, gy, gx, gy)
+        gx += 1
+      }
+      gy += 1
+    }
+    f.summaryOf(anchors, cover)
+  }
 
   @inline private def clampX(x: Double): Int =
     math.min(nx - 1, math.max(0, math.floor((x - x0) / h).toInt))
@@ -131,7 +160,7 @@ final case class CellSummary(
   }
 
   /** World rectangle of coarse cell (gx, gy); edge cells extend to the
-    * exact bbox max (see the xEdge note — assignment clamps into them). */
+    * frame max (see the xEdge note — assignment clamps into them). */
   def cellRect(gx: Int, gy: Int): (Double, Double, Double, Double) =
     (x0 + gx * h, y0 + gy * h,
       if (gx == nx - 1) xEdge else x0 + (gx + 1) * h,
@@ -239,18 +268,16 @@ object CellSummary {
       arr(satLen), arr(satLen), tot, arr(nx * ny))
   }
 
-  /** Two passes over the build side's geometry column: exact bbox, then
-    * the anchor + coverage arrays. Returns None when no row has a
-    * usable geometry (the join then has no matches by definition). */
+  /** Two passes over the build side's geometry column: the bbox, which
+    * sizes the [[Frame]], then [[computeOn]] that frame. Returns None when
+    * no row has a usable geometry (the join then has no matches by
+    * definition). */
   def compute(build: DataFrame, geom: String,
       grid: Int = DefaultGrid): Option[CellSummary] = {
     require(grid >= 1 && grid <= 4096, s"summary grid out of range: $grid")
-    val bytes = build.select(col(geom)).na.drop()
-      .rdd.map(_.getAs[Array[Byte]](0))
-
     val bboxZero = (Double.MaxValue, Double.MaxValue,
       Double.MinValue, Double.MinValue, 0L)
-    val (mnx, mny, mxx, mxy, cnt) = bytes.treeAggregate(bboxZero)(
+    val (mnx, mny, mxx, mxy, cnt) = geomBytes(build, geom).treeAggregate(bboxZero)(
       seqOp = { case (acc, b) =>
         val e = EWKB.read(b).getEnvelopeInternal
         if (e.isNull) acc
@@ -262,39 +289,23 @@ object CellSummary {
         (math.min(a._1, b._1), math.min(a._2, b._2),
           math.max(a._3, b._3), math.max(a._4, b._4), a._5 + b._5)
       }, depth = 2)
-    if (cnt == 0L) return None
+    if (cnt == 0L) None
+    else Some(computeOn(build, geom, Frame.around(mnx, mny, mxx, mxy, grid)))
+  }
 
-    val ext = math.max(mxx - mnx, mxy - mny)
-    val h = if (ext > 0) ext / grid else 1.0
-    val nx = math.max(1, math.min(grid, math.ceil((mxx - mnx) / h).toInt))
-    val ny = math.max(1, math.min(grid, math.ceil((mxy - mny) / h).toInt))
-    @inline def cX(x: Double): Int =
-      math.min(nx - 1, math.max(0, math.floor((x - mnx) / h).toInt))
-    @inline def cY(y: Double): Int =
-      math.min(ny - 1, math.max(0, math.floor((y - mny) / h).toInt))
-
-    val w = nx + 1
+  /** The anchor + coverage pass over a fixed frame: one O(rows) pass per
+    * task into fixed-size arrays, merged by a depth-2 tree. Every
+    * envelope must lie inside the frame (assignment clamps into the edge
+    * cells, so a row outside would count at the wrong cell). */
+  private[graft] def computeOn(build: DataFrame, geom: String,
+      frame: Frame): CellSummary = {
     // arrays allocate INSIDE each task (a treeAggregate zero value would
-    // ship the multi-MB arrays in every task binary); cnt > 0 above
-    // guarantees treeReduce has at least one element
-    val (anchors, coverDiff) = bytes.mapPartitions { it =>
-      val anchorsP = new Array[Long](nx * ny)
-      val coverP = new Array[Long](w * (ny + 1))
-      it.foreach { b =>
-        val g = EWKB.read(b)
-        if (!g.isEmpty) {
-          val e = g.getEnvelopeInternal
-          val cx0 = cX(e.getMinX); val cx1 = cX(e.getMaxX)
-          val cy0 = cY(e.getMinY); val cy1 = cY(e.getMaxY)
-          coverP(cy0 * w + cx0) += 1
-          coverP(cy0 * w + cx1 + 1) -= 1
-          coverP((cy1 + 1) * w + cx0) -= 1
-          coverP((cy1 + 1) * w + cx1 + 1) += 1
-          val a = g.getCoordinate // a vertex ON the geometry
-          anchorsP(cY(a.y) * nx + cX(a.x)) += 1
-        }
-      }
-      Iterator.single((anchorsP, coverP))
+    // ship the multi-MB arrays in every task binary); every partition
+    // emits one pair, so treeReduce always has an element
+    val (anchors, coverDiff) = geomBytes(build, geom).mapPartitions { it =>
+      val acc = frame.accumulator()
+      it.foreach(b => acc.add(EWKB.read(b)))
+      Iterator.single((acc.anchors, acc.coverDiff))
     }.treeReduce({ case (a, b) =>
       var i = 0
       while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
@@ -302,40 +313,117 @@ object CellSummary {
       while (i < a._2.length) { a._2(i) += b._2(i); i += 1 }
       a
     }, depth = 2)
+    frame.summaryOf(anchors, frame.coverOf(coverDiff))
+  }
 
-    // coverage per cell = 2-D prefix sum of the difference array
-    val cover = new Array[Long](nx * ny)
-    var y = 0
-    while (y < ny) {
-      var x = 0
-      while (x < nx) {
-        var v = coverDiff(y * w + x)
-        if (x > 0) v += cover(y * nx + x - 1)
-        if (y > 0) v += cover((y - 1) * nx + x)
-        if (x > 0 && y > 0) v -= cover((y - 1) * nx + x - 1)
-        cover(y * nx + x) = v
-        x += 1
-      }
-      y += 1
-    }
-    def satOf(a: Array[Long]): Array[Long] = {
-      val s = new Array[Long](w * (ny + 1))
-      var yy = 0
-      while (yy < ny) {
-        var xx = 0
-        while (xx < nx) {
-          s((yy + 1) * w + xx + 1) = a(yy * nx + xx) +
-            s(yy * w + xx + 1) + s((yy + 1) * w + xx) - s(yy * w + xx)
-          xx += 1
+  private def geomBytes(build: DataFrame, geom: String) =
+    build.select(col(geom)).na.drop().rdd.map(_.getAs[Array[Byte]](0))
+
+  /** The summary grid: origin, square cell edge `h`, cells per axis, and
+    * the world rectangle's max corner. [[around]] sizes it over a data
+    * bbox with one cell of headroom per side, so rows appended later
+    * from the same region still land inside it and merge through
+    * [[CellSummary.plus]]. */
+  private[graft] final case class Frame(x0: Double, y0: Double, h: Double,
+      nx: Int, ny: Int, x1: Double, y1: Double) {
+
+    @inline def cX(x: Double): Int =
+      math.min(nx - 1, math.max(0, math.floor((x - x0) / h).toInt))
+    @inline def cY(y: Double): Int =
+      math.min(ny - 1, math.max(0, math.floor((y - y0) / h).toInt))
+
+    /** Whether `e` lies inside the world rectangle, so its rows
+      * accumulate exactly as a pass over the whole frame would. */
+    def holds(e: Envelope): Boolean = !e.isNull &&
+      e.getMinX >= x0 && e.getMaxX <= x1 && e.getMinY >= y0 && e.getMaxY <= y1
+
+    def accumulator(): Accumulator = new Accumulator(this)
+
+    /** Per-cell coverage: the 2-D prefix sum of a difference array. */
+    def coverOf(coverDiff: Array[Long]): Array[Long] = {
+      val w = nx + 1
+      val cover = new Array[Long](nx * ny)
+      var y = 0
+      while (y < ny) {
+        var x = 0
+        while (x < nx) {
+          var v = coverDiff(y * w + x)
+          if (x > 0) v += cover(y * nx + x - 1)
+          if (y > 0) v += cover((y - 1) * nx + x)
+          if (x > 0 && y > 0) v -= cover((y - 1) * nx + x - 1)
+          cover(y * nx + x) = v
+          x += 1
         }
-        yy += 1
+        y += 1
       }
-      s
+      cover
     }
-    val occ = (for (yy <- 0 until ny; xx <- 0 until nx
-                    if cover(yy * nx + xx) > 0)
-      yield (xx.toLong << 32) | (yy.toLong & 0xffffffffL)).toArray
-    Some(CellSummary(mnx, mny, h, nx, ny, mxx, mxy,
-      satOf(anchors), satOf(cover), anchors.sum, occ))
+
+    /** The summary of per-cell anchor and coverage counts: both
+      * summed-area tables and the occupied-cell list. */
+    def summaryOf(anchors: Array[Long], cover: Array[Long]): CellSummary = {
+      val w = nx + 1
+      def satOf(a: Array[Long]): Array[Long] = {
+        val s = new Array[Long](w * (ny + 1))
+        var yy = 0
+        while (yy < ny) {
+          var xx = 0
+          while (xx < nx) {
+            s((yy + 1) * w + xx + 1) = a(yy * nx + xx) +
+              s(yy * w + xx + 1) + s((yy + 1) * w + xx) - s(yy * w + xx)
+            xx += 1
+          }
+          yy += 1
+        }
+        s
+      }
+      val occ = (for (yy <- 0 until ny; xx <- 0 until nx
+                      if cover(yy * nx + xx) > 0)
+        yield (xx.toLong << 32) | (yy.toLong & 0xffffffffL)).toArray
+      CellSummary(x0, y0, h, nx, ny, x1, y1,
+        satOf(anchors), satOf(cover), anchors.sum, occ)
+    }
+  }
+
+  private[graft] object Frame {
+    /** The frame over data bbox (mnx, mny)–(mxx, mxy): padded by one
+      * summary cell (extent/grid) on each side, then cut into square
+      * cells, at most `grid` per axis. Without the headroom an append
+      * drawn from the same region sets a new extreme by a hair and
+      * escapes the frame. A single-point bbox gets a unit cell. */
+    def around(mnx: Double, mny: Double, mxx: Double, mxy: Double,
+        grid: Int): Frame = {
+      val ext0 = math.max(mxx - mnx, mxy - mny)
+      val pad = if (ext0 > 0) ext0 / grid else 0.5
+      val (x0, y0, x1, y1) = (mnx - pad, mny - pad, mxx + pad, mxy + pad)
+      val ext = math.max(x1 - x0, y1 - y0)
+      val h = if (ext0 > 0) ext / grid else ext
+      Frame(x0, y0, h,
+        math.max(1, math.min(grid, math.ceil((x1 - x0) / h).toInt)),
+        math.max(1, math.min(grid, math.ceil((y1 - y0) / h).toInt)), x1, y1)
+    }
+  }
+
+  /** Per-row accumulation on a [[Frame]]: each non-empty row adds one
+    * anchor at the cell of its first vertex and its envelope's corners
+    * to the coverage difference array. The one copy both the store-wide
+    * pass and the append merge run. */
+  private[graft] final class Accumulator(f: Frame) {
+    val anchors = new Array[Long](f.nx * f.ny)
+    val coverDiff = new Array[Long]((f.nx + 1) * (f.ny + 1))
+
+    def add(g: Geometry): Unit =
+      if (!g.isEmpty) {
+        val w = f.nx + 1
+        val e = g.getEnvelopeInternal
+        val cx0 = f.cX(e.getMinX); val cx1 = f.cX(e.getMaxX)
+        val cy0 = f.cY(e.getMinY); val cy1 = f.cY(e.getMaxY)
+        coverDiff(cy0 * w + cx0) += 1
+        coverDiff(cy0 * w + cx1 + 1) -= 1
+        coverDiff((cy1 + 1) * w + cx0) -= 1
+        coverDiff((cy1 + 1) * w + cx1 + 1) += 1
+        val a = g.getCoordinate // a vertex ON the geometry
+        anchors(f.cY(a.y) * f.nx + f.cX(a.x)) += 1
+      }
   }
 }

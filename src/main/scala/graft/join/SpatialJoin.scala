@@ -363,6 +363,61 @@ object SpatialJoin {
     }
   }
 
+  /** The count an `Observation` reports for a job that has finished.
+    * Spark delivers observed metrics through the listener bus after the
+    * job ends, normally within milliseconds; the wait is bounded, and
+    * past it `recount` runs instead (a count job, or a bound the caller
+    * already holds), so a lost delivery costs time but never hangs the
+    * caller or skews its bound. The one helper behind every write-time
+    * row bound (the dedup stores' bucket rows, the spatial stores' cell
+    * rows). */
+  private[graft] def observedRows(obs: org.apache.spark.sql.Observation,
+      recount: => Long): Long =
+    try scala.concurrent.Await.result(obs.future, ObservedMetricsWait).getLong(0)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"observed row count not delivered within $ObservedMetricsWait; " +
+            "falling back to a recount")
+        recount
+    }
+
+  private val ObservedMetricsWait = scala.concurrent.duration.Duration(10, "s")
+
+  /** Driver-memory bound on a local frame the spatial doors read on the
+    * driver instead of running a job (append statistics, probe samples,
+    * stable row ids): its rows are already in driver memory, but reading
+    * them builds a second copy as `Row`s and decodes each geometry on the
+    * driver's one thread — 2^16 rows or 8 MB keeps that copy small next
+    * to the default 1 GB driver heap and the pass in the tens of
+    * milliseconds. */
+  private val LocalFrameMaxRows = 1L << 16
+  private val LocalFrameMaxBytes = 8L << 20
+
+  /** The row count of `df` when its optimized plan is a `LocalRelation`:
+    * data the driver holds, so reading it runs no job. */
+  private def localRowCount(df: DataFrame): Option[Long] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if !l.isStreaming => Some(l.data.length.toLong)
+      case _ => None
+    }
+
+  /** The rows of a local `df` ([[localRowCount]]) within
+    * [[LocalFrameMaxRows]] and [[LocalFrameMaxBytes]], collected with no
+    * job. None otherwise. */
+  private[graft] def localRows(df: DataFrame): Option[Array[Row]] =
+    Option.when(localRowCount(df).exists(_ <= LocalFrameMaxRows) &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= LocalFrameMaxBytes)(
+      df.collect())
+
+  /** The non-null values of geometry column `geom` of a small local
+    * frame ([[localRows]]). */
+  private def localGeometries(df: DataFrame,
+      geom: String): Option[Array[Array[Byte]]] =
+    localRows(df.select(col(geom)))
+      .map(_.flatMap(r => Option(r.get(0).asInstanceOf[Array[Byte]])))
+
   private[graft] def renameClashes(right: DataFrame, leftCols: Seq[String], suffix: String): DataFrame =
     right.columns.foldLeft(right) { (df, c) =>
       if (leftCols.contains(c)) df.withColumnRenamed(c, c + suffix) else df
@@ -1503,12 +1558,16 @@ object SpatialJoin {
     // relation: a probe list, an ingest batch) expects under 50 sampled
     // rows, so it skips straight to the full scan: the rows the second
     // scan picks, in one ranked scan instead of two (a 200-249-row frame
-    // whose sample would have reached 50 now ranks all its rows)
+    // whose sample would have reached 50 now ranks all its rows). That
+    // scan ranks every row of the frame, so the ranking is moot: a local
+    // frame is read on the driver instead, with no job
     val small = sel.queryExecution.optimizedPlan.stats.rowCount.exists(_ < 250)
-    val sampled =
-      if (small) Array.empty[Array[Byte]]
-      else ranked(sel.sample(withReplacement = false, 0.2, 42))
-    val rows = if (sampled.length >= 50) sampled else ranked(sel)
+    val rows =
+      if (small) localGeometries(frame, geomCol).getOrElse(ranked(sel))
+      else {
+        val sampled = ranked(sel.sample(withReplacement = false, 0.2, 42))
+        if (sampled.length >= 50) sampled else ranked(sel)
+      }
     rows.iterator.map(b => EWKB.read(b).getEnvelopeInternal)
       .filterNot(_.isNull).toArray
   }
@@ -1696,8 +1755,24 @@ object SpatialJoin {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set (or
     * the dir has a TTL policy) — long-running apps doing repeated joins
     * should set it. An expensive upstream plan still executes exactly
-    * once. */
-  private[graft] def withStableIndex(df: DataFrame, name: String): DataFrame = {
+    * once.
+    *
+    * A small LOCAL frame ([[localRows]]: a probe list or batch the
+    * caller built on the driver) is numbered on the driver instead: its
+    * rows, positions 0..n-1 appended, become a new local relation. The
+    * ids are then data in the plan, so every consumer reads the same
+    * ones with no job and nothing to lose on an executor. */
+  private[graft] def withStableIndex(df: DataFrame, name: String): DataFrame =
+    localRows(df) match {
+      case Some(rows) =>
+        df.sparkSession.createDataFrame(
+          rows.iterator.zipWithIndex
+            .map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }.toSeq.asJava,
+          df.schema.add(StructField(name, LongType, nullable = false)))
+      case None => checkpointIndexed(df, name)
+    }
+
+  private def checkpointIndexed(df: DataFrame, name: String): DataFrame = {
     // NOT spread (r18 probe, kept for the record): repartitioning a
     // below-parallelism frame here before the checkpoint looked like a
     // free parallelism win, but the alternated A/B (ProbeJoinAB
@@ -1811,18 +1886,37 @@ object SpatialJoin {
   /** Sidecar histograms keep the heaviest [[SidecarCellCap]] cells — a
     * ~1.6 MB driver-side parse bound. */
   private val SidecarCellCap = 65536
+  /** Table property carrying an upper bound on the rows in any one grid
+    * cell of the store — the write-time bound that lets a write whose
+    * cells provably stay under [[HeavyCellMinRows]] stamp the empty,
+    * complete histogram without running the census. Stamped with the
+    * histogram, in the same statement: by the census itself (its exact
+    * maximum, observed on the census's own job), by an overwrite (its
+    * source-row count: a row emits each cell at most once) and by a
+    * local append (the prior bound plus the batch's largest per-cell
+    * count). Unset with the histogram, and before every append, so a
+    * write that fails midway leaves no bound. A perf hint like the
+    * histogram: writes made outside [[writeSpatialBucketed]] are not
+    * counted, and re-running [[stampCellHistogram]] re-measures both. */
+  val MaxCellRowsProp = "graft.spatial.maxCellRows"
   /** Table property marking a stamped [[CellSummary]] sidecar (the
     * unbounded nearest door's per-probe bound oracle) — written by
-    * [[stampCellSummary]], read by [[sjoinNearestBucketed]] when
-    * `maxDistance = ∞`. Value `v1:<nx>:<ny>:<totalAnchors>`; the read
-    * path verifies the sidecar's header against it, so a property and a
-    * sidecar from different stamps can never combine. UNLIKE the
-    * histogram (a perf-only hint), a stale summary is UNSOUND — its
-    * coverage filter would skip join cells only post-stamp rows occupy
-    * (dropping matches) and its anchors could claim rows an overwrite
-    * removed (under-reaching bounds) — so every [[writeSpatialBucketed]]
-    * write INVALIDATES the stamp; re-run [[stampCellSummary]] when the
-    * store settles. */
+    * [[stampCellSummary]] and by local appends, read by
+    * [[sjoinNearestBucketed]] when `maxDistance = ∞`. Value
+    * `v2:<grid>:<nx>:<ny>:<totalAnchors>:<files>`: the summary grid it
+    * was stamped at, the sidecar header it must match (so a property and
+    * a sidecar from different stamps can never combine), and a SHA-256
+    * fingerprint of the store's data files (relative path, length and
+    * mtime of every part file). UNLIKE the histogram (a perf-only hint),
+    * a stale summary is UNSOUND — its coverage filter would skip join
+    * cells only newer rows occupy (dropping matches) and its anchors
+    * could claim rows an overwrite removed (under-reaching bounds) — so
+    * the read side accepts a stamp only while the fingerprint matches
+    * the files the store holds NOW. Any write that adds, removes or
+    * rewrites a part file, through graft or not (a plain `INSERT INTO`,
+    * another engine), makes the stamp unreadable; the unbounded door
+    * then computes a summary per call until [[stampCellSummary]]
+    * re-stamps. */
   val CellSummaryProp = "graft.spatial.cellSummary"
   private[graft] val CellSummaryFile = "_graft_cell_summary.bin"
   /** Plan-choice threshold for the unbounded bucketed nearest door:
@@ -1841,7 +1935,24 @@ object SpatialJoin {
     * is wrong (larger cellSize), and the join says so. */
   private val MaxSaltedCells = 512
 
-  /** @param geoMetadata stamp the GeoParquet 1.1 `geo` payload into every
+  /** Write-time statistics ride the write instead of rescanning the
+    * store:
+    *  - the heavy-cell histogram needs a census only when the cell bound
+    *    ([[MaxCellRowsProp]]) can reach [[HeavyCellMinRows]]: an
+    *    overwrite bounds every cell by its source-row count (observed on
+    *    the write's own job), a small local append by the prior bound
+    *    plus the batch's largest per-cell count; under the floor the
+    *    empty, complete histogram is stamped with no job;
+    *  - an append whose batch is a small local relation ([[localRows]])
+    *    and whose every geometry lies inside the stamped summary's frame
+    *    adds the batch's anchors and coverage to a CURRENT
+    *    [[stampCellSummary]] stamp on the driver and restamps it once
+    *    the write lands, so the caller's `stampCellSummary` that follows
+    *    is a no-op. Any other write leaves the stamp unreadable (its file
+    *    fingerprint no longer matches), and `stampCellSummary`
+    *    recomputes it.
+    *
+    * @param geoMetadata stamp the GeoParquet 1.1 `geo` payload into every
     *   part footer (default ON since r9): the stats FOLD INTO the write
     *   itself via `Dataset.observe` — the one write-side scan computes
     *   types/srid/total-bounds as observed metrics, so stamping costs
@@ -1888,26 +1999,56 @@ object SpatialJoin {
             s"stamped for $prev")
       }
     }
-    // a stamped cell summary describes the EXACT pre-append row set —
-    // invalidate it BEFORE an append commits, not after: a driver crash
-    // between saveAsTable and a post-write unset would leave appended
-    // rows plus a still-mutually-consistent stale stamp, and every later
-    // unbounded join would silently drop matches near the appended
-    // region (review r16 #1). Unsetting first is conservative-safe: a
-    // failed append merely costs later joins a per-call recompute.
-    // Overwrite recreates the table (no stamp survives it) and
-    // ignore/error modes write nothing, so only the append path is at
-    // risk.
-    if (modeNorm == "append" && existedBefore)
-      invalidateCellSummary(spark0, tableId, table)
     val cs = cellSize
+    // an append reads what it carries forward BEFORE the write: the
+    // store's cell bound and summary stamp describe the pre-append
+    // files, and a small local batch's geometries come from the driver
+    // with no job
+    val appending = modeNorm == "append" && existedBefore
+    val priorBound =
+      if (!appending) None
+      else spark0.sessionState.catalog.getTableMetadata(tableId).properties
+        .get(MaxCellRowsProp).flatMap(v => scala.util.Try(v.toLong).toOption)
+    val batch: Option[Array[Array[Byte]]] =
+      if (!appending) None
+      else localGeometries(df, geom)
+    // the batch's largest per-cell row count, the same cells the write
+    // explodes to; None when a geometry does not decode (the write's own
+    // error then surfaces)
+    val batchCellMax: Option[Long] = batch.flatMap { rows =>
+      scala.util.Try {
+        val counts = scala.collection.mutable.HashMap.empty[Long, Long]
+        rows.foreach(b => gridCellsOf(b, cs).foreach(c =>
+          counts(c) = counts.getOrElse(c, 0L) + 1))
+        counts.valuesIterator.foldLeft(0L)(math.max)
+      }.toOption
+    }
+    // the summary merge: a stamp current for the pre-append files, and
+    // every batch geometry inside its frame
+    val merge: Option[(SummaryStamp, Array[Geometry])] = for {
+      rows <- batch
+      geoms <- scala.util.Try(rows.map(EWKB.read).filterNot(_.isEmpty)).toOption
+      prior <- readSummaryStamp(spark0, table)
+      if geoms.forall(g => prior.summary.frame.holds(g.getEnvelopeInternal))
+    } yield (prior, geoms)
+    // the cell bound goes before the write and comes back with the
+    // histogram after it: a write that fails in between leaves none
+    if (priorBound.isDefined)
+      try spark0.sql(s"ALTER TABLE ${quoteTable(table)} UNSET TBLPROPERTIES " +
+        s"IF EXISTS ('$MaxCellRowsProp')")
+      catch { case scala.util.control.NonFatal(_) => () }
     val cellsUdf = udf((b: Array[Byte]) => gridCellsOf(b, cs))
     val stamp = geoMetadata && modeNorm == "overwrite"
+    // a write that creates the store counts its source rows on the
+    // write's own job: n rows bound every cell at n
+    val creates = modeNorm == "overwrite" || !existedBefore
+    val counted = cellHistogram && creates
     val obs = new org.apache.spark.sql.Observation()
-    val source = if (stamp) {
-      val aggs = graft.io.GeoIO.geoStatsAggs(geom)
-      df.observe(obs, aggs.head, aggs.tail: _*)
-    } else df
+    val observed =
+      (if (counted) Seq(count(lit(1)).as("__graft_rows")) else Nil) ++
+        (if (stamp) graft.io.GeoIO.geoStatsAggs(geom) else Nil)
+    val source =
+      if (observed.isEmpty) df else df.observe(obs, observed.head, observed.tail: _*)
     source.withColumn(CellCol, explode(cellsUdf(col(geom))))
       .repartition(buckets, col(CellCol))
       .write.mode(mode)
@@ -1932,17 +2073,26 @@ object SpatialJoin {
       spark0.sql(
         s"ALTER TABLE $quoted SET TBLPROPERTIES " +
           s"('$CellSizeProp'='$cellSize', 'graft.spatial.geometry'='$geom')")
-      // heavy-cell histogram via the shared stamping door (one
-      // cell-column-only scan; bucketed by cell → the groupBy needs no
-      // exchange). On append the FULL table is re-measured — counts must
-      // describe all rows on the grid, not one batch. The stamp is an
-      // optimization hint: if it fails (e.g. an unwritable store
-      // location for the sidecar), the store — already fully written —
-      // must not fail with it (same policy as the geo-footer stamp
-      // below); joins degrade to the unsalted plan.
+      // heavy-cell histogram: counts must describe all rows on the grid,
+      // not one batch. A write whose cell bound stays under the floor
+      // stamps the empty histogram the census would find, with no job;
+      // otherwise the shared stamping door re-measures the full table
+      // (one cell-column-only scan; bucketed by cell → the groupBy needs
+      // no exchange). The stamp is an optimization hint: if it fails
+      // (e.g. an unwritable store location for the sidecar), the store —
+      // already fully written — must not fail with it (same policy as
+      // the geo-footer stamp below); joins degrade to the unsalted plan.
       if (cellHistogram) {
-        try stampCellHistogram(spark0, table)
-        catch {
+        try {
+          val bound =
+            if (creates) Some(observedRows(obs, spark0.table(table).count()))
+            else for (p <- priorBound; m <- batchCellMax) yield p + m
+          bound match {
+            case Some(n) if n < HeavyCellMinRows =>
+              stampHistogram(spark0, table, Array.empty, truncated = false, n)
+            case _ => stampCellHistogram(spark0, table)
+          }
+        } catch {
           case scala.util.control.NonFatal(e) =>
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"writeSpatialBucketed: store $table written but its cell " +
@@ -1951,18 +2101,27 @@ object SpatialJoin {
             // an APPEND that fails here would otherwise leave the previous
             // stamp in place — joins would size salt groups from pre-append
             // counts, worse than no histogram. Best-effort clear.
-            try spark0.sql(s"ALTER TABLE $quoted UNSET TBLPROPERTIES " +
-              s"IF EXISTS ('$CellHistogramProp')")
-            catch { case scala.util.control.NonFatal(_) => () }
+            unsetHistogram(spark0, table)
         }
       } else {
         // explicit opt-out (skips the measurement scan on writes whose
         // joins will never salt — and simulates a pre-r14 store for the
         // backfill path): a STALE stamp describing pre-write rows is
         // worse than none, so clear any.
-        try spark0.sql(s"ALTER TABLE $quoted UNSET TBLPROPERTIES " +
-          s"IF EXISTS ('$CellHistogramProp')")
-        catch { case scala.util.control.NonFatal(_) => () }
+        unsetHistogram(spark0, table)
+      }
+      // a small in-frame append carries the summary forward on the
+      // driver; any other write leaves the stamp unreadable (its file
+      // fingerprint no longer matches) until stampCellSummary recomputes
+      merge.foreach { case (prior, geoms) =>
+        try mergeSummaryStamp(spark0, table, prior, geoms)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"writeSpatialBucketed: store $table written but its cell " +
+                s"summary was not carried forward (stampCellSummary " +
+                s"recomputes it): ${e.getMessage}")
+        }
       }
     }
     // footer stats describe ONE batch: stamping an append would rewrite
@@ -2020,14 +2179,30 @@ object SpatialJoin {
     require(df.columns.contains(CellCol),
       s"stampCellHistogram: $table has no $CellCol column — not a " +
         "writeSpatialBucketed store")
-    val quoted = quoteTable(table)
-    val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val (kept, truncated) = heavyCellCensus(df)
+    // the exact largest cell rides the census's own job; if its delivery
+    // is lost, the heaviest kept count (or the floor, when none is kept)
+    // bounds every cell just as well
+    val obs = new org.apache.spark.sql.Observation()
+    val (kept, truncated) = heavyCellCensus(df, Some(obs))
+    val maxRows = observedRows(obs,
+      kept.headOption.fold(HeavyCellMinRows - 1)(_.getLong(1)))
     if (truncated)
       log.warn(s"stampCellHistogram: $table has more than $SidecarCellCap " +
         s"cells with >=$HeavyCellMinRows rows — the histogram keeps the " +
         s"heaviest $SidecarCellCap; joins cannot hot-salt the dropped " +
         "ones. A grid this uniformly dense wants a larger cellSize.")
+    stampHistogram(spark, table, kept, truncated, maxRows)
+  }
+
+  /** Stamp a measured histogram — `kept` (cell, count) rows heaviest
+    * first, as [[heavyCellCensus]] returns them — and the cell bound
+    * `maxRows`, in one statement (see [[stampCellHistogram]] for the
+    * inline/sidecar split and the read-back). */
+  private def stampHistogram(spark: org.apache.spark.sql.SparkSession,
+      table: String, kept: Array[Row], truncated: Boolean,
+      maxRows: Long): Unit = {
+    val quoted = quoteTable(table)
+    val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
     def csvOf(rows: Array[Row], trunc: Boolean): String =
       rows.map(row => s"${row.getLong(0)}:${row.getLong(1)}").mkString(",") +
         (if (trunc) ",+" else "")
@@ -2052,7 +2227,7 @@ object SpatialJoin {
         CellHistogramFileMarker
       }
     spark.sql(s"ALTER TABLE $quoted SET TBLPROPERTIES " +
-      s"('$CellHistogramProp'='$payload')")
+      s"('$CellHistogramProp'='$payload', '$MaxCellRowsProp'='$maxRows')")
     // read-back round trip (ADVICE r14): an erroring ALTER throws above,
     // but a metastore that truncates at its PARAM_VALUE limit succeeds
     // and stores a cut-mid-entry payload — exactly what the parser
@@ -2060,9 +2235,7 @@ object SpatialJoin {
     val back = spark.sessionState.catalog.getTableMetadata(tableId)
       .properties.get(CellHistogramProp)
     if (!back.contains(payload)) {
-      try spark.sql(s"ALTER TABLE $quoted UNSET TBLPROPERTIES " +
-        s"IF EXISTS ('$CellHistogramProp')")
-      catch { case scala.util.control.NonFatal(_) => () }
+      unsetHistogram(spark, table)
       throw new IllegalStateException(
         s"stampCellHistogram: $table histogram property did not round-trip " +
           s"(stamped ${payload.length} chars, read back " +
@@ -2082,46 +2255,12 @@ object SpatialJoin {
     }
   }
 
-  /** Clear a [[stampCellSummary]] stamp (property + sidecar). The read
-    * side accepts a stamp only when property AND sidecar agree, so
-    * clearing EITHER suffices; this throws only when BOTH attempts fail
-    * (a broken metastore/filesystem) — the caller must not proceed with
-    * a write that would leave a silently-stale, mutually-consistent
-    * stamp behind. */
-  private def invalidateCellSummary(spark: org.apache.spark.sql.SparkSession,
-      tableId: org.apache.spark.sql.catalyst.TableIdentifier,
-      table: String): Unit = {
-    val stamped =
-      try spark.sessionState.catalog.getTableMetadata(tableId)
-        .properties.contains(CellSummaryProp)
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (stamped) {
-      val quoted = quoteTable(table)
-      val unsetOk =
-        try {
-          spark.sql(s"ALTER TABLE $quoted UNSET TBLPROPERTIES " +
-            s"IF EXISTS ('$CellSummaryProp')")
-          true
-        } catch { case scala.util.control.NonFatal(_) => false }
-      val delOk =
-        try {
-          val loc = spark.sessionState.catalog.getTableMetadata(tableId).location
-          val p = new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(loc), CellSummaryFile)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(p)) fs.delete(p, false)
-          true
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (!unsetOk && !delOk)
-        throw new IllegalStateException(
-          s"writeSpatialBucketed: $table carries a cell summary stamp " +
-            s"that could not be invalidated before the write — appending " +
-            s"would make it stale and every later unbounded nearest join " +
-            s"UNSOUND; drop the '$CellSummaryProp' property or delete " +
-            s"$CellSummaryFile manually, then retry (stampCellSummary " +
-            "refreshes it afterwards)")
-    }
-  }
+  /** Best-effort clear of the histogram and the cell bound together. */
+  private def unsetHistogram(spark: org.apache.spark.sql.SparkSession,
+      table: String): Unit =
+    try spark.sql(s"ALTER TABLE ${quoteTable(table)} UNSET TBLPROPERTIES " +
+      s"IF EXISTS ('$CellHistogramProp', '$MaxCellRowsProp')")
+    catch { case scala.util.control.NonFatal(_) => () }
 
   /** One copy per stored row: keep only the exploded copy whose cell
     * owns the row's envelope-min corner — the same floor packing the
@@ -2145,22 +2284,25 @@ object SpatialJoin {
     * once, at the cell owning its envelope-min corner — identical to a
     * summary of the pre-explosion frame) and lands in a
     * [[CellSummaryFile]] binary sidecar at the store location; the
-    * [[CellSummaryProp]] property carries `v1:<nx>:<ny>:<totalAnchors>`
-    * and the stamp is read back and verified end-to-end (property round
-    * trip + sidecar re-parse) — a failed round trip unsets everything
-    * and throws, leaving no corrupt stamp behind. A store with no
-    * usable geometry clears any stale stamp and stamps nothing (the
-    * unbounded door then has no matches by definition).
+    * [[CellSummaryProp]] property carries the v2 payload
+    * `v2:<grid>:<nx>:<ny>:<totalAnchors>:<files>` — the `grid` asked
+    * for, the sidecar's header, and the fingerprint of the store's data
+    * files taken BEFORE the pass (a write landing during it leaves a
+    * stamp that no longer matches: unreadable, never stale). The stamp
+    * is read back and verified end-to-end (property round trip +
+    * sidecar re-parse) — a failed round trip unsets everything and
+    * throws, leaving no corrupt stamp behind. A store with no usable
+    * geometry clears any stale stamp and stamps nothing (the unbounded
+    * door then has no matches by definition).
     *
-    * Every [[writeSpatialBucketed]] write INVALIDATES the stamp (see
-    * [[CellSummaryProp]] — staleness is unsound here, not merely
-    * unhelpful); re-stamp after the store settles. Writes made OUTSIDE
-    * writeSpatialBucketed (plain `INSERT INTO`, a foreign engine
-    * touching the files) are NOT detected — the stamp and sidecar stay
-    * mutually consistent but describe the old rows, and a stale
-    * summary's coverage filter silently drops matches; treat the
-    * contract as "graft invalidates graft's writes" and re-stamp after
-    * any foreign write. */
+    * A stamp already CURRENT — same `grid`, fingerprint matching the
+    * files the store holds now — is left as it is, and the call runs no
+    * job: a small local append through [[writeSpatialBucketed]] carries
+    * the summary forward itself, so re-stamping after every append only
+    * costs a pass when the append could not. Any other change to the
+    * files, through graft or not (a plain `INSERT INTO`, another engine
+    * touching the parts), makes the stamp unreadable, and the next call
+    * here recomputes it. */
   def stampCellSummary(spark: org.apache.spark.sql.SparkSession,
       table: String, grid: Int = CellSummary.DefaultGrid): Unit = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -2179,94 +2321,189 @@ object SpatialJoin {
     val geom = meta.properties.getOrElse("graft.spatial.geometry", "geometry")
     require(df.columns.contains(geom),
       s"stampCellSummary: $table has no '$geom' geometry column")
-    val quoted = quoteTable(table)
-    def sidecarPath() = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(meta.location), CellSummaryFile)
-    def clear(): Unit = {
-      try spark.sql(s"ALTER TABLE $quoted UNSET TBLPROPERTIES " +
-        s"IF EXISTS ('$CellSummaryProp')")
-      catch { case scala.util.control.NonFatal(_) => () }
-      try {
-        val p = sidecarPath()
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(p)) fs.delete(p, false)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    if (readSummaryStamp(spark, table).exists(_.grid == grid)) return
+    val files = storeFiles(spark, meta.location)
     CellSummary.compute(storeOwnerRows(df, geom, cs), geom, grid) match {
       case None =>
-        clear()
+        clearSummaryStamp(spark, table, meta.location)
         log.info(s"stampCellSummary: $table has no usable geometry — " +
           "nothing stamped (unbounded nearest joins against it have no " +
           "matches by definition)")
       case Some(sum) =>
-        val p = sidecarPath()
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val out = new java.io.DataOutputStream(
-          new java.io.BufferedOutputStream(fs.create(p, true)))
-        try CellSummary.writeTo(sum, out) finally out.close()
-        val payload = s"v1:${sum.nx}:${sum.ny}:${sum.totalAnchors}"
-        spark.sql(s"ALTER TABLE $quoted SET TBLPROPERTIES " +
-          s"('$CellSummaryProp'='$payload')")
-        // end-to-end read-back: property round trip (metastore value
-        // limits can't bite a ~30-char payload, but the discipline is
-        // free) AND a full sidecar re-parse against it — the exact
-        // check every later join will run
-        val ok =
-          try {
-            spark.sessionState.catalog.getTableMetadata(tableId)
-              .properties.get(CellSummaryProp).contains(payload) && {
-              val in = new java.io.DataInputStream(
-                new java.io.BufferedInputStream(fs.open(p)))
-              val back = try CellSummary.readFrom(in) finally in.close()
-              back.nx == sum.nx && back.ny == sum.ny &&
-                back.totalAnchors == sum.totalAnchors
-            }
-          } catch { case scala.util.control.NonFatal(_) => false }
-        if (!ok) {
-          clear()
-          throw new IllegalStateException(
-            s"stampCellSummary: $table summary stamp did not round-trip " +
-              "(property or sidecar readback failed); stamp cleared, " +
-              "unbounded joins will compute the summary per call")
-        }
+        writeSummaryStamp(spark, table, meta.location, grid, sum, files)
     }
   }
 
-  /** Read a [[stampCellSummary]] stamp: Some only when the property
-    * parses AND the sidecar parses AND the two agree — any failure
-    * degrades to None with a warning (the unbounded door then computes
-    * a fresh summary for the call: a correctness-neutral slow path,
-    * unlike the histogram's perf-only degradation). The mutual-agreement
-    * check catches graft's own mid-write windows, NOT foreign writes
-    * (plain `INSERT INTO` leaves a consistent-but-stale pair) — see
-    * [[stampCellSummary]]'s contract note. */
+  /** A readable [[stampCellSummary]] stamp: the summary, the grid it was
+    * stamped at, and the data files its fingerprint matched. */
+  private final case class SummaryStamp(grid: Int, summary: CellSummary,
+      files: Seq[(String, Long, Long)])
+
+  /** The data files under a store location, sorted: (path relative to
+    * the location, length, mtime) of every file a scan reads — names
+    * starting with `_` or `.` (the sidecars, `_SUCCESS`, checksums,
+    * staging dirs) are not data to Spark and are left out. Walked with
+    * `listStatus`, which reads only names, lengths and mtimes:
+    * `listFiles` builds `LocatedFileStatus`es, which on the local file
+    * system load each file's owner and permissions through a forked
+    * shell, about 7 ms a file. */
+  private def storeFiles(spark: org.apache.spark.sql.SparkSession,
+      location: java.net.URI): Seq[(String, Long, Long)] = {
+    val root = new org.apache.hadoop.fs.Path(location)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    def walk(dir: org.apache.hadoop.fs.Path, prefix: String): Unit =
+      fs.listStatus(dir).foreach { f =>
+        val name = f.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".")) {
+          if (f.isDirectory) walk(f.getPath, prefix + name + "/")
+          else out += ((prefix + name, f.getLen, f.getModificationTime))
+        }
+      }
+    if (fs.exists(root)) walk(root, "")
+    out.sorted.toSeq
+  }
+
+  /** SHA-256 (hex) of a [[storeFiles]] listing. */
+  private def fingerprintOf(files: Seq[(String, Long, Long)]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.foreach { case (n, len, mtime) =>
+      md.update(s"$n\t$len\t$mtime\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  private def summarySidecar(location: java.net.URI) =
+    new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(location), CellSummaryFile)
+
+  /** Best-effort clear of a summary stamp (property + sidecar). */
+  private def clearSummaryStamp(spark: org.apache.spark.sql.SparkSession,
+      table: String, location: java.net.URI): Unit = {
+    try spark.sql(s"ALTER TABLE ${quoteTable(table)} UNSET TBLPROPERTIES " +
+      s"IF EXISTS ('$CellSummaryProp')")
+    catch { case scala.util.control.NonFatal(_) => () }
+    try {
+      val p = summarySidecar(location)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(p)) fs.delete(p, false)
+    } catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  /** Write `sum` as the store's summary stamp for data files `files`:
+    * the sidecar first, then the property, then the end-to-end
+    * read-back. A crash between the two writes leaves a sidecar whose
+    * header the old property does not match — unreadable, never mixed. */
+  private def writeSummaryStamp(spark: org.apache.spark.sql.SparkSession,
+      table: String, location: java.net.URI, grid: Int, sum: CellSummary,
+      files: Seq[(String, Long, Long)]): Unit = {
+    val p = summarySidecar(location)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = new java.io.DataOutputStream(
+      new java.io.BufferedOutputStream(fs.create(p, true)))
+    try CellSummary.writeTo(sum, out) finally out.close()
+    val payload = s"v2:$grid:${sum.nx}:${sum.ny}:${sum.totalAnchors}:" +
+      fingerprintOf(files)
+    spark.sql(s"ALTER TABLE ${quoteTable(table)} SET TBLPROPERTIES " +
+      s"('$CellSummaryProp'='$payload')")
+    // end-to-end read-back: property round trip (metastore value limits
+    // can't bite a ~100-char payload, but the discipline is free) AND a
+    // full sidecar re-parse against it — the exact check every later
+    // join will run
+    val ok =
+      try {
+        val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
+        spark.sessionState.catalog.getTableMetadata(tableId)
+          .properties.get(CellSummaryProp).contains(payload) && {
+          val in = new java.io.DataInputStream(
+            new java.io.BufferedInputStream(fs.open(p)))
+          val back = try CellSummary.readFrom(in) finally in.close()
+          back.nx == sum.nx && back.ny == sum.ny &&
+            back.totalAnchors == sum.totalAnchors
+        }
+      } catch { case scala.util.control.NonFatal(_) => false }
+    if (!ok) {
+      clearSummaryStamp(spark, table, location)
+      throw new IllegalStateException(
+        s"stampCellSummary: $table summary stamp did not round-trip " +
+          "(property or sidecar readback failed); stamp cleared, " +
+          "unbounded joins will compute the summary per call")
+    }
+  }
+
+  /** Spark names every part file of one write with that write's job
+    * UUID. */
+  private val WriteIdPattern =
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+
+  /** Restamp `prior` with an append's `rows` added, once the append has
+    * landed. The files now on disk must be the prior stamp's files, each
+    * unchanged, plus files of ONE write (one job UUID in their names) —
+    * anything else means another writer got in, and the stamp is left to
+    * go unreadable. */
+  private def mergeSummaryStamp(spark: org.apache.spark.sql.SparkSession,
+      table: String, prior: SummaryStamp, rows: Array[Geometry]): Unit = {
+    val location = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).location
+    val after = storeFiles(spark, location)
+    val before = prior.files.toSet
+    val writeIds = after.filterNot(before).map(f => WriteIdPattern.findFirstIn(f._1))
+    if (before.subsetOf(after.toSet) && writeIds.forall(_.isDefined) &&
+        writeIds.distinct.size <= 1)
+      writeSummaryStamp(spark, table, location, prior.grid,
+        prior.summary.plus(rows.iterator), after)
+    else org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"writeSpatialBucketed: $table changed outside this append — its " +
+        "cell summary is not carried forward")
+  }
+
+  /** Read a [[stampCellSummary]] stamp: Some only when the v2 property
+    * parses, its file fingerprint matches the store's files NOW, the
+    * sidecar parses, and the sidecar's header matches the property — any
+    * failure degrades to None (the unbounded door then computes a fresh
+    * summary for the call: a correctness-neutral slow path, unlike the
+    * histogram's perf-only degradation). A fingerprint mismatch is the
+    * normal state after a write the stamp was not carried through, and
+    * logs at info; a corrupt stamp warns. */
   private[graft] def readCellSummary(spark: org.apache.spark.sql.SparkSession,
-      table: String): Option[CellSummary] = {
+      table: String): Option[CellSummary] =
+    readSummaryStamp(spark, table).map(_.summary)
+
+  private def readSummaryStamp(spark: org.apache.spark.sql.SparkSession,
+      table: String): Option[SummaryStamp] = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     try {
       val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
       val meta = spark.sessionState.catalog.getTableMetadata(tableId)
       meta.properties.get(CellSummaryProp).flatMap { payload =>
-        val parts = payload.split(':')
-        if (parts.length != 4 || parts(0) != "v1") {
-          log.warn(s"readCellSummary: $table carries an unreadable " +
-            s"$CellSummaryProp ('$payload') — ignoring it; re-run " +
-            "stampCellSummary")
-          None
-        } else {
-          val p = new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(meta.location), CellSummaryFile)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          val in = new java.io.DataInputStream(
-            new java.io.BufferedInputStream(fs.open(p)))
-          val sum = try CellSummary.readFrom(in) finally in.close()
-          if (sum.nx == parts(1).toInt && sum.ny == parts(2).toInt &&
-              sum.totalAnchors == parts(3).toLong) Some(sum)
-          else {
-            log.warn(s"readCellSummary: $table sidecar does not match " +
-              "its property stamp — ignoring both; re-run stampCellSummary")
+        payload.split(':') match {
+          case Array("v2", grid, nx, ny, total, print) =>
+            val files = storeFiles(spark, meta.location)
+            if (fingerprintOf(files) != print) {
+              log.info(s"readCellSummary: $table changed since its cell " +
+                "summary was stamped — ignoring the stamp; re-run " +
+                "stampCellSummary")
+              None
+            } else {
+              val p = summarySidecar(meta.location)
+              val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+              val in = new java.io.DataInputStream(
+                new java.io.BufferedInputStream(fs.open(p)))
+              val sum = try CellSummary.readFrom(in) finally in.close()
+              if (sum.nx == nx.toInt && sum.ny == ny.toInt &&
+                  sum.totalAnchors == total.toLong)
+                Some(SummaryStamp(grid.toInt, sum, files))
+              else {
+                log.warn(s"readCellSummary: $table sidecar does not match " +
+                  "its property stamp — ignoring both; re-run stampCellSummary")
+                None
+              }
+            }
+          case _ =>
+            log.warn(s"readCellSummary: $table carries an unreadable " +
+              s"$CellSummaryProp ('$payload') — ignoring it; re-run " +
+              "stampCellSummary")
             None
-          }
         }
       }
     } catch {
@@ -2744,9 +2981,14 @@ object SpatialJoin {
     * producer of the floor/cap/ordering triple [[CellHist.absentBound]]
     * relies on — [[stampCellHistogram]] (store stamps) and
     * [[probeCellHist]] (join-time probe census) both ride it, so the two
-    * can never desynchronize. */
-  private def heavyCellCensus(df: DataFrame): (Array[Row], Boolean) = {
-    val rows = df.groupBy(col(CellCol)).count()
+    * can never desynchronize. With `largest`, the census also reports
+    * the exact row count of its heaviest cell — kept or not — through
+    * that `Observation`, on the same job. */
+  private def heavyCellCensus(df: DataFrame,
+      largest: Option[org.apache.spark.sql.Observation] = None): (Array[Row], Boolean) = {
+    val counts = df.groupBy(col(CellCol)).count()
+    val rows = largest.fold(counts)(o =>
+        counts.observe(o, coalesce(max(col("count")), lit(0L))))
       .filter(col("count") >= HeavyCellMinRows)
       .orderBy(col("count").desc, col(CellCol))
       .limit(SidecarCellCap + 1).collect()
@@ -2942,10 +3184,18 @@ object SpatialJoin {
     // histogram read (catalog + possible sidecar parse) happens once
     // per JOIN, not once per escalation pass (review r16 #4).
     lazy val storeHist = heavyCellsOf(spark, buildTable)
+    // a local probe's row count bounds its rows in any cell (each probe
+    // emits a cell at most once); against the store's largest possible
+    // cell it shows when no cell can reach the pair bound, and the
+    // census then has nothing to salt
+    val probeRows = localRowCount(probe)
     def hotOf(probeCells: DataFrame,
         census: Option[ProbeCensus]): Map[Long, (Long, Long)] =
       if (!saltHotCells) Map.empty else {
         storeHist match {
+          case Some(bh) if probeRows.exists(n => !pastPairBound(n,
+              bh.cells.values.foldLeft(bh.absentBound)(math.max), hotPairsBound)) =>
+            Map.empty
           case Some(bh) =>
             val ph = census.map(_.hist).getOrElse(probeCellHist(probeCells))
             if ((ph.truncated || bh.truncated) &&
@@ -3172,10 +3422,15 @@ object SpatialJoin {
     * the stale directory otherwise. */
   def dropBucketedTable(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val wh = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(wh)) fs.delete(wh, true)
+    spark.sql(s"DROP TABLE IF EXISTS ${quoteTable(table)}")
+    // the location saveAsTable would claim: `<warehouse>/t` in the
+    // default database, `<db location>/t` (`…/db.db/t`) in another
+    val catalog = spark.sessionState.catalog
+    val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    if (catalog.databaseExists(id.database.getOrElse(catalog.getCurrentDatabase))) {
+      val loc = new org.apache.hadoop.fs.Path(catalog.defaultTablePath(id))
+      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(loc)) fs.delete(loc, true)
+    }
   }
 }

@@ -516,26 +516,8 @@ object Dedup {
   private def snapCounted(df: DataFrame): (DataFrame, Long) = {
     val obs = org.apache.spark.sql.Observation()
     val snap = snapFrame(df.observe(obs, count(lit(1)).as("n")))
-    (snap, observedRows(obs, snap.count()))
+    (snap, graft.join.SpatialJoin.observedRows(obs, snap.count()))
   }
-
-  /** The count an `Observation` reports for a job that has finished.
-    * Spark delivers observed metrics through the listener bus after the
-    * job ends, normally within milliseconds; the wait is bounded, and
-    * past it `recount` runs one count job instead, so a lost delivery
-    * costs time but never hangs the door or skews its bound. */
-  private def observedRows(obs: org.apache.spark.sql.Observation,
-      recount: => Long): Long =
-    try scala.concurrent.Await.result(obs.future, ObservedMetricsWait).getLong(0)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"observed row count not delivered within $ObservedMetricsWait; " +
-            "counting with a separate job")
-        recount
-    }
-
-  private val ObservedMetricsWait = scala.concurrent.duration.Duration(10, "s")
 
   /** Fraction of signature positions agreeing — the MinHash jaccard
     * estimate. ONE implementation for the self-join and store doors
@@ -765,7 +747,8 @@ object Dedup {
       case "overwrite" =>
         val obs = org.apache.spark.sql.Observation()
         save(rows.observe(obs, count(lit(1)).as("n")))
-        (None, Some(observedRows(obs, rows.sparkSession.table(sibling).count())))
+        (None, Some(graft.join.SpatialJoin.observedRows(obs,
+          rows.sparkSession.table(sibling).count())))
       case _ =>
         save(rows)
         (None, None)

@@ -6,24 +6,38 @@ import org.apache.spark.sql.SparkSession
 object SparkJobs {
 
   /** Spark jobs that `body` runs, seen by a listener on a job group: one
-    * call-site string (the stage details, a stack trace) per job. A
-    * sentinel job outside the group runs last: the listener bus
-    * delivers in order, so once the sentinel's end arrives every job of
-    * the group has been seen. */
+    * call-site string per job. A job that runs for a SQL query (its
+    * `spark.sql.execution.id` property) starts with that query's call
+    * site, the `details` of its `SparkListenerSQLExecutionStart` — the
+    * only place an adaptive query's stage jobs, whose own stages read
+    * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java`,
+    * name the call that issued them; the stage details (a stack trace)
+    * follow. A sentinel job outside the group runs last: the listener
+    * bus delivers in order, so once the sentinel's end arrives every job
+    * of the group has been seen. */
   def jobsOf[T](spark: SparkSession, group: String)(body: => T): (T, Seq[String]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val sentinel = group + "-sentinel"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinelId = new java.util.concurrent.atomic.AtomicInteger(-1)
     val drained = new java.util.concurrent.CountDownLatch(1)
+    val queries = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: SparkListenerSQLExecutionStart => queries.put(q.executionId, q.details)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.stageInfos.map(_.details).mkString("\n"))
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          val query = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => Option(queries.get(id.toLong)))
+          jobs.add((query.toSeq ++ e.stageInfos.map(_.details)).mkString("\n"))
+        }
         if (props.exists(_.getProperty("spark.job.description") == sentinel))
           sentinelId.set(e.jobId)
       }
