@@ -384,15 +384,19 @@ object SpatialJoin {
 
   private val ObservedMetricsWait = scala.concurrent.duration.Duration(10, "s")
 
-  /** Driver-memory bound on a local frame the spatial doors read on the
-    * driver instead of running a job (append statistics, probe samples,
-    * stable row ids): its rows are already in driver memory, but reading
-    * them builds a second copy as `Row`s and decodes each geometry on the
-    * driver's one thread — 2^16 rows or 8 MB keeps that copy small next
-    * to the default 1 GB driver heap and the pass in the tens of
-    * milliseconds. */
-  private val LocalFrameMaxRows = 1L << 16
-  private val LocalFrameMaxBytes = 8L << 20
+  /** The largest local frame the spatial store doors read on the driver
+    * instead of running a job (an append batch's statistics, a nearest
+    * probe's sample and row ids): the largest such frame a benchmark
+    * workload hands them, `ingest`'s 256-point append batch (its nearest
+    * probe holds 64 rows). The rows are already in driver memory; reading
+    * them copies them once more as `Row`s and decodes each geometry on
+    * the driver's one thread. At 256 points on a 4-core VM (local[4],
+    * medians of 50 runs) the read and decode took 14 ms, with the
+    * append's cell counts and summary merge 32 ms, against 236 ms for
+    * the two-pass summary recompute the merge replaces; numbering took
+    * 3 ms against 38 ms for the checkpoint. Larger local frames take the
+    * Spark path, which is not measured against the driver path. */
+  private val LocalFrameMaxRows = 256L
 
   /** The row count of `df` when its optimized plan is a `LocalRelation`:
     * data the driver holds, so reading it runs no job. */
@@ -403,13 +407,24 @@ object SpatialJoin {
       case _ => None
     }
 
-  /** The rows of a local `df` ([[localRowCount]]) within
-    * [[LocalFrameMaxRows]] and [[LocalFrameMaxBytes]], collected with no
-    * job. None otherwise. */
+  /** The rows of a local `df` ([[localRowCount]]) of at most
+    * [[LocalFrameMaxRows]] rows, collected with no job. None otherwise. */
   private[graft] def localRows(df: DataFrame): Option[Array[Row]] =
-    Option.when(localRowCount(df).exists(_ <= LocalFrameMaxRows) &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= LocalFrameMaxBytes)(
-      df.collect())
+    Option.when(localRowCount(df).exists(_ <= LocalFrameMaxRows))(df.collect())
+
+  /** A small local frame ([[localRows]]) with its positions 0..n-1
+    * appended as column `name`, numbered on the driver: the rows and ids
+    * become a new local relation, so the ids are data in the plan that
+    * every consumer reads alike, with no job and nothing to lose on an
+    * executor (the guarantee [[withStableIndex]] buys with a checkpoint).
+    * None for any other frame. */
+  private[graft] def localIndexed(df: DataFrame, name: String): Option[DataFrame] =
+    localRows(df).map { rows =>
+      df.sparkSession.createDataFrame(
+        rows.iterator.zipWithIndex
+          .map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }.toSeq.asJava,
+        df.schema.add(StructField(name, LongType, nullable = false)))
+    }
 
   /** The non-null values of geometry column `geom` of a small local
     * frame ([[localRows]]). */
@@ -1317,8 +1332,9 @@ object SpatialJoin {
     * the join's BUILD side — the `right` frame, or `left` when
     * `how = "right"` — computed over different rows it is UNSOUND (its
     * coverage filter would skip regions only the missing rows occupy,
-    * silently dropping matches), which is also why the store tier
-    * invalidates its stamped summary on every write. Returns
+    * silently dropping matches), which is also why the store tier reads
+    * its stamped summary only while the stamp's file fingerprint matches
+    * the store's data files (see [[CellSummaryProp]]). Returns
     * None when no row has a usable geometry (such a join has no matches
     * by definition, and `buildSummary = None` just recomputes). */
   def summarizeBuild(build: DataFrame, geom: String = "geometry",
@@ -1755,24 +1771,8 @@ object SpatialJoin {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set (or
     * the dir has a TTL policy) — long-running apps doing repeated joins
     * should set it. An expensive upstream plan still executes exactly
-    * once.
-    *
-    * A small LOCAL frame ([[localRows]]: a probe list or batch the
-    * caller built on the driver) is numbered on the driver instead: its
-    * rows, positions 0..n-1 appended, become a new local relation. The
-    * ids are then data in the plan, so every consumer reads the same
-    * ones with no job and nothing to lose on an executor. */
-  private[graft] def withStableIndex(df: DataFrame, name: String): DataFrame =
-    localRows(df) match {
-      case Some(rows) =>
-        df.sparkSession.createDataFrame(
-          rows.iterator.zipWithIndex
-            .map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }.toSeq.asJava,
-          df.schema.add(StructField(name, LongType, nullable = false)))
-      case None => checkpointIndexed(df, name)
-    }
-
-  private def checkpointIndexed(df: DataFrame, name: String): DataFrame = {
+    * once. */
+  private[graft] def withStableIndex(df: DataFrame, name: String): DataFrame = {
     // NOT spread (r18 probe, kept for the record): repartitioning a
     // below-parallelism frame here before the checkpoint looked like a
     // free parallelism win, but the alternated A/B (ProbeJoinAB
@@ -2024,10 +2024,12 @@ object SpatialJoin {
       }.toOption
     }
     // the summary merge: a stamp current for the pre-append files, and
-    // every batch geometry inside its frame
+    // every batch geometry inside its frame. A batch with no usable
+    // geometry writes no row, so a current stamp stays current as it is
     val merge: Option[(SummaryStamp, Array[Geometry])] = for {
       rows <- batch
       geoms <- scala.util.Try(rows.map(EWKB.read).filterNot(_.isEmpty)).toOption
+      if geoms.nonEmpty
       prior <- readSummaryStamp(spark0, table)
       if geoms.forall(g => prior.summary.frame.holds(g.getEnvelopeInternal))
     } yield (prior, geoms)
@@ -2438,9 +2440,11 @@ object SpatialJoin {
 
   /** Restamp `prior` with an append's `rows` added, once the append has
     * landed. The files now on disk must be the prior stamp's files, each
-    * unchanged, plus files of ONE write (one job UUID in their names) —
-    * anything else means another writer got in, and the stamp is left to
-    * go unreadable. */
+    * unchanged, plus at least one file, all of ONE write (one job UUID in
+    * their names) — anything else means another writer got in, and the
+    * stamp is left to go unreadable. The caller merges only a batch with
+    * rows to write, so no new file at all means this append's files are
+    * missing. */
   private def mergeSummaryStamp(spark: org.apache.spark.sql.SparkSession,
       table: String, prior: SummaryStamp, rows: Array[Geometry]): Unit = {
     val location = spark.sessionState.catalog.getTableMetadata(
@@ -2449,7 +2453,7 @@ object SpatialJoin {
     val before = prior.files.toSet
     val writeIds = after.filterNot(before).map(f => WriteIdPattern.findFirstIn(f._1))
     if (before.subsetOf(after.toSet) && writeIds.forall(_.isDefined) &&
-        writeIds.distinct.size <= 1)
+        writeIds.distinct.size == 1)
       writeSummaryStamp(spark, table, location, prior.grid,
         prior.summary.plus(rows.iterator), after)
     else org.slf4j.LoggerFactory.getLogger(getClass).info(
@@ -3174,8 +3178,9 @@ object SpatialJoin {
     val DCol = "__graft_ndist"
     // lazy: the unbounded door's coarse plan hands the raw probe frame to
     // the cogroup machinery (which indexes it itself) — forcing the
-    // eager checkpoint here would pay it twice
-    lazy val probeIdx = withStableIndex(probe, PIdx)
+    // eager checkpoint here would pay it twice. A small local probe is
+    // numbered on the driver, with no job
+    lazy val probeIdx = localIndexed(probe, PIdx).getOrElse(withStableIndex(probe, PIdx))
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
     // hot map shared by both doors: probe counts from a census of THIS

@@ -167,6 +167,25 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
     }
   }
 
+  test("a local append with no usable geometry leaves a current summary stamp as it is") {
+    val table = "graft_stats_empty_batch"
+    withStore(table) {
+      val build = buildRows(0xA8, 40, 0L)
+      write(build, table, 4.0)
+      SpatialJoin.stampCellSummary(spark, table)
+      val before = SpatialJoin.readCellSummary(spark, table).get
+      // no row of this batch has a cell, so the write adds no part file
+      // and the stamp needs no merge to stay current
+      write(Seq((700L, null: Array[Byte]), (701L, null: Array[Byte])), table, 4.0,
+        mode = "append")
+      val after = SpatialJoin.readCellSummary(spark, table)
+      assert(after.isDefined, "an append that wrote no row dropped the stamp")
+      assertSameArrays(after.get, before, "no usable geometry")
+      val probe = Seq((0L, EWKBFixtures.point(12.0, 80.0)), (1L, EWKBFixtures.point(99.0, 1.0)))
+      assertExact(probe, build, table, 4.0, "no usable geometry")
+    }
+  }
+
   test("a local in-frame append plus stampCellSummary runs at most 2 jobs; out of frame recomputes") {
     val table = "graft_stats_append_jobs"
     withStore(table) {
@@ -282,14 +301,18 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
     }
   }
 
-  test("a small local frame is numbered on the driver, once") {
+  test("a small local probe is numbered on the driver, once; past the bound it is not") {
     val frame: DataFrame = Seq((7L, "a"), (3L, "b"), (5L, "c")).toDF("k", "v")
-    val (indexed, jobs) = SparkJobs.jobsOf(spark, "stats-stable-index")(
-      SpatialJoin.withStableIndex(frame, "__i"))
+    val (indexed, jobs) = SparkJobs.jobsOf(spark, "stats-local-index")(
+      SpatialJoin.localIndexed(frame, "__i").get)
     assert(jobs.isEmpty, jobs.mkString("\n---\n"))
     val rows = indexed.as[(Long, String, Long)].collect()
     assert(rows.toSeq === Seq((7L, "a", 0L), (3L, "b", 1L), (5L, "c", 2L)))
     assert(indexed.join(indexed.select($"__i", $"k".as("k2")), "__i")
       .filter($"k" =!= $"k2").isEmpty, "two reads saw different ids")
+    // 256 rows (the ingest batch) is the largest local frame read on the
+    // driver; one more takes the checkpoint
+    assert(SpatialJoin.localIndexed((0L until 256L).toDF("k"), "__i").isDefined)
+    assert(SpatialJoin.localIndexed((0L until 257L).toDF("k"), "__i").isEmpty)
   }
 }
