@@ -416,12 +416,14 @@ object Dedup {
         Some(sig.toSeq)
       })
 
-  /** (id, sig) signatures of a frame — one normalize→shingle→sign pass.
+  /** (id, sig) signatures of a frame — one normalize→shingle→sign pass;
+    * with `sets`, (id, sig, sh): the same pass also builds each row's
+    * exact-verify shingle set from the one normalized text.
     * Null-TEXT rows are filtered at the SOURCE column, where the
     * predicate pushes to the parquet scan: null text is the only way a
     * signature comes back null (normalize and MinHashSig both
     * null-propagate; "" signs the {""} singleton), so this is exactly
-    * the null-signature guard [[bandExplode]] needs — and filtering on
+    * the null-signature guard the band explosion needs — and filtering on
     * the raw column instead of `sig IS NOT NULL` matters a lot: a
     * filter on the DERIVED signature pushes below the projection,
     * substituting the whole normalize+sign expression into the
@@ -431,42 +433,26 @@ object Dedup {
     * 1.83 s vs 1.15 s for this one — the whole pipe_minhash
     * "regression" was that filter). */
   private def minhashSigned(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, shingleK: Int): DataFrame =
-    minhashNormed(df, idCol, textCol)
-      .select(col("id"), minhashSigNative(col("__norm"), shingleK, numHashes).as("sig"))
-
-  /** (id, __norm) normalized text of the non-null-text rows — the first
-    * projection of [[minhashSigned]] and of the minhash within-batch
-    * pass's driver rows, which sign and shingle the same `__norm`. */
-  private def minhashNormed(df: DataFrame, idCol: String,
-      textCol: String): DataFrame =
+      numHashes: Int, shingleK: Int, sets: Boolean = false): DataFrame =
     df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
         TextAnalysis.normalized(col(textCol)).as("__norm"))
-
-  /** (id, sig, band, bucket) band explosion of an (id, sig) frame — the
-    * ONE bucket-hashing implementation every minhash door rides.
-    * INVARIANT: the input carries NO null signatures — Spark's
-    * `hash(null)` is the seed constant, so a null signature would land
-    * in one shared bucket per band and pair with every other null-text
-    * row at a null estimate (phantom candidates, review r16). The
-    * producers guarantee it at the CHEAP tier: the signers filter null
-    * TEXT at the source column ([[minhashSigned]] / [[ngramSets]] —
-    * scan-pushed), and the store writer filters `sig IS NOT NULL` on
-    * its read-back path where sig is a stored attribute. A filter here
-    * on the derived sig column would re-evaluate the whole sign
-    * expression per consumer (PERF.md "pipe_minhash regression:
-    * convicted and fixed", −37%). */
-  private def bandExplode(withSig: DataFrame, numHashes: Int,
-      bands: Int): DataFrame =
-    explodeKeys(withSig, Seq("id", "sig"), bandKeys(col("sig"), numHashes, bands),
-      Seq("band", "bucket"))
+      .select(col("id") +:
+        minhashSigNative(col("__norm"), shingleK, numHashes).as("sig") +:
+        (if (sets) Seq(shingleHashesNorm(col("__norm"), shingleK).as("sh")) else Nil): _*)
 
   /** The (band, bucket) LSH keys of a signature, one struct per band —
     * the ONE band hashing every minhash door and store rides: the
-    * Spark tiers explode it ([[bandExplode]]), the store doors' driver
+    * Spark tiers explode it ([[explodeKeys]]), the store doors' driver
     * tier evaluates it as an array on the driver. `sig` should be an
-    * attribute: the lambda reads it once per band. */
+    * attribute: the lambda reads it once per band. INVARIANT: no null
+    * signatures reach it — Spark's `hash(null)` is the seed constant, so
+    * a null signature would land in one shared bucket per band and pair
+    * with every other null-text row at a null estimate (phantom
+    * candidates, review r16). The signers filter null TEXT at the
+    * source column ([[minhashSigned]] / [[ngramSets]]), and the store
+    * writer filters `sig IS NOT NULL` on its read-back path where sig is
+    * a stored attribute. */
   private def bandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val r = numHashes / bands
@@ -482,20 +468,11 @@ object Dedup {
     df.select(keep.map(col) :+ explode(keys).as("__k"): _*)
       .select(keep.map(col) ++ keyCols.map(c => col("__k." + c).as(c)): _*)
 
-  /** (id, sig, band, bucket) LSH banding of a frame — the ONE banding
-    * implementation the self-join candidate generator AND the corpus
-    * store ([[writeMinhashStore]] / [[minhashCandidatesAgainstStore]])
-    * ride, so the store's bucket hashing can never drift from the
-    * per-call form. normalize → shingle → sign run as separate
-    * projections: each stage's result is an attribute, so lambdas never
-    * re-evaluate upstream regexes. Signatures are CARRIED THROUGH the
-    * banding instead of being persisted and joined back: the shingling
-    * pipeline runs exactly once, with no executor cache held for the
-    * session's lifetime — only wider (numHashes-long) rows. */
-  private[graft] def minhashBanded(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, shingleK: Int): DataFrame =
-    bandExplode(minhashSigned(df, idCol, textCol, numHashes, shingleK),
-      numHashes, bands)
+  /** The fields of the key structs of the bucket-key array `keys` over
+    * `df`, from the analyzed plan alone. */
+  private def keyFields(df: DataFrame, keys: Column): StructType =
+    df.select(keys).schema.head.dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
 
   /** Eager EPHEMERAL snapshot for a frame read by several consumers
     * within one call (the batch signature pass, the joint-cap bucket
@@ -530,16 +507,7 @@ object Dedup {
 
   /** Self-join on `keys` emitting (id_a, id_b[, <payload>_a/_b]) pairs
     * with id_a < id_b, built from two ALIASES of the SAME plan with the
-    * per-side projections applied AFTER the join (r18): the old form
-    * projected `id as id_a` / `id as id_b` below each side's exchange,
-    * so the two exchange subtrees were not canonically equal,
-    * ReuseExchange could not dedup them, and the whole upstream
-    * banding/signature pass (shingle + sign + explode — the dominant
-    * cost) ran once PER SIDE: 2x the sign CPU and a second full input
-    * scan per candidates call at corpus scale. Aliased sides share one
-    * canonical subtree, so the shuffle is computed once and read twice
-    * (PERF.md "Round 18 OPTIMIZATION: library changes": ReusedExchange
-    * in the final plan, results bit-identical). */
+    * per-side projections applied AFTER the join (see [[runPass]]). */
   private def selfJoinPairs(df: DataFrame, keys: Seq[String],
       payload: Seq[String]): DataFrame = {
     val cond = keys.map(kc => col(s"__sj_a.$kc") === col(s"__sj_b.$kc"))
@@ -550,6 +518,78 @@ object Dedup {
     df.alias("__sj_a").join(df.alias("__sj_b"), cond).select(proj: _*)
   }
 
+  /** A self-join near-dup pass, as data — the one description of each
+    * tier's in-frame door and of a store novel door's within-batch pass,
+    * which both tiers run: the Spark tier as [[runPass]], the store
+    * doors' driver tier as folded projections ([[driverSurvivors]]).
+    *  - `sign` maps the input to its signed (id, payload…) rows, dropping
+    *    null input at the source column (the embedding pass keeps null
+    *    vectors, whose null signatures never join); `keys` is the
+    *    bucket-key array (structs) over those columns, a null key field
+    *    never matching.
+    *  - `carried` payloads ride the bucket join (a signature, a vector);
+    *    `fetched` ones (a shingle or gram set, large next to its keys)
+    *    join back by id once per deduped pair.
+    *  - `scores` are the output columns over the pair's `<payload>_a` /
+    *    `<payload>_b`, and `keep` the verify over them.
+    *  - `capWarning`, when set, names the pass in the warning of a
+    *    counted bucket cap ([[capBucketsWarned]]): a pass whose narrow
+    *    bucket domain makes silent saturation reachable. */
+  private[graft] final case class PairPass(
+      sign: (DataFrame, String, String) => DataFrame,
+      keys: Column, carried: Seq[String], fetched: Seq[String],
+      scores: Seq[Column], keep: Column = lit(true),
+      capWarning: Option[String] = None) {
+    def payloads: Seq[String] = carried ++ fetched
+    /** the pass's output over (id_a, id_b, <payload>_a, <payload>_b) pairs */
+    def verified(pairs: DataFrame): DataFrame =
+      pairs.select(col("id_a") +: col("id_b") +: scores: _*).filter(keep)
+  }
+
+  /** The Spark tier of a [[PairPass]] over `df`: (id_a, id_b, scores…)
+    * with id_a < id_b, each pair once, kept by the pass's verify.
+    *
+    * The signed rows are SNAPSHOTTED once ([[snapCounted]]) and every
+    * consumer reads the snapshot: the cap census, both join sides and
+    * the fetched payloads' two joins. With the sign expressions inlined,
+    * each consumer re-ran the whole sign pass — the door's dominant cost
+    * (normalize + shingle + sign, tokenize + gram hashes, the
+    * hyperplane dots) — so the census alone doubled the sign CPU and
+    * the corpus scan per call (r19). The snapshot holds the signed
+    * payloads, not the exploded rows; the census and the join side
+    * re-derive the bucket keys from it with cheap slice hashes or
+    * shifts (the embedding pass snapshots its key array, whose planes
+    * are the costly part). Its row count bounds every bucket group —
+    * each signed row adds at most one row per band, chunk or table — so
+    * at most `maxBucketSize` rows the cap census is skipped.
+    *
+    * The self-join ([[selfJoinPairs]]) reads two ALIASES of the SAME
+    * capped plan, with the per-side renames applied AFTER the join
+    * (r18): a rename below each side's exchange left the two exchange
+    * subtrees canonically different, ReuseExchange could not dedup
+    * them, and the upstream pass ran once PER SIDE. Aliased sides share
+    * one canonical subtree, so the shuffle is computed once and read
+    * twice (PERF.md "Round 18 OPTIMIZATION: library changes":
+    * ReusedExchange in the final plan). Id pairs are deduped BEFORE
+    * scoring, so a pair colliding in many buckets is scored once. The
+    * cap is [[capBuckets]], or the eager counted [[capBucketsWarned]]
+    * when the pass names a `capWarning`. */
+  private def runPass(pass: PairPass, df: DataFrame, idCol: String,
+      srcCol: String, maxBucketSize: Int): DataFrame = {
+    val (signed, rows) = snapCounted(pass.sign(df, idCol, srcCol))
+    val keyCols = keyFields(signed, pass.keys).fieldNames.toSeq
+    val exploded = explodeKeys(signed, "id" +: pass.carried, pass.keys, keyCols)
+    val capped = pass.capWarning.fold(
+      capBuckets(exploded, keyCols, maxBucketSize, rows))(
+      capBucketsWarned(exploded, keyCols, maxBucketSize, _, rows))
+    val pairs = selfJoinPairs(capped, keyCols, pass.carried)
+      .dropDuplicates("id_a", "id_b")
+    def fetch(sfx: String): DataFrame = signed.select(col("id").as("id" + sfx) +:
+      pass.fetched.map(c => col(c).as(c + sfx)): _*)
+    pass.verified(if (pass.fetched.isEmpty) pairs
+      else pairs.join(fetch("_a"), "id_a").join(fetch("_b"), "id_b"))
+  }
+
   /** Candidate near-dup pairs via MinHash LSH banding: rows whose signature
     * agrees on all rows of at least one band land in the same bucket.
     * Returns (id_a, id_b, jaccard_est) with id_a < id_b.
@@ -558,37 +598,13 @@ object Dedup {
     * puts the collision-curve threshold at jaccard ≈ (1/b)^(1/r) ≈ 0.77 —
     * the near-dup dedup operating point. Use more, narrower bands (e.g.
     * bands=16) to catch lower-similarity pairs at higher candidate cost.
+    * The signing pass runs eagerly, at call time ([[runPass]]).
     */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 8, shingleK: Int = 5,
-      maxBucketSize: Int = 100000): DataFrame = {
-    // Snapshot the SIGNED frame (id, sig) before banding (r19, VERDICT
-    // r18 #7): capBuckets' census is a second consumer of the banded
-    // subplan, and with the sign expressions inlined it re-ran the whole
-    // normalize→shingle→sign pass — the door's dominant cost — once for
-    // the census on top of the self-join side's single (ReuseExchange'd)
-    // run: 2× sign CPU and a second full corpus scan per call at scale.
-    // The snap materializes numHashes ints + id per doc (far smaller
-    // than the text it derives from); the census and both join sides
-    // re-derive bands from it with cheap slice hashes. Over-cap rows
-    // still never shuffle — the census stays a map-side-combined
-    // aggregate, so capBuckets' bounded-worst-case argument holds
-    // unchanged. Cap off → single consumer → no snap (stay lazy). The
-    // snap's row count bounds every (band, bucket) group, so at most
-    // maxBucketSize signed rows the census is skipped.
-    val signed = minhashSigned(df, idCol, textCol, numHashes, shingleK)
-    val (src, rows) =
-      if (maxBucketSize > 0) snapCounted(signed) else (signed, Long.MaxValue)
-    val banded = bandExplode(src, numHashes, bands)
-    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize, rows)
-    // self-join within (band, bucket); a<b kills mirror+self pairs.
-    // Dedup the id pairs BEFORE scoring: a pair colliding in many bands
-    // would otherwise pay the signature comparison once per band.
-    selfJoinPairs(capped, Seq("band", "bucket"), Seq("sig"))
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"),
-        jaccardEstExpr(col("sig_a"), col("sig_b"), numHashes).as("jaccard_est"))
-  }
+      maxBucketSize: Int = 100000): DataFrame =
+    runPass(minhashPass(numHashes, bands, shingleK, None), df, idCol,
+      textCol, maxBucketSize)
 
   /** Pick the coarsest banding whose collision threshold (1/b)^(r⁻¹) sits
     * safely below the requested jaccard threshold — fewer bands = fewer
@@ -602,35 +618,27 @@ object Dedup {
   }
 
   /** Full MinHash near-dup pipeline: LSH candidates, then exact shingle
-    * Jaccard verify ≥ threshold. */
+    * Jaccard verify ≥ threshold. Returns (id_a, id_b, jaccard_est,
+    * jaccard). */
   def nearDupMinhash(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 64, bands: Int = 0,
       shingleK: Int = 5): DataFrame =
-    minhashVerified(df, idCol, textCol, threshold, numHashes, bands,
-      shingleK, maxBucketSize = 100000)
+    runPass(minhashPass(numHashes,
+      if (bands > 0) bands else autoBands(numHashes, threshold), shingleK,
+      Some(threshold)), df, idCol, textCol, maxBucketSize = 100000)
 
-  /** [[nearDupMinhash]] at an explicit hot-bucket cap — also the
-    * within-batch pass of [[minhashNovelAgainstStore]], which runs at
-    * its caller's `maxBucketSize` like the other three novel doors. */
-  private[graft] def minhashVerified(df: DataFrame, idCol: String,
-      textCol: String, threshold: Double, numHashes: Int, bands: Int,
-      shingleK: Int, maxBucketSize: Int): DataFrame = {
-    val b = if (bands > 0) bands else autoBands(numHashes, threshold)
-    val cands = minhashCandidates(df, idCol, textCol, numHashes, b, shingleK,
-      maxBucketSize)
-    // snapped (r19): the exact-verify joins read `sh` once per pair SIDE
-    // (id_a and id_b), and the rename-below-exchange join shape defeats
-    // ReuseExchange (the selfJoinPairs lesson) — without the snap the
-    // normalize+shingle pass ran twice more per call
-    val sh = snapFrame(df.select(col(idCol).as("id"),
-      shingleHashesNorm(TextAnalysis.normalized(col(textCol)), shingleK).as("sh")))
-    cands
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard_est", "jaccard")
-  }
+  /** The minhash [[PairPass]]: band buckets of the signature, which rides
+    * the join for the `jaccard_est` score; at a `threshold`, also the
+    * exact shingle `jaccard` ≥ it, over shingle sets signed in the same
+    * pass and fetched per pair. Without one, no shingle set is built. */
+  private def minhashPass(numHashes: Int, bands: Int, shingleK: Int,
+      threshold: Option[Double]): PairPass =
+    PairPass(minhashSigned(_, _, _, numHashes, shingleK, threshold.isDefined),
+      bandKeys(col("sig"), numHashes, bands), Seq("sig"),
+      threshold.map(_ => "sh").toSeq,
+      jaccardEstExpr(col("sig_a"), col("sig_b"), numHashes).as("jaccard_est") +:
+        threshold.map(_ => jaccard(col("sh_a"), col("sh_b")).as("jaccard")).toSeq,
+      threshold.fold(lit(true))(col("jaccard") >= _))
 
   // ------------------------------------------- near-dup store pipeline
 
@@ -660,7 +668,10 @@ object Dedup {
     *
     * `recallWarning` is the novel door's warning for a threshold the
     * stamped scheme under-recalls; `withinBatch(threshold)` the
-    * within-batch pass it dedups the batch with ([[PairPass]]). */
+    * within-batch pass it dedups the batch with: the tier's in-frame
+    * [[PairPass]] at the stamped signature (`sign` yields the scheme's
+    * payload among its columns, so the driver tier signs once for both
+    * passes) with the threshold's own banding, chunking or verify. */
   private[graft] final case class BucketScheme(tier: String, prop: String,
       version: String, params: Seq[Int], bucketCols: Seq[String],
       payload: String, sibling: Option[String], score: String,
@@ -683,20 +694,6 @@ object Dedup {
     def hit(threshold: Double): Column =
       if (isDistance) col(score) <= threshold else col(score) >= threshold
   }
-
-  /** A self-join near-dup pass at one threshold, as data — a novel
-    * door's within-batch pass, in both tiers. `pairs(df, idCol, srcCol,
-    * maxBucketSize)` is the Spark tier: the tier's own self-join door,
-    * returning its verified (id_a, id_b, …) pairs. The driver tier
-    * ([[storeNovelDriver]]) evaluates the same door's expressions on the
-    * driver: `rows(df, idCol, srcCol)` gives (id, keys, v) — the
-    * bucket-key array the door explodes and the payload its verify
-    * reads, a null key field never matching — and `verify(v_a, v_b)` is
-    * the door's pair filter. */
-  private[graft] final case class PairPass(
-      pairs: (DataFrame, String, String, Int) => DataFrame,
-      rows: (DataFrame, String, String) => DataFrame,
-      verify: (Column, Column) => Column)
 
   /** `make` over the integer params of `table`'s `prop` stamp
     * `version:p1:…:pN` — the one stamp parser of the store family. A
@@ -901,7 +898,7 @@ object Dedup {
     else {
       val snap = snapFrame(vsCorpus)
       keepMinIdSurvivors(snap, idCol,
-        s.withinBatch(threshold).pairs(snap, idCol, srcCol, maxBucketSize))
+        runPass(s.withinBatch(threshold), snap, idCol, srcCol, maxBucketSize))
     }
   }
 
@@ -934,11 +931,13 @@ object Dedup {
   private val RowCol = "__graft_row"
 
   /** A batch probed against a store on the driver ([[driverProbe]]):
-    * `rows`, the batch's rows in id order; `frame`, a local frame of
-    * them with their position as [[RowCol]]; `scored`, a local frame of
-    * (__b, __c, <score>), one row per deduped candidate pair of batch
-    * position `__b` and corpus id `corpusIds(__c)`. */
-  private final case class DriverProbe(rows: IndexedSeq[Row], frame: DataFrame,
+    * `rows`, the batch's rows in id order; `signed`, its signed rows
+    * (position, payload, store keys[, pass keys, pass payloads…]) with
+    * their schema; `scored`, a local frame of (__b, __c, <score>), one
+    * row per deduped candidate pair of batch position `__b` and corpus
+    * id `corpusIds(__c)`. */
+  private final case class DriverProbe(rows: IndexedSeq[Row],
+      signed: Array[Row], signedSchema: StructType,
       idAt: Int, scored: DataFrame, corpusIds: IndexedSeq[Any],
       corpusIdField: StructField)
 
@@ -948,7 +947,7 @@ object Dedup {
   private[graft] def storeCandidatesDriver(s: BucketScheme, spark: SparkSession,
       batch: DataFrame, table: String, idCol: String, srcCol: String,
       maxBucketSize: Int): Option[DataFrame] =
-    driverProbe(s, spark, batch, table, idCol, srcCol, maxBucketSize).map { pr =>
+    driverProbe(s, spark, batch, table, idCol, srcCol, maxBucketSize, None).map { pr =>
       val out = pr.scored.collect().map(r => Row(
         pr.rows(r.getLong(0).toInt).get(pr.idAt), pr.corpusIds(r.getInt(1)), r.get(2)))
       spark.createDataFrame(out.toSeq.asJava, StructType(Seq(
@@ -959,35 +958,39 @@ object Dedup {
   /** The driver tier of [[storeNovel]]: the batch rows [[driverProbe]]
     * finds no corpus hit for, then, with `dedupWithinBatch`, the
     * survivors of the within-batch pass run on the driver
-    * ([[driverSurvivors]]) — a local frame of the batch's rows with its
-    * schema. When that pass's candidate pairs pass the row bound, the
-    * Spark tier's within-batch pass runs instead, over a local frame of
-    * the corpus-filtered rows (so the store query is not repeated).
-    * None — take the Spark tier — when [[driverProbe]] declines. */
+    * ([[driverSurvivors]]) over the rows the store pass signed — a local
+    * frame of the batch's rows with its schema. When that pass's
+    * candidate pairs pass the row bound, its Spark tier ([[runPass]])
+    * runs instead, over a local frame of the corpus-filtered rows (so
+    * the store query is not repeated). None — take the Spark tier — when
+    * [[driverProbe]] declines. */
   private[graft] def storeNovelDriver(s: BucketScheme, spark: SparkSession,
       batch: DataFrame, table: String, idCol: String, srcCol: String,
       threshold: Double, maxBucketSize: Int,
-      dedupWithinBatch: Boolean): Option[DataFrame] =
-    driverProbe(s, spark, batch, table, idCol, srcCol, maxBucketSize).map { pr =>
+      dedupWithinBatch: Boolean): Option[DataFrame] = {
+    val pass = Option.when(dedupWithinBatch)(s.withinBatch(threshold))
+    driverProbe(s, spark, batch, table, idCol, srcCol, maxBucketSize, pass).map { pr =>
       val hit = pr.scored.filter(s.hit(threshold)).select(col("__b")).collect()
         .map(_.getLong(0).toInt).toSet
       val vsCorpus = pr.rows.indices.filterNot(hit)
       def rowsAt(ix: Seq[Int]) = spark.createDataFrame(ix.map(pr.rows).asJava, batch.schema)
-      if (!dedupWithinBatch) rowsAt(vsCorpus)
-      else {
-        val pass = s.withinBatch(threshold)
-        driverSurvivors(pass, pr, vsCorpus, srcCol).map(rowsAt).getOrElse {
+      pass.fold(rowsAt(vsCorpus)) { pass =>
+        driverSurvivors(pass, pr, vsCorpus).map(rowsAt).getOrElse {
           val local = rowsAt(vsCorpus)
-          keepMinIdSurvivors(local, idCol, pass.pairs(local, idCol, srcCol, maxBucketSize))
+          keepMinIdSurvivors(local, idCol, runPass(pass, local, idCol, srcCol, maxBucketSize))
         }
       }
     }
+  }
 
   /** The store pass of the driver tier, shared by both store doors:
     *  1. the batch is collected once ([[localBatch]]);
     *  2. the scheme's `sign` and `keys` run as projections over it, which
     *     Catalyst folds on the driver — no job — and the key array is
-    *     kept whole, flattened here;
+    *     kept whole, flattened here. Given a within-batch `pass`, its
+    *     `sign` runs instead — the scheme's payload is among its columns
+    *     — with the pass's keys and payloads in the same projection, so
+    *     the batch is signed once for both passes;
     *  3. the batch's distinct keys go to the store as one local-relation
     *     semi-join, and the matched rows, with their payloads, come back
     *     under one bounded collect ([[corpusHits]]);
@@ -1006,13 +1009,11 @@ object Dedup {
     *    pass the row bound. */
   private def driverProbe(s: BucketScheme, spark: SparkSession,
       batch: DataFrame, table: String, idCol: String, srcCol: String,
-      maxBucketSize: Int): Option[DriverProbe] = {
+      maxBucketSize: Int, pass: Option[PairPass]): Option[DriverProbe] = {
     val (store, sibling) = storeTables(s, spark, table)
     val corpusIdField = store.schema("id")
     val p = s.payload
-    // the key structs' type, from the analyzed plan alone
-    lazy val keyType = s.sign(batch, idCol, srcCol).select(s.keys(col(p))).schema
-      .head.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    lazy val keyType = keyFields(s.sign(batch, idCol, srcCol), s.keys(col(p)))
     // the rows the batch may add to a bucket group, past which the cap
     // could fire; the cap off needs no bound
     val room = if (maxBucketSize <= 0) Some(Long.MaxValue)
@@ -1023,8 +1024,9 @@ object Dedup {
     // signed rows are at most the batch's rows, one per row
     else localBatch(batch, idCol).filter(_._1.length <= room.get).flatMap {
         case (rows, frame) =>
-      val signed = s.sign(frame, RowCol, srcCol)
-        .select(col("id"), col(p), s.keys(col(p)).as("__keys"))
+      val signed = pass.fold(s.sign)(_.sign)(frame, RowCol, srcCol)
+        .select(Seq(col("id"), col(p), s.keys(col(p)).as("__keys")) ++
+          pass.toSeq.flatMap(ps => ps.keys.as("__pkeys") +: ps.payloads.map(col)): _*)
       val signedRows = signed.collect()
       val byKey = bucketMembers(signedRows, 2)
       corpusHits(s, store, sibling, byKey.keys.toSeq, keyType).flatMap {
@@ -1056,7 +1058,7 @@ object Dedup {
               _.select(col("__b"), col("__c"),
                 s.scoreOf(col(p + "_b"), col(p + "_c")).as(s.score))
             }
-            DriverProbe(rows, frame, batch.schema.fieldIndex(idCol),
+            DriverProbe(rows, signedRows, signed.schema, batch.schema.fieldIndex(idCol),
               spark.createDataFrame(scored.toSeq.asJava, scoredSchema),
               corpusIds.toIndexedSeq, corpusIdField)
           }
@@ -1126,20 +1128,20 @@ object Dedup {
   }
 
   /** The survivors, in id order, of the within-batch pass `pass` over
-    * the batch positions `ix`, on the driver: the pass's `rows` are a
-    * folded projection; rows sharing a bucket key pair up, as the door's
-    * self-join pairs them; the pairs are checked with the pass's
-    * `verify`, again folded; and the union-find ([[minRoots]]) keeps the
-    * smallest id of each component, as [[keepMinIdSurvivors]] does.
-    * None when the candidate pairs pass the row bound. */
-  private def driverSurvivors(pass: PairPass, pr: DriverProbe, ix: Seq[Int],
-      srcCol: String): Option[Seq[Int]] = {
-    val spark = pr.frame.sparkSession
-    val local = spark.createDataFrame(ix.map(i => Row.fromSeq(pr.rows(i).toSeq :+ i.toLong))
-      .asJava, pr.frame.schema)
-    val rows = pass.rows(local, RowCol, srcCol)
-    val passRows = rows.collect()
-    val members = bucketMembers(passRows, 1)
+    * the batch positions `ix`, on the driver, from the rows the store
+    * pass signed ([[driverProbe]], which projected the pass's keys and
+    * payloads with its own): rows sharing a pass bucket key pair up, as
+    * [[runPass]]'s self-join pairs them; the pairs are checked with the
+    * pass's `verified`, a folded projection; and the union-find
+    * ([[minRoots]]) keeps the smallest id of each component, as
+    * [[keepMinIdSurvivors]] does. None when the candidate pairs pass the
+    * row bound. */
+  private def driverSurvivors(pass: PairPass, pr: DriverProbe,
+      ix: Seq[Int]): Option[Seq[Int]] = {
+    val in = ix.toSet
+    val passRows = pr.signed.filter(r => in(r.getLong(0).toInt))
+    val at = passRows.iterator.map(r => r.getLong(0).toInt -> r).toMap
+    val members = bucketMembers(passRows, 3)
     val nPairs = members.valuesIterator.map(m => m.size.toLong * (m.size - 1) / 2).sum
     if (nPairs > StoreDriverMaxRows) None
     else {
@@ -1148,14 +1150,16 @@ object Dedup {
         for (x <- m.indices; y <- x + 1 until m.size)
           pairs += ((m(x) min m(y), m(x) max m(y)))
       }
-      val v = passRows.iterator.map(r => r.getLong(0).toInt -> r.get(2)).toMap
-      val vField = rows.schema("v")
-      val (edges, _) = localChunks(spark,
-        pairs.toSeq.map { case (a, b) => Row(a.toLong, b.toLong, v(a), v(b)) },
-        StructType(Seq(StructField("a", LongType, nullable = false),
-          StructField("b", LongType, nullable = false),
-          vField.copy(name = "v_a"), vField.copy(name = "v_b")))) {
-        _.filter(pass.verify(col("v_a"), col("v_b"))).select("a", "b")
+      // the pass's payloads follow its keys in the signed rows
+      val fields = pass.payloads.indices.map(i => 4 + i)
+      def side(sfx: String) = fields.map(i =>
+        pr.signedSchema(i).copy(name = pr.signedSchema(i).name + sfx))
+      val (edges, _) = localChunks(pr.scored.sparkSession,
+        pairs.toSeq.map { case (a, b) =>
+          Row.fromSeq(Seq(a.toLong, b.toLong) ++ fields.map(at(a).get) ++ fields.map(at(b).get)) },
+        StructType(StructField("id_a", LongType, nullable = false) +:
+          StructField("id_b", LongType, nullable = false) +: (side("_a") ++ side("_b")))) {
+        pass.verified(_).select("id_a", "id_b")
       }
       val root = minRoots(pr.rows.length,
         edges.iterator.map(r => (r.getLong(0).toInt, r.getLong(1).toInt)))
@@ -1280,21 +1284,10 @@ object Dedup {
     bandedScheme("minhash", MinhashStoreProp, "v2",
       Seq(numHashes, bands, shingleK), numHashes, bands,
       minhashSigned(_, _, _, numHashes, shingleK),
-      threshold => {
-        // the within-batch pass bands at the threshold's own banding, not
-        // the stamped one
-        val b = autoBands(numHashes, threshold)
-        PairPass(
-          (df, idCol, textCol, cap) => minhashVerified(df, idCol, textCol,
-            threshold, numHashes, b, shingleK, cap),
-          (df, idCol, textCol) => minhashNormed(df, idCol, textCol)
-            .select(col("id"),
-              minhashSigNative(col("__norm"), shingleK, numHashes).as("sig"),
-              shingleHashesNorm(col("__norm"), shingleK).as("v"))
-            .select(col("id"), bandKeys(col("sig"), numHashes, b).as("keys"),
-              col("v")),
-          jaccard(_, _) >= threshold)
-      })
+      // the within-batch pass bands at the threshold's own banding, not
+      // the stamped one
+      threshold => minhashPass(numHashes, autoBands(numHashes, threshold),
+        shingleK, Some(threshold)))
 
   private[graft] def minhashScheme(spark: SparkSession, table: String): BucketScheme =
     stampParams(spark, table, "minhash", MinhashStoreProp, "v2") {
@@ -1472,7 +1465,8 @@ object Dedup {
   /** Word n-gram Jaccard near-dup: MinHash-LSH candidates over hashed word
     * n-grams, exact n-gram-set Jaccard verify ≥ threshold. Same
     * bucket-join shape as [[nearDupMinhash]], token-level granularity
-    * (robust to intra-word edits, classic C4/CCNet-style dedup unit). */
+    * (robust to intra-word edits, classic C4/CCNet-style dedup unit).
+    * Returns (id_a, id_b, jaccard). */
   def nearDupNgram(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3, numHashes: Int = 64,
       bands: Int = 0, maxBucketSize: Int = 100000): DataFrame = {
@@ -1480,31 +1474,19 @@ object Dedup {
     require(numHashes % b == 0,
       s"nearDupNgram: numHashes=$numHashes not divisible by bands=$b — " +
         "part of the signature would be silently ignored")
-    // Snapshot (id, ng, sig) once (r19, the capBuckets-census fold):
-    // the tokenization + gram-hash + signature pass was re-evaluated by
-    // the cap census, the capped join side, AND each of the two
-    // verify-side joins below — four full text passes per call. The
-    // snap holds the gram-hash array + signature per doc (no text);
-    // every consumer reads it. Its row count bounds every bucket group
-    // (the cap census is skipped at ≤ maxBucketSize rows).
-    val (withNg, rows) = snapCounted(
-      ngramSignedSets(df, idCol, textCol, n, numHashes))
-    // null text was filtered at the source in ngramSets, so the shared
-    // bandExplode's no-null-signature invariant holds — see its
-    // phantom-bucket note
-    val banded = bandExplode(withNg.select(col("id"), col("sig")),
-      numHashes, b).select(col("id"), col("band"), col("bucket"))
-    val capped = capBuckets(banded, Seq("band", "bucket"), maxBucketSize, rows)
-    val pairs = selfJoinPairs(capped, Seq("band", "bucket"), Nil)
-      .dropDuplicates("id_a", "id_b")
-    val ngs = withNg.select(col("id"), col("ng"))
-    pairs
-      .join(ngs.select(col("id").as("id_a"), col("ng").as("ng_a")), Seq("id_a"))
-      .join(ngs.select(col("id").as("id_b"), col("ng").as("ng_b")), Seq("id_b"))
-      .withColumn("jaccard", jaccard(col("ng_a"), col("ng_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    runPass(ngramPass(n, numHashes, b, threshold), df, idCol, textCol,
+      maxBucketSize)
   }
+
+  /** The n-gram [[PairPass]]: band buckets of the MinHash-over-n-grams
+    * signature, whose gram sets are fetched per pair for the exact
+    * `jaccard` ≥ `threshold`. */
+  private def ngramPass(n: Int, numHashes: Int, bands: Int,
+      threshold: Double): PairPass =
+    PairPass(ngramSignedSets(_, _, _, n, numHashes),
+      bandKeys(col("sig"), numHashes, bands), Nil, Seq("ng"),
+      Seq(jaccard(col("ng_a"), col("ng_b")).as("jaccard")),
+      col("jaccard") >= threshold)
 
   /** N-gram near-dup dedup end to end: one survivor (min id) per
     * connected near-dup component — [[dedupNearMinhash]]'s token-level
@@ -1527,16 +1509,8 @@ object Dedup {
   private def ngramScheme(n: Int, numHashes: Int, bands: Int): BucketScheme =
     bandedScheme("ngram", NgramStoreProp, "v1", Seq(n, numHashes, bands),
       numHashes, bands, ngramSigned(_, _, _, n, numHashes),
-      threshold => {
-        val b = autoBands(numHashes, threshold)
-        PairPass(
-          (df, idCol, textCol, cap) => nearDupNgram(df, idCol, textCol,
-            threshold, n, numHashes, b, cap),
-          (df, idCol, textCol) => ngramSignedSets(df, idCol, textCol, n, numHashes)
-            .select(col("id"), bandKeys(col("sig"), numHashes, b).as("keys"),
-              col("ng").as("v")),
-          jaccard(_, _) >= threshold)
-      })
+      threshold => ngramPass(n, numHashes, autoBands(numHashes, threshold),
+        threshold))
 
   private[graft] def ngramScheme(spark: SparkSession, table: String): BucketScheme =
     stampParams(spark, table, "ngram", NgramStoreProp, "v1") {
@@ -1828,14 +1802,6 @@ object Dedup {
     df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), simhash64(col(textCol)).as("sim"))
 
-  /** (id, sim, chunk, bucket) chunking of an (id, sim) frame — the ONE
-    * producer all three SimHash doors ride (self-join, store writer,
-    * store prober), so the store layout and batch probing can never
-    * desynchronize. */
-  private def simhashChunks(signed: DataFrame, chunks: Int): DataFrame =
-    explodeKeys(signed, Seq("id", "sim"), simhashChunkKeys(col("sim"), chunks),
-      Seq("chunk", "bucket"))
-
   /** The (chunk, bucket) keys of a SimHash signature, one struct per
     * `64 / chunks`-bit chunk: bucket = (sim >> chunk · width) & mask —
     * the [[bandKeys]] of the Hamming tier. */
@@ -1865,31 +1831,19 @@ object Dedup {
     * eagerly), so don't construct these frames speculatively. The
     * default 3 keeps the classic 4×16-bit scheme. */
   def nearDupSimhash(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame = {
+      maxHamming: Int = 3, maxBucketSize: Int = 100000): DataFrame =
+    runPass(simhashPass(maxHamming), df, idCol, textCol, maxBucketSize)
+
+  /** The simhash [[PairPass]] at radius `maxHamming`: (chunk, bucket)
+    * buckets at the radius's chunk count ([[simhashChunkCount]]), the
+    * signature riding the join for the exact `hamming` ≤ the radius; the
+    * widened radii count and warn on dropped groups. */
+  private def simhashPass(maxHamming: Int): PairPass = {
     val chunks = simhashChunkCount("nearDupSimhash", maxHamming)
-    // Snapshot the 16-byte (id, sim) rows before chunk explosion (r19,
-    // the capBuckets-census fold): the chunked frame is evaluated at
-    // least twice (cap census + join side; the store doors do the same
-    // through the shared pipeline), and with simhash64 inlined each
-    // evaluation re-hashed the full text column. One eager pass signs;
-    // the chunk/bucket re-derivation per consumer is two integer ops.
-    // The default radius gives up its laziness for half the sign CPU.
-    // The snapshot's row count bounds every (chunk, bucket) group (the
-    // cap sites' skip rule)
-    val (signed, rows) = snapCounted(simhashSigned(df, idCol, textCol))
-    val chunked = simhashChunks(signed, chunks)
-    // widened radii (narrow bucket domains) warn on drops — an eager
-    // census pass; every radius signs eagerly now (the (id, sim)
-    // snapshot, r19); at ≤ maxBucketSize rows neither census runs
-    val withChunk =
-      if (chunks > 4) capBucketsWarned(chunked, Seq("chunk", "bucket"),
-        maxBucketSize, s"nearDupSimhash(maxHamming=$maxHamming)", rows)
-      else capBuckets(chunked, Seq("chunk", "bucket"), maxBucketSize, rows)
-    selfJoinPairs(withChunk, Seq("chunk", "bucket"), Seq("sim"))
-      .withColumn("hamming", hammingOf(col("sim_a"), col("sim_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-      .dropDuplicates("id_a", "id_b")
+    PairPass(simhashSigned, simhashChunkKeys(col("sim"), chunks), Seq("sim"),
+      Nil, Seq(hammingOf(col("sim_a"), col("sim_b")).as("hamming")),
+      col("hamming") <= maxHamming,
+      Option.when(chunks > 4)(s"nearDupSimhash(maxHamming=$maxHamming)"))
   }
 
   /** Hamming distance of two SimHash signatures — the simhash tier's
@@ -1974,19 +1928,9 @@ object Dedup {
     BucketScheme("simhash", SimhashStoreProp, "v1", Seq(chunks),
       Seq("chunk", "bucket"), "sim", None, "hamming", isDistance = true,
       simhashSigned, simhashChunkKeys(_, chunks), hammingOf, _ => None,
-      maxHamming => {
-        // the within-batch pass chunks at the radius's own chunk count,
-        // not the stamped one
-        val radius = maxHamming.toInt
-        val passChunks = simhashChunkCount("nearDupSimhash", radius)
-        PairPass(
-          (df, idCol, textCol, cap) =>
-            nearDupSimhash(df, idCol, textCol, radius, cap),
-          (df, idCol, textCol) => simhashSigned(df, idCol, textCol)
-            .select(col("id"), simhashChunkKeys(col("sim"), passChunks).as("keys"),
-              col("sim").as("v")),
-          hammingOf(_, _) <= radius)
-      })
+      // the within-batch pass chunks at the radius's own chunk count, not
+      // the stamped one
+      maxHamming => simhashPass(maxHamming.toInt))
 
   /** The stamped scheme of a [[writeSimhashStore]] table (4, 8 or 16
     * chunks), refusing a probe radius past its layout's pigeonhole. */
@@ -2062,25 +2006,22 @@ object Dedup {
       maxBucketSize: Int = 100000): DataFrame = {
     val (bitsR, tablesR) = resolvePlanes("nearDupEmbedding", threshold,
       targetRecall = 0.9, bits, tables)
-    val withVec = embeddingCast(df, idCol, vecCol)
-    // one signature per table ([[embeddingSigArray]]), exploded to
-    // (table, sig) bucket keys. The signature array is snapshotted
-    // BEFORE the explode (r19, the capBuckets-census fold): the cap
-    // census re-evaluated every table's bits×dim hyperplane dots on top
-    // of the join side's run — 2× the signing CPU per call. The snap
-    // carries (id, vec, sigs): vec rides anyway as the verify payload,
-    // sigs add tables longs per row.
-    val (signed, rows) = snapCounted(withVec.select(col("id"), col("vec"),
-      embeddingSigArray(col("vec"), bitsR, tablesR).as("__sigs")))
-    val bucketed = capBuckets(
-      explodeKeys(signed, Seq("id", "vec"), col("__sigs"), Seq("t", "sig")),
-      Seq("t", "sig"), maxBucketSize, rows)
-    selfJoinPairs(bucketed, Seq("t", "sig"), Seq("vec"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("cosine", Similarity.cosine(col("vec_a"), col("vec_b")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    runPass(embeddingPass(bitsR, tablesR, threshold), df, idCol, vecCol,
+      maxBucketSize)
   }
+
+  /** The embedding [[PairPass]] at (bits, tables): one sign-LSH signature
+    * per table as the (t, sig) keys — signed with the vectors, so the
+    * snapshot holds them and no consumer redoes the hyperplane dots — and
+    * the vector riding the join for the exact `cosine` ≥ `threshold`.
+    * Null vectors are kept: their null signatures never join. */
+  private def embeddingPass(bits: Int, tables: Int, threshold: Double): PairPass =
+    PairPass((df, idCol, vecCol) => embeddingCast(df, idCol, vecCol)
+        .select(col("id"), col("vec"),
+          embeddingSigArray(col("vec"), bits, tables).as("__sigs")),
+      col("__sigs"), Seq("vec"), Nil,
+      Seq(Similarity.cosine(col("vec_a"), col("vec_b")).as("cosine")),
+      col("cosine") >= threshold)
 
   /** Embedding near-dup dedup end to end: one survivor (min id) per
     * connected near-dup component — the cosine tier's
@@ -2247,13 +2188,7 @@ object Dedup {
           "rewrite the store with autoPlanes sizing (writeEmbeddingStore " +
           "bits=0/tables=0 with autoThreshold at this operating point)")
       },
-      threshold => PairPass(
-        (df, idCol, vecCol, cap) =>
-          nearDupEmbedding(df, idCol, vecCol, threshold, bits, tables, cap),
-        (df, idCol, vecCol) => embeddingCast(df, idCol, vecCol)
-          .select(col("id"), embeddingSigArray(col("vec"), bits, tables).as("keys"),
-            col("vec").as("v")),
-        Similarity.cosine(_, _) >= threshold))
+      embeddingPass(bits, tables, _))
 
   private[graft] def embeddingScheme(spark: SparkSession, table: String): BucketScheme =
     stampParams(spark, table, "embedding", EmbeddingStoreProp, "v1") {
