@@ -1,5 +1,6 @@
 package graft.join
 
+import graft.StoreStamp
 import graft.serde.EWKB
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
@@ -1867,7 +1868,9 @@ object SpatialJoin {
     * [[writeSpatialBucketed]] invokes), read by [[sjoinBucketed]]'s
     * hot-cell salting. A skewed cell is a write-time property of the
     * DATA, so the store pays for the measurement once and every join
-    * reuses it from the catalog for free. */
+    * reuses it from the catalog for free. A statistic under the
+    * [[graft.StoreStamp]] contract: it reads only while the store holds
+    * the files it was measured on. */
   val CellHistogramProp = "graft.spatial.cellHistogram"
   private val HeavyCellMinRows = 256L
   private val HeavyCellCap = 256
@@ -1894,29 +1897,22 @@ object SpatialJoin {
     * maximum, observed on the census's own job), by an overwrite (its
     * source-row count: a row emits each cell at most once) and by a
     * local append (the prior bound plus the batch's largest per-cell
-    * count). Unset with the histogram, and before every append, so a
-    * write that fails midway leaves no bound. A perf hint like the
-    * histogram: writes made outside [[writeSpatialBucketed]] are not
-    * counted, and re-running [[stampCellHistogram]] re-measures both. */
+    * count). A statistic under the [[graft.StoreStamp]] contract, like
+    * the histogram; re-running [[stampCellHistogram]] re-measures both. */
   val MaxCellRowsProp = "graft.spatial.maxCellRows"
   /** Table property marking a stamped [[CellSummary]] sidecar (the
     * unbounded nearest door's per-probe bound oracle) — written by
     * [[stampCellSummary]] and by local appends, read by
-    * [[sjoinNearestBucketed]] when `maxDistance = ∞`. Value
-    * `v2:<grid>:<nx>:<ny>:<totalAnchors>:<files>`: the summary grid it
-    * was stamped at, the sidecar header it must match (so a property and
-    * a sidecar from different stamps can never combine), and a SHA-256
-    * fingerprint of the store's data files (relative path, length and
-    * mtime of every part file). UNLIKE the histogram (a perf-only hint),
-    * a stale summary is UNSOUND — its coverage filter would skip join
-    * cells only newer rows occupy (dropping matches) and its anchors
-    * could claim rows an overwrite removed (under-reaching bounds) — so
-    * the read side accepts a stamp only while the fingerprint matches
-    * the files the store holds NOW. Any write that adds, removes or
-    * rewrites a part file, through graft or not (a plain `INSERT INTO`,
-    * another engine), makes the stamp unreadable; the unbounded door
-    * then computes a summary per call until [[stampCellSummary]]
-    * re-stamps. */
+    * [[sjoinNearestBucketed]] when `maxDistance = ∞`. Payload
+    * `<grid>:<nx>:<ny>:<totalAnchors>`: the summary grid it was stamped
+    * at and the sidecar header it must match, so a property and a
+    * sidecar from different stamps never combine. A statistic under the
+    * [[graft.StoreStamp]] contract: a stale summary would be UNSOUND (its
+    * coverage filter would skip join cells only newer rows occupy, and
+    * its anchors could claim rows an overwrite removed), and it reads
+    * only while the store holds the files it was computed on; the
+    * unbounded door otherwise computes a summary per call until
+    * [[stampCellSummary]] re-stamps. */
   val CellSummaryProp = "graft.spatial.cellSummary"
   private[graft] val CellSummaryFile = "_graft_cell_summary.bin"
   /** Plan-choice threshold for the unbounded bucketed nearest door:
@@ -1936,21 +1932,20 @@ object SpatialJoin {
   private val MaxSaltedCells = 512
 
   /** Write-time statistics ride the write instead of rescanning the
-    * store:
+    * store, each carried under the [[graft.StoreStamp]] contract:
     *  - the heavy-cell histogram needs a census only when the cell bound
     *    ([[MaxCellRowsProp]]) can reach [[HeavyCellMinRows]]: an
     *    overwrite bounds every cell by its source-row count (observed on
-    *    the write's own job), a small local append by the prior bound
-    *    plus the batch's largest per-cell count; under the floor the
-    *    empty, complete histogram is stamped with no job;
+    *    the write's own job), a small local append by the current prior
+    *    bound plus the batch's largest per-cell count; under the floor
+    *    the empty, complete histogram is stamped with no job;
     *  - an append whose batch is a small local relation ([[localRows]])
     *    and whose every geometry lies inside the stamped summary's frame
     *    adds the batch's anchors and coverage to a CURRENT
     *    [[stampCellSummary]] stamp on the driver and restamps it once
     *    the write lands, so the caller's `stampCellSummary` that follows
-    *    is a no-op. Any other write leaves the stamp unreadable (its file
-    *    fingerprint no longer matches), and `stampCellSummary`
-    *    recomputes it.
+    *    is a no-op. After any other write the stamp no longer reads, and
+    *    `stampCellSummary` recomputes it.
     *
     * @param geoMetadata stamp the GeoParquet 1.1 `geo` payload into every
     *   part footer (default ON since r9): the stats FOLD INTO the write
@@ -1985,15 +1980,15 @@ object SpatialJoin {
     // grid while the on-disk one differs — surface that now rather than at
     // join time). Checked BEFORE any write so a bad call leaves the store
     // intact.
-    val existedBefore = spark0.sessionState.catalog.tableExists(tableId)
-    if (modeNorm != "overwrite" && existedBefore) {
-      val existing = spark0.sessionState.catalog.getTableMetadata(tableId).properties
-      existing.get(CellSizeProp).foreach { prev =>
+    val prior = StoreStamp.store(spark0, table)
+    val existedBefore = prior.isDefined
+    prior.filter(_ => modeNorm != "overwrite").foreach { st =>
+      st.prop(CellSizeProp).foreach { prev =>
         require(prev.toDouble == cellSize,
           s"writeSpatialBucketed: mode=$mode with cellSize=$cellSize onto a " +
             s"store written with cellSize=$prev — reuse the stamped grid")
       }
-      existing.get("graft.spatial.geometry").foreach { prev =>
+      st.prop("graft.spatial.geometry").foreach { prev =>
         require(prev == geom,
           s"writeSpatialBucketed: mode=$mode with geom=$geom onto a store " +
             s"stamped for $prev")
@@ -2001,14 +1996,11 @@ object SpatialJoin {
     }
     val cs = cellSize
     // an append reads what it carries forward BEFORE the write: the
-    // store's cell bound and summary stamp describe the pre-append
-    // files, and a small local batch's geometries come from the driver
-    // with no job
+    // store's current cell bound and summary stamp, and a small local
+    // batch's geometries, from the driver with no job
     val appending = modeNorm == "append" && existedBefore
-    val priorBound =
-      if (!appending) None
-      else spark0.sessionState.catalog.getTableMetadata(tableId).properties
-        .get(MaxCellRowsProp).flatMap(v => scala.util.Try(v.toLong).toOption)
+    val priorBound = prior.filter(_ => appending)
+      .flatMap(_.stat(MaxCellRowsProp)).flatMap(_.toLongOption)
     val batch: Option[Array[Array[Byte]]] =
       if (!appending) None
       else localGeometries(df, geom)
@@ -2026,19 +2018,17 @@ object SpatialJoin {
     // the summary merge: a stamp current for the pre-append files, and
     // every batch geometry inside its frame. A batch with no usable
     // geometry writes no row, so a current stamp stays current as it is
-    val merge: Option[(SummaryStamp, Array[Geometry])] = for {
+    val merge: Option[(Int, CellSummary, Array[Geometry])] = for {
       rows <- batch
       geoms <- scala.util.Try(rows.map(EWKB.read).filterNot(_.isEmpty)).toOption
       if geoms.nonEmpty
-      prior <- readSummaryStamp(spark0, table)
-      if geoms.forall(g => prior.summary.frame.holds(g.getEnvelopeInternal))
-    } yield (prior, geoms)
-    // the cell bound goes before the write and comes back with the
-    // histogram after it: a write that fails in between leaves none
-    if (priorBound.isDefined)
-      try spark0.sql(s"ALTER TABLE ${quoteTable(table)} UNSET TBLPROPERTIES " +
-        s"IF EXISTS ('$MaxCellRowsProp')")
-      catch { case scala.util.control.NonFatal(_) => () }
+      (grid, sum) <- prior.flatMap(summaryStamp)
+      if geoms.forall(g => sum.frame.holds(g.getEnvelopeInternal))
+    } yield (grid, sum, geoms)
+    // the files the carried statistics describe, listed before the
+    // write: none for a write that creates the store
+    val before = prior.filter(_ => priorBound.isDefined || merge.isDefined)
+      .fold(StoreStamp.Files.none)(_.files)
     val cellsUdf = udf((b: Array[Byte]) => gridCellsOf(b, cs))
     val stamp = geoMetadata && modeNorm == "overwrite"
     // a write that creates the store counts its source rows on the
@@ -2057,78 +2047,11 @@ object SpatialJoin {
       .bucketBy(buckets, CellCol).sortBy(CellCol)
       .format("parquet")
       .saveAsTable(table)
-    // stamp the grid geometry into the catalog so the optimizer rule can
-    // auto-plan plain spatial joins between two same-grid stores
-    // (quote each part separately — backticking the whole string would
-    // turn a db-qualified name into one dotted identifier).
-    // Stamp ONLY when data was actually written: mode=ignore over an
-    // existing table makes saveAsTable a no-op, and restamping would put
-    // THIS call's cellSize/geom on a store whose rows were exploded with
-    // the old grid — the consistency check above catches a mismatched
-    // grid, but an unstamped legacy store must not gain a fabricated stamp
-    // either. (error/errorifexists over an existing table throws in
-    // saveAsTable, so this line is only reachable when a write happened
-    // or the grids were verified identical — skip the no-op restamp.)
-    val wrote = modeNorm == "overwrite" || modeNorm == "append" || !existedBefore
-    if (wrote) {
-      val quoted = quoteTable(table)
-      spark0.sql(
-        s"ALTER TABLE $quoted SET TBLPROPERTIES " +
-          s"('$CellSizeProp'='$cellSize', 'graft.spatial.geometry'='$geom')")
-      // heavy-cell histogram: counts must describe all rows on the grid,
-      // not one batch. A write whose cell bound stays under the floor
-      // stamps the empty histogram the census would find, with no job;
-      // otherwise the shared stamping door re-measures the full table
-      // (one cell-column-only scan; bucketed by cell → the groupBy needs
-      // no exchange). The stamp is an optimization hint: if it fails
-      // (e.g. an unwritable store location for the sidecar), the store —
-      // already fully written — must not fail with it (same policy as
-      // the geo-footer stamp below); joins degrade to the unsalted plan.
-      if (cellHistogram) {
-        try {
-          val bound =
-            if (creates) Some(observedRows(obs, spark0.table(table).count()))
-            else for (p <- priorBound; m <- batchCellMax) yield p + m
-          bound match {
-            case Some(n) if n < HeavyCellMinRows =>
-              stampHistogram(spark0, table, Array.empty, truncated = false, n)
-            case _ => stampCellHistogram(spark0, table)
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"writeSpatialBucketed: store $table written but its cell " +
-                s"histogram was not stamped (hot-cell salting off for joins " +
-                s"against it): ${e.getMessage}")
-            // an APPEND that fails here would otherwise leave the previous
-            // stamp in place — joins would size salt groups from pre-append
-            // counts, worse than no histogram. Best-effort clear.
-            unsetHistogram(spark0, table)
-        }
-      } else {
-        // explicit opt-out (skips the measurement scan on writes whose
-        // joins will never salt — and simulates a pre-r14 store for the
-        // backfill path): a STALE stamp describing pre-write rows is
-        // worse than none, so clear any.
-        unsetHistogram(spark0, table)
-      }
-      // a small in-frame append carries the summary forward on the
-      // driver; any other write leaves the stamp unreadable (its file
-      // fingerprint no longer matches) until stampCellSummary recomputes
-      merge.foreach { case (prior, geoms) =>
-        try mergeSummaryStamp(spark0, table, prior, geoms)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"writeSpatialBucketed: store $table written but its cell " +
-                s"summary was not carried forward (stampCellSummary " +
-                s"recomputes it): ${e.getMessage}")
-        }
-      }
-    }
     // footer stats describe ONE batch: stamping an append would rewrite
     // every part (old batches included) with the new batch's bbox/types —
-    // corrupt metadata for any external reader trusting the footer
+    // corrupt metadata for any external reader trusting the footer. The
+    // rewrite changes the part files, so it runs before the statistics
+    // are stamped for them
     if (geoMetadata && !stamp)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"writeSpatialBucketed: geo stamping skipped for mode=$mode " +
@@ -2156,6 +2079,67 @@ object SpatialJoin {
             s"writeSpatialBucketed: store $table written but not geo-stamped: ${e.getMessage}")
       }
     }
+    // stamp the grid geometry into the catalog so the optimizer rule can
+    // auto-plan plain spatial joins between two same-grid stores.
+    // Stamp ONLY when data was actually written: mode=ignore over an
+    // existing table makes saveAsTable a no-op, and restamping would put
+    // THIS call's cellSize/geom on a store whose rows were exploded with
+    // the old grid — the consistency check above catches a mismatched
+    // grid, but an unstamped legacy store must not gain a fabricated stamp
+    // either. (error/errorifexists over an existing table throws in
+    // saveAsTable, so this line is only reachable when a write happened
+    // or the grids were verified identical — skip the no-op restamp.)
+    val wrote = modeNorm == "overwrite" || modeNorm == "append" || !existedBefore
+    if (wrote) {
+      StoreStamp.set(spark0, table,
+        Seq(CellSizeProp -> cellSize.toString, "graft.spatial.geometry" -> geom))
+      // the files now on disk, when they are the carried statistics' files
+      // plus this write's
+      lazy val after = StoreStamp.carry(spark0, table, before)
+      // heavy-cell histogram: counts must describe all rows on the grid,
+      // not one batch. A write whose cell bound stays under the floor
+      // stamps the empty histogram the census would find, with no job;
+      // otherwise the shared stamping door re-measures the full table
+      // (one cell-column-only scan; bucketed by cell → the groupBy needs
+      // no exchange). The stamp is an optimization hint: if it fails
+      // (e.g. an unwritable store location for the sidecar), the store —
+      // already fully written — must not fail with it (same policy as
+      // the geo-footer stamp below); joins degrade to the unsalted plan.
+      // With `cellHistogram = false` (or a failed stamp) the histogram
+      // stamped before the write no longer reads.
+      if (cellHistogram) {
+        try {
+          val bound =
+            if (creates) Some(observedRows(obs, spark0.table(table).count()))
+            else for (p <- priorBound; m <- batchCellMax) yield p + m
+          (bound, after) match {
+            case (Some(n), Some(files)) if n < HeavyCellMinRows =>
+              stampHistogram(spark0, table, Array.empty, truncated = false, n, files)
+            case _ => stampCellHistogram(spark0, table)
+          }
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"writeSpatialBucketed: store $table written but its cell " +
+                s"histogram was not stamped (hot-cell salting off for joins " +
+                s"against it): ${e.getMessage}")
+        }
+      }
+      // a small in-frame append carries the summary forward on the
+      // driver when its files are all there (no new file at all means
+      // this append's rows are missing); after any other write the stamp
+      // no longer reads until stampCellSummary recomputes it
+      for ((grid, sum, geoms) <- merge; files <- after
+           if files.list.size > before.list.size)
+        try writeSummaryStamp(spark0, table, grid, sum.plus(geoms.iterator), files)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"writeSpatialBucketed: store $table written but its cell " +
+                s"summary was not carried forward (stampCellSummary " +
+                s"recomputes it): ${e.getMessage}")
+        }
+    }
   }
 
   /** (Re)measure and stamp a store's heavy-cell histogram — the backfill
@@ -2167,20 +2151,22 @@ object SpatialJoin {
     * conservative metastore value limits) or, for bigger lists, in a
     * [[CellHistogramFile]] sidecar at the store location with a `file:`
     * marker property — dense grids keep up to [[SidecarCellCap]]
-    * saltable cells instead of the inline top-[[HeavyCellCap]]. An
-    * inline stamp is read back and verified: a metastore that silently
-    * truncates the value would otherwise store exactly the corrupt
-    * payload that disables salting (ADVICE r14), so a failed round trip
-    * unsets the property and throws. Throws on any failure — callers
-    * who must not fail (the write path) wrap it in their own
-    * degrade-with-warning policy. */
+    * saltable cells instead of the inline top-[[HeavyCellCap]]. The
+    * stamp is for the files listed before the census (see
+    * [[graft.StoreStamp]]), so a write landing during it leaves the stamp
+    * unreadable, never stale. Throws on any failure, a stamp that does
+    * not round-trip through the catalog included — callers who must not
+    * fail (the write path) wrap it in their own degrade-with-warning
+    * policy. */
   def stampCellHistogram(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val df = spark.table(table)
-    require(df.columns.contains(CellCol),
+    val store = StoreStamp.store(spark, table).filter(_ => df.columns.contains(CellCol))
+    require(store.isDefined,
       s"stampCellHistogram: $table has no $CellCol column — not a " +
         "writeSpatialBucketed store")
+    val files = store.get.files
     // the exact largest cell rides the census's own job; if its delivery
     // is lost, the heaviest kept count (or the floor, when none is kept)
     // bounds every cell just as well
@@ -2193,76 +2179,40 @@ object SpatialJoin {
         s"cells with >=$HeavyCellMinRows rows — the histogram keeps the " +
         s"heaviest $SidecarCellCap; joins cannot hot-salt the dropped " +
         "ones. A grid this uniformly dense wants a larger cellSize.")
-    stampHistogram(spark, table, kept, truncated, maxRows)
+    stampHistogram(spark, table, kept, truncated, maxRows, files)
   }
 
   /** Stamp a measured histogram — `kept` (cell, count) rows heaviest
     * first, as [[heavyCellCensus]] returns them — and the cell bound
-    * `maxRows`, in one statement (see [[stampCellHistogram]] for the
-    * inline/sidecar split and the read-back). */
+    * `maxRows` for the data files `files`, in one statement (see
+    * [[stampCellHistogram]] for the inline/sidecar split). */
   private def stampHistogram(spark: org.apache.spark.sql.SparkSession,
       table: String, kept: Array[Row], truncated: Boolean,
-      maxRows: Long): Unit = {
-    val quoted = quoteTable(table)
-    val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      maxRows: Long, files: StoreStamp.Files): Unit = {
     def csvOf(rows: Array[Row], trunc: Boolean): String =
       rows.map(row => s"${row.getLong(0)}:${row.getLong(1)}").mkString(",") +
         (if (trunc) ",+" else "")
-    def sidecarPath() = {
-      val loc = spark.sessionState.catalog.getTableMetadata(tableId).location
-      new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(loc), CellHistogramFile)
-    }
+    val location = StoreStamp.store(spark, table).get.table.location
     val inline = csvOf(kept.take(HeavyCellCap),
       truncated || kept.length > HeavyCellCap)
     val goesInline = kept.length <= HeavyCellCap &&
       inline.length <= HistInlineMaxChars
-    val payload =
-      if (goesInline) inline
-      else {
-        val p = sidecarPath()
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val out = fs.create(p, true)
-        try out.write(csvOf(kept, truncated)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        CellHistogramFileMarker
-      }
-    spark.sql(s"ALTER TABLE $quoted SET TBLPROPERTIES " +
-      s"('$CellHistogramProp'='$payload', '$MaxCellRowsProp'='$maxRows')")
-    // read-back round trip (ADVICE r14): an erroring ALTER throws above,
-    // but a metastore that truncates at its PARAM_VALUE limit succeeds
-    // and stores a cut-mid-entry payload — exactly what the parser
-    // rejects at join time. Verify, and leave NO stamp over a corrupt one.
-    val back = spark.sessionState.catalog.getTableMetadata(tableId)
-      .properties.get(CellHistogramProp)
-    if (!back.contains(payload)) {
-      unsetHistogram(spark, table)
-      throw new IllegalStateException(
-        s"stampCellHistogram: $table histogram property did not round-trip " +
-          s"(stamped ${payload.length} chars, read back " +
-          s"${back.map(_.length.toString).getOrElse("nothing")} — a " +
-          "metastore value limit?); property unset, salting stays off")
+    val stamps = files.stamp(
+      CellHistogramProp -> (if (goesInline) inline else CellHistogramFileMarker),
+      MaxCellRowsProp -> maxRows)
+    if (!goesInline) {
+      val csv = csvOf(kept, truncated)
+      StoreStamp.writeSidecar(spark, location, CellHistogramFile, stamps.head._2,
+        parseCellHistogram(csv))(
+        _.write(csv.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     }
+    StoreStamp.set(spark, table, stamps)
     // only AFTER the fresh inline stamp round-tripped may a stale
     // sidecar from a previous file:-marker stamp be removed — deleting
     // it first would leave a dangling marker if the ALTER failed
-    // (review r15 #5). Best-effort: a leftover file is unreferenced.
-    if (goesInline) {
-      try {
-        val p = sidecarPath()
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (fs.exists(p)) fs.delete(p, false)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // (review r15 #5)
+    if (goesInline) StoreStamp.deleteSidecar(spark, location, CellHistogramFile)
   }
-
-  /** Best-effort clear of the histogram and the cell bound together. */
-  private def unsetHistogram(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    try spark.sql(s"ALTER TABLE ${quoteTable(table)} UNSET TBLPROPERTIES " +
-      s"IF EXISTS ('$CellHistogramProp', '$MaxCellRowsProp')")
-    catch { case scala.util.control.NonFatal(_) => () }
 
   /** One copy per stored row: keep only the exploded copy whose cell
     * owns the row's envelope-min corner — the same floor packing the
@@ -2286,237 +2236,92 @@ object SpatialJoin {
     * once, at the cell owning its envelope-min corner — identical to a
     * summary of the pre-explosion frame) and lands in a
     * [[CellSummaryFile]] binary sidecar at the store location; the
-    * [[CellSummaryProp]] property carries the v2 payload
-    * `v2:<grid>:<nx>:<ny>:<totalAnchors>:<files>` — the `grid` asked
-    * for, the sidecar's header, and the fingerprint of the store's data
-    * files taken BEFORE the pass (a write landing during it leaves a
-    * stamp that no longer matches: unreadable, never stale). The stamp
-    * is read back and verified end-to-end (property round trip +
-    * sidecar re-parse) — a failed round trip unsets everything and
-    * throws, leaving no corrupt stamp behind. A store with no usable
-    * geometry clears any stale stamp and stamps nothing (the unbounded
-    * door then has no matches by definition).
+    * [[CellSummaryProp]] property carries the `grid` asked for and the
+    * sidecar's header, stamped for the store's data files listed BEFORE
+    * the pass ([[graft.StoreStamp]]: a write landing during it leaves a
+    * stamp that does not read, never a stale one). A store with no
+    * usable geometry stamps nothing (the unbounded door then has no
+    * matches by definition).
     *
-    * A stamp already CURRENT — same `grid`, fingerprint matching the
-    * files the store holds now — is left as it is, and the call runs no
-    * job: a small local append through [[writeSpatialBucketed]] carries
-    * the summary forward itself, so re-stamping after every append only
-    * costs a pass when the append could not. Any other change to the
-    * files, through graft or not (a plain `INSERT INTO`, another engine
-    * touching the parts), makes the stamp unreadable, and the next call
-    * here recomputes it. */
+    * A stamp already CURRENT — same `grid`, stamped for the files the
+    * store holds now — is left as it is, and the call runs no job: a
+    * small local append through [[writeSpatialBucketed]] carries the
+    * summary forward itself, so re-stamping after every append only
+    * costs a pass when the append could not. */
   def stampCellSummary(spark: org.apache.spark.sql.SparkSession,
       table: String, grid: Int = CellSummary.DefaultGrid): Unit = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val df = spark.table(table)
-    require(df.columns.contains(CellCol),
+    val store = StoreStamp.store(spark, table).filter(_ => df.columns.contains(CellCol))
+    require(store.isDefined,
       s"stampCellSummary: $table has no $CellCol column — not a " +
         "writeSpatialBucketed store")
-    val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(tableId)
-    val cs = meta.properties.get(CellSizeProp)
-      .flatMap(v => scala.util.Try(v.toDouble).toOption)
+    val st = store.get
+    val cs = st.prop(CellSizeProp).flatMap(_.toDoubleOption)
       .getOrElse(throw new IllegalArgumentException(
         s"stampCellSummary: $table has no readable $CellSizeProp stamp — " +
           "the per-row dedup needs the store's grid; rewrite with " +
           "writeSpatialBucketed or set the property"))
-    val geom = meta.properties.getOrElse("graft.spatial.geometry", "geometry")
+    val geom = st.prop("graft.spatial.geometry").getOrElse("geometry")
     require(df.columns.contains(geom),
       s"stampCellSummary: $table has no '$geom' geometry column")
-    if (readSummaryStamp(spark, table).exists(_.grid == grid)) return
-    val files = storeFiles(spark, meta.location)
+    if (summaryStamp(st).exists(_._1 == grid)) return
+    val files = st.files
     CellSummary.compute(storeOwnerRows(df, geom, cs), geom, grid) match {
       case None =>
-        clearSummaryStamp(spark, table, meta.location)
         log.info(s"stampCellSummary: $table has no usable geometry — " +
           "nothing stamped (unbounded nearest joins against it have no " +
           "matches by definition)")
       case Some(sum) =>
-        writeSummaryStamp(spark, table, meta.location, grid, sum, files)
+        writeSummaryStamp(spark, table, grid, sum, files)
     }
-  }
-
-  /** A readable [[stampCellSummary]] stamp: the summary, the grid it was
-    * stamped at, and the data files its fingerprint matched. */
-  private final case class SummaryStamp(grid: Int, summary: CellSummary,
-      files: Seq[(String, Long, Long)])
-
-  /** The data files under a store location, sorted: (path relative to
-    * the location, length, mtime) of every file a scan reads — names
-    * starting with `_` or `.` (the sidecars, `_SUCCESS`, checksums,
-    * staging dirs) are not data to Spark and are left out. Walked with
-    * `listStatus`, which reads only names, lengths and mtimes:
-    * `listFiles` builds `LocatedFileStatus`es, which on the local file
-    * system load each file's owner and permissions through a forked
-    * shell, about 7 ms a file. */
-  private def storeFiles(spark: org.apache.spark.sql.SparkSession,
-      location: java.net.URI): Seq[(String, Long, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    def walk(dir: org.apache.hadoop.fs.Path, prefix: String): Unit =
-      fs.listStatus(dir).foreach { f =>
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) {
-          if (f.isDirectory) walk(f.getPath, prefix + name + "/")
-          else out += ((prefix + name, f.getLen, f.getModificationTime))
-        }
-      }
-    if (fs.exists(root)) walk(root, "")
-    out.sorted.toSeq
-  }
-
-  /** SHA-256 (hex) of a [[storeFiles]] listing. */
-  private def fingerprintOf(files: Seq[(String, Long, Long)]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    files.foreach { case (n, len, mtime) =>
-      md.update(s"$n\t$len\t$mtime\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    md.digest().map(b => f"${b & 0xff}%02x").mkString
-  }
-
-  private def summarySidecar(location: java.net.URI) =
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(location), CellSummaryFile)
-
-  /** Best-effort clear of a summary stamp (property + sidecar). */
-  private def clearSummaryStamp(spark: org.apache.spark.sql.SparkSession,
-      table: String, location: java.net.URI): Unit = {
-    try spark.sql(s"ALTER TABLE ${quoteTable(table)} UNSET TBLPROPERTIES " +
-      s"IF EXISTS ('$CellSummaryProp')")
-    catch { case scala.util.control.NonFatal(_) => () }
-    try {
-      val p = summarySidecar(location)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, false)
-    } catch { case scala.util.control.NonFatal(_) => () }
   }
 
   /** Write `sum` as the store's summary stamp for data files `files`:
-    * the sidecar first, then the property, then the end-to-end
-    * read-back. A crash between the two writes leaves a sidecar whose
-    * header the old property does not match — unreadable, never mixed. */
+    * the sidecar first, then the property. A crash between the two
+    * writes leaves a sidecar whose header the old property does not
+    * match — unreadable, never mixed. */
   private def writeSummaryStamp(spark: org.apache.spark.sql.SparkSession,
-      table: String, location: java.net.URI, grid: Int, sum: CellSummary,
-      files: Seq[(String, Long, Long)]): Unit = {
-    val p = summarySidecar(location)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(fs.create(p, true)))
-    try CellSummary.writeTo(sum, out) finally out.close()
-    val payload = s"v2:$grid:${sum.nx}:${sum.ny}:${sum.totalAnchors}:" +
-      fingerprintOf(files)
-    spark.sql(s"ALTER TABLE ${quoteTable(table)} SET TBLPROPERTIES " +
-      s"('$CellSummaryProp'='$payload')")
-    // end-to-end read-back: property round trip (metastore value limits
-    // can't bite a ~100-char payload, but the discipline is free) AND a
-    // full sidecar re-parse against it — the exact check every later
-    // join will run
-    val ok =
-      try {
-        val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
-        spark.sessionState.catalog.getTableMetadata(tableId)
-          .properties.get(CellSummaryProp).contains(payload) && {
-          val in = new java.io.DataInputStream(
-            new java.io.BufferedInputStream(fs.open(p)))
-          val back = try CellSummary.readFrom(in) finally in.close()
-          back.nx == sum.nx && back.ny == sum.ny &&
-            back.totalAnchors == sum.totalAnchors
-        }
-      } catch { case scala.util.control.NonFatal(_) => false }
-    if (!ok) {
-      clearSummaryStamp(spark, table, location)
-      throw new IllegalStateException(
-        s"stampCellSummary: $table summary stamp did not round-trip " +
-          "(property or sidecar readback failed); stamp cleared, " +
-          "unbounded joins will compute the summary per call")
+      table: String, grid: Int, sum: CellSummary, files: StoreStamp.Files): Unit = {
+    val stamp = files.stamp(CellSummaryProp -> s"$grid:${sum.nx}:${sum.ny}:${sum.totalAnchors}")
+    StoreStamp.writeSidecar(spark, StoreStamp.store(spark, table).get.table.location,
+        CellSummaryFile, stamp.head._2, sum) { out =>
+      val data = new java.io.DataOutputStream(new java.io.BufferedOutputStream(out))
+      CellSummary.writeTo(sum, data)
+      data.flush()
+    }
+    StoreStamp.set(spark, table, stamp)
+  }
+
+  /** The store's current [[stampCellSummary]] stamp: its grid and
+    * summary. None — the unbounded door then computes a fresh summary
+    * for the call, a correctness-neutral slow path — when the stamp is
+    * absent or not current ([[graft.StoreStamp]]), or its sidecar does
+    * not parse or match the property's header; those last two warn. */
+  private def summaryStamp(store: StoreStamp.Store): Option[(Int, CellSummary)] = {
+    def unreadable(why: String) = {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"readCellSummary: ${store.table.identifier.unquotedString} $why — " +
+          "ignoring it; re-run stampCellSummary")
+      None
+    }
+    try store.stat(CellSummaryProp).flatMap(_.split(':') match {
+      case Array(grid, nx, ny, total) =>
+        val sum = store.sidecar(CellSummaryProp, CellSummaryFile)((in, _) =>
+          CellSummary.readFrom(new java.io.DataInputStream(new java.io.BufferedInputStream(in))))
+        if (sum.nx == nx.toInt && sum.ny == ny.toInt && sum.totalAnchors == total.toLong)
+          Some((grid.toInt, sum))
+        else unreadable("has a summary sidecar that does not match its stamp")
+      case _ => unreadable(s"carries an unreadable $CellSummaryProp")
+    }) catch {
+      case scala.util.control.NonFatal(e) => unreadable(s"summary stamp (${e.getMessage})")
     }
   }
 
-  /** Spark names every part file of one write with that write's job
-    * UUID. */
-  private val WriteIdPattern =
-    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
-
-  /** Restamp `prior` with an append's `rows` added, once the append has
-    * landed. The files now on disk must be the prior stamp's files, each
-    * unchanged, plus at least one file, all of ONE write (one job UUID in
-    * their names) — anything else means another writer got in, and the
-    * stamp is left to go unreadable. The caller merges only a batch with
-    * rows to write, so no new file at all means this append's files are
-    * missing. */
-  private def mergeSummaryStamp(spark: org.apache.spark.sql.SparkSession,
-      table: String, prior: SummaryStamp, rows: Array[Geometry]): Unit = {
-    val location = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location
-    val after = storeFiles(spark, location)
-    val before = prior.files.toSet
-    val writeIds = after.filterNot(before).map(f => WriteIdPattern.findFirstIn(f._1))
-    if (before.subsetOf(after.toSet) && writeIds.forall(_.isDefined) &&
-        writeIds.distinct.size == 1)
-      writeSummaryStamp(spark, table, location, prior.grid,
-        prior.summary.plus(rows.iterator), after)
-    else org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"writeSpatialBucketed: $table changed outside this append — its " +
-        "cell summary is not carried forward")
-  }
-
-  /** Read a [[stampCellSummary]] stamp: Some only when the v2 property
-    * parses, its file fingerprint matches the store's files NOW, the
-    * sidecar parses, and the sidecar's header matches the property — any
-    * failure degrades to None (the unbounded door then computes a fresh
-    * summary for the call: a correctness-neutral slow path, unlike the
-    * histogram's perf-only degradation). A fingerprint mismatch is the
-    * normal state after a write the stamp was not carried through, and
-    * logs at info; a corrupt stamp warns. */
   private[graft] def readCellSummary(spark: org.apache.spark.sql.SparkSession,
       table: String): Option[CellSummary] =
-    readSummaryStamp(spark, table).map(_.summary)
-
-  private def readSummaryStamp(spark: org.apache.spark.sql.SparkSession,
-      table: String): Option[SummaryStamp] = {
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    try {
-      val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      val meta = spark.sessionState.catalog.getTableMetadata(tableId)
-      meta.properties.get(CellSummaryProp).flatMap { payload =>
-        payload.split(':') match {
-          case Array("v2", grid, nx, ny, total, print) =>
-            val files = storeFiles(spark, meta.location)
-            if (fingerprintOf(files) != print) {
-              log.info(s"readCellSummary: $table changed since its cell " +
-                "summary was stamped — ignoring the stamp; re-run " +
-                "stampCellSummary")
-              None
-            } else {
-              val p = summarySidecar(meta.location)
-              val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-              val in = new java.io.DataInputStream(
-                new java.io.BufferedInputStream(fs.open(p)))
-              val sum = try CellSummary.readFrom(in) finally in.close()
-              if (sum.nx == nx.toInt && sum.ny == ny.toInt &&
-                  sum.totalAnchors == total.toLong)
-                Some(SummaryStamp(grid.toInt, sum, files))
-              else {
-                log.warn(s"readCellSummary: $table sidecar does not match " +
-                  "its property stamp — ignoring both; re-run stampCellSummary")
-                None
-              }
-            }
-          case _ =>
-            log.warn(s"readCellSummary: $table carries an unreadable " +
-              s"$CellSummaryProp ('$payload') — ignoring it; re-run " +
-              "stampCellSummary")
-            None
-        }
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"readCellSummary: $table stamp unreadable " +
-          s"(${e.getMessage}) — computing the summary per call")
-        None
-    }
-  }
+    scala.util.Try(StoreStamp.store(spark, table)).toOption.flatten
+      .flatMap(summaryStamp).map(_._2)
 
   /** Bbox read of a [[writeSpatialBucketed]] store: the query box's
     * covering cells become an IN filter on the bucket column, which
@@ -2655,90 +2460,47 @@ object SpatialJoin {
     (fromLeft ++ fromRightOnly).toMap
   }
 
-  /** Sidecar payload memo keyed by (path, mtime, length): the
-    * auto-planning rule resolves histograms at PLAN time, and a
-    * dashboard planning hundreds of queries over one dense store must
-    * not re-read the file per query — with the memo each plan pays one
-    * getFileStatus RPC, and a backfill refresh (new mtime/len) is
-    * picked up on the next plan. Access-ordered, bounded at 64 entries
-    * (sidecar stores are rare; each payload ≤ ~1.6 MB). */
-  private val sidecarCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), String](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), String]): Boolean =
-          size() > 64
-      })
-
-  /** A stamped histogram property value's payload: the inline CSV
-    * verbatim, or the sidecar file's content when the value is the
-    * `file:` marker [[stampCellHistogram]] writes for lists that outgrow
-    * metastore value limits. The size guard keeps a corrupt marker from
-    * ballooning a driver read. */
-  private def histogramPayload(spark: org.apache.spark.sql.SparkSession,
-      raw: String, location: => java.net.URI): String =
-    if (raw != CellHistogramFileMarker) raw
-    else {
-      val p = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(location), CellHistogramFile)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val st = fs.getFileStatus(p)
-      val len = st.getLen
-      require(len > 0 && len <= (16L << 20),
-        s"cell histogram sidecar $p is $len bytes — not a stamped histogram")
-      val key = (p.toString, st.getModificationTime, len)
-      val hit = sidecarCache.get(key)
-      if (hit != null) hit
-      else {
-        val in = fs.open(p)
-        val payload =
-          try {
-            val buf = new Array[Byte](len.toInt)
-            in.readFully(buf)
-            new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
-          } finally in.close()
-        sidecarCache.put(key, payload)
-        payload
+  /** The current [[CellHistogramProp]] of `store` ([[graft.StoreStamp]]):
+    * the inline CSV, or the sidecar's when the value is the `file:`
+    * marker [[stampCellHistogram]] writes for lists that outgrow
+    * metastore value limits — parsed once per stamp, so the
+    * auto-planning rule, which resolves histograms at PLAN time, opens no
+    * file per query. The size guard keeps a corrupt marker from
+    * ballooning a driver read. Guarded for optimizer-rule use: a corrupt
+    * payload or an unreadable sidecar degrades to None with a warning,
+    * never a throw — the rule calls this for a plan-time WARNING, and a
+    * diagnostic that fails every query over the store is a regression
+    * (ADVICE r14). */
+  private[graft] def histogramOf(store: StoreStamp.Store): Option[CellHist] =
+    try store.stat(CellHistogramProp).map { raw =>
+      if (raw != CellHistogramFileMarker) parseCellHistogram(raw)
+      else store.sidecar(CellHistogramProp, CellHistogramFile) { (in, len) =>
+        require(len > 0 && len <= (16L << 20),
+          s"cell histogram sidecar is $len bytes — not a stamped histogram")
+        val buf = new Array[Byte](len.toInt)
+        new java.io.DataInputStream(in).readFully(buf)
+        parseCellHistogram(new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim)
       }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"unreadable cell histogram on ${store.table.identifier} — hot-cell " +
+            s"salting (and the plan-time hot-cell warning) unavailable: " +
+            s"${e.getMessage}")
+        None
     }
 
-  /** [[CellHist]] from an already-resolved catalog table, guarded for
-    * optimizer-rule use: a corrupt or metastore-truncated payload (or an
-    * unreadable sidecar) must degrade to None-with-a-warning, never
-    * throw — the auto-planning rule calls this for a plan-time WARNING,
-    * and a diagnostic feature that fails every query over the store is
-    * a regression (ADVICE r14). */
-  private[graft] def histogramFromCatalog(
-      spark: org.apache.spark.sql.SparkSession,
-      ct: org.apache.spark.sql.catalyst.catalog.CatalogTable): Option[CellHist] =
-    ct.properties.get(CellHistogramProp).flatMap { raw =>
-      try Some(parseCellHistogram(histogramPayload(spark, raw, ct.location)))
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"unreadable cell histogram on ${ct.identifier} — hot-cell " +
-              s"salting (and the plan-time hot-cell warning) unavailable: " +
-              s"${e.getMessage}")
-          None
-      }
-    }
-
-  /** The store's heavy-cell histogram from the catalog, if stamped. A
-    * name the session catalog cannot describe (temp view over a store,
+  /** The store's heavy-cell histogram, if stamped and current. A name
+    * the session catalog cannot describe (temp view over a store,
     * catalog-qualified spelling) degrades to None — the unsalted plan,
     * exactly the pre-histogram behavior; anything else non-fatal (a
-    * transient metastore failure, a corrupt property payload) ALSO
-    * degrades but logs what was swallowed — a silently-unsalted 2B-pair
-    * join must leave a diagnostic. */
+    * transient metastore failure) ALSO degrades but logs what was
+    * swallowed — a silently-unsalted 2B-pair join must leave a
+    * diagnostic. */
   private def heavyCellsOf(spark: org.apache.spark.sql.SparkSession,
       table: String): Option[CellHist] =
-    try {
-      val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      histogramFromCatalog(spark, spark.sessionState.catalog.getTableMetadata(id))
-    } catch {
-      case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException |
-          _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException |
-          _: org.apache.spark.sql.catalyst.parser.ParseException => None
+    try StoreStamp.store(spark, table).flatMap(histogramOf)
+    catch {
       case scala.util.control.NonFatal(e) =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"sjoinBucketed: could not read the cell histogram of $table — " +

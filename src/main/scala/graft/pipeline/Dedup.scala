@@ -3,13 +3,16 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId,
+  Expression, InterpretedOrdering}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
   IntegerType, LongType, MapType, StructField, StructType}
 import scala.jdk.CollectionConverters._
+import graft.StoreStamp
 import graft.join.SpatialJoin.{dropBucketedTable, quoteTable}
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -209,51 +212,36 @@ object Dedup {
         .drop("__bsz")
     }
 
-  /** Read a store's stamp property: Some when the table resolves and
-    * carries it; None on ANALYSIS failures only (missing table/db,
-    * unparseable name, temp view). A transient metastore fault
-    * PROPAGATES — it must not masquerade as "not a store" and send the
-    * caller off to rewrite a perfectly valid index. */
-  private def readStoreStamp(spark: SparkSession,
-      table: String, prop: String): Option[String] =
-    try {
-      val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      spark.sessionState.catalog.getTableMetadata(id).properties.get(prop)
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
-
   /** Table property on each near-dup store's slim bucket table: an
     * upper bound on the row count of any of its bucket groups —
     * (band, bucket), (chunk, bucket) or (t, sig). The store doors
     * ([[capBucketsJoint]]) and compaction ([[recapBucketTable]]) skip
     * their bucket-cap census when this bound (plus the batch's rows)
     * is ≤ the cap, and only then may the store doors take their driver
-    * tier ([[storeNovelDriver]]). The writers maintain it: unset
-    * together with the params stamp before a write onto an existing
-    * store, and set after
-    * every table of the write has landed — overwrite stamps the batch's
-    * bound, append adds the batch's bound to the stamped one (a store
-    * without the bound stays without it until its next compaction),
-    * ignore/error modes that write nothing leave it alone. A batch's
-    * bound is its signed row count when that is ≤ the cap (each signed
-    * row adds at most one row per group), otherwise the largest group
-    * the write-time census kept. Contract, as for the spatial
-    * `stampCellSummary`: graft's own writes keep the bound; rows that
-    * other writers add to the table are not detected. */
+    * tier ([[storeNovelDriver]]). A statistic under the
+    * [[graft.StoreStamp]] contract, stamped with the slim table's files:
+    * overwrite stamps the batch's bound, append adds the batch's bound to
+    * the current stamped one (a store without one stays without it until
+    * its next compaction), ignore/error modes that write nothing leave it
+    * alone. A batch's bound is its signed row count when that is ≤ the
+    * cap (each signed row adds at most one row per group), otherwise the
+    * largest group the write-time census kept. */
   val BucketRowBoundProp = "graft.dedup.maxBucketRows"
 
-  /** The stamped [[BucketRowBoundProp]] of `table`; None when absent or
-    * unreadable (the census path). */
-  private def readRowBound(spark: SparkSession, table: String): Option[Long] =
-    parseRowBound(readStoreStamp(spark, table, BucketRowBoundProp))
+  /** The current [[BucketRowBoundProp]] of `store`; None when absent,
+    * not current or unreadable (the census path). */
+  private def rowBoundOf(store: StoreStamp.Store): Option[Long] =
+    store.stat(BucketRowBoundProp).flatMap(_.toLongOption).filter(_ >= 0)
 
-  private def parseRowBound(v: Option[String]): Option[Long] =
-    v.flatMap(_.toLongOption).filter(_ >= 0)
+  private def readRowBound(spark: SparkSession, table: String): Option[Long] =
+    StoreStamp.store(spark, table).flatMap(rowBoundOf)
 
   /** A store write as [[checkStoreWrite]] resolved it: the normalized
     * mode, whether the table existed, and — for an append onto an
-    * existing store — its stamped bucket-row bound before the write. */
+    * existing store — its current bucket-row bound before the write,
+    * with the files it describes. */
   private final case class StoreWrite(mode: String, existedBefore: Boolean,
-      priorBound: Option[Long]) {
+      prior: Option[(Long, StoreStamp.Files)]) {
     /** overwrite and append write; ignore/error only create a new table */
     def writes: Boolean = mode == "overwrite" || mode == "append" || !existedBefore
     /** the write replaces or extends a table that is already there */
@@ -267,62 +255,56 @@ object Dedup {
     * mixed parameters hash different buckets (or grams of a different
     * n) and silently miss pairs. One copy for all four tiers (review
     * r17 — the fourth paste had already drifted its message). An
-    * append also reads the prior [[BucketRowBoundProp]] here, from the
-    * same metadata. */
+    * append also reads the prior [[BucketRowBoundProp]] here. */
   private def checkStoreWrite(spark: SparkSession,
       table: String, mode: String, prop: String, payload: String,
       writer: String): StoreWrite = {
     val modeNorm = mode.toLowerCase(java.util.Locale.ROOT)
-    val tableId = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val existedBefore = spark.sessionState.catalog.tableExists(tableId)
-    val priorBound =
-      if (modeNorm == "overwrite" || !existedBefore) None
-      else {
-        val props = spark.sessionState.catalog.getTableMetadata(tableId).properties
-        val prev = props.get(prop)
-        require(prev.contains(payload),
-          s"$writer: mode=$mode with params $payload onto a store " +
-            s"stamped ${prev.getOrElse("(no stamp)")} — mixed parameters " +
-            "(or an old store layout) silently miss pairs; reuse the " +
-            "stamped parameters, or rewrite with mode=overwrite")
-        parseRowBound(props.get(BucketRowBoundProp))
-      }
-    StoreWrite(modeNorm, existedBefore, priorBound)
+    val store = StoreStamp.store(spark, table)
+    val prior = store.filter(_ => modeNorm != "overwrite").flatMap { st =>
+      val prev = st.prop(prop)
+      require(prev.contains(payload),
+        s"$writer: mode=$mode with params $payload onto a store " +
+          s"stamped ${prev.getOrElse("(no stamp)")} — mixed parameters " +
+          "(or an old store layout) silently miss pairs; reuse the " +
+          "stamped parameters, or rewrite with mode=overwrite")
+      rowBoundOf(st).map(_ -> st.files)
+    }
+    StoreWrite(modeNorm, store.isDefined, prior)
   }
 
-  /** UNSET the params stamp and the bucket-row bound before a write
-    * onto an existing store: the saves are not atomic, and a crash
-    * between them must leave a store that ERRORS loudly at the doors
-    * (no stamp → "rewrite") rather than one that silently joins old
-    * band rows to new signatures, or skips a cap census on a stale
-    * bound. [[stampStore]] re-sets both after every write lands. ONLY
-    * on modes that write onto the table — ignore/error modes write
-    * nothing there, and unsetting would permanently brick a valid
-    * index with a no-op call (review r16). */
-  private def unsetStoreStamps(spark: SparkSession,
+  /** UNSET the params stamp before a write onto an existing store: the
+    * saves are not atomic, and a crash between them must leave a store
+    * that ERRORS loudly at the doors (no stamp → "rewrite") rather than
+    * one that silently joins old band rows to new signatures.
+    * [[stampStore]] re-sets it after every write lands. ONLY on modes
+    * that write onto the table — ignore/error modes write nothing there,
+    * and unsetting would permanently brick a valid index with a no-op
+    * call (review r16). */
+  private def unsetParamsStamp(spark: SparkSession,
       table: String, w: StoreWrite, prop: String): Unit =
     if (w.changesExisting)
       try spark.sql(s"ALTER TABLE ${quoteTable(table)} " +
-        s"UNSET TBLPROPERTIES IF EXISTS ('$prop', '$BucketRowBoundProp')")
+        s"UNSET TBLPROPERTIES IF EXISTS ('$prop')")
       catch { case _: org.apache.spark.sql.AnalysisException => () }
 
   /** Stamp a store's parameter property when the write mode actually
     * wrote — the shared finish of the index writers — together with its
     * [[BucketRowBoundProp]]: `batchBound` for a fresh or overwritten
-    * table, the prior bound + `batchBound` on an append (absent when
-    * either is). */
+    * table, the prior bound + `batchBound` on an append, each carried
+    * onto the files the write leaves ([[StoreStamp.carry]]; absent
+    * when the carry or either bound is). */
   private def stampStore(spark: SparkSession,
       table: String, w: StoreWrite, prop: String, payload: String,
       batchBound: Option[Long]): Unit =
     if (w.writes) {
-      val bound =
-        if (w.mode == "append" && w.existedBefore)
-          for (p <- w.priorBound; b <- batchBound) yield p + b
-        else batchBound
-      val props = s"'$prop'='$payload'" +:
-        bound.map(b => s"'$BucketRowBoundProp'='$b'").toSeq
-      spark.sql(s"ALTER TABLE ${quoteTable(table)} " +
-        s"SET TBLPROPERTIES (${props.mkString(", ")})")
+      val appends = w.mode == "append" && w.existedBefore
+      val bound = for {
+        b <- batchBound
+        (p, before) <- if (appends) w.prior else Some((0L, StoreStamp.Files.none))
+        files <- StoreStamp.carry(spark, table, before)
+      } yield files.stamp(BucketRowBoundProp -> (p + b))
+      StoreStamp.set(spark, table, (prop -> payload) +: bound.toSeq.flatten)
     }
 
   // ----------------------------------------------------------- shingles
@@ -702,7 +684,7 @@ object Dedup {
   private def stampParams[A](spark: SparkSession, table: String, tier: String,
       prop: String, version: String)(make: PartialFunction[Seq[Int], A]): A = {
     val writer = s"write${tier.capitalize}Store"
-    val stamp = readStoreStamp(spark, table, prop)
+    val stamp = StoreStamp.store(spark, table).flatMap(_.prop(prop))
     def refuse(why: String) = throw new IllegalArgumentException(
       s"$table is not a current $writer table ($why) — rewrite it with " +
         s"$writer(mode=overwrite)")
@@ -753,18 +735,18 @@ object Dedup {
   }
 
   /** The one store writer, as [[writeMinhashStore]] documents it: stamp
-    * check, stamps unset, the sibling first ([[writeSibling]]), the slim
-    * rows capped per batch ([[capBucketsWarn]]), stamps set once every
-    * table has landed. A one-table tier snapshots its signed batch for
+    * check, params stamp unset, the sibling first ([[writeSibling]]),
+    * the slim rows capped per batch ([[capBucketsWarn]]), stamps set once
+    * every table has landed. A one-table tier snapshots its signed batch for
     * the bound. */
   private def writeStore(s: BucketScheme, df: DataFrame, table: String,
       idCol: String, srcCol: String, buckets: Int, mode: String,
       maxBucketSize: Int): Unit = {
     val spark = df.sparkSession
     val w = checkStoreWrite(spark, table, mode, s.prop, s.stamp, s.writer)
-    // stamps unset for the non-atomic write window, re-set only after
-    // EVERY table lands (see unsetStoreStamps)
-    unsetStoreStamps(spark, table, w, s.prop)
+    // the params stamp is unset for the non-atomic write window, re-set
+    // only after EVERY table lands (see unsetParamsStamp)
+    unsetParamsStamp(spark, table, w, s.prop)
     val signed = s.sign(df, idCol, srcCol)
     val (slim, rows) = s.sibling match {
       case Some(suffix) =>
@@ -933,11 +915,12 @@ object Dedup {
   /** A batch probed against a store on the driver ([[driverProbe]]):
     * `rows`, the batch's rows in id order; `signed`, its signed rows
     * (position, payload, store keys[, pass keys, pass payloads…]) with
-    * their schema; `scored`, a local frame of (__b, __c, <score>), one
-    * row per deduped candidate pair of batch position `__b` and corpus
-    * id `corpusIds(__c)`. */
+    * their schema, the pass keys at `passKeysAt` (the store keys' column
+    * when the two are the same value); `scored`, a local frame of
+    * (__b, __c, <score>), one row per deduped candidate pair of batch
+    * position `__b` and corpus id `corpusIds(__c)`. */
   private final case class DriverProbe(rows: IndexedSeq[Row],
-      signed: Array[Row], signedSchema: StructType,
+      signed: Array[Row], signedSchema: StructType, passKeysAt: Int,
       idAt: Int, scored: DataFrame, corpusIds: IndexedSeq[Any],
       corpusIdField: StructField)
 
@@ -1024,9 +1007,14 @@ object Dedup {
     // signed rows are at most the batch's rows, one per row
     else localBatch(batch, idCol).filter(_._1.length <= room.get).flatMap {
         case (rows, frame) =>
-      val signed = pass.fold(s.sign)(_.sign)(frame, RowCol, srcCol)
-        .select(Seq(col("id"), col(p), s.keys(col(p)).as("__keys")) ++
-          pass.toSeq.flatMap(ps => ps.keys.as("__pkeys") +: ps.payloads.map(col)): _*)
+      val signer = pass.fold(s.sign)(_.sign)(frame, RowCol, srcCol)
+      // a pass whose keys are the store keys (the embedding pass signs
+      // the same planes) projects them once, from the pass's column
+      val shared = pass.filter(ps => sameValue(signer, s.keys(col(p)), ps.keys))
+      val signed = signer.select(Seq(col("id"), col(p),
+          shared.fold(s.keys(col(p)))(_.keys).as("__keys")) ++
+        pass.toSeq.flatMap(ps => (if (shared.isEmpty) Seq(ps.keys.as("__pkeys")) else Nil) ++
+          ps.payloads.map(col)): _*)
       val signedRows = signed.collect()
       val byKey = bucketMembers(signedRows, 2)
       corpusHits(s, store, sibling, byKey.keys.toSeq, keyType).flatMap {
@@ -1058,7 +1046,8 @@ object Dedup {
               _.select(col("__b"), col("__c"),
                 s.scoreOf(col(p + "_b"), col(p + "_c")).as(s.score))
             }
-            DriverProbe(rows, signedRows, signed.schema, batch.schema.fieldIndex(idCol),
+            DriverProbe(rows, signedRows, signed.schema, if (shared.isEmpty) 3 else 2,
+              batch.schema.fieldIndex(idCol),
               spark.createDataFrame(scored.toSeq.asJava, scoredSchema),
               corpusIds.toIndexedSeq, corpusIdField)
           }
@@ -1078,6 +1067,22 @@ object Dedup {
       idTypeByBytes(schema(idCol).dataType) &&
       batch.queryExecution.optimizedPlan.stats.sizeInBytes <= StoreDriverMaxBytes
   }
+
+  /** Whether columns `a` and `b` over `df` compute the same value: their
+    * expressions, with the aliases of `df`'s top projection seen
+    * through, are semantically equal. */
+  private def sameValue(df: DataFrame, a: Column, b: Column): Boolean =
+    df.select(a, b).queryExecution.analyzed match {
+      case Project(Seq(x, y), child) =>
+        val defs = child match {
+          case Project(list, _) => list.collect { case al: Alias => al.exprId -> al.child }.toMap
+          case _ => Map.empty[ExprId, Expression]
+        }
+        def open(e: Expression) = (e match { case Alias(c, _) => c; case o => o })
+          .transformUp { case r: AttributeReference => defs.getOrElse(r.exprId, r) }
+        open(x).semanticEquals(open(y))
+      case _ => false
+    }
 
   /** `batch`, which [[localFits]], collected for the driver tier: its
     * rows in id order (Spark's ordering of the id type, so a row's
@@ -1141,7 +1146,7 @@ object Dedup {
     val in = ix.toSet
     val passRows = pr.signed.filter(r => in(r.getLong(0).toInt))
     val at = passRows.iterator.map(r => r.getLong(0).toInt -> r).toMap
-    val members = bucketMembers(passRows, 3)
+    val members = bucketMembers(passRows, pr.passKeysAt)
     val nPairs = members.valuesIterator.map(m => m.size.toLong * (m.size - 1) / 2).sum
     if (nPairs > StoreDriverMaxRows) None
     else {
@@ -1151,7 +1156,7 @@ object Dedup {
           pairs += ((m(x) min m(y), m(x) max m(y)))
       }
       // the pass's payloads follow its keys in the signed rows
-      val fields = pass.payloads.indices.map(i => 4 + i)
+      val fields = pass.payloads.indices.map(i => pr.passKeysAt + 1 + i)
       def side(sfx: String) = fields.map(i =>
         pr.signedSchema(i).copy(name = pr.signedSchema(i).name + sfx))
       val (edges, _) = localChunks(pr.scored.sparkSession,
@@ -1314,7 +1319,7 @@ object Dedup {
     *
     * `mode = "append"` ingests an accepted batch into the index (the
     * param stamp must match — checked before any write). The two saves
-    * are not atomic, so the stamp is UNSET for the duration and re-set
+    * are not atomic, so the params stamp is UNSET for the duration and re-set
     * only after both land: a crash mid-write leaves a stamp-less store
     * that the candidates door refuses loudly (rewrite with
     * mode=overwrite) instead of one silently joining old band rows to
@@ -1329,7 +1334,8 @@ object Dedup {
     * Every write keeps the store's [[BucketRowBoundProp]] — the batch's
     * signed row count when that is ≤ `maxBucketSize`, so the write runs
     * no bucket census; the largest kept group otherwise; summed with the
-    * stamped bound on append — and the candidates/novel doors skip
+    * current bound on append ([[graft.StoreStamp]]) — and the
+    * candidates/novel doors skip
     * their joint-cap census (and may run on the driver) while bound +
     * batch rows stays ≤ the cap. */
   def writeMinhashStore(df: DataFrame, table: String,
@@ -1610,11 +1616,11 @@ object Dedup {
     * its OWN capped-out docs — rows the join can never reference either
     * way; the vacuum is the tighter of the two.)
     *
-    * Bucket-row bound ([[BucketRowBoundProp]]): a stamped bound ≤
+    * Bucket-row bound ([[BucketRowBoundProp]]): a current bound ≤
     * `maxBucketSize` proves no group is over the cap (the distinct
     * rewrite can only shrink groups), so the census is skipped and the
-    * bound carried over; otherwise — over the cap, or a store written
-    * before the bound existed — the census runs and its largest kept
+    * bound carried over; otherwise — over the cap, or a store without a
+    * current bound — the census runs and its largest kept
     * group becomes the new, exact bound. The renamed tmp table carries
     * no properties, so the bound is always restamped with the params. */
   private def recapBucketTable(s: BucketScheme, spark: SparkSession,
@@ -1663,10 +1669,11 @@ object Dedup {
           s"RENAME TO ${quoteTable(sib)}")
       }
     }
-    // cap > 0 (required above), so the census path always yields a bound
-    spark.sql(s"ALTER TABLE ${quoteTable(table)} " +
-      s"SET TBLPROPERTIES ('${s.prop}'='${s.stamp}', " +
-      s"'$BucketRowBoundProp'='${bound.get}')")
+    // cap > 0 (required above), so the census path always yields a
+    // bound; the renamed table holds the files of the one rewrite
+    StoreStamp.set(spark, table, (s.prop -> s.stamp) +:
+      StoreStamp.carry(spark, table, StoreStamp.Files.none).toSeq
+        .flatMap(_.stamp(BucketRowBoundProp -> bound.get)))
   }
 
   /** Bucket-occupancy statistics of a persistent index's slim bucket

@@ -59,11 +59,16 @@ object Similarity {
         if ((graft.plans.MinHashKernel.fmix64(plane * 0x9e3779b97f4a7c15L + i) & 1L) == 1L) 1.0 else -1.0
       })
 
+  private val signUdfs = new java.util.concurrent.ConcurrentHashMap[(Int, Int),
+    org.apache.spark.sql.expressions.UserDefinedFunction]()
+
   /** [[signSignature]] with a table seed: table t uses planes
     * t*bits .. t*bits+bits-1, so several independent signature tables can
-    * OR-amplify recall (a near pair only needs to collide in ONE table). */
+    * OR-amplify recall (a near pair only needs to collide in ONE table).
+    * One function per (bits, table), so two signature columns at the same
+    * planes are semantically equal expressions. */
   def signSignatureSeeded(bits: Int, table: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((vec: Seq[Double]) =>
+    signUdfs.computeIfAbsent((bits, table), _ => udf((vec: Seq[Double]) =>
       if (vec == null) None
       else {
         val signs = planeSigns(bits, table, vec.length)
@@ -81,7 +86,7 @@ object Similarity {
           p += 1
         }
         Some(sig)
-      })
+      }))
 
   /** Natural ordering on external id values, matching the final rank
     * window's column ordering (so heap eviction and row_number agree on

@@ -90,8 +90,8 @@ object BucketedSpatialJoinRule extends Rule[LogicalPlan] {
                 // histogram through filesystem metadata, and that cost
                 // belongs only to joins the rule actually rewrites — not
                 // to every candidate it then declines.
-                () => SpatialJoin.histogramFromCatalog(
-                  org.apache.spark.sql.SparkSession.active, ct),
+                () => SpatialJoin.histogramOf(graft.StoreStamp.store(
+                  org.apache.spark.sql.SparkSession.active, ct)),
                 ct.identifier.unquotedString)
             case _ => None
           }

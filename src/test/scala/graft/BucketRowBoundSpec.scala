@@ -4,13 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Dedup
+import scala.jdk.CollectionConverters._
 
 /** The write-time bucket-row bound ([[Dedup.BucketRowBoundProp]]) of the
-  * four near-dup store tiers: every graft write keeps it at or above
-  * the store's largest bucket group (overwrite, append, double-append,
-  * an ignore-mode no-op, compaction), it is never present without the
-  * params stamp, and skipping the cap census on it changes no result —
-  * candidates through the bound equal candidates through the census. */
+  * four near-dup store tiers, read through [[StoreStamp]]: every graft
+  * write keeps it at or above the store's largest bucket group
+  * (overwrite, append, double-append, an ignore-mode no-op, compaction),
+  * no door reads it without the params stamp, skipping the cap census on
+  * it changes no result — candidates through the bound equal candidates
+  * through the census — and a foreign write leaves it unreadable. */
 class BucketRowBoundSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -28,7 +30,7 @@ class BucketRowBoundSpec extends AnyFunSuite {
       write: (DataFrame, String, String) => Unit,
       maxBucket: (String, Int) => Long,
       compact: (String, Int) => Unit,
-      candidates: (DataFrame, String) => Set[(Long, Long, String)],
+      candidates: (DataFrame, String, Int) => Set[(Long, Long, String)],
       drop: String => Unit)
 
   private def triples(df: DataFrame): Set[(Long, Long, String)] =
@@ -49,26 +51,30 @@ class BucketRowBoundSpec extends AnyFunSuite {
       (df, t, mode) => Dedup.writeMinhashStore(df, t, mode = mode),
       (t, cap) => stat(Dedup.minhashStoreStats(spark, t, cap)),
       (t, cap) => Dedup.compactMinhashStore(spark, t, cap),
-      (b, t) => triples(Dedup.minhashCandidatesAgainstStore(spark, b, t)),
+      (b, t, cap) => triples(Dedup.minhashCandidatesAgainstStore(spark, b, t,
+        maxBucketSize = cap)),
       t => Dedup.dropMinhashStore(spark, t)),
     Tier("ngram", Dedup.NgramStoreProp, "doc_id", texts,
       (df, t, mode) => Dedup.writeNgramStore(df, t, mode = mode),
       (t, cap) => stat(Dedup.ngramStoreStats(spark, t, cap)),
       (t, cap) => Dedup.compactNgramStore(spark, t, cap),
-      (b, t) => triples(Dedup.ngramCandidatesAgainstStore(spark, b, t)),
+      (b, t, cap) => triples(Dedup.ngramCandidatesAgainstStore(spark, b, t,
+        maxBucketSize = cap)),
       t => Dedup.dropNgramStore(spark, t)),
     Tier("simhash", Dedup.SimhashStoreProp, "doc_id", texts,
       (df, t, mode) => Dedup.writeSimhashStore(df, t, mode = mode),
       (t, cap) => stat(Dedup.simhashStoreStats(spark, t, cap)),
       (t, cap) => Dedup.compactSimhashStore(spark, t, cap),
-      (b, t) => triples(Dedup.simhashCandidatesAgainstStore(spark, b, t)),
+      (b, t, cap) => triples(Dedup.simhashCandidatesAgainstStore(spark, b, t,
+        maxBucketSize = cap)),
       t => graft.join.SpatialJoin.dropBucketedTable(spark, t)),
     Tier("embedding", Dedup.EmbeddingStoreProp, "vec_id",
       ids => ids.map(i => (i.toLong, vecs(i % 40))).toDF("vec_id", "embedding"),
       (df, t, mode) => Dedup.writeEmbeddingStore(df, t, mode = mode),
       (t, cap) => stat(Dedup.embeddingStoreStats(spark, t, cap)),
       (t, cap) => Dedup.compactEmbeddingStore(spark, t, cap),
-      (b, t) => triples(Dedup.embeddingCandidatesAgainstStore(spark, b, t)),
+      (b, t, cap) => triples(Dedup.embeddingCandidatesAgainstStore(spark, b, t,
+        maxBucketSize = cap)),
       t => Dedup.dropEmbeddingStore(spark, t)))
 
   private def props(table: String): Map[String, String] =
@@ -76,7 +82,7 @@ class BucketRowBoundSpec extends AnyFunSuite {
       spark.sessionState.sqlParser.parseTableIdentifier(table)).properties
 
   private def bound(table: String): Option[Long] =
-    props(table).get(Dedup.BucketRowBoundProp).map(_.toLong)
+    StoreStamp.store(spark, table).flatMap(_.stat(Dedup.BucketRowBoundProp)).map(_.toLong)
 
   /** The bound covers the largest group, and never outlives the params
     * stamp. */
@@ -129,12 +135,13 @@ class BucketRowBoundSpec extends AnyFunSuite {
         val batch = tier.frame(Seq(1, 2, 3, 31, 32)).unionByName(
           tier.frame(Seq(37, 38)))
           .withColumn(tier.idCol, col(tier.idCol) + 10000L)
-        val viaBound = tier.candidates(batch, table)
+        val viaBound = tier.candidates(batch, table, 100000)
         assert(viaBound.nonEmpty, "fixture sanity: dups must collide")
-        spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES " +
-          s"('${Dedup.BucketRowBoundProp}')")
+        // the bound as an older writer stamped it, with no fingerprint
+        spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
+          s"('${Dedup.BucketRowBoundProp}'='${bound(table).get}')")
         assert(bound(table).isEmpty)
-        assert(tier.candidates(batch, table) === viaBound,
+        assert(tier.candidates(batch, table, 100000) === viaBound,
           "skipping the cap census changed the candidates")
         // an append onto a store without the bound leaves it without one
         tier.write(tier.frame(36 until 38), table, "append")
@@ -143,6 +150,35 @@ class BucketRowBoundSpec extends AnyFunSuite {
         tier.compact(table, 100000)
         checkBound(tier, table, tier.maxBucket(table, 100000))
       } finally tier.drop(table)
+    }
+  }
+
+  tiers.foreach { tier =>
+    test(s"${tier.name}: a foreign INSERT INTO leaves no readable bound; the door returns the census path's rows") {
+      val table = s"graft_bound_foreign_${tier.name}"
+      val ref = s"graft_bound_foreign_ref_${tier.name}"
+      tier.drop(table); tier.drop(ref)
+      try {
+        tier.write(tier.frame(0 until 2), table, "overwrite")
+        assert(bound(table) === Some(2L))
+        // six copies of row 0's slim rows, written past graft
+        val slim = spark.table(table)
+        val copies = slim.filter(col("id") === 0L).collect().toSeq
+        spark.createDataFrame(Seq.fill(6)(copies).flatten.asJava, slim.schema)
+          .createOrReplaceTempView("graft_bound_foreign_rows")
+        spark.sql(s"INSERT INTO $table SELECT * FROM graft_bound_foreign_rows")
+        // the census path's rows: the same slim rows written by graft,
+        // whose bound counts every row, so its door censuses at cap 3
+        tier.write(tier.frame(Seq(0, 1) ++ Seq.fill(6)(0)), ref, "overwrite")
+        assert(bound(ref) === Some(8L))
+        val batch = tier.frame(Seq(0)).withColumn(tier.idCol, col(tier.idCol) + 10000L)
+        val census = tier.candidates(batch, ref, 3)
+        assert(tier.candidates(batch, table, 3) === census,
+          "the door skipped its census on a bound that predates a foreign write")
+        assert(bound(table).isEmpty, "a bound that predates a foreign write still reads")
+        assert(tier.candidates(batch, table, 0).exists(_._2 == 0L) &&
+          !census.exists(_._2 == 0L), "fixture sanity: the cap drops the copied row's groups")
+      } finally { tier.drop(table); tier.drop(ref) }
     }
   }
 
@@ -161,7 +197,16 @@ class BucketRowBoundSpec extends AnyFunSuite {
         Dedup.writeMinhashStore(bad, table, mode = "append")
       }
       assert(!props(table).contains(Dedup.MinhashStoreProp))
-      assert(bound(table).isEmpty)
+      // no door reads a bound: each refuses the store before reading one
+      for (door <- Seq(
+          () => Dedup.minhashCandidatesAgainstStore(spark, texts(0 until 2), table),
+          () => Dedup.minhashNovelAgainstStore(spark, texts(0 until 2), table)))
+        assert(intercept[IllegalArgumentException](door()).getMessage.contains("rewrite"))
+      // the failed write changed no file: a bound that still reads still
+      // covers the largest group
+      val mx = spark.table(table).groupBy($"band", $"bucket").count()
+        .agg(max($"count")).as[Long].head()
+      assert(bound(table).forall(_ >= mx))
     } finally Dedup.dropMinhashStore(spark, table)
   }
 

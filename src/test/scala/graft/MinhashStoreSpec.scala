@@ -181,9 +181,11 @@ class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
       val (sparkViaBound, sparkSkipJobs) = jobsOf(sparkTier(batch))
       assert(censusJobs(sparkSkipJobs) === 0, sparkSkipJobs.mkString("\n---\n"))
       assert(sparkViaBound === viaBound)
-      // without the bound the door censuses, with the same candidates
-      spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES " +
-        s"('${Dedup.BucketRowBoundProp}')")
+      // without a readable bound (here: one an older writer stamped, with
+      // no fingerprint) the door censuses, with the same candidates
+      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
+        s"('${Dedup.BucketRowBoundProp}'='30')")
+      assert(StoreStamp.store(spark, table).get.stat(Dedup.BucketRowBoundProp).isEmpty)
       val (viaCensus, censusRun) = jobsOf(probe())
       assert(censusJobs(censusRun) >= 1, "the census path ran no census job")
       assert(viaCensus === viaBound)
@@ -224,9 +226,8 @@ class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
           // nothing signed, nothing added: the bound stays at the corpus's 10
           assert(spark.table(table).count() === 80L)
           assert(spark.table(table + Dedup.MinhashSigTableSuffix).count() === 10L)
-          assert(spark.sessionState.catalog.getTableMetadata(
-              spark.sessionState.sqlParser.parseTableIdentifier(table))
-            .properties.get(Dedup.BucketRowBoundProp) === Some("10"))
+          assert(StoreStamp.store(spark, table)
+            .flatMap(_.stat(Dedup.BucketRowBoundProp)) === Some("10"))
       }
     } finally drop(table)
   }
@@ -254,9 +255,8 @@ class MinhashStoreSpec extends AnyFunSuite with TimeLimits {
       // each write's census kept groups of at most the cap, so the
       // stamped bound (the two batches' largest kept groups summed) now
       // exceeds the cap: the door takes the census path
-      val grown = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        .properties(Dedup.BucketRowBoundProp).toLong
+      val grown = StoreStamp.store(spark, table).get
+        .stat(Dedup.BucketRowBoundProp).get.toLong
       assert(grown > cap && grown <= 2L * cap, s"stamped bound $grown")
       val boilerProbe = Seq((30000L, boiler)).toDF("doc_id", "text")
       assert(Dedup.minhashCandidatesAgainstStore(spark, boilerProbe, table,

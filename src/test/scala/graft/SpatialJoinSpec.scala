@@ -207,9 +207,8 @@ class SpatialJoinSpec extends AnyFunSuite {
       SpatialJoin.writeSpatialBucketed(lAll, "graft_bkt_hot_l", cellSize = 1.0, buckets = 4)
       SpatialJoin.writeSpatialBucketed(rAll, "graft_bkt_hot_r", cellSize = 1.0, buckets = 4)
       // the write stamped a histogram carrying the hot cell's count
-      val hist = spark.sql("SHOW TBLPROPERTIES graft_bkt_hot_r")
-        .filter($"key" === SpatialJoin.CellHistogramProp)
-        .select($"value").as[String].collect()
+      val hist = StoreStamp.store(spark, "graft_bkt_hot_r")
+        .flatMap(_.stat(SpatialJoin.CellHistogramProp)).toSeq
       assert(hist.length === 1 && hist(0).split(',').exists { e =>
         e.split(':') match { case Array(_, n) => n.toLong >= 600; case _ => false }
       }, s"histogram missing the hot cell: ${hist.mkString}")
@@ -368,10 +367,9 @@ class SpatialJoinSpec extends AnyFunSuite {
       SpatialJoin.dropBucketedTable(spark, "graft_bkt_side")
       SpatialJoin.writeSpatialBucketed(rows, "graft_bkt_side", cellSize = 1.0,
         buckets = 8)
-      val prop = spark.sql("SHOW TBLPROPERTIES graft_bkt_side")
-        .filter($"key" === SpatialJoin.CellHistogramProp)
-        .select($"value").as[String].collect()
-      assert(prop.toSeq === Seq(SpatialJoin.CellHistogramFileMarker),
+      val prop = StoreStamp.store(spark, "graft_bkt_side")
+        .flatMap(_.stat(SpatialJoin.CellHistogramProp)).toSeq
+      assert(prop === Seq(SpatialJoin.CellHistogramFileMarker),
         s"expected the sidecar marker, got: ${prop.mkString}")
       // the sidecar holds every heavy cell, untruncated — the r14 limit
       val loc = spark.sessionState.catalog.getTableMetadata(
@@ -421,7 +419,11 @@ class SpatialJoinSpec extends AnyFunSuite {
       SpatialJoin.writeSpatialBucketed(l, "graft_bkt_cor_l", cellSize = 64.0, buckets = 4)
       SpatialJoin.writeSpatialBucketed(r, "graft_bkt_cor_r", cellSize = 64.0,
         buckets = 4, geom = "pgeom")
-      for (corrupt <- Seq("123:45,67", ",+", "garbage")) {
+      // each corrupt payload bare, and stamped for the store's files, so
+      // it reaches the parser
+      val files = StoreStamp.store(spark, "graft_bkt_cor_l").get.files
+      for (corrupt <- Seq("123:45,67", ",+", "garbage").flatMap(c =>
+          Seq(c) ++ files.stamp("" -> c).map(_._2))) {
         spark.sql("ALTER TABLE graft_bkt_cor_l SET TBLPROPERTIES " +
           s"('${SpatialJoin.CellHistogramProp}'='$corrupt')")
         // the auto-planned plain join must survive planning AND execute
@@ -436,8 +438,8 @@ class SpatialJoinSpec extends AnyFunSuite {
         assert(viaDoor.count() === 50L)
       }
       // a dangling file: marker (sidecar deleted) degrades the same way
-      spark.sql("ALTER TABLE graft_bkt_cor_l SET TBLPROPERTIES " +
-        s"('${SpatialJoin.CellHistogramProp}'='${SpatialJoin.CellHistogramFileMarker}')")
+      StoreStamp.set(spark, "graft_bkt_cor_l",
+        files.stamp(SpatialJoin.CellHistogramProp -> SpatialJoin.CellHistogramFileMarker))
       val auto2 = spark.table("graft_bkt_cor_l").join(
         spark.table("graft_bkt_cor_r"), st_contains($"geometry", $"pgeom"))
       assert(auto2.count() === 50L)

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.join.{CellSummary, SpatialJoin}
 
-/** Write-time statistics of a bucketed spatial store: the file
-  * fingerprint that makes a stale [[SpatialJoin.stampCellSummary]]
-  * stamp unreadable, the summary a small local append carries forward
+/** Write-time statistics of a bucketed spatial store, read through
+  * [[StoreStamp]]: the file fingerprint that makes a stale
+  * [[SpatialJoin.stampCellSummary]] stamp, histogram and cell bound
+  * unreadable, the summary a small local append carries forward
   * (array-equal to a pass over all rows on the stamped frame), the
   * heavy-cell census skipped on the [[SpatialJoin.MaxCellRowsProp]]
   * bound, the nearest door's job-free handling of a small local probe,
@@ -19,9 +20,12 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
 
   private type Rows = Seq[(Long, Array[Byte])]
 
-  private def propsOf(table: String): Map[String, String] =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).properties
+  /** The current statistic `key` of `table`. */
+  private def statOf(table: String, key: String): Option[String] =
+    StoreStamp.store(spark, table).flatMap(_.stat(key))
+
+  private def histogramOf(table: String): Option[SpatialJoin.CellHist] =
+    SpatialJoin.histogramOf(StoreStamp.store(spark, table).get)
 
   private def write(rows: Rows, table: String, cs: Double,
       mode: String = "overwrite", cellHistogram: Boolean = true): Unit =
@@ -80,6 +84,7 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
       write(build, table, 4.0)
       SpatialJoin.stampCellSummary(spark, table)
       assert(SpatialJoin.readCellSummary(spark, table).isDefined)
+      assert(histogramOf(table).isDefined && statOf(table, SpatialJoin.MaxCellRowsProp).isDefined)
       // rows with their cells, written past graft in a region the stamp
       // never covered
       val foreign = (0 until 6).map(i =>
@@ -91,6 +96,9 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
         "FROM graft_stats_foreign_rows")
       assert(SpatialJoin.readCellSummary(spark, table).isEmpty,
         "a stamp that predates a foreign write was accepted")
+      assert(histogramOf(table).isEmpty, "a histogram that predates a foreign write was accepted")
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).isEmpty,
+        "a cell bound that predates a foreign write was accepted")
       val probe = Seq((0L, EWKBFixtures.point(-490.0, 790.0)),
         (1L, EWKBFixtures.point(50.0, 50.0)))
       val all = build ++ foreign
@@ -219,22 +227,22 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
         write(rows, table, 4.0)
       }
       assert(!jobs.exists(_.contains("heavyCellCensus")), jobs.mkString("\n---\n"))
-      val skipped = propsOf(table)
-      assert(skipped.get(SpatialJoin.MaxCellRowsProp).contains("120"))
+      val skipped = (statOf(table, SpatialJoin.CellHistogramProp),
+        statOf(table, SpatialJoin.MaxCellRowsProp))
+      assert(skipped._2.contains("120"))
       // the census on the same rows: the same histogram payload, and the
       // exact largest cell as the bound
       val (_, censusJobs) = SparkJobs.jobsOf(spark, "stats-census") {
         SpatialJoin.stampCellHistogram(spark, table)
       }
       assert(censusJobs.exists(_.contains("heavyCellCensus")))
-      val measured = propsOf(table)
-      assert(measured.get(SpatialJoin.CellHistogramProp) ===
-        skipped.get(SpatialJoin.CellHistogramProp))
-      assert(measured.get(SpatialJoin.CellHistogramProp).contains(""))
+      val measured = statOf(table, SpatialJoin.CellHistogramProp)
+      assert(measured === skipped._1)
+      assert(measured.contains(""))
       val largest = spark.table(table).groupBy(col(SpatialJoin.CellCol)).count()
         .agg(max($"count")).head().getLong(0)
       assert(largest > 1, "fixture sanity: some cell holds several rows")
-      assert(measured.get(SpatialJoin.MaxCellRowsProp).contains(largest.toString))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).contains(largest.toString))
     }
   }
 
@@ -248,14 +256,13 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
           write(rows, table, 4.0, mode = "append"))._2
           .filter(_.contains("heavyCellCensus"))
       write(inOneCell(200, 0L), table, 4.0)
-      assert(propsOf(table).get(SpatialJoin.MaxCellRowsProp).contains("200"))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).contains("200"))
       assert(census(inOneCell(40, 1000L)).isEmpty, "240 < 256: no census")
-      assert(propsOf(table).get(SpatialJoin.MaxCellRowsProp).contains("240"))
-      assert(propsOf(table).get(SpatialJoin.CellHistogramProp).contains(""))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).contains("240"))
+      assert(statOf(table, SpatialJoin.CellHistogramProp).contains(""))
       assert(census(inOneCell(20, 2000L)).nonEmpty, "260 >= 256: the census runs")
-      val props = propsOf(table)
-      assert(props.get(SpatialJoin.MaxCellRowsProp).contains("260"))
-      val hist = SpatialJoin.parseCellHistogram(props(SpatialJoin.CellHistogramProp))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).contains("260"))
+      val hist = SpatialJoin.parseCellHistogram(statOf(table, SpatialJoin.CellHistogramProp).get)
       assert(hist.cells.values.toSeq === Seq(260L) && !hist.truncated)
       // a batch that is not local leaves no bound to add to: census
       val shuffled = inOneCell(5, 3000L).toDF("bid", "geometry").repartition(2)
@@ -263,7 +270,7 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
         SpatialJoin.writeSpatialBucketed(shuffled, table, cellSize = 4.0,
           buckets = 4, mode = "append"))
       assert(jobs.exists(_.contains("heavyCellCensus")))
-      assert(propsOf(table).get(SpatialJoin.MaxCellRowsProp).contains("265"))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).contains("265"))
     }
   }
 
@@ -271,14 +278,13 @@ class SpatialStoreStatsSpec extends AnyFunSuite {
     val table = "graft_stats_nohist"
     withStore(table) {
       write(buildRows(0xE0, 20, 0L), table, 4.0)
-      assert(propsOf(table).contains(SpatialJoin.MaxCellRowsProp))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).isDefined)
       write(buildRows(0xE1, 5, 100L), table, 4.0, mode = "append", cellHistogram = false)
-      val props = propsOf(table)
-      assert(!props.contains(SpatialJoin.MaxCellRowsProp))
-      assert(!props.contains(SpatialJoin.CellHistogramProp))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).isEmpty)
+      assert(statOf(table, SpatialJoin.CellHistogramProp).isEmpty)
       // and the next append, with nothing to add to, measures again
       write(buildRows(0xE2, 5, 200L), table, 4.0, mode = "append")
-      assert(propsOf(table).contains(SpatialJoin.MaxCellRowsProp))
+      assert(statOf(table, SpatialJoin.MaxCellRowsProp).isDefined)
     }
   }
 

@@ -119,7 +119,8 @@ class StorePipelineSpec extends AnyFunSuite {
     val props = meta(table).properties
     assert(props.get(tier.prop) === Some(tier.stamp),
       s"${tier.name} $step: params stamp")
-    assert(props.get(Dedup.BucketRowBoundProp) === Some(bound.toString),
+    assert(StoreStamp.store(spark, table).flatMap(_.stat(Dedup.BucketRowBoundProp)) ===
+      Some(bound.toString),
       s"${tier.name} $step: bucket-row bound")
   }
 
